@@ -8,18 +8,11 @@ detection); at runtime the ``Match`` list is tried FIRST-MATCH-WINS per log
 
 Spark-first: the grok→regex compilation happens entirely at PLAN TIME in
 Python (the driver), exactly mirroring the reference's Init-time expansion —
-the executors only ever see compiled regexes. Two engines:
-
-- ``jvm`` — one ``rlike`` for the match predicate + one ``regexp_extract``
-  per capture, fused into whole-stage codegen. Best for few-capture patterns
-  (k+1 regex scans per row).
-- ``arrow`` — ONE vectorized pass per pattern over still-unmatched rows
-  (``Series.str.extract``, Arrow batches, no per-row Python). Best for
-  many-capture patterns like COMBINEDAPACHELOG (~10 captures) where the JVM
-  form would re-scan the line 11×.
-
-``engine="auto"`` (default) picks arrow when the widest pattern has >=
-``_ARROW_CAPTURE_THRESHOLD`` captures.
+the executors only ever see compiled regexes. Matching is one regex pass per
+row and pattern, in JVM expressions (``parse_regex.match_parts``): a
+``regexp_replace`` rewrites a matching line into all of its captures at once,
+materialized as a temporary array column. Pattern i runs only on rows that
+no earlier pattern matched, behind the pattern's required-literal gate.
 
 Capture aliases keep their ORIGINAL spelling in the output (internally each
 capture gets a unique synthetic group name ``gN``, sidestepping Java/Python
@@ -38,22 +31,20 @@ mongodb, nagios, postgresql, rails, redis, ruby, squid, bacula).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.grok_patterns import GROK_LIBRARY
+from loongcollector_spark.operators.parse_regex import group, match_parts, matched
 
 BUILTIN_PATTERNS: dict[str, str] = dict(GROK_LIBRARY)
 
 _REF_RE = re.compile(r"%\{(\w+)(?::([\w.\-\[\]]+))?(?::(\w+))?\}")
 _NAMED_GROUP_RE = re.compile(r"\(\?<([A-Za-z][A-Za-z0-9]*)>")
 _SPARK_TYPES = {"int": "long", "long": "long", "float": "double", "double": "double"}
-_ARROW_CAPTURE_THRESHOLD = 6
 
 
 class GrokCycleError(ValueError):
@@ -119,7 +110,7 @@ def expand_grok(
 
 def _to_python(regex: str) -> str:
     """Java named groups -> Python named groups (group bodies are written in
-    the syntax subset both engines share)."""
+    the syntax subset Java and Python regex share)."""
     return _NAMED_GROUP_RE.sub(r"(?P<\1>", regex)
 
 
@@ -162,7 +153,6 @@ def parse_grok(
     dictionary: dict[str, str] | None = None,
     ignore_parse_failure: bool = True,
     keep_source: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """Try each grok pattern in order, first-match-wins
     (processor_grok.go:105-173)."""
@@ -176,28 +166,23 @@ def parse_grok(
                 seen.add(c.alias)
                 all_keys.append((c.alias, c.spark_type))
 
-    if engine == "auto":
-        engine = (
-            "arrow"
-            if max((len(caps) for _, caps in compiled), default=0)
-            >= _ARROW_CAPTURE_THRESHOLD
-            else "jvm"
-        )
-    if engine == "arrow":
-        return _parse_grok_arrow(
-            df, source_key, compiled, all_keys, ignore_parse_failure, keep_source
-        )
-
-    src = F.col(source_key)
-    match_cols = [src.isNotNull() & src.rlike(regex) for regex, _ in compiled]
-
     # first-match-wins is per ROW across the whole Match list: the winning
     # pattern supplies ALL captures; later patterns never run for that row
     # even for aliases the winner lacks (processor_grok.go:105-133 breaks
-    # out of the loop on the first successful match)
-    win: Column = F.lit(-1)
-    for i in range(len(compiled) - 1, -1, -1):
-        win = F.when(match_cols[i], F.lit(i)).otherwise(win)
+    # out of the loop on the first successful match). Each pattern's
+    # captures land in their own temporary column, evaluated only on rows
+    # no earlier pattern matched.
+    src = F.col(source_key)
+    parts = [f"__grok_parts_{i}__" for i in range(len(compiled))]
+    hits: list[Column] = []
+    any_match: Column = F.lit(False)
+    out = df
+    for i, (regex, caps) in enumerate(compiled):
+        out = out.withColumn(
+            parts[i], F.when(~any_match, match_parts(src, regex, len(caps), full_match=False))
+        )
+        hits.append(matched(F.col(parts[i]), len(caps)))
+        any_match = any_match | hits[i]
 
     # Java group NUMBERS follow group-OPEN order in the final regex, which
     # differs from capture-creation order when an aliased pattern nests
@@ -208,150 +193,45 @@ def parse_grok(
         for regex, _ in compiled
     ]
 
-    out = df.withColumn("__grok_win__", win)
+    fields: dict[str, Column] = {}
     for alias, typ in all_keys:
         expr: Column = F.lit(None).cast("string")
         for i in range(len(compiled) - 1, -1, -1):
-            regex, caps = compiled[i]
-            occs = _alias_occurrences(caps)
-            if alias in occs:
-                groups = occs[alias]
-                if len(groups) == 1:
-                    val = F.regexp_extract(src, regex, group_pos[i][groups[0].group])
-                else:
-                    # last non-empty occurrence wins; "" only if all empty
-                    val = F.coalesce(
-                        *[
-                            F.nullif(
-                                F.regexp_extract(src, regex, group_pos[i][c.group]),
-                                F.lit(""),
-                            )
-                            for c in reversed(groups)
-                        ],
-                        F.lit(""),
-                    )
-                expr = F.when(F.col("__grok_win__") == i, val).otherwise(expr)
+            occs = _alias_occurrences(compiled[i][1]).get(alias)
+            if not occs:
+                continue
+            values = [group(F.col(parts[i]), group_pos[i][c.group]) for c in occs]
+            if len(values) == 1:
+                val = values[0]
+            else:
+                # last non-empty occurrence wins; "" only if all empty
+                val = F.coalesce(*[F.nullif(v, F.lit("")) for v in reversed(values)], F.lit(""))
+            expr = F.when(hits[i], val).otherwise(expr)
         if typ != "string":
             # try_cast: an empty/non-participating capture under a typed
             # alias yields null instead of an ANSI cast error (the reference
             # skips empty captures entirely)
             expr = expr.try_cast(typ)
-        out = out.withColumn(alias, expr)
-    out = out.drop("__grok_win__")
+        fields[alias] = expr
 
-    any_match = match_cols[0]
-    for c in match_cols[1:]:
-        any_match = any_match | c
     if not ignore_parse_failure:
         out = out.filter(any_match)
     if not keep_source:
-        out = out.withColumn(source_key, F.when(~any_match, src))
-    return out
-
-
-def _parse_grok_arrow(
-    df: DataFrame,
-    source_key: str,
-    compiled: Sequence[tuple[str, Sequence[GrokCapture]]],
-    all_keys: Sequence[tuple[str, str]],
-    ignore_parse_failure: bool,
-    keep_source: bool,
-) -> DataFrame:
-    """Single-pass vectorized grok: per pattern, ONE ``str.contains`` + ONE
-    ``str.extract`` over the rows no earlier pattern matched — the whole
-    Match list costs ~len(match) vectorized passes instead of (k+1) regex
-    scans per capture. Identical semantics to the JVM engine (winner supplies
-    all captures; non-participating groups of a matched row extract as "")."""
-    aliases = [a for a, _ in all_keys]
-    conflicts = [a for a in aliases if a in df.columns]
-    if source_key in aliases:
-        raise ValueError("grok alias may not equal source_key in arrow engine")
-    if conflicts:
-        df = df.drop(*conflicts)  # JVM path overwrites; same net effect
-
-    pyregexes = [re.compile(_to_python(regex)) for regex, _ in compiled]
-    pattern_aliases = [
-        [([c.group for c in occ], a) for a, occ in _alias_occurrences(caps).items()]
-        for _, caps in compiled
-    ]
-
-    from pyspark.sql.types import IntegerType, StructField
-
-    from loongcollector_spark.operators.parse_common import extended_schema
-
-    schema = extended_schema(df, aliases, StructField("__grok_win__", IntegerType()))
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import warnings
-
-        # str.contains with a grouped regex is exactly what we want here
-        # (match test only; extraction is a separate single pass)
-        warnings.filterwarnings(
-            "ignore", message="This pattern is interpreted as a regular expression"
-        )
-        for pdf in batches:
-            n = len(pdf)
-            s = pdf[source_key]
-            win = np.full(n, -1, dtype=np.int32)
-            out = {a: np.full(n, None, dtype=object) for a in aliases}
-            remaining = s.notna().to_numpy()
-            for i, creg in enumerate(pyregexes):
-                if not remaining.any():
-                    break
-                idx = np.nonzero(remaining)[0]
-                sub = s.iloc[idx]
-                hit = sub.str.contains(creg, na=False).to_numpy(dtype=bool)
-                if not hit.any():
-                    continue
-                hit_idx = idx[hit]
-                if pattern_aliases[i]:
-                    # str.extract raises on zero-capture regexes; a
-                    # capture-less pattern only consumes the rows (match test)
-                    ext = s.iloc[hit_idx].str.extract(creg)
-                    for gnames, alias in pattern_aliases[i]:
-                        # apply occurrences in order, skipping empty captures
-                        # (reference semantics): last non-empty wins, "" if
-                        # every occurrence is empty
-                        acc = np.full(len(hit_idx), "", dtype=object)
-                        for gname in gnames:
-                            vals = ext[gname].where(ext[gname].notna(), "").to_numpy(
-                                dtype=object
-                            )
-                            nonempty = vals != ""
-                            acc[nonempty] = vals[nonempty]
-                        out[alias][hit_idx] = acc
-                win[hit_idx] = i
-                remaining[hit_idx] = False
-            res = pdf.copy()
-            for a in aliases:
-                res[a] = out[a]
-            res["__grok_win__"] = win
-            yield res
-
-    parsed = df.mapInPandas(extract, schema=schema)
-    out = parsed
-    for alias, typ in all_keys:
-        if typ != "string":
-            out = out.withColumn(alias, F.col(alias).try_cast(typ))
-    any_match = F.col("__grok_win__") >= 0
-    if not ignore_parse_failure:
-        out = out.filter(any_match)
-    if not keep_source:
-        out = out.withColumn(source_key, F.when(~any_match, F.col(source_key)))
-    return out.drop("__grok_win__")
+        fields[source_key] = F.when(~any_match, src)
+    return out.withColumns(fields).drop(*parts)
 
 
 def translate_onigmo(body: str) -> str:
     """Translate the Onigmo/Ruby-only constructs that appear in third-party
-    pattern bundles into equivalents both our engines (Java regex via Spark,
-    Python ``re``) accept, preserving Onigmo SEMANTICS:
+    pattern bundles into equivalents both Java regex (Spark) and Python ``re`` (plan-time
+    validation) accept, preserving Onigmo SEMANTICS:
 
     - ``\\h`` / ``\\H`` are HEX-digit classes in Onigmo (not PCRE horizontal
       whitespace) → ``[0-9a-fA-F]`` / ``[^0-9a-fA-F]``;
     - Ruby's ``(?m)`` flag means DOTALL (Python/Java ``s``, not multiline)
       and applies from its position to the end of the enclosing group →
       rewrite the remainder as a scoped ``(?s:...)`` group, which is legal
-      mid-pattern in both engines (Python rejects a bare global flag that
+      mid-pattern in Java and Python regex (Python rejects a bare global flag that
       is not at the very start).
 
     The rewrite is a real scanner, not a blind substitution: inside a
@@ -466,7 +346,7 @@ def load_pattern_file(path: str) -> dict[str, str]:
     (processor_grok.go addPatternsFromPath, lines 176-208): each non-empty
     line not starting with '\"' is ``NAME<space>body``; quote-prefixed lines
     are comments. Onigmo-only syntax is translated (see translate_onigmo)
-    so the full reference bundle compiles under both engines."""
+    so the full reference bundle compiles."""
     out: dict[str, str] = {}
     with open(path) as fh:
         for line in fh:

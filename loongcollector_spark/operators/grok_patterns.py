@@ -7,8 +7,8 @@ The *names and capture aliases* are the public contract (a user's grok
 config references ``%{COMBINEDAPACHELOG}`` and expects fields named
 ``clientip``/``verb``/``response``); the regex *bodies* here are written
 from scratch against that contract, constrained to the syntax subset that
-compiles identically under both Java (Spark ``rlike``/``regexp_extract``)
-and Python ``re`` (the Arrow single-pass engine and plan-time validation):
+compiles identically under both Java (Spark's regex expressions)
+and Python ``re`` (plan-time validation and property tests):
 no possessive quantifiers, no atomic groups, no duplicate group names.
 
 Documented divergences from the reference bundle:

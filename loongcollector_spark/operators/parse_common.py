@@ -37,21 +37,6 @@ class ParserOptions:
         return not (self.keep_source_on_fail or self.copy_raw_log)
 
 
-def extended_schema(df: DataFrame, string_fields, extra_field=None):
-    """Output StructType for mapInPandas parsers: the input schema plus new
-    string fields (and one optional typed marker field). Built
-    programmatically — ``schema.simpleString()`` does not quote field names,
-    so DDL round-tripping breaks on columns like ``__tag__:__path__``."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    fields = list(df.schema.fields) + [
-        StructField(name, StringType()) for name in string_fields
-    ]
-    if extra_field is not None:
-        fields.append(extra_field)
-    return StructType(fields)
-
-
 def apply_parser_options(
     df: DataFrame,
     source_key: str,
@@ -62,36 +47,41 @@ def apply_parser_options(
     """Apply the parse-fail truth table around a parser's extracted columns.
 
     ``success`` is a boolean Column; ``extracted`` maps new column name ->
-    expression (evaluated only meaningfully when success holds).
+    expression (evaluated only meaningfully when success holds). Every
+    column is added in ONE projection, and every expression reads the
+    input's columns. A key equal to ``source_key`` takes its extracted value
+    on success, and the source rules below then apply to that value.
     """
-    out = df
+    cols: dict[str, Column] = {}
     for name, expr in extracted.items():
         if name in df.columns:
             # chained parsers: only successful rows overwrite a key written
             # by an earlier parser (reference parsers add contents on match
             # only — failure leaves prior contents intact)
-            out = out.withColumn(name, F.when(success, expr).otherwise(F.col(name)))
+            cols[name] = F.when(success, expr).otherwise(F.col(name))
         else:
-            out = out.withColumn(name, F.when(success, expr))
+            cols[name] = F.when(success, expr)
 
     if options.copy_raw_log:
-        out = out.withColumn(
-            RAW_LOG_KEY, F.when(~success, F.col(source_key))
-        )
+        cols[RAW_LOG_KEY] = F.when(~success, F.col(source_key))
 
+    out = df
+    source = cols.get(source_key, F.col(source_key))
     if options.should_erase_on_fail():
         out = out.filter(success)
     elif not options.keep_source_on_fail:
         # failure rows survive only through __raw_log__; drop raw from source
-        out = out.withColumn(
-            source_key, F.when(success, F.col(source_key))
-        )
+        source = F.when(success, source)
 
     src = options.renamed_source_key or source_key
     if not options.keep_source_on_success:
-        out = out.withColumn(src, F.when(~success, F.col(source_key)))
-        if src != source_key:
+        cols[src] = F.when(~success, source)
+    else:
+        cols[source_key] = source
+    out = out.withColumns(cols)
+    if src != source_key:
+        if options.keep_source_on_success:
+            out = out.withColumnRenamed(source_key, src)
+        else:
             out = out.drop(source_key)
-    elif src != source_key:
-        out = out.withColumnRenamed(source_key, src)
     return out

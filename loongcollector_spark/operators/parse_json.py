@@ -26,6 +26,16 @@ from loongcollector_spark.operators.parse_common import ParserOptions, apply_par
 
 MAP_SCHEMA = "map<string,string>"
 
+# from_json yields a map only for a JSON object, and an object starts with
+# "{" after optional JSON whitespace (RFC 8259: space, tab, LF, CR). Testing
+# this first skips the JSON parser on every other row; tests pin that the
+# gated and ungated results agree on the edge cases.
+_OBJECT_START = r"^[ \t\n\r]*\{"
+
+
+def _from_json_object(src):
+    return F.when(src.rlike(_OBJECT_START), F.from_json(src, MAP_SCHEMA))
+
 
 def parse_json(
     df: DataFrame,
@@ -38,9 +48,8 @@ def parse_json(
     the full dynamic bag lands in ``map_column`` when requested (the Spark
     stand-in for the reference's schema-less content list)."""
     options = options or ParserOptions()
-    parsed = F.from_json(F.col(source_key), MAP_SCHEMA)
     tmp = "__json_map__"
-    out = df.withColumn(tmp, parsed)
+    out = df.withColumn(tmp, _from_json_object(F.col(source_key)))
     success = F.col(tmp).isNotNull()
 
     extracted = {}
@@ -67,8 +76,7 @@ def expand_json(
     are connector-joined paths (processor_json.go:38-52). Depth unrolled at
     plan time; each level re-parses only values that look like objects."""
     options = options or ParserOptions()
-    level = F.from_json(F.col(source_key), MAP_SCHEMA)
-    out = df.withColumn(map_column, level)
+    out = df.withColumn(map_column, _from_json_object(F.col(source_key)))
     success = F.col(map_column).isNotNull()
 
     for _ in range(max(0, expand_depth - 1)):

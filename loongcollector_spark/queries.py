@@ -339,7 +339,7 @@ def grok_firstmatch_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     """,
     doc="processor_grok with the bundled COMBINEDAPACHELOG pattern (12 "
-        "captures -> auto-selects the single-pass Arrow engine); lines are "
+        "captures, one regex pass per row); lines are "
         "synthesized from event columns so the oracle is the exact "
         "round-trip of the source fields",
 )
@@ -1101,7 +1101,7 @@ def _tokenized_e2e_oracle() -> str:
     # pure SQL — see sources/sql_oracle.py; tests/test_pipeline.py adds the
     # per-row token-array equality check on the written sinks
     doc="the north-rule flagship: tokenized-sequence table -> detok render "
-        "(Arrow UDF over header tokens) -> 3-format parse -> dict_map -> "
+        "(JVM expressions over header tokens) -> 3-format parse -> dict_map -> "
         "route -> salted per-(source,sink) rows/tokens rollup",
 )
 def tokenized_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:

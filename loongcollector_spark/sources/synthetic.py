@@ -23,7 +23,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 VOCAB_SIZE = 50257
@@ -191,55 +191,54 @@ _PATHS = np.asarray(["/index.html", "/api/v1/items", "/hello/loong", "/static/ap
 _STATUS = np.asarray([200, 200, 200, 301, 404, 500])
 _LEVELS = np.asarray(["INFO", "WARN", "ERROR", "DEBUG"])
 
-RENDER_SCHEMA = (
-    "doc_id string, tokens array<int>, n_tok int, source string, line string"
-)
 
-
-def _render_lines_np(t: np.ndarray, fam: np.ndarray) -> pd.Series:
-    """Vectorized detok: (n,8) int64 header-token matrix + source family →
-    one parseable log line per row (numpy/pandas column ops only)."""
-    method = _METHODS[t[:, 0] % len(_METHODS)]
-    path = _PATHS[t[:, 1] % len(_PATHS)]
-    status = _STATUS[t[:, 2] % len(_STATUS)]
-    nbytes = t[:, 3] % 100000
-    level = _LEVELS[t[:, 5] % len(_LEVELS)]
-    uid = t[:, 6] % 10000
-    ip = pd.Series(10 + t[:, 7] % 200).astype(str) + ".0." + pd.Series(t[:, 2] % 256).astype(str) + "." + pd.Series(t[:, 3] % 256).astype(str)
-
-    s_method = pd.Series(method)
-    s_path = pd.Series(path)
-    s_status = pd.Series(status).astype(str)
-    s_bytes = pd.Series(nbytes).astype(str)
-    s_level = pd.Series(level)
-    s_uid = pd.Series(uid).astype(str)
-
-    nginx = ip + ' - - [18/Jul/2022:07:28:01 +0000] "' + s_method + " " + s_path + ' HTTP/1.1" ' + s_status + " " + s_bytes + ' "-" "curl/7.74.0" "-"'
-    jsonl = '{"method":"' + s_method + '","path":"' + s_path + '","status":' + s_status + ',"bytes":' + s_bytes + ',"level":"' + s_level + '"}'
-    delim = s_uid + "\t2022-08-08\t" + s_method + "\t" + s_bytes + "\t" + s_level
-
-    return pd.Series(np.where(fam == "web", nginx, np.where(fam == "app", jsonl, delim)))
+def _pick(values, token: Column) -> Column:
+    """``values[token mod len(values)]`` as a string (pmod: a floor modulo,
+    like numpy's ``%``)."""
+    table = F.array(*[F.lit(str(v)) for v in values])
+    return F.get(table, F.pmod(token, F.lit(len(values))))
 
 
 def render_lines(df: DataFrame) -> DataFrame:
     """Attach a detokenized, format-varied log line per row (format keyed by
     source family: web→nginx access line, app→JSON object, sys→TSV).
 
-    Hot-path discipline (the north rule's "no per-row Python"): the full
-    ``tokens`` array NEVER crosses the Arrow boundary — only the 8 header
-    tokens, sliced JVM-side (``F.slice``), plus the source family enter the
-    scalar ``pandas_udf``; every other column stays in Tungsten. (The naive
-    ``mapInPandas`` round-tripping whole sequences measured ~20× slower at
-    200k rows × ~500 tokens.)"""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def detok(head: pd.Series, fam: pd.Series) -> pd.Series:
-        if not len(head):
-            return pd.Series([], dtype=str)
-        t = np.vstack(head.to_numpy()).astype(np.int64)
-        return _render_lines_np(t, fam.to_numpy())
-
-    head8 = F.slice(F.col("tokens"), 1, 8)
-    family = F.split(F.col("source"), "-")[0]
-    return df.withColumn("line", detok(head8, family))
+    The line is built from the first 8 tokens with Catalyst expressions
+    (``element_at``, ``pmod``, ``concat``, ``when`` on the source family), so
+    it fuses into whole-stage codegen and starts no Python worker. Field j
+    of a line reads token t[j] as in FIXTURES.md F2-F5: method t0 mod 5,
+    path t1 mod 5, status t2 mod 6, bytes t3 mod 100000, level t5 mod 4,
+    uid t6 mod 10000, ip 10+t7 mod 200 . 0 . t2 mod 256 . t3 mod 256. A line
+    whose format reads a token the row lacks is NULL."""
+    t = [F.try_element_at(F.col("tokens"), F.lit(j + 1)) for j in range(8)]
+    # fields that several formats read are computed once, in their own
+    # projection: repeating their code in each format would push the fused
+    # stage's generated method past the size HotSpot JIT-compiles
+    fields = {
+        "__method__": _pick(_METHODS, t[0]),
+        "__path__": _pick(_PATHS, t[1]),
+        "__status__": _pick(_STATUS, t[2]),
+        "__bytes__": F.pmod(t[3], F.lit(100000)).cast("string"),
+        "__level__": _pick(_LEVELS, t[5]),
+    }
+    method, path, status, nbytes, level = (F.col(c) for c in fields)
+    uid = F.pmod(t[6], F.lit(10000)).cast("string")
+    ip = F.concat(
+        (F.pmod(t[7], F.lit(200)) + 10).cast("string"), F.lit(".0."),
+        F.pmod(t[2], F.lit(256)).cast("string"), F.lit("."),
+        F.pmod(t[3], F.lit(256)).cast("string"),
+    )
+    nginx = F.concat(
+        ip, F.lit(' - - [18/Jul/2022:07:28:01 +0000] "'), method, F.lit(" "), path,
+        F.lit(' HTTP/1.1" '), status, F.lit(" "), nbytes, F.lit(' "-" "curl/7.74.0" "-"'),
+    )
+    jsonl = F.concat(
+        F.lit('{"method":"'), method, F.lit('","path":"'), path, F.lit('","status":'), status,
+        F.lit(',"bytes":'), nbytes, F.lit(',"level":"'), level, F.lit('"}'),
+    )
+    delim = F.concat(
+        uid, F.lit("\t2022-08-08\t"), method, F.lit("\t"), nbytes, F.lit("\t"), level,
+    )
+    family = F.substring_index(F.col("source"), "-", 1)
+    line = F.when(family == "web", nginx).when(family == "app", jsonl).otherwise(delim)
+    return df.withColumns(fields).withColumn("line", line).drop(*fields)

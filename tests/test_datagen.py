@@ -6,10 +6,11 @@ Mirrors the reference's deterministic mock-input strategy
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from loongcollector_spark.sources import expected_tokens, generate_sequences, render_lines
-from loongcollector_spark.sources.synthetic import SOURCES
+from loongcollector_spark.sources.synthetic import _LEVELS, _METHODS, _PATHS, _STATUS, SOURCES
 
 
 def test_schema_and_invariants(spark):
@@ -56,6 +57,36 @@ def test_render_formats(spark):
     assert '"-" "curl/7.74.0" "-"' in web
     assert app.startswith("{") and '"method":' in app
     assert sys.count("\t") == 4
+
+
+def _render_lines_np(t: np.ndarray, fam: np.ndarray) -> pd.Series:
+    """Golden F2-F5 formula in numpy: (n,8) int64 header-token matrix +
+    source family -> one log line per row."""
+    method = pd.Series(_METHODS[t[:, 0] % len(_METHODS)])
+    path = pd.Series(_PATHS[t[:, 1] % len(_PATHS)])
+    status = pd.Series(_STATUS[t[:, 2] % len(_STATUS)]).astype(str)
+    nbytes = pd.Series(t[:, 3] % 100000).astype(str)
+    level = pd.Series(_LEVELS[t[:, 5] % len(_LEVELS)])
+    uid = pd.Series(t[:, 6] % 10000).astype(str)
+    ip = (pd.Series(10 + t[:, 7] % 200).astype(str) + ".0." + pd.Series(t[:, 2] % 256).astype(str)
+          + "." + pd.Series(t[:, 3] % 256).astype(str))
+    nginx = (ip + ' - - [18/Jul/2022:07:28:01 +0000] "' + method + " " + path + ' HTTP/1.1" '
+             + status + " " + nbytes + ' "-" "curl/7.74.0" "-"')
+    jsonl = ('{"method":"' + method + '","path":"' + path + '","status":' + status
+             + ',"bytes":' + nbytes + ',"level":"' + level + '"}')
+    delim = uid + "\t2022-08-08\t" + method + "\t" + nbytes + "\t" + level
+    return pd.Series(np.where(fam == "web", nginx, np.where(fam == "app", jsonl, delim)))
+
+
+def test_render_matches_numpy_formula(spark):
+    """render_lines' JVM expressions equal the F2-F5 numpy formula on every
+    row of all three source families."""
+    rows = render_lines(generate_sequences(spark, 2000, partitions=4)).select(
+        "source", F.slice("tokens", 1, 8).alias("head"), "line").toPandas()
+    fam = rows["source"].str.split("-").str[0].to_numpy()
+    assert set(fam) == {"web", "app", "sys"}
+    want = _render_lines_np(np.vstack(rows["head"].to_numpy()).astype(np.int64), fam)
+    assert rows["line"].tolist() == want.tolist()
 
 
 def test_head_generator_matches_full_generator_head(spark):

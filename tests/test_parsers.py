@@ -29,11 +29,30 @@ GOOD = '::1 - - [18/Jul/2022:07:28:01 +0000] "GET /hello/loong HTTP/1.1" 404 153
 BAD = "not an access line"
 
 
-@pytest.mark.parametrize("engine", ["jvm", "arrow"])
-def test_parse_regex_success(spark, engine):
-    df = parse_regex(lines_df(spark, GOOD), "content", NGINX, NGINX_KEYS, engine=engine, full_match=False)
+def test_parse_regex_success(spark):
+    df = parse_regex(lines_df(spark, GOOD), "content", NGINX, NGINX_KEYS, full_match=False)
     row = df.first()
-    assert row.method == "GET" and row.url == "/hello/loong" and row.status == "404"
+    assert row.asDict() == {
+        "id": 0, "content": None, "remote_addr": "::1", "time_local": "18/Jul/2022:07:28:01 +0000",
+        "method": "GET", "url": "/hello/loong", "protocol": "HTTP/1.1", "status": "404",
+        "body_bytes": "153",
+    }
+
+
+def test_key_equal_to_source_key(spark):
+    """A key named like the source takes its extracted value on success; the
+    source rules then apply to that value: it is kept only with
+    keep_source_on_success. Other keys read the original source."""
+    regex_df = lines_df(spark, "ab cd", "zz", None)
+    json_df = lines_df(spark, '{"content":"x","b":"y"}', "zz", None)
+    for opts, kept in ((ParserOptions(), None), (ParserOptions(keep_source_on_success=True), True)):
+        rows = parse_regex(regex_df, "content", r"(\w+) (\w+)", ["content", "b"], opts,
+                           full_match=False).orderBy("id").collect()
+        assert [tuple(r) for r in rows] == [
+            (0, "ab" if kept else None, "cd"), (1, "zz", None), (2, None, None)]
+        rows = parse_json(json_df, "content", ["content", "b"], opts).orderBy("id").collect()
+        assert [tuple(r) for r in rows] == [
+            (0, "x" if kept else None, "y"), (1, "zz", None), (2, None, None)]
 
 
 def test_parse_regex_fail_keep_source(spark):
@@ -89,6 +108,27 @@ def test_parse_json_failure_matrix(spark):
     df = parse_json(lines_df(spark, "{bad json", '{"k":"v"}'), "content", keys=["k"],
                     options=ParserOptions(keep_source_on_fail=False, copy_raw_log=False))
     assert df.count() == 1
+
+
+# leading bytes JSON does not count as whitespace, non-objects, comments and
+# malformed objects: the "{" gate must agree with an ungated from_json
+_JSON_EDGE = [
+    '\ufeff{"a":"1"}', '\x0b{"a":"1"}', '\xa0{"a":"1"}', '\x00{"a":"1"}', '[{"a":"1"}]',
+    "null", "", '/*c*/{"a":"1"}', "{'a':'1'}", '{"a":"1"} tail', None,
+    ' \t\n\r{"a":"1"}', '{"a":{"b":2}}', "\n{}",
+]
+
+
+def test_parse_json_gate_matches_ungated(spark):
+    df = spark.createDataFrame(list(enumerate(_JSON_EDGE)), "id int, content string")
+    want = {r.id: r.m for r in df.select(
+        "id", F.from_json("content", "map<string,string>").alias("m")).collect()}
+    keep = ParserOptions(keep_source_on_success=True)
+    got = {r.id: r.m for r in parse_json(df, "content", map_column="m", options=keep).collect()}
+    assert got == want
+    got = {r.id: r.m for r in expand_json(df, "content", map_column="m", options=keep).collect()}
+    assert got == want
+    assert [want[i] is not None for i in range(len(_JSON_EDGE))].count(True) == 5
 
 
 def test_expand_json_depth2(spark):
@@ -217,23 +257,32 @@ def test_grok_nested_pattern_group_indexing(spark):
 
 
 def test_grok_engines_equivalent(spark):
-    # jvm and arrow engines must agree row-for-row, including the "" vs null
-    # distinction (matched row + non-participating group -> "")
+    # the single regex pass and the per-key path (taken by lines that hold
+    # the U+0000 group separator) give the same rows, including the "" vs
+    # null distinction (matched row + non-participating group -> "")
     lines = [
         '93.180.71.3 - frank [17/May/2015:08:05:32 +0000] "GET /x HTTP/1.1" 304 1200 "-" "curl/7.1"',
         '10.2.3.4 - - [17/May/2015:08:05:33 +0000] "HEAD /y.html HTTP/1.0" 200 - "r" "a"',
         "garbage line with no structure",
         None,
     ]
-    df = spark.createDataFrame([(i, l) for i, l in enumerate(lines)], "id long, content string")
-    from loongcollector_spark.operators.grok import parse_grok
-
-    a = parse_grok(df, "content", match=["%{COMBINEDAPACHELOG}"], engine="jvm")
-    b = parse_grok(df, "content", match=["%{COMBINEDAPACHELOG}"], engine="arrow")
-    ra = sorted([tuple(r) for r in a.collect()])
-    rb = sorted([tuple(r) for r in b.collect()])
-    assert a.columns == b.columns
-    assert ra == rb
+    expected = [
+        ("93.180.71.3", "-", "frank", "17/May/2015:08:05:32 +0000", "GET", "/x", "1.1", "",
+         "304", "1200", '"-"', '"curl/7.1"'),
+        ("10.2.3.4", "-", "-", "17/May/2015:08:05:33 +0000", "HEAD", "/y.html", "1.0", "",
+         "200", "", '"r"', '"a"'),
+        (None,) * 12,
+        (None,) * 12,
+    ]
+    fields = ["clientip", "ident", "auth", "timestamp", "verb", "request", "httpversion",
+              "rawrequest", "response", "bytes", "referrer", "agent"]
+    for prefix in ("", "\x00"):
+        rows = [(i, None if l is None else prefix + l) for i, l in enumerate(lines)]
+        df = spark.createDataFrame(rows, "id long, content string")
+        out = parse_grok(df, "content", match=["%{COMBINEDAPACHELOG}"])
+        assert out.columns == ["id", "content", *fields]
+        got = [tuple(r[f] for f in fields) for r in out.orderBy("id").collect()]
+        assert got == expected, repr(prefix)
 
 
 def test_grok_library_breadth():
@@ -321,27 +370,21 @@ def test_grok_nested_alias_group_index(spark):
     # must map to the RIGHT regex group in the JVM engine — group numbers
     # follow group-open order, not capture-creation order
     df = lines_df(spark, "example.com:8080 GET")
-    out = parse_grok(df, "content", match=["%{URIHOST:hostport} %{WORD:verb}"],
-                     engine="jvm")
+    out = parse_grok(df, "content", match=["%{URIHOST:hostport} %{WORD:verb}"])
     r = out.first()
     assert r.hostport == "example.com:8080"
     assert r.port == "8080"
     assert r.verb == "GET"
-    # arrow engine agrees
-    r2 = parse_grok(df, "content", match=["%{URIHOST:hostport} %{WORD:verb}"],
-                    engine="arrow").first()
-    assert (r2.hostport, r2.port, r2.verb) == (r.hostport, r.port, r.verb)
 
 
 def test_grok_captureless_pattern_arrow(spark):
-    # a capture-less fallback pattern in the Match list must not crash the
-    # arrow engine (str.extract rejects zero-group regexes)
+    # a capture-less fallback pattern in the Match list only consumes the
+    # rows it matches
     df = lines_df(spark, "2024-02-01T10:00:00Z bare timestamp line", "no match here")
     out = parse_grok(
         df, "content",
         match=["%{IPORHOST:h} %{WORD:w} %{NOTSPACE:a} %{NOTSPACE:b} %{NOTSPACE:c} %{NOTSPACE:d}",
                "%{TIMESTAMP_ISO8601}"],
-        engine="arrow",
     )
     rows = {r.id: r for r in out.collect()}
     assert rows[0].h is None  # matched by the capture-less pattern: no fields
@@ -349,8 +392,8 @@ def test_grok_captureless_pattern_arrow(spark):
 
 
 def test_grok_arrow_with_special_column_names(spark):
-    # schema round-trip must survive DDL-special column names like the
-    # file source's '__tag__:__path__'
+    # DDL-special column names like the file source's '__tag__:__path__'
+    # pass through unchanged
     df = spark.createDataFrame(
         [("10.0.0.1 - u [17/May/2015:08:05:32 +0000] \"GET /x HTTP/1.1\" 200 5 \"-\" \"a\"", "/var/log/x")],
         ["content", "__tag__:__path__"],
@@ -438,22 +481,19 @@ _EXOTIC_CASES = [
 ]
 
 
-@pytest.mark.parametrize("engine", ["jvm", "arrow"])
-def test_grok_exotic_family_headliners(spark, engine):
+def test_grok_exotic_family_headliners(spark):
     """Each new pattern family (aws/squid/mongodb/junos/firewall/rails/ruby/
-    redis/postgresql) extracts its contract fields on a representative line,
-    identically under both engines."""
+    redis/postgresql) extracts its contract fields on a representative line."""
     for pattern, line, expect in _EXOTIC_CASES:
         df = lines_df(spark, line)
-        out = parse_grok(df, "content", match=["%{" + pattern + "}"], engine=engine)
+        out = parse_grok(df, "content", match=["%{" + pattern + "}"])
         r = out.first()
         for field, want in expect.items():
             got = r[field]
-            assert got == want, f"{pattern}.{field}: {got!r} != {want!r} ({engine})"
+            assert got == want, f"{pattern}.{field}: {got!r} != {want!r}"
 
 
-@pytest.mark.parametrize("engine", ["jvm", "arrow"])
-def test_grok_alternation_last_nonempty_alias(spark, engine):
+def test_grok_alternation_last_nonempty_alias(spark):
     """NAGIOSLOGLINE: repeated aliases across alternation branches resolve to
     the last NON-EMPTY occurrence (processor_grok.go:146-153 skips empty
     captures) — a WARNING match must fill nagios_message even though later
@@ -463,7 +503,7 @@ def test_grok_alternation_last_nonempty_alias(spark, engine):
         "[1427925600] Warning: check timed out",
         "[1427925600] SERVICE ALERT: host1;http;CRITICAL;HARD;3;refused",
     )
-    out = parse_grok(df, "content", match=["%{NAGIOSLOGLINE}"], engine=engine)
+    out = parse_grok(df, "content", match=["%{NAGIOSLOGLINE}"])
     rows = out.orderBy("id").collect()
     assert rows[0]["nagios_message"] == "check timed out"
     assert rows[1]["nagios_type"] == "SERVICE ALERT"
@@ -473,8 +513,7 @@ def test_grok_alternation_last_nonempty_alias(spark, engine):
     assert rows[1]["nagios_message"] == "refused"
 
 
-@pytest.mark.parametrize("engine", ["jvm", "arrow"])
-def test_grok_bind9_duplicate_alias(spark, engine):
+def test_grok_bind9_duplicate_alias(spark):
     """BIND9 aliases `query` twice; last non-empty occurrence (the actual
     query) wins, matching the reference's ordered-append contract."""
     df = lines_df(
@@ -482,7 +521,7 @@ def test_grok_bind9_duplicate_alias(spark, engine):
         "17-Feb-2024 23:06:56 queries: info: client 192.0.2.55#1204 "
         "(foo.example): query: bar.example IN A (10.0.0.1)",
     )
-    out = parse_grok(df, "content", match=["%{BIND9}"], engine=engine)
+    out = parse_grok(df, "content", match=["%{BIND9}"])
     r = out.first()
     assert r["query"] == "bar.example"
     assert r["clientip"] == "192.0.2.55"

@@ -220,3 +220,80 @@ def test_url_canonical_blocklist_scan_side(spark):
     )
     plan = _plan(q)
     assert "Exchange" not in plan and "Join" not in plan
+
+
+_NGINX = r'(\S+) - - \[([^\]]+)\] "(\S+) (\S+) ([^"]+)" (\d+) (\d+) "([^"]*)" "([^"]*)" "([^"]*)"'
+_KEEP = {"keep_source_on_fail": True, "keep_source_on_success": True}
+_LOGPIPE_PROCESSORS = [
+    ("parse_regex", {"source_key": "line", "pattern": _NGINX,
+                     "keys": ["remote_addr", "time_local", "method", "url", "protocol", "status",
+                              "body_bytes_sent", "http_referer", "http_user_agent",
+                              "http_x_forwarded_for"],
+                     "full_match": False, "options": _KEEP}),
+    ("parse_json", {"source_key": "line", "keys": ["method", "path", "status", "bytes", "level"],
+                    "options": _KEEP}),
+    ("parse_delimiter", {"source_key": "line", "separator": "\t",
+                         "keys": ["uid", "time", "d_method", "value", "d_level"], "options": _KEEP}),
+    ("dict_map", {"source_key": "source", "mapping": {"web-01": "edge", "app-01": "svc"},
+                  "dest_key": "tier", "missing": "other"}),
+]
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "PythonUDF")
+
+
+def test_logpipe_front_half_runs_in_jvm(spark):
+    """The flagship chain from tokens to parsed fields (detok render, nginx
+    regex, json, delimiter, dict_map, route, shard) has no Python node, and
+    the regex parser scans each row with exactly one regexp_replace."""
+    from loongcollector_spark.operators.route import Condition, Route
+    from loongcollector_spark.pipeline import PipelineSpec, compile_pipeline
+    from loongcollector_spark.sources import render_lines
+
+    seqs = spark.createDataFrame(
+        [("web-01-0", list(range(8)), 8, "web-01"), ("app-01-1", list(range(9)), 9, "app-01")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    spec = PipelineSpec(
+        name="logpipe", processors=_LOGPIPE_PROCESSORS,
+        routes=[Route("errors", Condition(content_key="status", content_regex=r"5\d\d"))],
+    )
+    plan = _plan(compile_pipeline(render_lines(seqs), spec))
+    assert not [n for n in _PYTHON_NODES if n in plan]
+    assert plan.count("regexp_replace(") == 1
+
+
+def _max_method_bytes(df) -> int:
+    seq = df._jdf.queryExecution().debug().codegenToSeq()
+    return max(seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size()))
+
+
+def test_parse_stage_stays_jit_compilable(spark):
+    """HotSpot does not JIT-compile a method over 8000 bytecode bytes, and a
+    fused stage runs in one such method: past the limit the render + regex
+    stage ran about 6x slower. Keep the generated code of detok render +
+    nginx regex, and of render + COMBINEDAPACHELOG grok, under it."""
+    from loongcollector_spark.operators.grok import parse_grok
+    from loongcollector_spark.operators.parse_common import ParserOptions
+    from loongcollector_spark.operators.parse_regex import parse_regex
+    from loongcollector_spark.sources import render_lines
+
+    params = dict(_LOGPIPE_PROCESSORS[0][1])
+    params["options"] = ParserOptions(**params["options"])
+    seqs = spark.createDataFrame(
+        [("web-01-0", list(range(8)), 8, "web-01")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    assert _max_method_bytes(parse_regex(render_lines(seqs), **params)) < 8000
+    grok = parse_grok(render_lines(seqs), "line", match=["%{COMBINEDAPACHELOG}"])
+    assert _max_method_bytes(grok) < 8000
+
+
+def test_grok_one_regex_pass_per_pattern(spark):
+    """Each grok pattern of the Match list is one regexp_replace in the plan,
+    and the chain stays free of Python nodes."""
+    from loongcollector_spark.operators.grok import parse_grok
+
+    df = spark.createDataFrame([("x",)], "content string")
+    out = parse_grok(df, "content", match=["%{COMMONAPACHELOG}", "%{COMBINEDAPACHELOG}"])
+    plan = _plan(out)
+    assert not [n for n in _PYTHON_NODES if n in plan]
+    assert plan.count("regexp_replace(") == 2

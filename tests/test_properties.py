@@ -441,3 +441,82 @@ def test_url_canonicalize_idempotent(spark, urls):
         F.col("c1") != F.col("c2")
     )
     assert bad.count() == 0, bad.collect()
+
+
+# --- single-pass regex extraction ---------------------------------------------
+
+_NGINX = r'(\S+) - - \[([^\]]+)\] "(\S+) (\S+) ([^"]+)" (\d+) (\d+) "([^"]*)" "([^"]*)" "([^"]*)"'
+
+
+def _gate_patterns() -> list[str]:
+    from loongcollector_spark.operators.grok import _to_python, compile_grok
+
+    grok = [_to_python(compile_grok(f"%{{{p}}}")[0]) for p in ("COMBINEDAPACHELOG", "SYSLOGLINE")]
+    return [_NGINX, *grok, r"ab{2,3}cd+e?f", r"x(?:ab|cd)yz", r"(?:a|b)+lit[a-c]*tail",
+            r"k[\]x]{1,2}=v\.\*", r"pre(?:fix(?:ed))mid(?:x)?suf", r"(?=ab)abc|zz"]
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.data())
+def test_required_literal_is_in_every_match(data):
+    """Gate soundness: every string the pattern fully matches contains the
+    literal the gate tests before running the regex."""
+    from loongcollector_spark.operators.parse_regex import required_literal
+
+    pattern = data.draw(st.sampled_from(_gate_patterns()))
+    lit = required_literal(pattern)
+    line = data.draw(st.from_regex(pattern, fullmatch=True))
+    assert lit is None or lit in line, (pattern, lit, line)
+
+
+def test_required_literal_known_values():
+    from loongcollector_spark.operators.parse_regex import required_literal
+
+    assert required_literal(_NGINX) == " - - ["
+    for p in (r"a\Qbcd\E", r"(?i)abcd", "abc|de", "ab[[c]]de", r"ab\x41cd", "(?:ab|cd)"):
+        assert required_literal(p) is None, p
+    assert required_literal(r"ab{2,3}cd+e?f") == "cd"
+
+
+# (pattern, number of groups): an empty last group, a group that does not
+# take part in a match, a dot that stops at "\n", an anchor inside the pattern
+_EXTRACT_PATTERNS = [
+    (r"(a*)=(\d*)", 2),
+    (r"(a+)(?:=(\d+)|-(x))", 3),
+    (r"(.+)=(.*)", 2),
+    (r"^(a*)1", 1),
+]
+_EXTRACT_FIXED = ["a=1\n", "a=\x00", "\x00a=1", "a=1\nb", "aa=", "a-x", "=", "", None, "\n", "a1\n",
+                  "a\x00\x00=1\x00", "\x01a=\x00\x01", "a=\x00\x00\x01\x00", "\x00\x01\x00"]
+
+
+@settings(**SETTINGS)
+@given(st.lists(st.one_of(st.none(), st.text(alphabet="a1=-x \n\x00\x01", max_size=10)), max_size=25))
+def test_single_pass_regex_equals_per_key_extract(spark, lines):
+    """parse_regex's one regex pass gives what rlike + one regexp_extract per
+    key give, with and without full_match, on lines holding U+0000 (the
+    group separator, also in runs and inside groups), U+0001 (the fence
+    around the per-row separator) or newlines, with a trailing newline, an
+    empty last group, a non-participating group, or NULL. One job per
+    example set."""
+    from loongcollector_spark.operators.parse_common import ParserOptions
+    from loongcollector_spark.operators.parse_regex import parse_regex
+
+    rows = [(i, s) for i, s in enumerate(lines + _EXTRACT_FIXED)]
+    df = spark.createDataFrame(rows, "id int, s string")
+    keep = ParserOptions(keep_source_on_fail=True, keep_source_on_success=True)
+    src = F.col("s")
+    checks = []
+    for p_i, (pattern, n) in enumerate(_EXTRACT_PATTERNS):
+        for full in (False, True):
+            keys = [f"k{p_i}{int(full)}_{g}" for g in range(1, n + 1)]
+            df = parse_regex(df, "s", pattern, keys, keep, full_match=full)
+            anchored = f"^(?:{pattern})$" if full else pattern
+            for g, k in enumerate(keys, start=1):
+                want = F.when(src.rlike(anchored), F.regexp_extract(src, anchored, g))
+                checks.append((k, want))
+    out = df.select("id", "s", *[F.col(k) for k, _ in checks],
+                    *[w.alias(f"want_{k}") for k, w in checks]).collect()
+    for r in out:
+        for k, _ in checks:
+            assert r[k] == r[f"want_{k}"], (k, r["s"], r[k], r[f"want_{k}"])
