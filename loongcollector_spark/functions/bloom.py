@@ -10,14 +10,16 @@ bitset of the benchmark shingles is built ONCE (bounded, tiny next to the
 corpus), broadcast to every executor, and membership is tested map-side —
 the corpus never shuffles at all.
 
-Determinism/replayability: positions are md5-derived (two independent
-60-bit slices of the digest, mod ``m_bits``), so an external engine can
-rebuild the identical bitset and replay membership EXACTLY — including the
-false positives, which are a deterministic function of (benchmark set,
-m_bits). DuckDB oracle shape::
+Determinism/replayability: each gram is hashed ONCE with Spark's
+xxhash64, and both positions come from that hash (its low and high 32-bit
+halves, mod ``m_bits``), so an external engine can rebuild the identical
+bitset and replay membership EXACTLY — including the false positives,
+which are a deterministic function of (benchmark set, m_bits). DuckDB
+oracle shape (``xxhash64_sql`` from ``sources/sql_oracle.py``)::
 
-    p1 = ('0x' || substr(md5(g), 1, 15))::BIGINT % m
-    p2 = ('0x' || substr(md5(g), 17, 15))::BIGINT % m
+    h  = xxhash64_sql(g)
+    p1 = h mod m                          -- pmod: non-negative
+    p2 = (h >>> 32) mod m
     hit(g) := p1 IN bits AND p2 IN bits   -- bits = distinct p1 ∪ p2 of the
                                           --        benchmark shingles
 
@@ -46,47 +48,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def bloom_positions(
-    gram: Column, m_bits: int, hash: str = "md5"
-) -> tuple[Column, Column]:
-    """The two bit positions of a gram. ``hash="md5"`` (default, the
-    oracle twin): independent 60-bit md5 slices (chars 1-15 and 17-31 of
-    the hex digest) mod ``m_bits``. ``hash="xxh64"`` (production): two
-    independent seeded xxhash64 passes — one codegen'd streaming hash per
-    position instead of a cryptographic digest + hex/radix trip; not
-    externally replayable."""
-    if hash == "xxh64":
-        p1 = F.pmod(F.xxhash64(gram), F.lit(m_bits)).cast("long")
-        p2 = F.pmod(F.xxhash64(gram, F.lit(1)), F.lit(m_bits)).cast("long")
-        return p1, p2
-    if hash != "md5":
-        raise ValueError(f"hash must be 'md5' or 'xxh64', got {hash!r}")
-    h = F.md5(gram)
-    p1 = F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % m_bits
-    p2 = F.conv(F.substring(h, 17, 15), 16, 10).cast("long") % m_bits
-    return p1, p2
-
-
-def _md5_pos_structs(grams: Column, m_bits: int) -> Column:
-    """array<struct<p1,p2>> of Bloom positions with ONE md5 per gram: the
-    digest is produced by an inner ``transform`` and both 60-bit slices read
-    the bound lambda variable — two naive position transforms would hash
-    every gram twice, and Spark does not CSE inside higher-order functions
-    (the word_ngrams lesson, functions/text.py)."""
-    digests = F.transform(grams, F.md5)
-    return F.transform(
-        digests,
-        lambda h: F.struct(
-            (F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % m_bits)
-            .alias("p1"),
-            (F.conv(F.substring(h, 17, 15), 16, 10).cast("long") % m_bits)
-            .alias("p2"),
-        ),
-    )
+def bloom_positions(h: Column, m_bits: int) -> tuple[Column, Column]:
+    """The two bit positions of a gram whose xxhash64 is ``h``:
+    ``pmod(h, m_bits)`` and ``pmod(h >>> 32, m_bits)``."""
+    m = F.lit(m_bits).cast("long")
+    return F.pmod(h, m), F.pmod(F.shiftrightunsigned(h, 32), m)
 
 
 def build_bloom_bits(
-    bench: DataFrame, grams_col: str, m_bits: int = 1 << 18, hash: str = "md5"
+    bench: DataFrame, grams_col: str, m_bits: int = 1 << 18
 ) -> np.ndarray:
     """Packed uint8 bitset (little-bit-endian within a byte: bit ``p`` is
     ``bits[p >> 3] & (1 << (p & 7))``) of every position of every gram in
@@ -94,10 +64,11 @@ def build_bloom_bits(
 
     One narrow explode + a DISTINCT bounded by ``m_bits`` — the only
     exchange in the build is over unique positions, never over grams."""
-    g = bench.select(F.explode(grams_col).alias("g"))
-    p1, p2 = bloom_positions(F.col("g"), m_bits, hash)
+    h = bench.select(F.explode(grams_col).alias("g")).select(
+        F.xxhash64("g").alias("h")
+    )
     pos = (
-        g.select(F.explode(F.array(p1, p2)).alias("p"))
+        h.select(F.explode(F.array(*bloom_positions(F.col("h"), m_bits))).alias("p"))
         .distinct()
         .toPandas()["p"]
         .to_numpy(dtype=np.int64)
@@ -154,7 +125,6 @@ def bloom_decontaminate(
     bench: DataFrame,
     bench_grams_col: str | None = None,
     m_bits: int = 1 << 18,
-    hash: str = "md5",
 ) -> DataFrame:
     """Flag corpus rows whose gram array (array<string>) hits the Bloom
     bitset of the benchmark grams: returns
@@ -165,7 +135,7 @@ def bloom_decontaminate(
     and nothing about the corpus is ever exchanged (the output is a filter
     of the input rows, not an aggregate)."""
     bench_grams_col = bench_grams_col or grams_col
-    bits = build_bloom_bits(bench, bench_grams_col, m_bits, hash)
+    bits = build_bloom_bits(bench, bench_grams_col, m_bits)
     g = F.col(grams_col)
     # The UDF is semantically deterministic, but letting Catalyst treat it
     # as such pushes the `n_hits > 0` filter below the projection and
@@ -173,30 +143,16 @@ def bloom_decontaminate(
     # filter, once for the output). asNondeterministic() is purely an
     # optimizer barrier here: one ArrowEvalPython, one gram-hash transform.
     hits = bloom_hits_expr(bits, m_bits).asNondeterministic()
-    if hash == "md5":
-        # Stage the array<struct<p1,p2>> in its own projection so the
-        # digest transform stays single-evaluated: CollapseProject declines
-        # to inline a non-cheap expression referenced twice above, whereas
-        # two independent position transforms would md5 every gram twice
-        # (md5 dominates this scan at 20M+ rows — see BENCH.md).
-        staged = corpus.select(
-            F.col(id_col),
-            F.size(g).cast("long").alias("n_grams"),
-            _md5_pos_structs(g, m_bits).alias("_ps"),
-        )
-        flagged = staged.select(
-            id_col,
-            "n_grams",
-            hits(
-                F.col("_ps").getField("p1"), F.col("_ps").getField("p2")
-            ).alias("n_hits"),
-        )
-    else:
-        p1 = F.transform(g, lambda x: bloom_positions(x, m_bits, hash)[0])
-        p2 = F.transform(g, lambda x: bloom_positions(x, m_bits, hash)[1])
-        flagged = corpus.select(
-            F.col(id_col),
-            F.size(g).cast("long").alias("n_grams"),
-            hits(p1, p2).alias("n_hits"),
-        )
+    # Stage the hash array in its own projection so each gram is hashed
+    # once: CollapseProject declines to inline a non-cheap expression that
+    # is referenced twice above (once per position transform), and Spark
+    # does not CSE inside higher-order functions.
+    staged = corpus.select(
+        F.col(id_col),
+        F.size(g).cast("long").alias("n_grams"),
+        F.transform(g, lambda x: F.xxhash64(x)).alias("_h"),
+    )
+    p1 = F.transform("_h", lambda h: bloom_positions(h, m_bits)[0])
+    p2 = F.transform("_h", lambda h: bloom_positions(h, m_bits)[1])
+    flagged = staged.select(id_col, "n_grams", hits(p1, p2).alias("n_hits"))
     return flagged.filter(F.col("n_hits") > 0)

@@ -8,17 +8,21 @@ Scale design:
   explode shingles → self-join on shingle → per-pair common counts. At 100TB
   add a document-frequency cut (drop shingles appearing in >df_max docs) —
   exposed as ``max_shingle_df``.
-- MinHash+LSH: k permutations via (a*x+b) mod p over xxhash64 shingles —
+- MinHash+LSH: k permutations via (a*x+b) mod p over the gram hashes —
   pure column expressions; bands are arrays sliced from the signature; the
   candidate join is an equi-join on (band_idx, band_hash) — exactly the
   banding scheme from the MMDS literature.
-- SimHash: 64-bit signature from per-token hashes; near-dup = small Hamming
-  distance within LSH buckets on signature prefixes.
+- SimHash: 64-bit signature from the same gram hashes; near-dup = small
+  Hamming distance within LSH buckets on signature prefixes.
+
+One gram hash: MinHash and SimHash both hash grams with
+``hashed_shingles`` (Spark's xxhash64 per word, then xxhash64 over the n
+word hashes). The DuckDB oracles replay exactly that
+(``sources/sql_oracle.xxhash64_sql`` / ``hash_long_sql``), so the path
+every caller runs is the path the oracles verify.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -51,13 +55,6 @@ def release_persisted() -> None:
             pass
 
 
-def md5_hash60(col: Column) -> Column:
-    """60-bit positive gram hash from md5 — slower than xxhash64 but exactly
-    reproducible in DuckDB (``('0x'||substr(md5(g),1,15))::BIGINT``), used by
-    the oracle-paired query variants. Production default stays xxhash64."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def shingles(col: Column, n: int = 3) -> Column:
     """Word n-gram shingles (distinct) as an array<string>.
 
@@ -76,19 +73,24 @@ def shingles(col: Column, n: int = 3) -> Column:
 def hashed_shingles(col: Column, n: int = 3) -> Column:
     """Distinct word n-gram hashes as array<long> WITHOUT materializing the
     shingle strings: hash each word once, then xxhash64 over the n
-    consecutive word hashes per position. Equivalent as a MinHash/SimHash
-    gram universe to hashing the joined strings (any 64-bit gram id works),
-    but allocation-free — no per-position slice/join strings, and the
-    distinct runs over primitive longs. This is the production gram path;
-    the string form stays for the md5 oracle-replay twins.
+    consecutive word hashes per position (Spark's multi-column xxhash64:
+    hashLong chained over the n longs, seed 42). A gram id is a 64-bit
+    hash of the word sequence, like hashing the joined string, but
+    allocation-free — no per-position slice/join strings, and the distinct
+    runs over primitive longs. It is the one gram hash of MinHash and
+    SimHash, and the one their DuckDB oracles replay.
 
     Shape matters: the n-gram window is built by arrays_zip of n SHIFTED
-    SLICES of the word-hash array, so ``wh`` appears exactly n times per
-    ROW. The tempting per-position form (transform over an index sequence
-    with F.get(wh, i+k)) embeds ``wh`` in the lambda body, and Spark does
-    not common-subexpression-eliminate inside higher-order functions — the
-    word-hash array is recomputed per element access, O(words²) per doc
-    (measured 44s vs 2.5s on 200k docs)."""
+    SLICES of the word-hash array, so ``wh`` appears a constant 2n+1 times
+    per ROW (n slices, their n lengths, the size test). Spark evaluates
+    every copy (no subexpression elimination over lambdas), so the words
+    are hashed 2n+1 times; a word-hash column staged in its own projection
+    ran 3.3x faster (100k docs, 4 vCPUs). The tempting per-position form
+    (transform over an index sequence with F.get(wh, i+k)) embeds ``wh`` in
+    the lambda body, and Spark does not common-subexpression-eliminate
+    inside higher-order functions — the word-hash array is recomputed per
+    element access, O(words²) per doc (measured 44s vs 2.5s on 200k
+    docs)."""
     ws = F.filter(F.split(F.lower(col), r"\s+"), lambda w: w != "")
     wh = F.transform(ws, lambda w: F.xxhash64(w))
     sz = F.size(wh)
@@ -189,37 +191,35 @@ def minhash_lsh_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    gram_hash: Callable[[Column], Column] = F.xxhash64,
 ) -> DataFrame:
     """MinHash + LSH banding: candidate pairs that share at least one band.
     Returns (id_a, id_b, est_jaccard) where est_jaccard = fraction of equal
-    signature positions (the MinHash estimate). ``gram_hash`` maps a shingle
-    to a non-negative-ish long (default xxhash64 — fastest; pass
-    ``md5_hash60`` for cross-engine-reproducible signatures).
+    signature positions (the MinHash estimate) over ``hashed_shingles``.
 
     No upfront repartition: shingle+hash runs on the scan partitions, and
     the signature groupBy's map-side combine means the only doc-count-sized
     shuffle moves (id, k longs) rows — never the text."""
-    grams = _gram_hashes(df, text_col, id_col, n, gram_hash)
+    grams = _gram_hashes(df, text_col, id_col, n)
     return minhash_lsh_from_gram_hashes(grams, num_hashes, bands, seed)
 
 
-def _gram_hashes(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    gram_hash: Callable[[Column], Column],
-) -> DataFrame:
-    """(id, gh:array<long>) shingle-hash relation — the single dispatch
-    point for the gram hash, shared by the self-join dedup path and the
-    cross-corpus decontamination path so their signatures can never
-    diverge. xxhash64 takes the string-free fast path."""
-    if gram_hash is F.xxhash64:
-        gh = hashed_shingles(F.col(text_col), n)
-    else:
-        gh = F.transform(shingles(F.col(text_col), n), lambda g: gram_hash(g))
-    return df.select(F.col(id_col).alias("id"), gh.alias("gh"))
+def _gram_hashes(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, gh:array<long>) shingle-hash relation, shared by the self-join
+    dedup path and the cross-corpus decontamination path so their
+    signatures can never diverge."""
+    return df.select(
+        F.col(id_col).alias("id"), hashed_shingles(F.col(text_col), n).alias("gh")
+    )
+
+
+def _explode_hashes(col: str) -> Column:
+    """explode of a gram-hash array column, hashing each gram once.
+    Exploding a bare column makes Spark infer a ``size(col) > 0`` filter
+    and push it below the projection that computes the array, where it
+    re-evaluates the whole hashing expression. ``coalesce(col, [])`` is not
+    a bare column, so no filter is inferred; explode drops empty and NULL
+    arrays either way."""
+    return F.explode(F.coalesce(F.col(col), F.array().cast("array<long>")))
 
 
 def minhash_signatures(
@@ -241,7 +241,7 @@ def minhash_signatures(
     p = F.lit(_P31)
     g = F.col("g")
     h31 = F.pmod(F.pmod(g, p) + F.when(g < 0, F.lit(4)).otherwise(F.lit(0)), p)
-    exploded = grams.select("id", F.explode("gh").alias("g")).select(
+    exploded = grams.select("id", _explode_hashes("gh").alias("g")).select(
         "id", h31.alias("h")
     )
     mins = [
@@ -334,7 +334,6 @@ def minhash_cross_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    gram_hash: Callable[[Column], Column] = F.xxhash64,
 ) -> DataFrame:
     """Fuzzy benchmark decontamination: MinHash+LSH candidates BETWEEN a
     training corpus and a benchmark relation (the near-dup counterpart to
@@ -357,10 +356,10 @@ def minhash_cross_candidates(
         raise ValueError("num_hashes must be divisible by bands")
     rpb = num_hashes // bands
     sig_c = _track_persist(minhash_signatures(
-        _gram_hashes(corpus, text_col, id_col, n, gram_hash), num_hashes, seed
+        _gram_hashes(corpus, text_col, id_col, n), num_hashes, seed
     ))
     sig_b = _track_persist(minhash_signatures(
-        _gram_hashes(bench, text_col, id_col, n, gram_hash), num_hashes, seed
+        _gram_hashes(bench, text_col, id_col, n), num_hashes, seed
     ))
     banded_c = _banded_keys(sig_c, bands, rpb)
     banded_b = _banded_keys(sig_b, bands, rpb)
@@ -436,7 +435,7 @@ def simhash_signatures(grams: DataFrame, hashes_col: str = "gram_hashes") -> Dat
     strictly more than half the grams have bit k set — identical to the
     numpy fold in ``simhash_from_hashes``, including sig=0 for docs with no
     grams (restored by the left join on bare ids)."""
-    exploded = grams.select("id", F.explode(hashes_col).alias("h"))
+    exploded = grams.select("id", _explode_hashes(hashes_col).alias("h"))
     bits = [
         F.sum(F.shiftrightunsigned("h", k).bitwiseAND(F.lit(1))).alias(f"_b{k}")
         for k in range(64)
@@ -452,12 +451,6 @@ def simhash_signatures(grams: DataFrame, hashes_col: str = "gram_hashes") -> Dat
     )
 
 
-def simhash64(col: Column, n: int = 2) -> Column:
-    """Gram hashes JVM-side; bit fold via the Arrow UDF above (used through
-    simhash_near_dups, which materializes the gram-hash column first)."""
-    raise NotImplementedError("use simhash_near_dups / simhash_from_hashes")
-
-
 def simhash_near_dups(
     df: DataFrame,
     text_col: str,
@@ -465,7 +458,6 @@ def simhash_near_dups(
     n: int = 2,
     max_hamming: int = 3,
     prefix_bits: int = 16,
-    gram_hash: Callable[[Column], Column] = F.xxhash64,
     n_rotations: int = 1,
 ) -> DataFrame:
     """SimHash near-dup pairs: bucket on a ``prefix_bits``-wide block of the
@@ -484,13 +476,9 @@ def simhash_near_dups(
     bit-count rows, never the text."""
     if n_rotations < 1 or n_rotations * prefix_bits > 64:
         raise ValueError("need 1 <= n_rotations and n_rotations*prefix_bits <= 64")
-    if gram_hash is F.xxhash64:
-        gh = hashed_shingles(F.col(text_col), n)  # string-free fast path
-    else:
-        gh = F.transform(shingles(F.col(text_col), n), lambda g: gram_hash(g))
-    grams = df.select(F.col(id_col).alias("id"), gh.alias("gram_hashes"))
-    # persisted for the same two-sided self-join reason as the MinHash path
-    sig = _track_persist(simhash_signatures(grams, "gram_hashes"))
+    # persisted for the same two-sided self-join reason as the MinHash path;
+    # the gram hashes sit below it, so they run once whatever the rotations
+    sig = _track_persist(simhash_signatures(_gram_hashes(df, text_col, id_col, n), "gh"))
     mask = (1 << prefix_bits) - 1
     blocks = F.array(
         *[

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _md5_bucket(id_col: Column, buckets: int) -> Column:
+def _id_bucket(id_col: Column, buckets: int) -> Column:
     """md5(id) mod buckets — replayable in DuckDB as
     ``('0x' || substr(md5(id), 1, 15))::BIGINT % buckets``."""
     return (
@@ -89,7 +89,7 @@ def temperature_resample(
         )
     gated = df.join(F.broadcast(rates), on=strata_col, how="inner")
     out = gated.filter(
-        _md5_bucket(F.col(id_col), buckets) < F.floor(F.col("_rate") * buckets)
+        _id_bucket(F.col(id_col), buckets) < F.floor(F.col("_rate") * buckets)
     )
     return out.drop("_rate")
 
@@ -274,6 +274,6 @@ def unimax_resample(
     )
     gated = df.join(F.broadcast(rates), on=strata_col, how="inner")
     out = gated.filter(
-        _md5_bucket(F.col(id_col), buckets) < F.floor(F.col("_rate") * buckets)
+        _id_bucket(F.col(id_col), buckets) < F.floor(F.col("_rate") * buckets)
     )
     return out.drop("_rate")

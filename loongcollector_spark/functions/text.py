@@ -118,7 +118,14 @@ def html_strip(col: Column) -> Column:
     and RE2/DuckDB agree): an external engine can replay the extraction
     with the same pattern sequence. Entity decode order matters
     (&amp; LAST, so '&amp;lt;' decodes to '&lt;' not '<'); the whitespace
-    collapse keeps line structure for downstream line-wise filters."""
+    collapse keeps line structure for downstream line-wise filters.
+
+    Known limits (regex, not an HTML parser):
+    - a ``>`` inside a quoted attribute value ends the tag early, so
+      ``<a title="x>y">`` leaves ``y">`` in the text;
+    - only the six entities above (``&lt; &gt; &quot; &#39; &nbsp; &amp;``)
+      are decoded; any other named or numeric entity (``&eacute;``,
+      ``&#233;``) stays encoded."""
     t = F.regexp_replace(col, r"(?s)<!--.*?-->", "")
     t = F.regexp_replace(t, r"(?is)<script\b[^>]*>.*?</script>", "")
     t = F.regexp_replace(t, r"(?is)<style\b[^>]*>.*?</style>", "")
@@ -219,9 +226,15 @@ def domain_blocklist_filter(
     ``keep_col=None`` drops blocked rows; a column name instead annotates
     each row with the boolean verdict (audit mode). ``domain_col`` also
     exposes the registrable domain the verdict was computed from, so audits
-    group on the SAME expression the gate evaluated."""
-    dom = registrable_domain(url_host(F.col(url_col)))
-    keep = ~dom.isin(*[b.lower() for b in blocked])
+    group on the SAME expression the gate evaluated.
+
+    Unreadable URLs: a NULL URL and one with no ``scheme://host`` prefix
+    ('', 'not a url') have no domain (``domain_col`` is NULL), and a
+    domain that cannot be read is not on the list — the verdict is
+    keep = True in both modes."""
+    host = url_host(F.col(url_col))
+    dom = F.when(host != "", registrable_domain(host))
+    keep = F.coalesce(~dom.isin(*[b.lower() for b in blocked]), F.lit(True))
     out = df.withColumn(domain_col, dom) if domain_col is not None else df
     if keep_col is not None:
         return out.withColumn(keep_col, keep)
@@ -422,8 +435,8 @@ def stratified_sample(
 
     Hash-gated, not random: reproducible across runs/engines, needs no seed
     state, and is a pure per-row filter — no shuffle, pushes past the scan at
-    100 TB. md5 (not xxhash64) so external engines can replay the exact
-    admit set (DuckDB: ('0x' || substr(md5(id),1,15))::BIGINT)."""
+    100 TB. External engines replay the exact admit set with their built-in
+    md5 (DuckDB: ('0x' || substr(md5(id),1,15))::BIGINT)."""
     bucket = F.conv(
         F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
     ).cast("long") % buckets
@@ -437,33 +450,26 @@ def stratified_sample(
     return df.filter(bucket < F.floor(rate * buckets))
 
 
+def _hash_bucket(g: Column, n_buckets: int) -> Column:
+    """``pmod(xxhash64(g), n_buckets)``: a string's bucket in [0, n_buckets).
+    DuckDB replays it as ``xxhash64_sql(g)`` mod B (sources/sql_oracle)."""
+    return F.pmod(F.xxhash64(g), F.lit(n_buckets).cast("long"))
+
+
 def hashed_ngram_buckets(
     col: Column,
     n_buckets: int = 1024,
     ns: tuple[int, ...] = (1, 2),
-    hash: str = "md5",
 ) -> Column:
-    """array<long>: every word n-gram (default unigrams + bigrams) hashed
-    into [0, n_buckets) — the hashed feature space of DSIR (Xie et al. 2023,
-    "Data Selection for Language Models via Importance Resampling").
-
-    ``hash``: "md5" (default) so an external engine can replay the exact
-    buckets (DuckDB: ('0x' || substr(md5(g),1,15))::BIGINT % B) — the
-    oracle twin; "xxh64" is the production path (same shape, one codegen'd
-    streaming hash instead of a full cryptographic digest + hex/radix trip)
-    for corpus runs where nothing external replays the buckets."""
-    if hash not in ("md5", "xxh64"):
-        raise ValueError(f"hash must be 'md5' or 'xxh64', got {hash!r}")
+    """array<long>: every word n-gram (default unigrams + bigrams, each the
+    space-joined words) hashed into [0, n_buckets) with ``_hash_bucket`` —
+    the hashed feature space of DSIR (Xie et al. 2023, "Data Selection for
+    Language Models via Importance Resampling")."""
     ws = words(col)
     sz = F.size(ws)
 
     def _b(g: Column) -> Column:
-        if hash == "xxh64":
-            return F.pmod(F.xxhash64(g), F.lit(n_buckets)).cast("long")
-        return (
-            F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-            % n_buckets
-        )
+        return _hash_bucket(g, n_buckets)
 
     # ws appears a CONSTANT number of times per row (transform arg + shifted
     # slices) — never inside a lambda body, where Spark would recompute the
@@ -492,7 +498,6 @@ def dsir_importance(
     n_buckets: int = 1024,
     smoothing: float = 1.0,
     ns: tuple[int, ...] = (1, 2),
-    hash: str = "md5",
 ) -> DataFrame:
     """Per-document DSIR importance weight log p_target(x)/p_raw(x) under
     hashed n-gram bag-of-words models (Xie et al. 2023): the standard
@@ -514,16 +519,18 @@ def dsir_importance(
     crossJoin of the 1-row aggregate."""
     from loongcollector_spark.functions.dedup import _track_persist
 
-    # one md5 pass over the text, reused by the histogram and scoring scans
+    # one hash pass over the text, reused by the histogram and scoring scans;
+    # the empty-doc filter reads the cache: placed before the persist, Spark
+    # pushes it below the projection and hashes every gram a second time
     feat = _track_persist(
         df.select(
             F.col(id_col),
             target.alias("__tgt__"),
-            hashed_ngram_buckets(F.col(text_col), n_buckets, ns, hash).alias(
+            hashed_ngram_buckets(F.col(text_col), n_buckets, ns).alias(
                 "__bs__"
             ),
-        ).filter(F.size("__bs__") > 0)
-    )
+        )
+    ).filter(F.size("__bs__") > 0)
     hist = (
         feat.select("__tgt__", F.explode("__bs__").alias("__b__"))
         .groupBy("__b__")
@@ -580,15 +587,6 @@ def dsir_importance(
     )
 
 
-def _md5_bucket(g: Column, n_buckets: int) -> Column:
-    """md5-derived hash bucket in [0, n_buckets) — 15 hex chars < 2^63,
-    replayable in any engine (DuckDB:
-    ('0x' || substr(md5(g),1,15))::BIGINT % B)."""
-    return (
-        F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long") % n_buckets
-    )
-
-
 def _densify_counts(hist: DataFrame, n_slots: int, out: str) -> DataFrame:
     """(bucket `__b__`, count `__c__`) histogram → ONE row holding an
     n_slots-long array<double> indexed by bucket (0.0 for unseen buckets).
@@ -628,9 +626,10 @@ def lm_perplexity_buckets(
 
     The model is add-one-smoothed over hashed vocabularies (unigram contexts
     in [0, b_uni), bigrams in [0, b_big)) — the hashing trick bounds the
-    model to a broadcastable array pair regardless of corpus vocabulary, the
-    md5 bucket scheme keeps it replayable by external engines. Cross-entropy
-    per doc = -(1/n) Σᵢ ln( (c(w_i w_{i+1})+1) / (c(w_i)+b_big) ) in nats.
+    model to a broadcastable array pair regardless of corpus vocabulary, and
+    the xxhash64 buckets (``_hash_bucket``) are replayable by external
+    engines. Cross-entropy per doc =
+    -(1/n) Σᵢ ln( (c(w_i w_{i+1})+1) / (c(w_i)+b_big) ) in nats.
     Docs with fewer than two words drop out (no bigrams, no score).
 
     Tercile assignment does NOT globally sort: per-doc scores quantize to
@@ -651,7 +650,7 @@ def lm_perplexity_buckets(
 
     ws = words(F.col(text_col))
     sz = F.size(ws)
-    # one md5 pass per word position, reused by training and scoring scans;
+    # one hash pass per word position, reused by training and scoring scans;
     # ws appears a constant number of times per row (never inside a lambda
     # body, where Spark would recompute the split per gram — see
     # hashed_ngram_buckets)
@@ -662,10 +661,10 @@ def lm_perplexity_buckets(
         df.select(
             F.col(id_col),
             train.alias("__tr__"),
-            F.transform(ws, lambda w: _md5_bucket(w, b_uni)).alias("__u__"),
+            F.transform(ws, lambda w: _hash_bucket(w, b_uni)).alias("__u__"),
             F.transform(
                 zipped,
-                lambda s: _md5_bucket(
+                lambda s: _hash_bucket(
                     F.concat_ws(" ", s["0"], s["1"]), b_big
                 ),
             ).alias("__g__"),
@@ -949,7 +948,6 @@ def quality_classifier_logodds(
     ns: tuple[int, ...] = (1, 2),
     smoothing: float = 1.0,
     threshold: float = 0.0,
-    hash: str = "md5",
 ) -> DataFrame:
     """GPT-3 / LLaMA-style model-based quality gate (Brown et al. 2020
     App. A; Touvron et al. 2023 "classifying pages used as references in
@@ -971,8 +969,8 @@ def quality_classifier_logodds(
     bounded key space); the log-odds table densifies to ONE broadcast
     B-slot array, and scoring is a per-row F.aggregate fold with O(1)
     indexing — no (doc,bucket) shuffle, no per-row Python, no driver
-    collect. Deterministic and externally replayable: md5 buckets, and the
-    arithmetic is ln/div/mean only (DuckDB recomputes the identical score
+    collect. Deterministic and externally replayable: xxhash64 buckets, and
+    the arithmetic is ln/div/mean only (DuckDB recomputes the identical score
     to the ulp in practice; the keep threshold compares the raw double).
 
     Returns (id_col, n_grams:long, quality_logodds:double, keep:boolean).
@@ -984,15 +982,16 @@ def quality_classifier_logodds(
     """
     from loongcollector_spark.functions.dedup import _track_persist
 
+    # empty-doc filter after the persist, as in dsir_importance
     feat = _track_persist(
         df.select(
             F.col(id_col),
             positive.alias("__pos__"),
-            hashed_ngram_buckets(F.col(text_col), n_buckets, ns, hash).alias(
+            hashed_ngram_buckets(F.col(text_col), n_buckets, ns).alias(
                 "__bs__"
             ),
-        ).filter(F.size("__bs__") > 0)
-    )
+        )
+    ).filter(F.size("__bs__") > 0)
     hist = (
         feat.select("__pos__", F.explode("__bs__").alias("__b__"))
         .groupBy("__b__")

@@ -24,6 +24,7 @@ from loongcollector_spark.operators import aggregate as agg_ops
 from loongcollector_spark.operators import enrich, filters
 from loongcollector_spark.operators.parse_kv import parse_key_value
 from loongcollector_spark.operators.route import Condition, Route, route_first_match
+from loongcollector_spark.sources.sql_oracle import hash_long_sql, xxhash64_sql
 from loongcollector_spark.sources.tables import load_table
 
 
@@ -1734,32 +1735,62 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.withColumn("jaccard", F.round("jaccard", 4))
 
 
-# DuckDB gram-hash identical to dedup.md5_hash60 (60-bit positive long)
-_MD5H60 = "('0x' || substr(md5({g}), 1, 15))::BIGINT"
+def _pmod_sql(h: str, m: int) -> str:
+    """Spark's pmod(h, m) for a BIGINT SQL expression (DuckDB's % keeps
+    the dividend's sign)."""
+    return f"((({h}) % {m}) + {m}) % {m}"
 
 
-def _shingle_ctes(n: int, table: str = "documents", prefix: str = "") -> str:
-    """DuckDB CTEs replicating dedup.shingles(): distinct word n-grams.
-    ``table``/``prefix`` let one statement shingle several relations (the
-    cross-corpus oracle) with the SAME expression text as the self-join
-    oracle — the fragments live here once so the oracles cannot drift."""
+def _hashed_shingle_ctes(n: int, table: str = "documents", prefix: str = "") -> str:
+    """DuckDB CTEs replicating dedup.hashed_shingles(): xxhash64 of each
+    word, then the hashLong chain over each window of n word hashes,
+    distinct per doc -> ``{prefix}gh(doc_id, h)`` for docs with >= n words.
+    Words and windows are hashed once per DISTINCT value and joined back
+    (the SQL XXH64 costs microseconds per call). ``table``/``prefix`` let
+    one statement shingle several relations (the cross-corpus oracle) with
+    the SAME expression text as the self-join oracles."""
+    chain = "42"
+    for k in range(1, n + 1):
+        chain = hash_long_sql(f"t[{k}]", chain)
     return f"""
     {prefix}toks AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS l
+      SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), w -> w <> '') AS l
       FROM {table}),
-    {prefix}sh AS (
-      SELECT doc_id, list_distinct(list_transform(range(1, len(l) - {n - 2}),
-                                   i -> array_to_string(l[i:i+{n - 1}], ' '))) AS grams
-      FROM {prefix}toks WHERE len(l) >= {n})"""
+    {prefix}wh AS (
+      SELECT w, {xxhash64_sql("w")} AS h
+      FROM (SELECT DISTINCT unnest(l) AS w FROM {prefix}toks)),
+    {prefix}hs AS (
+      SELECT doc_id, list(h ORDER BY i) AS hs
+      FROM (SELECT doc_id, unnest(l) AS w, unnest(range(len(l))) AS i FROM {prefix}toks)
+      JOIN {prefix}wh USING (w)
+      GROUP BY doc_id HAVING count(*) >= {n}),
+    {prefix}tup AS (
+      SELECT doc_id, unnest(list_transform(range(1, len(hs) - {n - 2}),
+                                           i -> hs[i:i + {n - 1}])) AS t
+      FROM {prefix}hs),
+    {prefix}th AS (
+      SELECT t, {chain} AS g FROM (SELECT DISTINCT t FROM {prefix}tup)),
+    {prefix}gh AS MATERIALIZED (
+      SELECT doc_id, list_distinct(list(g)) AS h
+      FROM {prefix}tup JOIN {prefix}th USING (t) GROUP BY doc_id)"""
 
 
-def _minhash_sig_expr(num_hashes: int, A: str, B: str) -> str:
-    """The (a*x+b) mod 2^31-1 min-signature list expression over a gram-hash
-    list column ``h`` — shared by the self-join and cross-corpus oracles."""
-    return (
-        f"list_transform(range({num_hashes}), k -> "
-        f"list_min(list_transform(h, x -> ({A}[k+1] * x + {B}[k+1]) % 2147483647)))"
-    )
+def _minhash_sig_sql(gh: str, num_hashes: int, seed: int) -> str:
+    """(doc_id, sig) MinHash signatures over a (doc_id, h) gram-hash CTE —
+    shared by the self-join and cross-corpus oracles. Set-based: one row
+    per (doc, gram, k) against the k coefficient rows of
+    dedup.minhash_coeffs, min per (doc, k), then the list ordered by k. x
+    is minhash_signatures' reduction of the signed 64-bit gram hash:
+    pmod(g, p), plus 4 when g < 0 (2^64 = 4 mod 2^31-1), mod p."""
+    a, b = dedup.minhash_coeffs(num_hashes, seed)
+    x = f"({_pmod_sql('g', 2147483647)} + CASE WHEN g < 0 THEN 4 ELSE 0 END) % 2147483647"
+    return f"""SELECT doc_id, list(m ORDER BY k) AS sig FROM (
+        SELECT doc_id, k, min((a * x + b) % 2147483647) AS m
+        FROM (SELECT doc_id, {x} AS x FROM (SELECT doc_id, unnest(h) AS g FROM {gh}))
+        CROSS JOIN (SELECT unnest(range({num_hashes})) AS k,
+                           unnest({a}) AS a, unnest({b}) AS b)
+        GROUP BY doc_id, k)
+      GROUP BY doc_id"""
 
 
 def _minhash_band_cte(sig_cte: str, rpb: int, bands: int) -> str:
@@ -1773,24 +1804,17 @@ def _minhash_band_cte(sig_cte: str, rpb: int, bands: int) -> str:
 
 
 def _minhash_oracle_sql(n: int = 3, num_hashes: int = 32, bands: int = 8, seed: int = 42) -> str:
-    """Full DuckDB replay of minhash_lsh_candidates with the md5 gram hash:
-    the (a*x+b) mod 2^31-1 permutations are plain integer arithmetic (the
-    exact coefficients come from dedup.minhash_coeffs), bands are list
-    slices, and the band bucket key is the slice rendered as a string (Spark
-    joins on xxhash64 of that string — same equivalence classes)."""
-    a, b = dedup.minhash_coeffs(num_hashes, seed)
+    """Full DuckDB replay of minhash_lsh_candidates: the hashed_shingles
+    gram hashes (XXH64 in SQL), the (a*x+b) mod 2^31-1 permutations as
+    plain integer arithmetic (the exact coefficients come from
+    dedup.minhash_coeffs), bands as list slices, and the band bucket key as
+    the slice rendered as a string (Spark joins on xxhash64 of that string
+    — same equivalence classes)."""
     rpb = num_hashes // bands
-    A = "[" + ",".join(map(str, a)) + "]"
-    B = "[" + ",".join(map(str, b)) + "]"
-    gh = _MD5H60.format(g="g")
     return f"""
-    WITH {_shingle_ctes(n)},
-    gh AS (
-      SELECT doc_id, list_transform(grams, g -> {gh} % 2147483647) AS h
-      FROM sh WHERE len(grams) > 0),
-    sig AS (
-      SELECT doc_id, {_minhash_sig_expr(num_hashes, A, B)} AS sig
-      FROM gh),
+    WITH {_hashed_shingle_ctes(n)},
+    sig AS MATERIALIZED (
+      {_minhash_sig_sql("gh", num_hashes, seed)}),
     banded AS (
       {_minhash_band_cte("sig", rpb, bands)}),
     pairs AS (
@@ -1807,15 +1831,14 @@ def _minhash_oracle_sql(n: int = 3, num_hashes: int = 32, bands: int = 8, seed: 
 @register(
     "dedup_minhash_lsh",
     _minhash_oracle_sql(),
-    doc="MinHash+LSH banding candidates (est_jaccard = signature agreement); "
-        "md5-based gram hash for cross-engine replay, xxhash64 default "
-        "unit-tested as the production path",
+    doc="MinHash+LSH banding candidates (est_jaccard = signature agreement) "
+        "over the hashed_shingles xxhash64 gram hashes every caller runs; "
+        "DuckDB replays XXH64, the permutations and the banding exactly",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_candidates(
-        docs, "text", "doc_id", n=3, num_hashes=32, bands=8,
-        gram_hash=dedup.md5_hash60,
+        docs, "text", "doc_id", n=3, num_hashes=32, bands=8
     )
 
 
@@ -1827,24 +1850,17 @@ def _minhash_cross_oracle_sql(
     'benchmark set' whose near-dup overlap with its source is guaranteed);
     signatures/banding identical, the band join is corpus x bench instead
     of a self-join, no ordering constraint on the pair."""
-    a, b = dedup.minhash_coeffs(num_hashes, seed)
     rpb = num_hashes // bands
-    A = "[" + ",".join(map(str, a)) + "]"
-    B = "[" + ",".join(map(str, b)) + "]"
-    gh = _MD5H60.format(g="g")
-    sig = _minhash_sig_expr(num_hashes, A, B)
     return f"""
     WITH bench_raw AS (
       SELECT doc_id, substr(text, 1, 240) AS text
       FROM documents WHERE doc_id % 20 = 0),
-    {_shingle_ctes(n, table="documents", prefix="c")},
-    {_shingle_ctes(n, table="bench_raw", prefix="b")},
-    cgh AS (SELECT doc_id, list_transform(grams, g -> {gh} % 2147483647) AS h
-            FROM csh WHERE len(grams) > 0),
-    bgh AS (SELECT doc_id, list_transform(grams, g -> {gh} % 2147483647) AS h
-            FROM bsh WHERE len(grams) > 0),
-    csig AS (SELECT doc_id, {sig} AS sig FROM cgh),
-    bsig AS (SELECT doc_id, {sig} AS sig FROM bgh),
+    {_hashed_shingle_ctes(n, table="documents", prefix="c")},
+    {_hashed_shingle_ctes(n, table="bench_raw", prefix="b")},
+    csig AS MATERIALIZED (
+      {_minhash_sig_sql("cgh", num_hashes, seed)}),
+    bsig AS MATERIALIZED (
+      {_minhash_sig_sql("bgh", num_hashes, seed)}),
     cband AS (
       {_minhash_band_cte("csig", rpb, bands)}),
     bband AS (
@@ -1869,10 +1885,11 @@ def _minhash_cross_oracle_sql(
         "the exact token-window and Bloom decontamination ops — catches "
         "truncated/paraphrased test-set leakage). Benchmark side broadcasts "
         "(test sets are tiny vs a 10^12-row corpus); the only corpus "
-        "exchange is the signature groupBy. Same signature/banding kernels "
-        "as the dedup self-join path; the fixture benchmark is the 240-char "
-        "prefix of every 20th doc so real overlap is guaranteed and DuckDB "
-        "replays signatures, banding, and the cross join exactly",
+        "exchange is the signature groupBy. Same gram hashes and "
+        "signature/banding kernels as the dedup self-join path; the fixture "
+        "benchmark is the 240-char prefix of every 20th doc so real overlap "
+        "is guaranteed and DuckDB replays the xxhash64 gram hashes, "
+        "signatures, banding, and the cross join exactly",
 )
 def fuzzy_contamination_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1880,35 +1897,45 @@ def fuzzy_contamination_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.substring("text", 1, 240).alias("text")
     )
     return dedup.minhash_cross_candidates(
-        docs, bench, "text", "doc_id", n=3, num_hashes=32, bands=8,
-        gram_hash=dedup.md5_hash60,
+        docs, bench, "text", "doc_id", n=3, num_hashes=32, bands=8
     )
+
+
+def _simhash_sig_ctes(n: int) -> str:
+    """DuckDB CTEs replaying simhash_signatures over hashed_shingles ->
+    ``sig(doc_id, sig)`` for EVERY document (docs with < n words fold to 0,
+    as the Spark left join does). Bit j is the strict majority vote of the
+    full 64-bit gram hashes; the 64 bits sum in HUGEINT (a BIGINT
+    ``1 << 63`` overflows in DuckDB) and wrap to the signed BIGINT."""
+    return f"""{_hashed_shingle_ctes(n)},
+    sig0 AS (
+      SELECT d.doc_id, coalesce(gh.h, []::BIGINT[]) AS h
+      FROM documents d LEFT JOIN gh USING (doc_id)),
+    sig1 AS (
+      SELECT doc_id,
+             list_sum(list_transform(range(64), j ->
+               CASE WHEN 2 * len(list_filter(h, x -> (x >> j) & 1 = 1)) > len(h)
+                    THEN 1::HUGEINT << j ELSE 0::HUGEINT END)) AS s
+      FROM sig0),
+    sig AS MATERIALIZED (
+      SELECT doc_id,
+             CAST(s - CASE WHEN s >= {1 << 63} THEN {1 << 64} ELSE 0 END AS BIGINT) AS sig
+      FROM sig1)"""
+
+
+def _simhash_block(r: int, prefix_bits: int) -> str:
+    """Block r of the signature, as Spark's shiftrightunsigned + mask:
+    DuckDB's >> on BIGINT is arithmetic, so the mask drops the sign fill."""
+    return f"((sig >> {64 - (r + 1) * prefix_bits}) & {(1 << prefix_bits) - 1})"
 
 
 def _simhash_oracle_sql(n: int = 2, max_hamming: int = 8, prefix_bits: int = 16) -> str:
     """DuckDB replay of simhash_near_dups: per-bit majority vote over the
-    gram hashes (md5 60-bit variant), prefix-bucket join, bit_count(xor)
-    Hamming. Docs with <n words fold to sig 0 exactly like the Spark UDF."""
-    gh = _MD5H60.format(g="g")
+    hashed_shingles gram hashes, top-block bucket join, bit_count(xor)
+    Hamming."""
     return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS l
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(l) >= {n}
-                  THEN list_distinct(list_transform(range(1, len(l) - {n - 2}),
-                                     i -> array_to_string(l[i:i+{n - 1}], ' ')))
-                  ELSE [] END AS grams
-      FROM toks),
-    gh AS (SELECT doc_id, list_transform(grams, g -> {gh}) AS h FROM sh),
-    sig AS (
-      SELECT doc_id,
-             list_sum(list_transform(range(64), j ->
-               CASE WHEN 2 * len(list_filter(h, x -> (x >> j) & 1 = 1)) > len(h)
-                    THEN (1::BIGINT << j) ELSE 0::BIGINT END))::BIGINT AS sig
-      FROM gh),
-    bucketed AS (SELECT doc_id, sig, sig >> {64 - prefix_bits} AS bucket FROM sig)
+    WITH {_simhash_sig_ctes(n)},
+    bucketed AS (SELECT doc_id, sig, {_simhash_block(0, prefix_bits)} AS bucket FROM sig)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            bit_count(xor(a.sig, b.sig))::INT AS hamming
     FROM bucketed a JOIN bucketed b ON a.bucket = b.bucket
@@ -1919,14 +1946,13 @@ def _simhash_oracle_sql(n: int = 2, max_hamming: int = 8, prefix_bits: int = 16)
 @register(
     "dedup_simhash",
     _simhash_oracle_sql(),
-    doc="SimHash near-dup pairs within prefix-LSH buckets (md5 gram hash for "
-        "cross-engine replay; xxhash64 default unit-tested)",
+    doc="SimHash near-dup pairs within prefix-LSH buckets over the "
+        "hashed_shingles xxhash64 gram hashes; DuckDB replays XXH64 and "
+        "the full 64-bit majority-vote signature",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_near_dups(
-        docs, "text", "doc_id", n=2, max_hamming=8, gram_hash=dedup.md5_hash60
-    )
+    return dedup.simhash_near_dups(docs, "text", "doc_id", n=2, max_hamming=8)
 
 
 def _simhash_multirot_oracle_sql(
@@ -1936,30 +1962,13 @@ def _simhash_multirot_oracle_sql(
     [64-(r+1)*pb, 64-r*pb); candidates union over blocks, DISTINCT on the
     pair. With n_rotations >= max_hamming+1 covering all 64 bits the result
     IS the exact hamming<=max_hamming pair set (pigeonhole)."""
-    gh = _MD5H60.format(g="g")
-    mask = (1 << prefix_bits) - 1
+    blocks = " UNION ALL ".join(
+        f"SELECT doc_id, sig, {r} AS rot, {_simhash_block(r, prefix_bits)} AS bucket FROM sig"
+        for r in range(n_rotations)
+    )
     return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS l
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(l) >= {n}
-                  THEN list_distinct(list_transform(range(1, len(l) - {n - 2}),
-                                     i -> array_to_string(l[i:i+{n - 1}], ' ')))
-                  ELSE [] END AS grams
-      FROM toks),
-    gh AS (SELECT doc_id, list_transform(grams, g -> {gh}) AS h FROM sh),
-    sig AS (
-      SELECT doc_id,
-             list_sum(list_transform(range(64), j ->
-               CASE WHEN 2 * len(list_filter(h, x -> (x >> j) & 1 = 1)) > len(h)
-                    THEN (1::BIGINT << j) ELSE 0::BIGINT END))::BIGINT AS sig
-      FROM gh),
-    bucketed AS (
-      SELECT doc_id, sig, t.rot AS rot,
-             (sig >> (64 - (t.rot + 1) * {prefix_bits})) & {mask} AS bucket
-      FROM sig, (SELECT unnest(range({n_rotations})) AS rot) t)
+    WITH {_simhash_sig_ctes(n)},
+    bucketed AS ({blocks})
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
            bit_count(xor(a.sig, b.sig))::INT AS hamming
     FROM bucketed a
@@ -1972,25 +1981,8 @@ def _cluster_keepers_oracle_sql(n: int = 2, max_hamming: int = 3) -> str:
     """Pairs = the exact hamming<=max_hamming set (what the multirot banding
     provably returns); clusters = transitive closure via a recursive CTE;
     keeper = min doc_id per component; singletons keep themselves."""
-    gh = _MD5H60.format(g="g")
     return f"""
-    WITH RECURSIVE toks AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS l
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(l) >= {n}
-                  THEN list_distinct(list_transform(range(1, len(l) - {n - 2}),
-                                     i -> array_to_string(l[i:i+{n - 1}], ' ')))
-                  ELSE [] END AS grams
-      FROM toks),
-    gh AS (SELECT doc_id, list_transform(grams, g -> {gh}) AS h FROM sh),
-    sig AS (
-      SELECT doc_id,
-             list_sum(list_transform(range(64), j ->
-               CASE WHEN 2 * len(list_filter(h, x -> (x >> j) & 1 = 1)) > len(h)
-                    THEN (1::BIGINT << j) ELSE 0::BIGINT END))::BIGINT AS sig
-      FROM gh),
+    WITH RECURSIVE {_simhash_sig_ctes(n)},
     pairs AS (
       SELECT a.doc_id AS ida, b.doc_id AS idb
       FROM sig a JOIN sig b ON a.doc_id < b.doc_id
@@ -2015,14 +2007,14 @@ def _cluster_keepers_oracle_sql(n: int = 2, max_hamming: int = 3) -> str:
     _cluster_keepers_oracle_sql(),
     doc="connected-components dedup clustering: multirot SimHash pairs -> "
         "min-label propagation components -> per-doc keeper decision "
-        "(transitively consistent keep/drop); oracle computes the closure "
-        "with a recursive CTE over the exact hamming pair set",
+        "(transitively consistent keep/drop); oracle replays the xxhash64 "
+        "signatures and computes the closure with a recursive CTE over the "
+        "exact hamming pair set",
 )
 def dedup_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.simhash_near_dups(
-        docs, "text", "doc_id", n=2, max_hamming=3,
-        gram_hash=dedup.md5_hash60, n_rotations=4,
+        docs, "text", "doc_id", n=2, max_hamming=3, n_rotations=4
     )
     return dedup.dedup_keepers(docs, pairs, "doc_id")
 
@@ -2032,13 +2024,14 @@ def dedup_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     _simhash_multirot_oracle_sql(),
     doc="multi-rotation SimHash banding (4 x 16-bit blocks, max_hamming=3): "
         "pigeonhole-complete recall — the result equals the exact "
-        "hamming<=3 pair set; oracle replays the block union in DuckDB",
+        "hamming<=3 pair set; the gram hashes run once below the persisted "
+        "signature whatever the rotation count; oracle replays the xxhash64 "
+        "signatures and the block union in DuckDB",
 )
 def dedup_simhash_multirot(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash_near_dups(
-        docs, "text", "doc_id", n=2, max_hamming=3,
-        gram_hash=dedup.md5_hash60, n_rotations=4,
+        docs, "text", "doc_id", n=2, max_hamming=3, n_rotations=4
     )
 
 
@@ -3655,9 +3648,17 @@ def stratified_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _gram_bucket_cte(grams: str, n_buckets: int, name: str = "gb") -> str:
+    """``{name}(g, b)``: text.hashed_ngram_buckets' bucket
+    pmod(xxhash64(g), B) of every DISTINCT gram of the ``grams`` CTE."""
+    return f"""{name} AS (
+      SELECT g, {_pmod_sql(xxhash64_sql("g"), n_buckets)} AS b
+      FROM (SELECT DISTINCT g FROM {grams}))"""
+
+
 @register(
     "dsir_importance_weights",
-    """
+    f"""
     WITH docs AS (
       SELECT doc_id, lang,
              list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS ws
@@ -3669,11 +3670,10 @@ def stratified_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i + 1])
              )) AS g
       FROM docs),
+    {_gram_bucket_cte("grams", 1024)},
     feat AS (
-      SELECT doc_id, lang,
-             CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 1024 AS b,
-             COUNT(*) AS c
-      FROM grams GROUP BY ALL),
+      SELECT doc_id, lang, b, COUNT(*) AS c
+      FROM grams JOIN gb USING (g) GROUP BY ALL),
     hist AS (
       SELECT b, SUM(c) AS raw_c,
              SUM(CASE WHEN lang = 'en' THEN c ELSE 0 END) AS tgt_c
@@ -3683,13 +3683,14 @@ def stratified_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT b, ln((tgt_c + 1.0) / (tt + 1024.0))
                - ln((raw_c + 1.0) / (rt + 1024.0)) AS t
       FROM hist, tot)
+    -- + 0.0: DuckDB rounds a tiny negative weight to -0.0, Spark to 0.0
     SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_grams,
-           ROUND(SUM(c * t), 4) AS dsir_weight
+           ROUND(SUM(c * t), 4) + 0.0 AS dsir_weight
     FROM feat JOIN term USING (b) GROUP BY doc_id
     """,
     doc="DSIR importance weights (Xie et al. 2023): per-doc "
         "log p_target/p_raw under hashed unigram+bigram bag models, "
-        "target = lang='en', B=1024 md5 buckets, Laplace smoothing 1. "
+        "target = lang='en', B=1024 xxhash64 buckets, Laplace smoothing 1. "
         "The only shuffle is the B-row bucket histogram (map-side combined "
         "explode→groupBy); scoring is a per-doc F.aggregate fold over the "
         "gram array against a broadcast map<bucket,log-ratio> — no "
@@ -3710,40 +3711,36 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lm_perplexity_buckets",
-    """
+    f"""
     WITH docs AS (
       SELECT doc_id, lang,
              list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS ws
       FROM documents),
     d2 AS (SELECT doc_id, lang, ws, len(ws) AS n FROM docs WHERE len(ws) >= 2),
-    unic AS (
-      SELECT u AS b, COUNT(*) AS c FROM (
-        SELECT UNNEST(list_transform(ws, w ->
-          CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 1024)) AS u
-        FROM d2 WHERE lang = 'en')
-      GROUP BY 1),
-    bigc AS (
-      SELECT g AS b, COUNT(*) AS c FROM (
-        SELECT UNNEST(list_transform(range(1, n), i ->
-          CAST(('0x' || substr(md5(ws[i] || ' ' || ws[i + 1]), 1, 15))
-            AS BIGINT) % 4096)) AS g
-        FROM d2 WHERE lang = 'en')
-      GROUP BY 1),
-    pairs AS (
-      SELECT doc_id,
-             UNNEST(list_transform(range(1, n), i -> struct_pack(
-               u := CAST(('0x' || substr(md5(ws[i]), 1, 15)) AS BIGINT)
-                      % 1024,
-               g := CAST(('0x' || substr(md5(ws[i] || ' ' || ws[i + 1]), 1,
-                      15)) AS BIGINT) % 4096))) AS p
+    uw AS (SELECT lang, UNNEST(ws) AS g FROM d2),
+    bw AS (
+      SELECT doc_id, lang, UNNEST(list_transform(range(1, n), i ->
+               struct_pack(u := ws[i], g := ws[i] || ' ' || ws[i + 1]))) AS p
       FROM d2),
+    bg AS (SELECT (p).g AS g FROM bw),
+    {_gram_bucket_cte("uw", 1024, "ub")},
+    {_gram_bucket_cte("bg", 4096, "gb")},
+    unic AS (
+      SELECT b, COUNT(*) AS c FROM uw JOIN ub USING (g)
+      WHERE lang = 'en' GROUP BY 1),
+    bigc AS (
+      SELECT gb.b, COUNT(*) AS c FROM bw JOIN gb ON gb.g = (bw.p).g
+      WHERE lang = 'en' GROUP BY 1),
+    pairs AS (
+      SELECT doc_id, ub.b AS u, gb.b AS g
+      FROM bw JOIN ub ON ub.g = (bw.p).u JOIN gb ON gb.g = (bw.p).g),
     scored AS (
       SELECT doc_id, COUNT(*) AS n_bigrams,
              -SUM(ln((COALESCE(bc.c, 0) + 1.0)
                      / (COALESCE(uc.c, 0) + 4096.0))) / COUNT(*) AS xent
       FROM pairs
-      LEFT JOIN unic uc ON uc.b = (p).u
-      LEFT JOIN bigc bc ON bc.b = (p).g
+      LEFT JOIN unic uc ON uc.b = pairs.u
+      LEFT JOIN bigc bc ON bc.b = pairs.g
       GROUP BY doc_id),
     b AS (SELECT doc_id, n_bigrams, xent,
                  CAST(FLOOR(xent * 100) AS INT) AS sbin FROM scored),
@@ -3760,7 +3757,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM b, cuts
     """,
     doc="CCNet-style LM-perplexity corpus partitioning (Wenzek et al. "
-        "2020): a hashed-bigram LM (add-one smoothing, md5 buckets "
+        "2020): a hashed-bigram LM (add-one smoothing, xxhash64 buckets "
         "1024/4096) trains on the lang='en' slice, every doc scores by "
         "per-token cross-entropy, and the corpus splits head/middle/tail "
         "by exact tercile cutoffs read off a bounded score-bin histogram "
@@ -4883,7 +4880,7 @@ def source_cap_rank_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bloom_contamination_flags",
-    """
+    f"""
     WITH ws AS (
       SELECT doc_id,
              list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS w
@@ -4894,16 +4891,15 @@ def source_cap_rank_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' ||
                     w[i+3] || ' ' || w[i+4]) AS gs
       FROM ws),
+    cg0 AS (SELECT doc_id, UNNEST(gs) AS g FROM grams),
+    gh AS (
+      SELECT g, h, {_pmod_sql("h", 262144)} AS p1,
+             ((h >> 32) & 4294967295) % 262144 AS p2
+      FROM (SELECT g, {xxhash64_sql("g")} AS h
+            FROM (SELECT DISTINCT g FROM cg0))),
+    cg AS (SELECT doc_id, p1, p2 FROM cg0 JOIN gh USING (g)),
     bench_pos AS (
-      SELECT DISTINCT UNNEST([
-               ('0x' || substr(md5(gram), 1, 15))::BIGINT % 262144,
-               ('0x' || substr(md5(gram), 17, 15))::BIGINT % 262144]) AS p
-      FROM (SELECT UNNEST(gs) AS gram FROM grams WHERE doc_id % 7 = 0)),
-    cg AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(gram), 1, 15))::BIGINT % 262144 AS p1,
-             ('0x' || substr(md5(gram), 17, 15))::BIGINT % 262144 AS p2
-      FROM (SELECT doc_id, UNNEST(gs) AS gram FROM grams)),
+      SELECT DISTINCT UNNEST([p1, p2]) AS p FROM cg WHERE doc_id % 7 = 0),
     hits AS (
       SELECT doc_id, COUNT(*) AS n_hits FROM cg
       WHERE p1 IN (SELECT p FROM bench_pos)
@@ -4916,7 +4912,8 @@ def source_cap_rank_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "5-grams (bench = doc_id %% 7): the corpus side is scan -> project "
         "-> filter with ZERO exchange — membership rides to executors as a "
         "32 KiB bitset instead of shuffle-joining 100 TB of shingles. "
-        "Positions are md5-derived so DuckDB rebuilds the identical bitset "
+        "Both positions come from ONE xxhash64 per gram (pmod(h, m), "
+        "pmod(h >>> 32, m)), so DuckDB rebuilds the identical bitset "
         "and replays membership exactly, INCLUDING the deterministic false "
         "positives (k=2, m=2^18)",
 )
@@ -4931,7 +4928,7 @@ def bloom_contamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_classifier_gate",
-    """
+    f"""
     WITH docs AS (
       SELECT doc_id, n_chars >= 400 AS pos,
              list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS ws
@@ -4943,11 +4940,10 @@ def bloom_contamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
                list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i + 1])
              )) AS g
       FROM docs),
+    {_gram_bucket_cte("grams", 2048)},
     feat AS (
-      SELECT doc_id, pos,
-             CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 2048 AS b,
-             COUNT(*) AS c
-      FROM grams GROUP BY ALL),
+      SELECT doc_id, pos, b, COUNT(*) AS c
+      FROM grams JOIN gb USING (g) GROUP BY ALL),
     hist AS (
       SELECT b,
              SUM(CASE WHEN pos THEN c ELSE 0 END) AS pc,

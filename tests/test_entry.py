@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from loongcollector_spark.functions import dedup
 from loongcollector_spark.queries import QUERIES
 from tools.check_oracles import table_hash
 
@@ -51,6 +52,16 @@ SPOT = [
     "syslog_rfc3164_parse",
     "pick_drop_keys_projection",
     "tag_route_rollup",
+    # the xxhash64 gram-hash family, replayed by sources/sql_oracle XXH64
+    "dedup_minhash_lsh",
+    "fuzzy_contamination_minhash",
+    "dedup_simhash",
+    "dedup_simhash_multirot",
+    "dedup_cluster_keepers",
+    "bloom_contamination_flags",
+    "dsir_importance_weights",
+    "quality_classifier_gate",
+    "lm_perplexity_buckets",
 ]
 
 
@@ -59,6 +70,7 @@ def test_oracle_spot(spark, duck, name):
     q = QUERIES[name]
     sdf = q.spark(spark, SF)
     srows = [tuple(r) for r in sdf.collect()]
+    dedup.release_persisted()
     ddf = duck.sql(q.sql)
     drows = [tuple(r) for r in ddf.fetchall()]
     assert sorted(sdf.columns) == sorted(list(ddf.columns))

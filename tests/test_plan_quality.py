@@ -297,3 +297,50 @@ def test_grok_one_regex_pass_per_pattern(spark):
     plan = _plan(out)
     assert not [n for n in _PYTHON_NODES if n in plan]
     assert plan.count("regexp_replace(") == 2
+
+
+def _hashing_nodes(plan: str) -> set[str]:
+    """Distinct plan nodes that evaluate xxhash64. A cached subtree is
+    printed once per scan of it, with identical text, so the set counts
+    each node once."""
+    return {ln.split("+- ", 1)[-1] for ln in plan.split("\n") if "xxhash64(" in ln}
+
+
+@pytest.mark.parametrize("n_rotations", [1, 4])
+def test_simhash_gram_hashes_once_below_persisted_signature(spark, n_rotations):
+    """simhash_near_dups hashes grams in ONE plan node, below the persisted
+    signature, whatever the rotation count: the rotation self-join reads
+    the cached (id, sig) relation, and no Filter above the explode
+    re-evaluates the gram-hash expression."""
+    from loongcollector_spark.functions import dedup
+    from loongcollector_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF, "documents")
+    out = dedup.simhash_near_dups(
+        docs, "text", "doc_id", n=2, max_hamming=3, n_rotations=n_rotations
+    )
+    plan = _plan(out)
+    dedup.release_persisted()
+    lines = plan.split("\n")
+    cached = min(i for i, ln in enumerate(lines) if "InMemoryRelation" in ln)
+    assert all(i > cached for i, ln in enumerate(lines) if "xxhash64(" in ln)
+    nodes = _hashing_nodes(plan)
+    assert len(nodes) == 1 and next(iter(nodes)).startswith("Project "), nodes
+
+
+@pytest.mark.parametrize("builder", ["dsir_importance", "quality_classifier_logodds"])
+def test_bucket_features_hash_each_gram_once(spark, builder):
+    """The DSIR and classifier feature scans hash grams in one Project: the
+    empty-doc filter reads the persisted features instead of being pushed
+    below the hashing projection."""
+    from pyspark.sql import functions as F
+
+    from loongcollector_spark.functions import dedup, text as tx
+    from loongcollector_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF, "documents")
+    out = getattr(tx, builder)(docs, "text", "doc_id", F.col("lang") == "en")
+    plan = _plan(out)
+    dedup.release_persisted()
+    nodes = _hashing_nodes(plan)
+    assert len(nodes) == 1 and next(iter(nodes)).startswith("Project "), nodes

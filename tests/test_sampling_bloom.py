@@ -109,7 +109,7 @@ def test_bloom_bits_positions_roundtrip(spark):
     bits = build_bloom_bits(df, "grams", m)
     assert bits.dtype == np.uint8 and len(bits) == m >> 3
     g = df.select(F.explode("grams").alias("g"))
-    p1, p2 = bloom_positions(F.col("g"), m)
+    p1, p2 = bloom_positions(F.xxhash64("g"), m)
     pos = g.select(p1.alias("p1"), p2.alias("p2")).collect()
     for r in pos:
         for p in (r["p1"], r["p2"]):
@@ -184,37 +184,56 @@ def test_source_cap_single_corpus_exchange(spark, sf_dir):
     assert n_corpus_exchanges <= 2, plan
 
 
-# ----------------------------------------------------------- xxh64 fast path
+# ------------------------------------------------------ one gram hash
 
 
 def test_bloom_xxh64_no_false_negatives(spark, sf_dir):
-    """The production xxhash64 path keeps the Bloom guarantee: every
-    benchmark doc flags itself with n_hits == its own gram count."""
+    """The xxhash64 filter keeps the Bloom guarantee when the benchmark
+    side is a separately built DataFrame (not a filter of the corpus):
+    every benchmark doc flags itself with n_hits == its own gram count."""
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "grams", tx.word_ngrams(F.col("text"), 5)
     )
-    bench = docs.filter(F.col("doc_id") % 3 == 0).filter(F.size("grams") > 0)
-    out = bloom_decontaminate(docs, "grams", "doc_id", bench, hash="xxh64")
+    rows = (
+        docs.filter(F.col("doc_id") % 3 == 0)
+        .filter(F.size("grams") > 0)
+        .select("doc_id", "text")
+        .collect()
+    )
+    bench = spark.createDataFrame(
+        [(r["doc_id"], r["text"]) for r in rows], docs.select("doc_id", "text").schema
+    ).withColumn("grams", tx.word_ngrams(F.col("text"), 5))
+    out = bloom_decontaminate(docs, "grams", "doc_id", bench)
     flagged = {r["doc_id"]: (r["n_grams"], r["n_hits"]) for r in out.collect()}
     for r in bench.select("doc_id", F.size("grams").alias("n")).collect():
         assert flagged[r["doc_id"]] == (r["n"], r["n"])
 
 
-def test_hashed_ngram_buckets_xxh64_shape(spark):
-    """xxh64 buckets: same arity and range as the md5 twin, different
-    values (it IS a different hash), and a bad hash name raises."""
-    df = spark.createDataFrame(
-        [("the cat sat on the mat",)], "text string"
+def test_bloom_hashes_each_gram_once(spark, sf_dir):
+    """The corpus side evaluates ONE xxhash64 per gram: both positions
+    read the staged hash array, never a second hash of the gram."""
+    docs = load_table(spark, sf_dir, "documents").withColumn(
+        "grams", tx.word_ngrams(F.col("text"), 5)
     )
-    row = df.select(
-        tx.hashed_ngram_buckets(F.col("text"), 64, (1, 2)).alias("m"),
-        tx.hashed_ngram_buckets(F.col("text"), 64, (1, 2), hash="xxh64").alias("x"),
-    ).collect()[0]
-    assert len(row["m"]) == len(row["x"]) == 6 + 5
-    assert all(0 <= b < 64 for b in row["x"])
-    assert row["m"] != row["x"]
-    with pytest.raises(ValueError):
-        tx.hashed_ngram_buckets(F.col("text"), 64, (1,), hash="sha1")
+    bench = docs.filter(F.col("doc_id") % 5 == 0)
+    out = bloom_decontaminate(docs, "grams", "doc_id", bench)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("xxhash64(") == 1, plan
+
+
+def test_hashed_ngram_buckets_match_xxh64_model(spark):
+    """Buckets are pmod(xxhash64(gram), B) over the unigrams then the
+    space-joined bigrams, exactly as the Python XXH64 model computes them."""
+    from tests.xxh64_model import pmod_bucket
+
+    text = "the cat sat on the mat"
+    df = spark.createDataFrame([(text,)], "text string")
+    got = df.select(
+        tx.hashed_ngram_buckets(F.col("text"), 64, (1, 2)).alias("b")
+    ).first()["b"]
+    ws = text.split()
+    grams = ws + [f"{x} {y}" for x, y in zip(ws, ws[1:])]
+    assert got == [pmod_bucket(g, 64) for g in grams]
 
 
 # -------------------------------------------------------------------- unimax

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from loongcollector_spark.functions import dedup, similarity
 from loongcollector_spark.functions import text as tx
+from tests.xxh64_model import pmod_bucket
 
 
 @pytest.fixture(scope="module")
@@ -622,7 +623,6 @@ def test_dsir_importance_matches_pure_python(spark):
     """dsir_importance == a from-scratch pure-Python replay of the DSIR
     math (hashed unigram+bigram counts, Laplace-smoothed log-ratio) on a
     tiny corpus — and target-domain-looking docs outscore off-domain ones."""
-    import hashlib
     import math
     from collections import Counter
 
@@ -640,10 +640,7 @@ def test_dsir_importance_matches_pure_python(spark):
     def buckets(text):
         ws = [w for w in text.split() if w]
         grams = ws + [f"{x} {y}" for x, y in zip(ws, ws[1:])]
-        return [
-            int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
-            for g in grams
-        ]
+        return [pmod_bucket(g, B) for g in grams]
 
     feat = {i: Counter(buckets(t)) for i, t, _ in rows}
     raw, tgt = Counter(), Counter()
@@ -681,7 +678,6 @@ def test_lm_perplexity_buckets_matches_pure_python(spark):
     smoothing, cross-entropy in nats, histogram-tercile cutoffs) — and a
     doc made of train-slice phrasing lands in a better bucket than one
     made of vocabulary the LM never saw."""
-    import hashlib
     import math
     from collections import Counter
 
@@ -696,14 +692,11 @@ def test_lm_perplexity_buckets_matches_pure_python(spark):
     ]
     df = spark.createDataFrame(rows, "id long, text string, is_tr boolean")
 
-    def b(g, n):
-        return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % n
-
     def grams(text):
         ws = [w for w in text.split() if w]
         return (
-            [b(w, BU) for w in ws],
-            [b(f"{x} {y}", BG) for x, y in zip(ws, ws[1:])],
+            [pmod_bucket(w, BU) for w in ws],
+            [pmod_bucket(f"{x} {y}", BG) for x, y in zip(ws, ws[1:])],
         )
 
     unic, bigc = Counter(), Counter()
@@ -1092,7 +1085,6 @@ def test_quality_classifier_matches_pure_python(spark):
     the NB log-odds math (hashed unigram+bigram pos/neg counts, Laplace
     smoothing, length-normalized mean) — and reference-class-looking docs
     get keep=True while off-class ones do not."""
-    import hashlib
     import math
     from collections import Counter
 
@@ -1108,10 +1100,7 @@ def test_quality_classifier_matches_pure_python(spark):
     def buckets(text):
         ws = [w for w in text.split() if w]
         grams = ws + [f"{x} {y}" for x, y in zip(ws, ws[1:])]
-        return [
-            int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
-            for g in grams
-        ]
+        return [pmod_bucket(g, B) for g in grams]
 
     feat = {i: Counter(buckets(t)) for i, t, _ in rows}
     pos, neg = Counter(), Counter()
@@ -1187,6 +1176,17 @@ def test_html_strip_known_document(spark):
     assert got == ('T\nHead & Tail\nTom &amp; Jerry <3\nA B"C\'D\none\ntwo\n')
 
 
+def test_html_strip_documented_limits(spark):
+    """The two limits html_strip's docstring names: a '>' inside a quoted
+    attribute ends the tag early, and entities beyond the six it decodes
+    stay encoded."""
+    from loongcollector_spark.functions.text import html_strip
+
+    df = spark.createDataFrame([('<a title="x>y">link</a>',), ("caf&eacute; &#233;",)], "h string")
+    got = [r["t"] for r in df.select(html_strip(F.col("h")).alias("t")).collect()]
+    assert got == ['y">link', "caf&eacute; &#233;"]
+
+
 def test_html_strip_keeps_plain_text(spark):
     from loongcollector_spark.functions.text import html_strip
 
@@ -1255,6 +1255,29 @@ def test_domain_blocklist_filter_modes(spark):
     audit = domain_blocklist_filter(df, "url", ["BAD.com"], keep_col="ok")
     got = {r["doc_id"]: r["ok"] for r in audit.collect()}
     assert got == {"a": False, "b": True, "c": False}
+
+
+def test_domain_blocklist_filter_unreadable_urls_pass_both_modes(spark):
+    """One policy for URLs with no readable domain: NULL, '' and 'not a
+    url' have domain NULL and verdict keep = True, in filter mode and in
+    audit mode alike; a listed domain is dropped, an unlisted one kept."""
+    from loongcollector_spark.functions.text import domain_blocklist_filter
+
+    df = spark.createDataFrame(
+        [("null", None), ("empty", ""), ("junk", "not a url"),
+         ("listed", "https://www.bad.com/p"), ("unlisted", "https://good.org/")],
+        "doc_id string, url string",
+    )
+    kept = domain_blocklist_filter(df, "url", ["bad.com"])
+    assert sorted(r["doc_id"] for r in kept.collect()) == [
+        "empty", "junk", "null", "unlisted"
+    ]
+    audit = domain_blocklist_filter(df, "url", ["bad.com"], keep_col="ok", domain_col="dom")
+    got = {r["doc_id"]: (r["ok"], r["dom"]) for r in audit.collect()}
+    assert got == {
+        "null": (True, None), "empty": (True, None), "junk": (True, None),
+        "listed": (False, "bad.com"), "unlisted": (True, "good.org"),
+    }
 
 
 def test_minhash_cross_candidates_finds_planted_overlap(spark):

@@ -24,30 +24,12 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# registry entries benchmarked at scale; the md5-gram oracle twins
-# (dedup_minhash_lsh / dedup_simhash) are correctness artifacts — they pin
-# md5 STRING shingles so DuckDB can replay them, which costs ~10x the
-# production gram path and proves nothing extra about scaling shape
-QUERIES = ["corpus_curation_pipeline", "dedup_exact", "dsir_importance_weights"]
-
-
-def _production_paths():
-    """The xxhash64 production dedup paths (the registry twins pin the
-    md5 gram hash so DuckDB can replay them; these are what a real corpus
-    run would use)."""
-    from loongcollector_spark.functions import dedup
-    from loongcollector_spark.sources.tables import load_table
-
-    return {
-        "dedup_minhash_xxh": lambda spark, sf: dedup.minhash_lsh_candidates(
-            load_table(spark, sf, "documents"), "text", "doc_id",
-            n=3, num_hashes=32, bands=8,
-        ),
-        "dedup_simhash_xxh": lambda spark, sf: dedup.simhash_near_dups(
-            load_table(spark, sf, "documents"), "text", "doc_id",
-            n=2, max_hamming=8, prefix_bits=16,
-        ),
-    }
+# registry entries benchmarked at scale; the dedup queries run the same
+# xxhash64 gram path every caller runs
+QUERIES = [
+    "corpus_curation_pipeline", "dedup_exact", "dsir_importance_weights",
+    "dedup_minhash_lsh", "dedup_simhash",
+]
 
 _WORDS = (
     "the of and to in is was for on that with as his they at be this from have "
@@ -158,9 +140,8 @@ def main() -> None:
         sf_dir = f"/tmp/lc_funnel_{n}"
         make_documents(spark, n, os.path.join(sf_dir, "documents.parquet"))
         per_q = {}
-        runners = {name: REGISTRY[name].spark for name in QUERIES}
-        runners.update(_production_paths())
-        for name, fn in runners.items():
+        for name in QUERIES:
+            fn = REGISTRY[name].spark
             r0, w0 = shuffle_totals(ui_url, app_id)
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

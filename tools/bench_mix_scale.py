@@ -41,37 +41,6 @@ QUERIES = [
 ]
 
 
-def _production_paths():
-    """The xxhash64 production variants of the two gram-hashing ops (the
-    registry twins pin md5 so DuckDB can replay them; these are what a
-    real corpus run would use). Set LC_MIX_PROD=1 to benchmark ONLY these."""
-    from pyspark.sql import functions as F
-
-    from loongcollector_spark.functions import bloom, text as tx
-    from loongcollector_spark.sources.tables import load_table
-
-    def classifier_xxh(spark, sf):
-        docs = load_table(spark, sf, "documents")
-        return tx.quality_classifier_logodds(
-            docs, "text", "doc_id", F.col("n_chars") >= 400,
-            n_buckets=2048, hash="xxh64",
-        )
-
-    def bloom_xxh(spark, sf):
-        docs = load_table(spark, sf, "documents").withColumn(
-            "grams", tx.word_ngrams(F.col("text"), 5)
-        )
-        bench = docs.filter(F.col("doc_id") % 7 == 0)
-        return bloom.bloom_decontaminate(
-            docs, "grams", "doc_id", bench, hash="xxh64"
-        )
-
-    return {
-        "quality_classifier_xxh": classifier_xxh,
-        "bloom_contamination_xxh": bloom_xxh,
-    }
-
-
 def main() -> None:
     scales = [int(x) for x in sys.argv[1:]] or [2_000_000, 20_000_000]
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
@@ -102,17 +71,12 @@ def main() -> None:
         "load_avg_start": round(os.getloadavg()[0], 2),
         "scales": {},
     }
-    prod_only = os.environ.get("LC_MIX_PROD") == "1"
     for n in scales:
         sf_dir = f"/tmp/lc_funnel_{n}"
         make_documents(spark, n, os.path.join(sf_dir, "documents.parquet"))
         per_q = {}
-        runners = (
-            _production_paths()
-            if prod_only
-            else {name: REGISTRY[name].spark for name in QUERIES}
-        )
-        for name, fn in runners.items():
+        for name in QUERIES:
+            fn = REGISTRY[name].spark
             # Unrecorded warm-up: JVM codegen + Arrow python-worker spin-up
             # (and the OS page cache for the parquet scan).
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
