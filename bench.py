@@ -1,119 +1,143 @@
-"""Benchmark: end-to-end pipeline throughput + per-query timings.
+"""Benchmark: end-to-end flagship pipeline throughput plus per-query timings.
 
 Prints ONE JSON line:
-  {"metric": "pipeline_sequences_per_sec", "value": N, "unit": "sec"-denominated
-   rate, "queries": {name: sec, ...}, "sf": S, ...extras}
+  {"metric": "pipeline_sequences_per_sec", "value": N, "unit": "seq/s",
+   "queries": {name: median seconds, ...}, "sf": S, "host": {...}, ...}
 
-Headline: the full collector pipeline (read tokenized sequences -> decode
-stage (mapInPandas detok render, the vectorized-UDF hot path) -> multi-format
-parse (JVM regex/json/delimiter) -> dict_map enrich -> first-match route ->
-shard-hash -> per-sink noop writes + salted per-(source,sink) rollup) over a
-deterministic synthetic F1 table sized to the sf. Sinks are noop —
-mirroring the reference's file->blackhole benchmark methodology
+Headline: the flagship collector pipeline over a synthetic F1 table sized to
+the sf: detok render (Catalyst expressions) -> nginx regex, JSON and
+delimiter parse -> dict_map enrich -> first-match route -> shard hash -> noop
+sinks plus the salted per-(source, sink) rollup. Sinks are noop, as in the
+reference's file-to-blackhole benchmark
 (test/benchmark/.../performance_file_to_blackhole_loongcollector).
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default all), LC_BENCH_ROWS to override input size,
-     LC_BENCH_SKIP_QUERIES=1 for the pipeline-only scaling runs.
+Every timing is ``tools/rehearse.measure``: one warm-up run (it JIT-compiles
+the generated stages), then the median of 3 timed runs, each with its load
+average, shuffle MB and tasks per stage. The session is sized from the host.
+
+Env (deployment settings): SPARK_GRAFT_SF_DIR (the sf directory),
+SPARK_GRAFT_CPUS (task slots; default every CPU of the host).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
+import shutil
 import sys
-import time
+
+from loongcollector_spark.operators.route import Condition, Route
+from loongcollector_spark.pipeline import PipelineSpec
+from loongcollector_spark.sinks import SinkSpec
+
+NGINX = r'(\S+) - - \[([^\]]+)\] "(\S+) (\S+) ([^"]+)" (\d+) (\d+) "([^"]*)" "([^"]*)" "([^"]*)"'
+NGINX_KEYS = [
+    "remote_addr", "time_local", "method", "url", "protocol",
+    "status", "body_bytes_sent", "http_referer", "http_user_agent", "http_x_forwarded_for",
+]
+_KEEP = {"keep_source_on_fail": True, "keep_source_on_success": True}
+
+# The flagship pipeline; tools/rehearse.py times the same spec at
+# local[1] and local[nproc].
+FLAGSHIP = PipelineSpec(
+    name="bench",
+    processors=[
+        ("parse_regex", {"source_key": "line", "pattern": NGINX, "keys": NGINX_KEYS,
+                         "full_match": False, "options": _KEEP}),
+        ("parse_json", {"source_key": "line", "keys": ["method", "path", "status", "bytes", "level"],
+                        "options": _KEEP}),
+        ("parse_delimiter", {"source_key": "line", "separator": "\t",
+                             "keys": ["uid", "time", "d_method", "value", "d_level"], "options": _KEEP}),
+        ("dict_map", {"source_key": "source",
+                      "mapping": {"web-01": "edge", "web-02": "edge", "app-01": "svc", "sys-01": "infra"},
+                      "dest_key": "tier", "missing": "other"}),
+    ],
+    routes=[
+        Route("errors", Condition(content_key="status", content_regex=r"5\d\d")),
+        Route("web", Condition(content_key="source", content_regex="web-.*")),
+        Route("app", Condition(content_key="source", content_regex="app-.*")),
+    ],
+    shard_keys=("source", "doc_id"),
+    shard_count=64,
+    sinks={s: SinkSpec(name=s, format="noop") for s in ("errors", "web", "app", "default")},
+)
+
+# Token-native variant: the same route/shard/rollup with fields read straight
+# from header tokens (no detok render, no regex), the fast path that
+# pre-tokenized input makes possible.
+NATIVE = PipelineSpec(name="bench_native", processors=[], routes=FLAGSHIP.routes,
+                      shard_keys=FLAGSHIP.shard_keys, shard_count=FLAGSHIP.shard_count, sinks=FLAGSHIP.sinks)
 
 
 def main() -> None:
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
+    import rehearse
+    from pyspark.sql import functions as F
+
+    from loongcollector_spark.pipeline import run_pipeline
+    from loongcollector_spark.queries import QUERIES
+    from loongcollector_spark.sources import render_lines
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or rehearse.NPROC)
     sf = _sf_of(sf_dir)
-    # Host-noise guard: this sandbox has documented 2-3x swings when another
-    # JVM shares the box (r2 vs r3 driver records). Annotate the load average
-    # so a reader can discount a contended record instead of mistaking it for
-    # a regression; the headline is a MEDIAN of 3 warm runs for the same
-    # reason (a single sample here is not a measurement).
-    load_avg = list(os.getloadavg())
+    load_avg = rehearse.host.loadavg()
+    work = os.path.join(rehearse.STATE, "bench-work")
+    spark = rehearse.start_session(work, cpus)
 
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")  # cache holds token arrays
-    from loongcollector_spark.session import get_spark
+    n_rows = max(int(5_000_000 * sf), 20_000)
+    d = os.path.join(rehearse.INPUTS, str(n_rows))
+    os.makedirs(d, exist_ok=True)
+    rehearse.sequences(spark, n_rows, d)
+    seqs = spark.read.parquet(os.path.join(d, "sequences.parquet"))
+    tokens = seqs.agg(F.sum("n_tok")).first()[0]
 
-    spark = get_spark(
-        app_name="loongcollector-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=str(max(int(cpus) * 2, 16)),
-        extra_conf={"spark.sql.mapKeyDedupPolicy": "LAST_WIN"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    def rows_of(res: dict) -> int:
+        return sum(r["rows"] for r in res["metrics_rollup"])
 
-    n_rows = int(os.environ.get("LC_BENCH_ROWS") or max(int(5_000_000 * sf), 20_000))
-    pipeline_stats = _bench_pipeline(spark, n_rows)
+    pipe = rehearse.measure(spark, lambda: rows_of(run_pipeline(render_lines(seqs), FLAGSHIP, checkpoint=False)))
+    native = rehearse.measure(
+        spark, lambda: rows_of(run_pipeline(_token_native_parse(seqs), NATIVE, checkpoint=False)))
+    query_runs = {name: rehearse.measure(spark, lambda: q.spark(spark, sf_dir)) for name, q in QUERIES.items()}
+    facts = rehearse.host_facts(spark)
+    spark.stop()
+    shutil.rmtree(work, ignore_errors=True)
 
-    query_times: dict[str, float] = {}
-    query_runs: dict[str, dict] = {}
-    if os.environ.get("LC_BENCH_SKIP_QUERIES") != "1":
-        from loongcollector_spark.functions import dedup
-        from loongcollector_spark.queries import QUERIES
-
-        # Same treatment as the pipeline headline: a single sample on this
-        # noisy-neighbor host is not a measurement (r4's driver record ran at
-        # load 5.2 and showed 4 phantom "regressions" on untouched code), so
-        # each query is timed LC_BENCH_QUERY_RUNS times (default 3) and the
-        # recorded number is the median; per-query runs + the 1-min load at
-        # measurement time are kept so contended records self-identify.
-        n_runs = int(os.environ.get("LC_BENCH_QUERY_RUNS") or 3)
-        for name, q in QUERIES.items():
-            runs = []
-            for _ in range(n_runs):
-                t0 = time.time()
-                q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(round(time.time() - t0, 3))
-                # dedup plans persist self-join inputs; free them so later
-                # runs/queries' caches don't fight for executor memory
-                dedup.release_persisted()
-            query_times[name] = statistics.median(runs)
-            query_runs[name] = {
-                "runs": runs,
-                "median": statistics.median(runs),
-                "load_avg": round(os.getloadavg()[0], 2),
-            }
-
+    sec = pipe["wall_s"]["median"]
     out = {
         "metric": "pipeline_sequences_per_sec",
-        "value": pipeline_stats["sequences_per_sec"],
-        "unit": "sec",
-        "queries": query_times,
+        "value": round(pipe["rows_out"] / sec, 1),
+        "unit": "seq/s",
+        "queries": {name: r["wall_s"]["median"] for name, r in query_runs.items()},
         "query_runs": query_runs,
         "sf": sf,
-        "pipeline": pipeline_stats,
-        "cpus": int(cpus),
-        "load_avg": [round(x, 2) for x in load_avg],
-        "host_busy": load_avg[0] > max(int(cpus) // 2, 4),
-        "runs": pipeline_stats["runs"],
-        "median": pipeline_stats["elapsed_sec"],
+        "pipeline": {
+            "rows": pipe["rows_out"],
+            "tokens": tokens,
+            "tokens_per_sec": round(tokens / sec, 1),
+            "flagship": pipe,
+            "token_native": native,
+            "token_native_sequences_per_sec": round(native["rows_out"] / native["wall_s"]["median"], 1),
+        },
+        "host": {**facts, "cpus": cpus, "load_avg": load_avg},
+        **_scaling(rehearse),
     }
-    # two-parallelism scaling evidence (north rule): produced by
-    # tools/bench_scaling.py --scaling; surfaced here so the per-round bench
-    # record carries the efficiency number alongside throughput
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               ".bench_state", "scaling.json")) as fh:
-            sc = json.load(fh)
-        ratio = sc["n_high"] / sc["n_low"]
-        out["scaling"] = {
-            "n_rows": sc["n"],
-            "low_cpus": sc["n_low"],
-            "high_cpus": sc["n_high"],
-            "low_seq_per_sec": round(sc["n"] / sc["t_low"], 1),
-            "high_seq_per_sec": round(sc["n"] / sc["t_high"], 1),
-            "efficiency": round(sc["t_low"] / (ratio * sc["t_high"]), 3),
-        }
-    except Exception:
-        pass
-    spark.stop()
     print(json.dumps(out))
+
+
+def _scaling(rehearse) -> dict:
+    """The rehearsal's flagship family (local[1] vs local[nproc]), embedded
+    only when it was measured on this host."""
+    try:
+        with open(rehearse.RECORD) as fh:
+            record = json.load(fh)
+    except FileNotFoundError:
+        return {"scaling": None, "scaling_reason": "no .bench_state/rehearsal.json"}
+    if not rehearse.same_host(record["host"]):
+        return {"scaling": None, "scaling_reason": f"rehearsal.json was measured on another host: {record['host']}"}
+    if "flagship" not in record["families"]:
+        return {"scaling": None, "scaling_reason": "rehearsal.json has no flagship family"}
+    return {"scaling": {"host": record["host"], **record["families"]["flagship"]}}
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -122,108 +146,6 @@ def _sf_of(sf_dir: str) -> float:
         return float(base.replace("sf", ""))
     except ValueError:
         return 0.1
-
-
-def _bench_pipeline(spark, n_rows: int) -> dict:
-    """Measure the flagship pipeline over n_rows synthetic sequences.
-    Input parquet is materialized once per size under /tmp (generation is
-    excluded from the measured window)."""
-    from pyspark.sql import functions as F
-
-    from loongcollector_spark.operators.route import Condition, Route
-    from loongcollector_spark.pipeline import PipelineSpec, run_pipeline
-    from loongcollector_spark.sinks import SinkSpec
-    from loongcollector_spark.sources import generate_sequences, render_lines
-
-    data_path = f"/tmp/lc_bench_input_{n_rows}"
-    if not os.path.isdir(data_path):
-        generate_sequences(spark, n_rows, partitions=max(32, n_rows // 50_000)).write.mode(
-            "overwrite"
-        ).parquet(data_path)
-
-    seqs = spark.read.parquet(data_path)
-
-    NGINX = r'(\S+) - - \[([^\]]+)\] "(\S+) (\S+) ([^"]+)" (\d+) (\d+) "([^"]*)" "([^"]*)" "([^"]*)"'
-    NGINX_KEYS = [
-        "remote_addr", "time_local", "method", "url", "protocol",
-        "status", "body_bytes_sent", "http_referer", "http_user_agent", "http_x_forwarded_for",
-    ]
-    spec = PipelineSpec(
-        name="bench",
-        processors=[
-            ("parse_regex", {"source_key": "line", "pattern": NGINX, "keys": NGINX_KEYS,
-                             "full_match": False,
-                             "options": {"keep_source_on_fail": True, "keep_source_on_success": True}}),
-            ("parse_json", {"source_key": "line", "keys": ["method", "path", "status", "bytes", "level"],
-                            "options": {"keep_source_on_fail": True, "keep_source_on_success": True}}),
-            ("parse_delimiter", {"source_key": "line", "separator": "\t",
-                                 "keys": ["uid", "time", "d_method", "value", "d_level"],
-                                 "options": {"keep_source_on_fail": True, "keep_source_on_success": True}}),
-            ("dict_map", {"source_key": "source",
-                          "mapping": {"web-01": "edge", "web-02": "edge", "app-01": "svc", "sys-01": "infra"},
-                          "dest_key": "tier", "missing": "other"}),
-        ],
-        routes=[
-            Route("errors", Condition(content_key="status", content_regex=r"5\d\d")),
-            Route("web", Condition(content_key="source", content_regex="web-.*")),
-            Route("app", Condition(content_key="source", content_regex="app-.*")),
-        ],
-        shard_keys=("source", "doc_id"),
-        shard_count=64,
-        sinks={s: SinkSpec(name=s, format="noop") for s in ("errors", "web", "app", "default")},
-    )
-
-    # Cold run warms Python UDF workers + JIT-compiles the codegen'd stages
-    # (the reference's steady-state claims likewise exclude agent startup);
-    # steady state = MEDIAN of three warm runs (the sandbox host is
-    # noisy-neighbor contended, so a single sample can be 2-3x off and a
-    # best-of hides contention instead of flagging it).
-    t0 = time.time()
-    res = run_pipeline(render_lines(seqs), spec, checkpoint=False)
-    cold = time.time() - t0
-
-    warm_runs = []
-    for _ in range(3):
-        t0 = time.time()
-        res = run_pipeline(render_lines(seqs), spec, checkpoint=False)
-        warm_runs.append(round(time.time() - t0, 3))
-    elapsed = statistics.median(warm_runs)
-
-    tokens = sum(r["tokens"] for r in res["metrics_rollup"])
-    rows = sum(r["rows"] for r in res["metrics_rollup"])
-
-    # token-native variant: same route/shard/rollup, but fields come straight
-    # from header tokens (no detok render, no regex) — the representation-
-    # aware fast path the north rule's pre-tokenized input makes possible
-    native_spec = PipelineSpec(
-        name="bench_native",
-        processors=[],
-        routes=spec.routes,
-        shard_keys=spec.shard_keys,
-        shard_count=spec.shard_count,
-        sinks=spec.sinks,
-    )
-    run_pipeline(_token_native_parse(seqs), native_spec, checkpoint=False)  # warm
-    native_runs = []
-    for _ in range(3):
-        t0 = time.time()
-        run_pipeline(_token_native_parse(seqs), native_spec, checkpoint=False)
-        native_runs.append(round(time.time() - t0, 3))
-    native_elapsed = statistics.median(native_runs)
-
-    return {
-        "rows": rows,
-        "tokens": int(tokens),
-        "runs": warm_runs,
-        "token_native_runs": native_runs,
-        "elapsed_sec": round(elapsed, 3),
-        "cold_elapsed_sec": round(cold, 3),
-        "sequences_per_sec": round(rows / elapsed, 1),
-        "tokens_per_sec": round(tokens / elapsed, 1),
-        "token_native_elapsed_sec": round(native_elapsed, 3),
-        "token_native_sequences_per_sec": round(rows / native_elapsed, 1),
-        "token_native_tokens_per_sec": round(tokens / native_elapsed, 1),
-    }
 
 
 def _token_native_parse(seqs):
