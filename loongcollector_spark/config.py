@@ -274,7 +274,7 @@ def _native_processor(p: Mapping[str, Any]) -> tuple[str, dict]:
     if t == "processor_split_log_regex":
         from loongcollector_spark.sources.files import PATH_TAG
 
-        return "merge_multiline", {
+        return "merge_multiline_rules", {
             "line_col": p.get("SplitKey", "content"),
             "file_col": PATH_TAG,
             "offset_col": "__offset__",

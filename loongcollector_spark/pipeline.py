@@ -73,7 +73,7 @@ PROCESSORS: dict[str, Callable[..., DataFrame]] = {
     "split_string": split_string,
     "split_string_fields": split_string_fields,
     "split_to_rows": split_to_rows,
-    "merge_multiline": multiline.merge_multiline,
+    "merge_multiline": multiline.merge_multiline_rules,
     "merge_multiline_rules": multiline.merge_multiline_rules,
     "merge_by_flag": multiline.merge_by_flag,
     "filter_expression": filters.filter_expression,

@@ -395,14 +395,14 @@ def grok_apache_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stays single-line (ProcessorSplitMultilineLogStringNative)",
 )
 def multiline_merge_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from loongcollector_spark.operators.multiline import merge_multiline
+    from loongcollector_spark.operators.multiline import merge_multiline_rules
 
     ev = load_table(spark, sf_dir, "events")
     lines = ev.select(
         "user_id", "event_id",
         F.concat("event_type", F.lit("#"), F.col("event_id").cast("string")).alias("line"),
     )
-    return merge_multiline(
+    return merge_multiline_rules(
         lines, "line", "user_id", "event_id", start_pattern="^error",
         unmatched="single_line",
     )

@@ -20,7 +20,7 @@ execution mode with the idiomatic Spark mapping:
 """
 
 from loongcollector_spark.streaming.dedup import streaming_exact_dedup
-from loongcollector_spark.streaming.multiline import streaming_merge_multiline
+from loongcollector_spark.streaming.multiline import streaming_merge_rules
 from loongcollector_spark.streaming.pipeline import (
     run_native_streaming,
     run_streaming_pipeline,
@@ -35,7 +35,7 @@ __all__ = [
     "run_streaming_pipeline",
     "run_native_streaming",
     "streaming_rate_limit",
-    "streaming_merge_multiline",
+    "streaming_merge_rules",
     "streaming_session_rollup",
     "streaming_windowed_rollup",
     "streaming_exact_dedup",

@@ -2,114 +2,163 @@
 
 The reference's multiline processor keeps the current accumulating entry as
 state between reads (ProcessorMergeMultilineLogNative.h:26-51; a block is
-only emitted when the NEXT start line arrives or a flush timeout fires).
-Batch mode handles this with window sessionization (operators/multiline.py);
-in streaming, a block's head may arrive in one micro-batch and its tail in
-the next, so the pending block must live in GroupState keyed by file.
+only emitted when a later line closes it or a flush timeout fires). Batch
+mode handles this with window sessionization (operators/multiline.py); in
+streaming, a block's head may arrive in one micro-batch and its tail in the
+next, so the pending block must live in GroupState keyed by file.
 
-Semantics (BY_REGEX, start-pattern mode):
-- lines are processed per file in offset order within each micro-batch;
-- a line matching ``start_pattern`` closes and emits the pending block and
-  opens a new one; other lines append to the pending block;
-- lines before any start line (e.g. the head of a resumed file) are emitted
-  as single-line blocks (UNMATCH_SINGLE_LINE);
-- on group-state timeout (no new lines for ``flush_timeout_ms``), the
-  pending block is flushed — the Batcher timeout-flush analogue.
+Both executions share operators/multiline.py's ``Mode`` and its
+``line_flags`` projection: the patterns are matched in the JVM (Java regex,
+as in batch) and the one GroupState step function below reads only offsets,
+the three booleans and the carried columns. Its transition table is the C++
+automaton (ProcessorSplitMultilineLogStringNative.cpp:167-310); start-only
+and BY_FLAG are two of its cases. Lines are processed per file in offset
+order; on group-state timeout (no new lines for ``flush_timeout_ms``) the
+pending block flushes as ``Mode.flush_merged`` dictates — the Batcher
+timeout-flush analogue. Output is the batch shape: (file_col, offset_col
+long, line_col, *other input columns), as the batch ``keep_fields`` does.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
-STATE_SCHEMA = "head_offset long, lines array<string>"
-OUT_SCHEMA_SUFFIX = "file string, offset long, block string"
+from loongcollector_spark.operators.multiline import (
+    FLAG_COLS,
+    UNMATCH_SINGLE_LINE,
+    Mode,
+    line_flags,
+    passthrough,
+    rule_mode,
+)
 
 
-def streaming_merge_multiline(
+def _merge_stream(
     df: DataFrame,
     line_col: str,
     file_col: str,
     offset_col: str,
-    start_pattern: str,
-    flush_timeout_ms: int = 60_000,
-    unmatched: str = "single_line",
+    mode: Mode | None,
+    flush_timeout_ms: int,
 ) -> DataFrame:
-    """Merge a streaming line feed into multiline blocks with cross-batch
-    state. Output schema: (file, offset of block head, block text).
-    ``unmatched`` follows the batch operator's UnmatchedContentTreatment:
-    head-of-stream lines arriving before any start-match are emitted as
-    single-line events ('single_line') or dropped ('discard')."""
-    import re
+    flag_col = mode.flag_col if mode else None
+    keep = [
+        f for f in df.schema.fields
+        if f.name not in (file_col, offset_col, line_col, flag_col)
+    ]
+    names = [f.name for f in keep]
+    if mode is None:
+        return passthrough(df, line_col, file_col, offset_col, line_col, names)
 
-    compiled = re.compile(start_pattern)
+    out_schema = StructType(
+        [
+            StructField(file_col, df.schema[file_col].dataType),
+            StructField(offset_col, LongType()),
+            StructField(line_col, StringType()),
+        ]
+        + keep
+    )
+    # the pending block, one array per output column after the file key
+    state_schema = StructType(
+        [StructField(f.name, ArrayType(f.dataType)) for f in out_schema.fields[1:]]
+    )
+    shape, joiner, flush_merged = mode.shape, mode.joiner, mode.flush_merged
+    single_line = mode.unmatched == UNMATCH_SINGLE_LINE
 
-    def merge(
+    def step(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        file_id = key[0]
+        out: list = []  # event rows: (offset, line, *kept values)
+
+        def merged(block: list) -> None:
+            text = joiner.join(r[1] for r in block if r[1] is not None)
+            out.append((block[0][0], text, *block[0][2:]))
+
+        def unmatched(block: list) -> None:
+            if single_line:
+                out.extend(block)
+
+        pending = [tuple(r) for r in zip(*state.get)] if state.exists else None
         if state.hasTimedOut:
-            if state.exists:
-                head, lines = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {"file": [file_id], "offset": [head], "block": ["\n".join(lines)]}
-                )
-            return
-
-        if state.exists:
-            head, lines = state.get
-            pending: Tuple[int, list] | None = (head, list(lines))
-        else:
-            pending = None
-
-        out_files: list = []
-        out_offsets: list = []
-        out_blocks: list = []
-
-        def emit(p: Tuple[int, list]) -> None:
-            out_files.append(file_id)
-            out_offsets.append(p[0])
-            out_blocks.append("\n".join(p[1]))
-
-        # applyInPandasWithState splits a group into multiple Arrow chunks
-        # beyond arrow.maxRecordsPerBatch, and cross-chunk order after the
-        # shuffle is arbitrary — materialize the whole group and sort ONCE so
-        # >10k-line files still merge in offset order.
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            pdf = pdf.sort_values(offset_col)
-            for off, line in zip(pdf[offset_col], pdf[line_col]):
-                if compiled.search(line):
-                    if pending is not None:
-                        emit(pending)
-                    pending = (int(off), [line])
-                elif pending is None:
-                    # head-of-stream continuation line: unmatched path
-                    if unmatched != "discard":
-                        emit((int(off), [line]))
-                else:
-                    pending[1].append(line)
-
-        if pending is not None:
-            state.update((int(pending[0]), [str(l) for l in pending[1]]))
-            state.setTimeoutDuration(flush_timeout_ms)
-        elif state.exists:
             state.remove()
-
-        if out_files:
-            yield pd.DataFrame(
-                {"file": out_files, "offset": out_offsets, "block": out_blocks}
+            if pending:
+                (merged if flush_merged else unmatched)(pending)
+        else:
+            # applyInPandasWithState splits a group into multiple Arrow
+            # chunks beyond arrow.maxRecordsPerBatch, and cross-chunk order
+            # after the shuffle is arbitrary — materialize the whole group
+            # and sort ONCE so >10k-line files still merge in offset order.
+            chunks = [p for p in pdfs if len(p)]
+            pdf = pd.concat(chunks).sort_values(offset_col) if chunks else None
+            lines = [] if pdf is None else zip(
+                zip(*(pdf[c].tolist() for c in (offset_col, line_col, *names))),
+                *(pdf[c].tolist() for c in FLAG_COLS),
             )
+            for row, s, c, e in lines:
+                if pending is not None:
+                    if shape in ("start", "start_continue"):
+                        # continue is checked first inside a block
+                        # (.cpp:207-211); start-only absorbs all but a start
+                        absorbs = c if shape == "start_continue" else not s
+                        if absorbs:
+                            pending.append(row)
+                            continue
+                        # the block closes; the line is handled as outside
+                        merged(pending)
+                        pending = None
+                    else:
+                        pending.append(row)
+                        if shape == "continue_end":
+                            # run of continue-matches + ONE closer
+                            # (.cpp:218-230)
+                            if not c:
+                                (merged if e else unmatched)(pending)
+                                pending = None
+                        elif e:
+                            # start+end: while open only the end pattern is
+                            # consulted (.cpp:231-250); end-only closes too
+                            merged(pending)
+                            pending = None
+                        continue
+                if shape == "end":
+                    # every line absorbs (isPartialLog sticks, .cpp:166-170)
+                    if e:
+                        merged([row])
+                    else:
+                        pending = [row]
+                elif shape == "continue_end":
+                    # standalone end-match = matched single (.cpp:189-194)
+                    if c:
+                        pending = [row]
+                    elif e:
+                        merged([row])
+                    else:
+                        unmatched([row])
+                elif s:
+                    pending = [row]
+                else:
+                    unmatched([row])
+            if pending:
+                state.update(tuple(list(col) for col in zip(*pending)))
+                state.setTimeoutDuration(flush_timeout_ms)
+            elif state.exists:
+                state.remove()
 
-    return df.groupBy(file_col).applyInPandasWithState(
-        merge,
-        outputStructType=OUT_SCHEMA_SUFFIX,
-        stateStructType=STATE_SCHEMA,
+        if out:
+            cols = list(zip(*out))
+            frame = {file_col: [key[0]] * len(out)}
+            frame.update(zip((offset_col, line_col, *names), cols))
+            yield pd.DataFrame(frame)
+
+    return line_flags(df, line_col, mode).groupBy(file_col).applyInPandasWithState(
+        step,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
@@ -123,116 +172,13 @@ def streaming_merge_by_flag(
     partial_flag_col: str,
     flush_timeout_ms: int = 60_000,
 ) -> DataFrame:
-    """Stateful BY_FLAG merge — the streaming twin of
-    operators.multiline.merge_by_flag (MergeLogsByFlag,
-    ProcessorMergeMultilineLogNative.cpp:113-158): partial-flagged chunks
-    accumulate per file across micro-batches; the first non-partial chunk
-    closes the block (its content included), concatenated with NO separator;
-    the merged event keeps the FIRST chunk's other fields and drops the
-    flag. A pending block with no closing chunk flushes on the group-state
-    timeout — the reference flushes it at group end.
-
-    Output schema: (file, offset of block head, merged line_col, *other
-    input columns from the first chunk) — the extra columns (container
-    ``_time_``/``_source_`` etc.) ride through, as MergeEvents keeps
-    logEvents[0] intact and only rewrites its SourceKey content."""
-    from pyspark.sql.types import ArrayType, StringType, StructType
-
-    in_schema = df.schema
-    others = [
-        f
-        for f in in_schema.fields
-        if f.name not in (file_col, offset_col, line_col, partial_flag_col)
-    ]
-    out_schema = StructType()
-    out_schema.add("file", in_schema[file_col].dataType)
-    out_schema.add("offset", "long")
-    out_schema.add(line_col, in_schema[line_col].dataType)
-    for f in others:
-        out_schema.add(f)
-    state_schema = StructType()
-    state_schema.add("head_offset", "long")
-    state_schema.add("chunks", ArrayType(StringType()))
-    for f in others:
-        state_schema.add(f)
-    other_names = [f.name for f in others]
-
-    def merge(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        file_id = key[0]
-
-        def block_frame(rows: list) -> pd.DataFrame:
-            cols: dict = {"file": [], "offset": [], line_col: []}
-            for n in other_names:
-                cols[n] = []
-            for head, chunks, firsts in rows:
-                cols["file"].append(file_id)
-                cols["offset"].append(head)
-                cols[line_col].append("".join(chunks))
-                for n, v in zip(other_names, firsts):
-                    cols[n].append(v)
-            return pd.DataFrame(cols)
-
-        if state.hasTimedOut:
-            if state.exists:
-                head, chunks, *firsts = state.get
-                state.remove()
-                yield block_frame([(head, list(chunks), firsts)])
-            return
-
-        pending: tuple | None = None
-        if state.exists:
-            head, chunks, *firsts = state.get
-            pending = (head, list(chunks), list(firsts))
-
-        out_rows: list = []
-        chunk_frames = [p for p in pdfs if len(p)]
-        if chunk_frames:
-            pdf = (
-                pd.concat(chunk_frames)
-                if len(chunk_frames) > 1
-                else chunk_frames[0]
-            )
-            pdf = pdf.sort_values(offset_col)
-            firsts_cols = [pdf[n] for n in other_names]
-
-            def _py(v):  # numpy scalar → plain python for GroupState.update
-                return v.item() if hasattr(v, "item") else v
-
-            for i, (off, line, is_partial) in enumerate(
-                zip(pdf[offset_col], pdf[line_col], pdf[partial_flag_col])
-            ):
-                row_firsts = [_py(c.iloc[i]) for c in firsts_cols]
-                line = "" if line is None else str(line)
-                if pending is None:
-                    if is_partial:
-                        pending = (int(off), [line], row_firsts)
-                    else:
-                        out_rows.append((int(off), [line], row_firsts))
-                else:
-                    pending[1].append(line)
-                    if not is_partial:
-                        out_rows.append(pending)
-                        pending = None
-
-        if pending is not None:
-            state.update(
-                (int(pending[0]), [str(c) for c in pending[1]], *pending[2])
-            )
-            state.setTimeoutDuration(flush_timeout_ms)
-        elif state.exists:
-            state.remove()
-
-        if out_rows:
-            yield block_frame(out_rows)
-
-    return df.groupBy(file_col).applyInPandasWithState(
-        merge,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    """Stateful twin of operators.multiline.merge_by_flag: partial chunks
+    accumulate per file across micro-batches; a pending run with no closing
+    chunk flushes merged on the group-state timeout (the reference flushes
+    it at group end)."""
+    return _merge_stream(
+        df, line_col, file_col, offset_col, Mode(flag_col=partial_flag_col),
+        flush_timeout_ms,
     )
 
 
@@ -245,208 +191,11 @@ def streaming_merge_rules(
     continue_pattern: str | None = None,
     end_pattern: str | None = None,
     flush_timeout_ms: int = 60_000,
-    unmatched: str = "single_line",
+    unmatched: str = UNMATCH_SINGLE_LINE,
 ) -> DataFrame:
-    """Stateful streaming twin of operators.multiline.merge_multiline_rules —
-    ALL Start/Continue/End combos, reference-exact per
-    ProcessorSplitMultilineLogStringNative.cpp:167-310 and the config
-    normalization in MultilineOptions.cpp:125-151. The C++ automaton is
-    sequential per file, so it ports directly onto GroupState: the pending
-    block (per-line offsets + lines) lives across micro-batches, and
-    end-of-group flush semantics run on the state timeout:
-
-    - start / start+continue: a trailing open block flushes MERGED
-      (.cpp:253-283);
-    - start+end / end-only / continue+end: a trailing open block is
-      UNMATCHED and replays through HandleUnmatchLogs (.cpp:295-308) —
-      line-by-line singles, or dropped under 'discard'.
-
-    Mode normalization mirrors the batch operator: Start+Continue+End
-    drops ContinuePattern with a warning; Continue-only ignores the
-    multiline config entirely (identity projection, no state).
-
-    Output schema: (file, offset of event head, block)."""
-    import re
-    import warnings
-
-    if start_pattern and continue_pattern and end_pattern:
-        warnings.warn(
-            "Start+Continue+End all set: ContinuePattern ignored "
-            "(MultilineOptions.cpp:139-151)", stacklevel=2,
-        )
-        continue_pattern = None
-    if continue_pattern and not start_pattern and not end_pattern:
-        warnings.warn(
-            "ContinuePattern without Start/End: multiline config ignored "
-            "(MultilineOptions.cpp:125-138)", stacklevel=2,
-        )
-        from pyspark.sql import functions as F
-
-        return df.select(
-            F.col(file_col).alias("file"),
-            F.col(offset_col).cast("long").alias("offset"),
-            F.col(line_col).alias("block"),
-        )
-    if not (start_pattern or continue_pattern or end_pattern):
-        raise ValueError("at least one of start/continue/end is required")
-
-    s_re = re.compile(start_pattern) if start_pattern else None
-    c_re = re.compile(continue_pattern) if continue_pattern else None
-    e_re = re.compile(end_pattern) if end_pattern else None
-    # trailing open block at group end: merged for start/start+continue,
-    # HandleUnmatchLogs replay for the end-closed modes
-    flush_merged = bool(start_pattern and not end_pattern)
-    discard = unmatched == "discard"
-
-    def merge(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        file_id = key[0]
-        out_offs: list = []
-        out_blocks: list = []
-
-        def emit_merged(offs: list, lines: list) -> None:
-            out_offs.append(int(offs[0]))
-            out_blocks.append("\n".join(lines))
-
-        def emit_unmatched(offs: list, lines: list) -> None:
-            if discard:
-                return
-            for o, l in zip(offs, lines):
-                out_offs.append(int(o))
-                out_blocks.append(l)
-
-        def flush(offs: list, lines: list) -> None:
-            if flush_merged:
-                emit_merged(offs, lines)
-            else:
-                emit_unmatched(offs, lines)
-
-        if state.hasTimedOut:
-            if state.exists:
-                _, lines, offs = state.get
-                state.remove()
-                flush(list(offs), list(lines))
-            if out_offs:
-                yield pd.DataFrame(
-                    {"file": [file_id] * len(out_offs),
-                     "offset": out_offs, "block": out_blocks}
-                )
-            return
-
-        pending: tuple[list, list] | None = None  # (offs, lines)
-        if state.exists:
-            _, lines, offs = state.get
-            pending = (list(offs), list(lines))
-
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            pdf = pdf.sort_values(offset_col)
-            for off, line in zip(pdf[offset_col], pdf[line_col]):
-                off = int(off)
-                line = "" if line is None else str(line)
-                s = bool(s_re and s_re.search(line))
-                c = bool(c_re and c_re.search(line))
-                e = bool(e_re and e_re.search(line))
-                if s_re and e_re:
-                    # open/close automaton (.cpp:180-183, 231-250): while
-                    # open only the end pattern is consulted
-                    if pending is None:
-                        if s:
-                            pending = ([off], [line])
-                        else:
-                            emit_unmatched([off], [line])
-                    else:
-                        pending[0].append(off)
-                        pending[1].append(line)
-                        if e:
-                            emit_merged(*pending)
-                            pending = None
-                elif s_re and c_re:
-                    # continue is checked first inside a block
-                    # (.cpp:207-211): a line matching both absorbs
-                    if pending is None:
-                        if s:
-                            pending = ([off], [line])
-                        else:
-                            emit_unmatched([off], [line])
-                    elif c:
-                        pending[0].append(off)
-                        pending[1].append(line)
-                    elif s:
-                        emit_merged(*pending)
-                        pending = ([off], [line])
-                    else:
-                        emit_merged(*pending)
-                        pending = None
-                        emit_unmatched([off], [line])
-                elif s_re:
-                    # start only: a start-match closes the previous block
-                    if pending is None:
-                        if s:
-                            pending = ([off], [line])
-                        else:
-                            emit_unmatched([off], [line])
-                    elif s:
-                        emit_merged(*pending)
-                        pending = ([off], [line])
-                    else:
-                        pending[0].append(off)
-                        pending[1].append(line)
-                elif c_re and e_re:
-                    # run of continue-matches + ONE closer (.cpp:218-230);
-                    # standalone end-match = matched single (.cpp:189-194)
-                    if pending is None:
-                        if c:
-                            pending = ([off], [line])
-                        elif e:
-                            emit_merged([off], [line])
-                        else:
-                            emit_unmatched([off], [line])
-                    elif c:
-                        pending[0].append(off)
-                        pending[1].append(line)
-                    else:
-                        pending[0].append(off)
-                        pending[1].append(line)
-                        if e:
-                            emit_merged(*pending)
-                        else:
-                            emit_unmatched(*pending)
-                        pending = None
-                else:
-                    # end only: every line absorbs; end-match closes
-                    # (.cpp:166-170)
-                    if pending is None:
-                        pending = ([off], [line])
-                    else:
-                        pending[0].append(off)
-                        pending[1].append(line)
-                    if e:
-                        emit_merged(*pending)
-                        pending = None
-
-        if pending is not None:
-            state.update(
-                (int(pending[0][0]),
-                 [str(l) for l in pending[1]],
-                 [int(o) for o in pending[0]])
-            )
-            state.setTimeoutDuration(flush_timeout_ms)
-        elif state.exists:
-            state.remove()
-
-        if out_offs:
-            yield pd.DataFrame(
-                {"file": [file_id] * len(out_offs),
-                 "offset": out_offs, "block": out_blocks}
-            )
-
-    return df.groupBy(file_col).applyInPandasWithState(
-        merge,
-        outputStructType=OUT_SCHEMA_SUFFIX,
-        stateStructType="head_offset long, lines array<string>, offs array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    """Stateful twin of operators.multiline.merge_multiline_rules — all
+    Start/Continue/End combos with the batch's normalization and semantics;
+    the end-of-group flush of a trailing open block runs on the state
+    timeout. Continue-only is the identity projection, with no state."""
+    mode = rule_mode(start_pattern, continue_pattern, end_pattern, unmatched)
+    return _merge_stream(df, line_col, file_col, offset_col, mode, flush_timeout_ms)

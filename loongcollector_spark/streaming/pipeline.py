@@ -305,15 +305,16 @@ def run_native_streaming(
     fan-out above — the closest Spark shape to the reference's
     file-watcher → processor thread-group → flusher chain.
 
-    Multiline YAMLs (processor_split_log_regex, or a start-pattern
-    Multiline block) run through the stateful cross-batch operator
-    (streaming/multiline.py): the file stream becomes per-line rows with
-    exact per-file offsets, the stateful automaton holds each file's
-    pending block in GroupState (flushed by the next start line, the
-    ``flush_timeout_ms`` timer, or the availableNow drain), and the merged
-    blocks feed the remaining processor chain. All Start/Continue/End
-    rule combos run via streaming_merge_rules (reference-exact, including
-    HandleUnmatchLogs replay of unterminated end-closed blocks).
+    Multiline YAMLs (processor_split_log_regex, a Multiline block, or the
+    container BY_FLAG merge) run through the one stateful cross-batch
+    automaton (streaming/multiline.py) with the batch operator's semantics
+    and output shape: the file stream becomes per-line rows with exact
+    per-file offsets, row-wise prefix stages run (only the container parse
+    before BY_FLAG; a regex merge must come first), the automaton holds
+    each file's pending block in GroupState (flushed when a later line
+    closes it, by the ``flush_timeout_ms`` timer, or by the availableNow
+    drain), and the merged events feed the remaining processor chain. A
+    second multiline merge in the chain is rejected.
 
     ``input_path`` overrides the YAML's FilePaths (those point at the
     reference host's /home/test-log); pass the directory/glob to tail.
@@ -328,118 +329,59 @@ def run_native_streaming(
     import dataclasses
 
     from loongcollector_spark.config import load_native_config
-    from loongcollector_spark.sources.files import PATH_TAG
-    from loongcollector_spark.streaming.multiline import streaming_merge_multiline
+    from loongcollector_spark.pipeline import PROCESSORS
+    from loongcollector_spark.streaming.multiline import (
+        streaming_merge_by_flag,
+        streaming_merge_rules,
+    )
 
     spec, _ = load_native_config(config_path, sink_overrides=sink_overrides)
 
+    merges = {
+        "merge_by_flag": streaming_merge_by_flag,
+        "merge_multiline_rules": streaming_merge_rules,
+    }
     ml_idx = next(
-        (i for i, (name, _) in enumerate(spec.processors)
-         if name in ("merge_multiline", "merge_multiline_rules",
-                     "merge_by_flag")),
+        (i for i, (name, _) in enumerate(spec.processors) if name in merges),
         None,
     )
-    if ml_idx is not None and spec.processors[ml_idx][0] == "merge_by_flag":
-        # container partial-chunk merge (input_container_stdio's inner
-        # BY_FLAG stage): per-row prefix processors (the container parse
-        # that produces __is_partial__) run on the line stream, then the
-        # stateful flag merge; a regex multiline AFTER the flag merge would
-        # chain two stateful operators in one query — batch runner territory
-        from loongcollector_spark.pipeline import PROCESSORS
-        from loongcollector_spark.sources.files import PATH_TAG
-        from loongcollector_spark.streaming.multiline import (
-            streaming_merge_by_flag,
-        )
-
-        row_wise = {"parse_container_log", "noop", "rename", "add_fields"}
-        bad = [n for n, _ in spec.processors[:ml_idx] if n not in row_wise]
-        if bad:
-            raise NotImplementedError(
-                f"processors {bad} before merge_by_flag are not supported "
-                "in streaming (only per-row stages may precede the "
-                "stateful flag merge)"
-            )
-        if any(
-            n in ("merge_multiline", "merge_multiline_rules")
-            for n, _ in spec.processors[ml_idx + 1:]
-        ):
-            raise NotImplementedError(
-                "a regex multiline after the BY_FLAG merge chains two "
-                "stateful operators in one streaming query; use the batch "
-                "runner (read_log_files(line_offset=True) + run_pipeline)"
-            )
-        _, ml_params = spec.processors[ml_idx]
-        lines = _native_line_stream(
-            spark, input_path, tail, flush_timeout_ms, kwargs
-        )
-        for pname, pparams in spec.processors[:ml_idx]:
-            lines = PROCESSORS[pname](lines, **pparams)
-        line_col = ml_params.get("line_col", "content")
-        merged = streaming_merge_by_flag(
-            lines,
-            line_col,
-            ml_params.get("file_col", PATH_TAG),
-            ml_params.get("offset_col", "__offset__"),
-            ml_params.get("partial_flag_col", "__is_partial__"),
-            flush_timeout_ms=flush_timeout_ms,
-        )
-        stream = merged.withColumnRenamed("file", PATH_TAG).withColumnRenamed(
-            "offset", "__offset__"
-        )
-        spec = dataclasses.replace(
-            spec, processors=list(spec.processors[ml_idx + 1:])
-        )
-        kwargs.setdefault("settle_sec", flush_timeout_ms / 1000.0 + 1.0)
-        return start_fanout_query(
-            stream, spec, output_base, checkpoint_dir, **kwargs
-        )
     if ml_idx is not None:
         name, params = spec.processors[ml_idx]
-        if ml_idx != 0:
+        if name == "merge_by_flag":
+            # container partial-chunk merge (input_container_stdio's inner
+            # BY_FLAG stage): per-row prefix processors (the container
+            # parse that produces __is_partial__) run on the line stream
+            row_wise = {"parse_container_log", "noop", "rename", "add_fields"}
+            bad = [n for n, _ in spec.processors[:ml_idx] if n not in row_wise]
+            if bad:
+                raise NotImplementedError(
+                    f"processors {bad} before merge_by_flag are not supported "
+                    "in streaming (only per-row stages may precede the "
+                    "stateful flag merge)"
+                )
+        elif ml_idx != 0:
             raise NotImplementedError(
                 "a multiline processor after other processors is not "
                 "supported in streaming (the reference inserts it first, "
                 "InputFile.cpp:217)"
             )
-        lines = _native_line_stream(
+        if any(n in merges for n, _ in spec.processors[ml_idx + 1:]):
+            raise NotImplementedError(
+                "a second multiline merge chains two stateful operators in "
+                "one streaming query; use the batch runner "
+                "(read_log_files(line_offset=True) + run_pipeline)"
+            )
+        stream = _native_line_stream(
             spark, input_path, tail, flush_timeout_ms, kwargs
         )
-        if name == "merge_multiline_rules":
-            # full Start/Continue/End combo surface on the stateful
-            # cross-batch automaton (streaming_merge_rules)
-            from loongcollector_spark.streaming.multiline import (
-                streaming_merge_rules,
-            )
-
-            merged = streaming_merge_rules(
-                lines,
-                params.get("line_col", "content"),
-                PATH_TAG,
-                params.get("offset_col", "__offset__"),
-                start_pattern=params.get("start_pattern"),
-                continue_pattern=params.get("continue_pattern"),
-                end_pattern=params.get("end_pattern"),
-                flush_timeout_ms=flush_timeout_ms,
-                unmatched=params.get("unmatched", "single_line"),
-            )
-        else:
-            merged = streaming_merge_multiline(
-                lines,
-                params.get("line_col", "content"),
-                PATH_TAG,
-                params.get("offset_col", "__offset__"),
-                params["start_pattern"],
-                flush_timeout_ms=flush_timeout_ms,
-                unmatched=params.get("unmatched", "single_line"),
-            )
-        # back to the batch shape the remaining processors address
-        stream = merged.select(
-            F.col("file").alias(PATH_TAG),
-            F.col("offset").alias("__offset__"),
-            F.col("block").alias(params.get("line_col", "content")),
-        )
+        for pname, pparams in spec.processors[:ml_idx]:
+            stream = PROCESSORS[pname](stream, **pparams)
+        # the stream emits the batch's (file, offset, line, *rest) shape and
+        # always carries the other columns, so keep_fields has no stream twin
+        params = {k: v for k, v in params.items() if k != "keep_fields"}
+        stream = merges[name](stream, flush_timeout_ms=flush_timeout_ms, **params)
         spec = dataclasses.replace(
-            spec, processors=list(spec.processors[1:])
+            spec, processors=list(spec.processors[ml_idx + 1:])
         )
         # drain-end flush: give the merge's read-timeout room to fire
         kwargs.setdefault("settle_sec", flush_timeout_ms / 1000.0 + 1.0)

@@ -7,7 +7,8 @@ is read back and checked against the "After Process" expectation in the same
 comment. Network flushers (flusher_sls) are overridden to a local parquet
 twin; flusher_stdout maps to the console sink.
 
-Skips (module-level) if the reference checkout is absent.
+The tests that read the shipped YAMLs skip when the reference checkout is
+absent; the rest build their configs inline and always run.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import pytest
 
 REF_DIR = "/root/reference/example_config/data_pipelines"
 
-pytestmark = pytest.mark.skipif(
+needs_ref = pytest.mark.skipif(
     not os.path.isdir(REF_DIR), reason="reference example_config not present"
 )
 
@@ -42,6 +43,7 @@ def _run_yaml(spark, tmp_path, yaml_name, lines, line_offset=False, sink="sls"):
     return spec, res, out_dir
 
 
+@needs_ref
 def test_nginx_regex_yaml(spark, tmp_path):
     line = (
         '::1 - - [18/Jul/2022:07:28:01 +0000] "GET /hello/ilogtail HTTP/1.1" '
@@ -59,6 +61,7 @@ def test_nginx_regex_yaml(spark, tmp_path):
     assert (good.body_bytes_sent, good.http_user_agent) == ("153", "curl/7.74.0")
 
 
+@needs_ref
 def test_file_json_yaml(spark, tmp_path):
     spec, res, out = _run_yaml(
         spark, tmp_path, "file-json.yaml", ['{"key1":"value1","key2":2}']
@@ -70,6 +73,7 @@ def test_file_json_yaml(spark, tmp_path):
     assert "content" not in r.asDict() or r.content is None  # KeepSource: false
 
 
+@needs_ref
 def test_file_delimiter_yaml(spark, tmp_path):
     spec, res, out = _run_yaml(
         spark, tmp_path, "file-delimiter.yaml", ["123\t2022-08-08\tbuy\t10000"]
@@ -78,6 +82,7 @@ def test_file_delimiter_yaml(spark, tmp_path):
     assert (r.uid, r.time, r.method, r.value) == ("123", "2022-08-08", "buy", "10000")
 
 
+@needs_ref
 def test_file_grok_yaml(spark, tmp_path):
     spec, res, out = _run_yaml(
         spark,
@@ -95,6 +100,7 @@ def test_file_grok_yaml(spark, tmp_path):
     )
 
 
+@needs_ref
 def test_multiline_java_stack_yaml(spark, tmp_path):
     # NB: single space before '[' — the YAML's header comment shows two
     # spaces, which its own SplitRegex (':\\d+\\s\\[') does not match; the
@@ -159,6 +165,7 @@ def test_input_level_multiline_block(spark, tmp_path):
     )
 
 
+@needs_ref
 def test_stdout_flusher_maps_to_console_and_fanout_delivers_all(spark, tmp_path):
     # every flusher gets every event: the sls parquet twin and the stdout
     # console sink both report delivery
@@ -232,6 +239,7 @@ def test_native_split_char_default_newline():
     assert kwargs["separator"] == "\n"  # split_char.go:186 init default
 
 
+@needs_ref
 def test_native_yaml_streaming(spark, tmp_path):
     """The shipped file-delimiter YAML runs as a Structured Streaming query
     (text file stream -> processor chain -> per-batch sink delivery)."""
@@ -374,6 +382,7 @@ def test_native_gotime_translation(spark):
     assert out.euro == "17/02/2024 10:11"
 
 
+@needs_ref
 def test_native_streaming_multiline_across_restart(spark, tmp_path):
     """multiline_java_stack_trace-split_log_regex.yaml runs in STREAMING:
     the stateful cross-batch merge (streaming/multiline.py) sessionizes the
@@ -449,6 +458,47 @@ def test_native_streaming_start_end_multiline(spark, tmp_path):
     )
     got = sorted(r.content for r in spark.read.parquet(out).collect())
     assert got == ["B dangling", "B one\nmid\nE two", "loose", "tail"]
+
+
+def test_native_streaming_java_regex_multiline(spark, tmp_path):
+    """A StartPattern in Java-only regex syntax (``\\h``) runs as a stream:
+    the patterns are matched in the JVM in both modes, so the stream gives
+    the batch runner's blocks."""
+    import yaml
+
+    from loongcollector_spark.config import load_native_config
+    from loongcollector_spark.pipeline import run_pipeline
+    from loongcollector_spark.sources.files import read_log_files
+    from loongcollector_spark.streaming.pipeline import run_native_streaming
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    (logs / "a.log").write_text(
+        "head\n2024-01-01 a\n  at x\n\t2025 b\ntail y\n"
+    )
+    cfg = tmp_path / "ml.yaml"
+    cfg.write_text(yaml.safe_dump({
+        "inputs": [{"Type": "input_file", "FilePaths": [str(logs / "*.log")],
+                    "Multiline": {"StartPattern": r"^\h*\d{4}"}}],
+        "flushers": [{"Type": "flusher_file", "FilePath": str(tmp_path)}],
+    }))
+
+    def sink(name):
+        return {"file": {"format": "parquet", "path": str(tmp_path / name)}}
+
+    spec, _ = load_native_config(str(cfg), sink_overrides=sink("batch"))
+    run_pipeline(read_log_files(spark, str(logs), line_offset=True), spec)
+    run_native_streaming(
+        spark, str(cfg), str(logs), str(tmp_path / "fanout"),
+        str(tmp_path / "ckpt"), sink_overrides=sink("stream"),
+        flush_timeout_ms=100, timeout_sec=120.0,
+    )
+    batch, stream = (
+        sorted(r.content for r in spark.read.parquet(str(tmp_path / n)).collect())
+        for n in ("batch", "stream")
+    )
+    assert batch == ["\t2025 b\ntail y", "2024-01-01 a\n  at x", "head"]
+    assert stream == batch
 
 
 def test_native_gotime_epoch_and_location():

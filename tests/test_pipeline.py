@@ -255,7 +255,7 @@ def test_lineage_resume_on_file_uri(spark, tmp_path):
 def test_read_log_files_tags_and_multiline(spark, tmp_path):
     """input_file batch analogue: path tag, topic regex, per-file offsets
     feeding the multiline merger across files."""
-    from loongcollector_spark.operators.multiline import merge_multiline
+    from loongcollector_spark.operators.multiline import merge_multiline_rules
     from loongcollector_spark.sources.files import PATH_TAG, read_log_files
 
     d = tmp_path / "logs" / "app-a"
@@ -271,7 +271,7 @@ def test_read_log_files_tags_and_multiline(spark, tmp_path):
     assert set(df.columns) == {"content", PATH_TAG, "__topic__", "__offset__"}
     assert {r["__topic__"] for r in df.collect()} == {"app-a", "app-b"}
 
-    merged = merge_multiline(
+    merged = merge_multiline_rules(
         df, "content", file_col=PATH_TAG, offset_col="__offset__",
         start_pattern=r"^ERROR",
     )

@@ -344,3 +344,30 @@ def test_bucket_features_hash_each_gram_once(spark, builder):
     dedup.release_persisted()
     nodes = _hashing_nodes(plan)
     assert len(nodes) == 1 and next(iter(nodes)).startswith("Project "), nodes
+
+
+def test_multiline_patterns_matched_once_in_jvm(spark, tmp_path):
+    """The streaming multiline merge matches each configured pattern once,
+    as a Catalyst RLike below the GroupState node (the step function only
+    reads booleans), and a batch BY_FLAG merge shuffles once."""
+    from loongcollector_spark.operators.multiline import merge_by_flag
+    from loongcollector_spark.streaming.multiline import streaming_merge_rules
+
+    schema = "file string, offset long, line string, part boolean"
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path))
+    merged = streaming_merge_rules(
+        stream, "line", "file", "offset",
+        start_pattern=r"^\h*\d{4}", continue_pattern=r"^\s+at ",
+    )
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        merged._jdf.queryExecution(), "simple"
+    )
+    state_node = plan.index("FlatMapGroupsInPandasWithState")
+    assert plan.count("RLIKE(") == 2
+    for pattern in (r"^\h*\d{4}", r"^\s+at "):
+        assert plan.count(f", {pattern})") == 1
+        assert plan.index(f", {pattern})") > state_node
+    assert not [n for n in _PYTHON_NODES if n in plan]
+
+    flags = spark.createDataFrame([("f", 0, "a", True)], schema)
+    assert _plan(merge_by_flag(flags, "line", "file", "offset", "part")).count("Exchange") == 1

@@ -8,6 +8,7 @@ shrinks over the batch contents, not the job count."""
 from __future__ import annotations
 
 import hypothesis.strategies as st
+import pytest
 from hypothesis import HealthCheck, given, settings
 from pyspark.sql import functions as F
 
@@ -520,3 +521,77 @@ def test_single_pass_regex_equals_per_key_extract(spark, lines):
     for r in out:
         for k, _ in checks:
             assert r[k] == r[f"want_{k}"], (k, r["s"], r[k], r[f"want_{k}"])
+
+
+_ML_LINE = st.sampled_from(["S a", "S b", "C c", "E e", "plain", "", None, "\t2024 x"])
+_ML_FILE = st.tuples(
+    st.lists(st.tuples(_ML_LINE, st.sampled_from([True, False, None])), min_size=1, max_size=10),
+    st.integers(1, 10),  # where the file's micro-batch boundary falls
+)
+# in every example, so even the simplest one holds each line kind, a NULL
+# flag and a block straddling the micro-batch boundary
+_ML_FIXED = [
+    ([("plain", None), ("S a", True), (None, None), ("C c", True), ("\t2024 x", False),
+      ("E e", True), ("", None), ("S b", False), ("C c", True), (None, False)], 4),
+    ([("C c", True), ("E e", None), ("E e", True), ("S a", True), ("plain", True)], 2),
+]
+_ML_RULES = {
+    "start": dict(start_pattern=r"^(S|\h*\d{4})"),  # \h: Java-only syntax
+    "start_continue": dict(start_pattern="^S", continue_pattern="^C"),
+    "start_end": dict(start_pattern="^S", end_pattern="^E"),
+    "end": dict(end_pattern="^E"),
+    "continue_end": dict(continue_pattern="^C", end_pattern="^E"),
+    "start_continue_end": dict(start_pattern="^S", continue_pattern="^C", end_pattern="^E"),
+    "continue": dict(continue_pattern="^C"),
+}
+
+
+@pytest.mark.filterwarnings("ignore:.*Pattern")
+@settings(max_examples=2, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
+@given(st.lists(_ML_FILE, min_size=3, max_size=8))
+def test_streaming_multiline_equals_batch(spark, tmp_path, files):
+    """The streaming merge emits the batch merge's rows — every rule mode
+    (the two normalized ones too) under both unmatched treatments, and
+    BY_FLAG with NULL flags — for random per-file line streams cut at
+    random micro-batch boundaries. Per example: one batch job for every
+    mode, and one streaming query per mode."""
+    from loongcollector_spark.operators.multiline import merge_by_flag, merge_multiline_rules
+    from loongcollector_spark.streaming.multiline import (
+        streaming_merge_by_flag,
+        streaming_merge_rules,
+    )
+    from tests.test_streaming import MERGE_SCHEMA, run_merge_streams
+
+    batches: list = [[], []]
+    for f, (lines, cut) in enumerate(files + _ML_FIXED):
+        rows = [(f"f{f}", i, line, f"t{i}", part) for i, (line, part) in enumerate(lines)]
+        batches[0].extend(rows[:cut])
+        batches[1].extend(rows[cut:])
+    df = spark.createDataFrame(batches[0] + batches[1], MERGE_SCHEMA)
+
+    outs, merges = {}, {}
+    for name, rules in _ML_RULES.items():
+        # a normalized mode runs another mode's automaton: one unmatched
+        # value shows the normalization holds in the stream
+        normalized = name in ("continue", "start_continue_end")
+        for unmatched in ("single_line",) if normalized else ("single_line", "discard"):
+            key = f"{name}_{unmatched}"
+            outs[key] = merge_multiline_rules(df, "line", "file", "offset", **rules,
+                                              unmatched=unmatched, keep_fields=True)
+            merges[key] = lambda s, kw=dict(rules, unmatched=unmatched): streaming_merge_rules(
+                s, "line", "file", "offset", flush_timeout_ms=100, **kw)
+    outs["flag"] = merge_by_flag(df, "line", "file", "offset", "part")
+    merges["flag"] = lambda s: streaming_merge_by_flag(
+        s, "line", "file", "offset", "part", flush_timeout_ms=100)
+
+    union = None
+    for key, out in outs.items():
+        out = out.withColumn("mode", F.lit(key))
+        union = out if union is None else union.unionByName(out, allowMissingColumns=True)
+    batch = {key: [] for key in outs}
+    for r in union.collect():  # one batch job for every mode
+        batch[r["mode"]].append(tuple(r[c] for c in outs[r["mode"]].columns))
+    stream = run_merge_streams(spark, tmp_path, batches, merges)
+    for key, want in batch.items():
+        assert stream[key] == sorted(want, key=lambda r: (r[0], r[1])), key

@@ -147,7 +147,7 @@ START = r"\d+-\d+-\d+\s\d+:\d+:\d+\s\[.*"
 
 def test_merge_multiline(spark):
     df = spark.createDataFrame(STACK, "file string, offset long, line string")
-    out = multiline.merge_multiline(df, "line", "file", "offset", START)
+    out = multiline.merge_multiline_rules(df, "line", "file", "offset", START)
     rows = sorted(out.collect(), key=lambda r: r.offset)
     assert len(rows) == 3
     assert rows[0].line.count("\n") == 2 and "Baz.java" in rows[0].line
@@ -159,9 +159,9 @@ def test_merge_multiline_unmatched_modes(spark):
         ("f", o + 10, l) for _, o, l in STACK[:3]
     ]
     df = spark.createDataFrame(data, "file string, offset long, line string")
-    single = multiline.merge_multiline(df, "line", "file", "offset", START, unmatched="single_line")
+    single = multiline.merge_multiline_rules(df, "line", "file", "offset", START, unmatched="single_line")
     assert single.count() == 3  # 2 orphans single-line + 1 merged block
-    disc = multiline.merge_multiline(df, "line", "file", "offset", START, unmatched="discard")
+    disc = multiline.merge_multiline_rules(df, "line", "file", "offset", START, unmatched="discard")
     assert disc.count() == 1
 
 

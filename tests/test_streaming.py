@@ -134,7 +134,7 @@ def test_streaming_multiline_cross_batch(spark, tmp_path):
     (maxFilesPerTrigger=1) and checking only CLOSED blocks are emitted."""
     import pandas as pd
 
-    from loongcollector_spark.streaming.multiline import streaming_merge_multiline
+    from loongcollector_spark.streaming.multiline import streaming_merge_rules
 
     src = tmp_path / "ml_in"
     src.mkdir()
@@ -155,7 +155,7 @@ def test_streaming_multiline_cross_batch(spark, tmp_path):
     )
     # short flush timeout so the trailing pending block's read-timeout fires
     # inside the drain (drain_available_now stops at quiescence)
-    merged = streaming_merge_multiline(
+    merged = streaming_merge_rules(
         stream, "line", "file", "offset", r"^START", flush_timeout_ms=200
     )
     out = str(tmp_path / "ml_out")
@@ -167,7 +167,7 @@ def test_streaming_multiline_cross_batch(spark, tmp_path):
         .start()
     )
     drain_available_now(q, 120)
-    got = {r["offset"]: r["block"] for r in spark.read.parquet(out).collect()}
+    got = {r["offset"]: r["line"] for r in spark.read.parquet(out).collect()}
     # block A (head offset 0) spans both micro-batches and closes when START b
     # arrives; block B is flushed when the availableNow drain ends the query —
     # the reference's flush-on-stop (FlushOutStore, plugin_runner_v1.go:395-405)
@@ -812,7 +812,7 @@ def _run_rules_stream(spark, tmp_path, batches, tag, **rules):
         .start()
     )
     drain_available_now(q, 120)
-    return {r["offset"]: r["block"] for r in spark.read.parquet(out).collect()}
+    return {r["offset"]: r["line"] for r in spark.read.parquet(out).collect()}
 
 
 def test_streaming_rules_start_end(spark, tmp_path):
@@ -928,3 +928,145 @@ def test_native_streaming_reader_kwargs_validated_all_branches(spark, tmp_path):
                 spark, yml, str(logs / "*.log"), str(tmp_path / "fan"),
                 str(tmp_path / "ck"), input_format="json", tail=tail,
             )
+
+
+# --- one multiline automaton: batch and stream give the same rows -----------
+
+MERGE_SCHEMA = "file string, offset long, line string, tag string, part boolean"
+
+
+def run_merge_streams(spark, tmp_path, batches, merges):
+    """Write each of ``batches`` (lists of MERGE_SCHEMA row tuples) as one
+    parquet file per micro-batch, run every ``merges`` entry (name ->
+    stream -> merged stream) as its own availableNow query, two at a time
+    (more contend for four local cores and finish later), and return
+    name -> output rows sorted by (file, offset)."""
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    arrow = pa.schema([("file", pa.string()), ("offset", pa.int64()),
+                       ("line", pa.string()), ("tag", pa.string()),
+                       ("part", pa.bool_())])
+    src = tmp_path / f"src_{uuid.uuid4().hex[:8]}"
+    src.mkdir()
+    for i, rows in enumerate(batches):
+        path = str(src / f"b{i:03d}.parquet")
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(arrow.names, r)) for r in rows], arrow), path)
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # file-source order
+    stream = (spark.readStream.schema(MERGE_SCHEMA)
+              .option("maxFilesPerTrigger", 1).parquet(str(src)))
+    out = {}
+    names = list(merges)
+    # two state partitions: these inputs are a few dozen rows, and each
+    # micro-batch runs one Python task per partition
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        for i in range(0, len(names), 2):
+            running = {}
+            for name in names[i:i + 2]:
+                qname = f"ml_{name}_{uuid.uuid4().hex[:8]}"
+                running[name] = (qname, merges[name](stream).writeStream
+                                 .format("memory").queryName(qname)
+                                 .trigger(availableNow=True).start())
+            for name, (qname, q) in running.items():
+                # settle_sec=None: stop once every pending block has flushed
+                drain_available_now(q, 120, settle_sec=None)
+                out[name] = sorted((tuple(r) for r in spark.table(qname).collect()),
+                                   key=lambda r: (r[0], r[1]))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    return out
+
+
+# The NULL-line contract: a NULL line matches no pattern, adds nothing to a
+# merged block, and is a NULL event when unmatched; a NULL partial flag
+# counts as not partial.
+NULL_LINES = ["S a", None, "c", "S b", "d"]
+NULL_CASES = {
+    "start": (dict(start_pattern="^S"),
+              [(0, "S a\nc"), (3, "S b\nd")]),
+    "start_continue": (dict(start_pattern="^S", continue_pattern="^c"),
+                       [(0, "S a"), (1, None), (2, "c"), (3, "S b"), (4, "d")]),
+    "start_end": (dict(start_pattern="^c", end_pattern="^d"),
+                  [(0, "S a"), (1, None), (2, "c\nS b\nd")]),
+    "end": (dict(end_pattern="^c"),
+            [(0, "S a\nc"), (3, "S b"), (4, "d")]),
+    "continue_end": (dict(continue_pattern="^c", end_pattern="^d"),
+                     [(0, "S a"), (1, None), (2, "c"), (3, "S b"), (4, "d")]),
+}
+FLAG_LINES = [("a", True), ("b", None), ("c", False), ("d", False)]
+FLAG_EXPECTED = [(0, "ab"), (2, "c"), (3, "d")]
+
+
+def _null_rows():
+    return [("f", i, line, f"t{i}", None) for i, line in enumerate(NULL_LINES)]
+
+
+def _flag_rows():
+    return [("f", i, line, f"t{i}", p) for i, (line, p) in enumerate(FLAG_LINES)]
+
+
+def test_multiline_null_lines_batch(spark):
+    """Batch: every rule mode keeps NULL lines (start+end and continue+end
+    used to drop the ones outside a block), and BY_FLAG reads a NULL flag as
+    not partial."""
+    from loongcollector_spark.operators.multiline import (
+        merge_by_flag,
+        merge_multiline_rules,
+    )
+
+    df = spark.createDataFrame(_null_rows(), MERGE_SCHEMA).drop("part")
+    for name, (rules, want) in NULL_CASES.items():
+        out = merge_multiline_rules(df, "line", "file", "offset", **rules)
+        got = sorted((r.offset, r.line) for r in out.collect())
+        assert got == want, name
+    flags = spark.createDataFrame(_flag_rows(), MERGE_SCHEMA)
+    got = sorted((r.offset, r.line)
+                 for r in merge_by_flag(flags, "line", "file", "offset", "part").collect())
+    assert got == FLAG_EXPECTED
+
+
+def test_streaming_multiline_null_lines(spark, tmp_path):
+    """Stream: the same NULL inputs give the batch rows (NULL lines used to
+    add an empty line to a block, or kill the query with a TypeError), the
+    NULL lines split across micro-batches."""
+    from loongcollector_spark.streaming.multiline import (
+        streaming_merge_by_flag,
+        streaming_merge_rules,
+    )
+
+    def rules(kw):
+        return lambda s: streaming_merge_rules(
+            s.drop("part"), "line", "file", "offset", flush_timeout_ms=100, **kw)
+
+    merges = {name: rules(kw) for name, (kw, _) in NULL_CASES.items()}
+    merges["flag"] = lambda s: streaming_merge_by_flag(
+        s, "line", "file", "offset", "part", flush_timeout_ms=100)
+    rows = _null_rows()
+    flag_rows = [(f"g{r[0]}",) + r[1:] for r in _flag_rows()]
+    got = run_merge_streams(
+        spark, tmp_path, [rows[:2] + flag_rows[:1], rows[2:] + flag_rows[1:]], merges)
+    for name, (_, want) in NULL_CASES.items():
+        assert [(r[1], r[2]) for r in got[name] if r[0] == "f"] == want, name
+        # a merged block keeps its first line's tag, a single its own
+        assert all(r[3] == f"t{r[1]}" for r in got[name]), name
+    assert [(r[1], r[2]) for r in got["flag"] if r[0] == "gf"] == FLAG_EXPECTED
+
+
+def test_multiline_rejects_bad_unmatched(spark, tmp_path):
+    """The shared normalization rejects an unmatched value other than
+    single_line / discard, in batch and in streaming alike."""
+    from loongcollector_spark.operators.multiline import merge_multiline_rules
+    from loongcollector_spark.streaming.multiline import streaming_merge_rules
+
+    df = spark.createDataFrame(_null_rows(), MERGE_SCHEMA)
+    with pytest.raises(ValueError, match="unmatched"):
+        merge_multiline_rules(df, "line", "file", "offset", "^S", unmatched="drop")
+    stream = spark.readStream.schema(MERGE_SCHEMA).parquet(str(tmp_path))
+    with pytest.raises(ValueError, match="unmatched"):
+        streaming_merge_rules(stream, "line", "file", "offset", "^S", unmatched="Discard")
