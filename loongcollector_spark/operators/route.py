@@ -6,8 +6,8 @@ Two distinct semantics, both reproduced:
    flusher has an optional ``Condition``; a group is delivered to EVERY
    matching flusher (fan-out DUPLICATION). Conditions are event-type equality
    or tag equality, optionally discarding the matched tag on delivery
-   (Condition.h:28-73). Spark: per-sink ``filter`` views over ONE cached
-   routed DataFrame — Spark's immutability makes the reference's
+   (Condition.h:28-73). Spark: per-sink ``filter`` views over ONE routed
+   DataFrame — Spark's immutability makes the reference's
    copy-minimization a no-op.
 
 2. ``aggregator_logstore_router`` (aggregator_router.go:97-135): first
@@ -15,6 +15,11 @@ Two distinct semantics, both reproduced:
    rows go to a default sink or are dropped (``DropDisMatch``). Spark: one
    ``when`` cascade producing a ``__sink__`` column — exactly one sink per
    row, so the downstream write can partition by sink with no duplication.
+
+The operators here only label and slice. The runner owns the cached parent:
+``pipeline.sink_frames`` (shared by ``run_pipeline`` and the streaming
+``foreachBatch`` body) slices a routed frame the runner persisted once and
+releases after its last sink.
 """
 
 from __future__ import annotations
@@ -68,21 +73,17 @@ class Route:
     condition: Condition | None = None  # None = always match
 
 
-def route_fanout(
-    df: DataFrame, routes: Sequence[Route], cache: bool = True
-) -> dict[str, DataFrame]:
+def route_fanout(df: DataFrame, routes: Sequence[Route]) -> dict[str, DataFrame]:
     """C++ Router semantics: every matching sink receives the row. Returns
-    per-sink DataFrames sliced from one cached parent (single upstream
-    computation, N cheap filter scans — at cluster scale, persist to
-    MEMORY_AND_DISK or write the routed parent once and fan out from it)."""
-    parent = df.cache() if cache else df
+    per-sink filter views of ``df``; persist ``df`` first so the N sinks
+    scan one upstream computation."""
     out: dict[str, DataFrame] = {}
     # multiple routes may target the same sink — the Router delivers a row to
     # a flusher when ANY of its conditions match, so OR them (a dict overwrite
     # here would silently drop rows matching only the later condition)
     for sink, sink_routes in _routes_by_sink(routes).items():
         cond = _any_condition(sink_routes)
-        sink_df = parent if cond is None else parent.filter(cond)
+        sink_df = df if cond is None else df.filter(cond)
         drop_tags = {
             r.condition.tag_key
             for r in sink_routes
@@ -142,8 +143,9 @@ def route_first_match(
 ) -> DataFrame:
     """logstore_router semantics: first matching route wins; one __sink__
     label per row. No shuffle — the sink column is just another expression;
-    the writer partitions by it."""
-    expr: Column = F.lit(default_sink).cast("string")
+    the writer partitions by it. ``drop_dismatch`` drops rows no route
+    matched, whatever ``default_sink`` is (aggregator_router.go:119-135)."""
+    expr: Column = F.lit(None if drop_dismatch else default_sink).cast("string")
     for r in reversed(routes):
         cond = r.condition.to_column() if r.condition else F.lit(True)
         expr = F.when(cond, F.lit(r.sink)).otherwise(expr)

@@ -208,7 +208,7 @@ def compile_pipeline(
         out = route.route_first_match(
             out, spec.routes, default_sink=spec.default_sink, drop_dismatch=spec.drop_dismatch
         )
-    # fanout mode routes at write time (run_pipeline) from the cached parent
+    # fanout mode routes at write time (sink_frames) from the cached parent
 
     if spec.shard_keys:
         out = agg_ops.shard_hash(
@@ -219,6 +219,41 @@ def compile_pipeline(
     return out
 
 
+def sink_names(spec: PipelineSpec) -> list[str]:
+    """The Router's sinks (Router.cpp:50-82): every route's sink, then the
+    default. Fanout has no default sink (a row matching no route goes
+    nowhere), and DropDisMatch drops first-match misses instead of
+    delivering them (aggregator_router.go:119-135)."""
+    names = list(dict.fromkeys(r.sink for r in spec.routes))
+    if (
+        spec.route_mode == "first_match"
+        and spec.default_sink
+        and not spec.drop_dismatch
+        and spec.default_sink not in names
+    ):
+        names.append(spec.default_sink)
+    return names
+
+
+def sink_frames(routed: DataFrame, spec: PipelineSpec) -> dict[str, DataFrame]:
+    """Each sink's slice of the routed frame, in ``sink_names`` order. The
+    caller persists ``routed``: every slice scans that one cached parent."""
+    if spec.route_mode == "fanout":
+        return route.route_fanout(routed, spec.routes)
+    return {
+        name: routed.filter(F.col(route.SINK_COLUMN) == name) for name in sink_names(spec)
+    }
+
+
+def sink_spec(spec: PipelineSpec, name: str, output_base: str | None) -> SinkSpec:
+    """The configured sink, else parquet under ``output_base``, else noop."""
+    if name in spec.sinks:
+        return spec.sinks[name]
+    if output_base is not None:
+        return SinkSpec(name=name, path=f"{output_base}/{name}")
+    return SinkSpec(name=name, format="noop")
+
+
 def run_pipeline(
     df: DataFrame,
     spec: PipelineSpec,
@@ -226,83 +261,64 @@ def run_pipeline(
     metrics: MetricsRegistry | None = None,
     checkpoint: bool = False,
     run_id: str = "run",
-    parallel_sinks: bool = True,
 ) -> dict[str, Any]:
     """Execute the pipeline: write every sink + the metrics rollup table.
     Returns {sink: counters, "metrics": rollup rows, "elapsed_sec": ...}."""
     metrics = metrics or MetricsRegistry()
     t0 = time.time()
     spec = private_spec_copy(spec)  # freeze state must not leak to the caller
-    routed = compile_pipeline(df, spec, metrics)
+    routed = compile_pipeline(df, spec, metrics).persist()
+    try:
+        per_sink = sink_frames(routed, spec)
 
-    results: dict[str, Any] = {}
-    if spec.route_mode == "fanout":
-        per_sink = route.route_fanout(routed, spec.routes)
-    else:
-        routed = routed.persist()
-        per_sink = {
-            r.sink: routed.filter(F.col(route.SINK_COLUMN) == r.sink) for r in spec.routes
-        }
-        if spec.default_sink and spec.default_sink not in per_sink:
-            per_sink[spec.default_sink] = routed.filter(
-                F.col(route.SINK_COLUMN) == spec.default_sink
+        def deliver(sink_name: str, sink_df: DataFrame) -> Any:
+            sink = sink_spec(spec, sink_name, output_base)
+            if checkpoint and sink.format == "parquet" and sink.path:
+                return lineage.checkpointed_write(
+                    sink_df, sink.path, run_id=run_id, tokens_col=spec.metrics_tokens_col
+                )
+            return write_sink(sink_df, sink)
+
+        # checkpointed writes toggle session-level conf (partitionOverwriteMode)
+        # inside a context manager — not safe across concurrent driver threads
+        if checkpoint or len(per_sink) < 2:
+            results = {name: deliver(name, sdf) for name, sdf in per_sink.items()}
+        else:
+            routed.count()  # materialize the cache once before concurrent scans
+            # The reference flushes every sink from its own runner thread
+            # (FlusherRunner); Spark's scheduler likewise accepts concurrent
+            # jobs from driver threads — each sink scans the cached routed
+            # parent, so the per-sink jobs overlap instead of running
+            # back-to-back.
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=min(len(per_sink), 8)) as pool:
+                futures = {
+                    name: pool.submit(deliver, name, sdf) for name, sdf in per_sink.items()
+                }
+                results = {name: fut.result() for name, fut in futures.items()}
+
+        # headline rollup: per (source, sink) rows/bytes/tokens, salted —
+        # exported as data, like the reference's self-monitoring metric
+        # records (pluginmanager/metric_export.go:40-62)
+        if spec.metrics_tokens_col and spec.route_mode == "first_match":
+            rollup = agg_ops.sink_metrics(
+                routed,
+                source_col=spec.metrics_source_col,
+                tokens_col=spec.metrics_tokens_col,
             )
-
-    def deliver(sink_name: str, sink_df: DataFrame) -> Any:
-        sink_spec = spec.sinks.get(sink_name)
-        if sink_spec is None and output_base is not None:
-            sink_spec = SinkSpec(name=sink_name, path=f"{output_base}/{sink_name}")
-        if sink_spec is None:
-            sink_spec = SinkSpec(name=sink_name, format="noop")
-        if checkpoint and sink_spec.format == "parquet" and sink_spec.path:
-            return lineage.checkpointed_write(
-                sink_df, sink_spec.path, run_id=run_id, tokens_col=spec.metrics_tokens_col
-            )
-        return write_sink(sink_df, sink_spec)
-
-    # checkpointed writes toggle session-level conf (partitionOverwriteMode)
-    # inside a context manager — not safe across concurrent driver threads
-    parallel_ok = parallel_sinks and not checkpoint and len(per_sink) > 1
-    if parallel_ok and spec.route_mode != "fanout":
-        routed.count()  # materialize the cache once before concurrent scans
-    if parallel_ok:
-        # The reference flushes every sink from its own runner thread
-        # (FlusherRunner); Spark's scheduler likewise accepts concurrent jobs
-        # from driver threads — each sink scans the cached routed parent, so
-        # the per-sink jobs overlap instead of running back-to-back.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(len(per_sink), 8)) as pool:
-            futures = {
-                name: pool.submit(deliver, name, sdf) for name, sdf in per_sink.items()
-            }
-            for name, fut in futures.items():
-                results[name] = fut.result()
-    else:
-        for sink_name, sink_df in per_sink.items():
-            results[sink_name] = deliver(sink_name, sink_df)
-
-    # headline rollup: per (source, sink) rows/bytes/tokens, salted — exported
-    # as data, like the reference's self-monitoring metric records
-    # (pluginmanager/metric_export.go:40-62)
-    if spec.metrics_tokens_col and spec.route_mode == "first_match":
-        rollup = agg_ops.sink_metrics(
-            routed,
-            source_col=spec.metrics_source_col,
-            tokens_col=spec.metrics_tokens_col,
-        )
-        results["metrics_rollup"] = [r.asDict() for r in rollup.collect()]
-        if output_base is not None and results["metrics_rollup"]:
-            # empty-input pipelines produce an empty rollup; createDataFrame
-            # on [] cannot infer a schema and would fail the whole run AFTER
-            # every sink already delivered
-            spark = routed.sparkSession
-            spark.createDataFrame(results["metrics_rollup"]).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{output_base}/_metrics")
+            results["metrics_rollup"] = [r.asDict() for r in rollup.collect()]
+            if output_base is not None and results["metrics_rollup"]:
+                # empty-input pipelines produce an empty rollup;
+                # createDataFrame on [] cannot infer a schema and would fail
+                # the whole run AFTER every sink already delivered
+                spark = routed.sparkSession
+                spark.createDataFrame(results["metrics_rollup"]).coalesce(1).write.mode(
+                    "overwrite"
+                ).parquet(f"{output_base}/_metrics")
+    finally:
+        routed.unpersist()
 
     results["elapsed_sec"] = time.time() - t0
     results["stage_counters"] = metrics.export()
-    if spec.route_mode != "fanout":
-        routed.unpersist()
     return results

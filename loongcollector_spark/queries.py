@@ -1598,7 +1598,6 @@ def fanout_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             Route("purchases", Condition(tag_key="event_type", tag_value="purchase")),
             Route("all", None),
         ],
-        cache=False,
     )
     parts = [
         df.groupBy(F.lit(name).alias("sink")).agg(F.count(F.lit(1)).alias("rows"))

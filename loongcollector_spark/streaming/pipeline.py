@@ -3,23 +3,32 @@
 One streaming query per pipeline (the reference runs one processor/flusher
 thread-group per pipeline config, core/runner/ProcessorRunner.cpp:89-183).
 The micro-batch is the PipelineEventGroup analogue: within ``foreachBatch``
-the routed batch is persisted once and each sink writes its filtered slice —
-identical dataflow to the batch Router (operators/route.py), with Spark's
-streaming checkpoint standing in for the reference's file-offset checkpoints
-(core/checkpoint/CheckPointManager.h) so a restarted query resumes exactly
-where it stopped, no duplicate and no missing micro-batch.
+the routed batch is persisted once and each sink writes its slice. Sink
+selection, slicing and sink specs come from the batch runner's Router
+(``pipeline.sink_names`` / ``sink_frames`` / ``sink_spec``), so first_match,
+DropDisMatch, fanout and DiscardingTag deliver the same rows in both runners.
+Spark's streaming checkpoint stands in for the reference's file-offset
+checkpoints (core/checkpoint/CheckPointManager.h) so a restarted query
+resumes exactly where it stopped, no duplicate and no missing micro-batch.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from loongcollector_spark.operators import route as route_ops
-from loongcollector_spark.pipeline import PipelineSpec, compile_pipeline
+from loongcollector_spark.pipeline import (
+    PipelineSpec,
+    compile_pipeline,
+    private_spec_copy,
+    sink_frames,
+    sink_names,
+    sink_spec,
+)
 from loongcollector_spark.sinks import SinkSpec, write_sink
 
 
@@ -103,70 +112,26 @@ def start_fanout_query(
     timeout_sec: float | None = 300.0,
     settle_sec: float | None = None,
 ) -> dict[str, Any]:
-    """foreachBatch fan-out over an already-built streaming DataFrame:
-    compile the processor chain per micro-batch, persist the routed frame
-    once, write each sink's slice with replay-idempotent batch directories.
+    """foreachBatch delivery over an already-built streaming DataFrame, in
+    either route mode: compile the processor chain per micro-batch, persist
+    the routed frame once, write each ``pipeline.sink_frames`` slice — the
+    batch runner's Router — with replay-idempotent batch directories.
     ``settle_sec`` — see drain_available_now. The default (None) is the
     loss-proof auto mode: a pending stateful block (multiline merge)
     holds the drain open until its flush timeout fires; pass the
     operator's flush timeout for a faster bounded stop, or 0 for
     persistent-state operators (dedup, token bucket) whose state never
     empties."""
-    from loongcollector_spark.pipeline import private_spec_copy
-
     # per-query private copy: frozen kv-expand keys persist across THIS
     # query's micro-batches (schema-stable batch=<id> dirs) without leaking
     # into the caller's spec object (reused specs would carry stale keys)
     spec = private_spec_copy(spec)
-    sink_names = list(dict.fromkeys(r.sink for r in spec.routes))
-    if (
-        spec.default_sink
-        and spec.route_mode == "first_match"
-        and not spec.drop_dismatch
-        and spec.default_sink not in sink_names
-    ):
-        sink_names.append(spec.default_sink)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import dataclasses
-
-        routed = compile_pipeline(batch_df, spec)
-        routed = routed.persist()
+        routed = compile_pipeline(batch_df, spec).persist()
         try:
-            for sink_name in sink_names:
-                sink_spec = spec.sinks.get(sink_name) or SinkSpec(
-                    name=sink_name,
-                    path=os.path.join(output_base, sink_name),
-                )
-                if sink_spec.format == "iceberg":
-                    # per-micro-batch delivery must accumulate: force append
-                    # (write_sink honors mode; createOrReplace would keep only
-                    # the last batch). Replay-idempotence for iceberg comes
-                    # from its own snapshot commits, not batch directories.
-                    sink_spec = dataclasses.replace(sink_spec, mode="append")
-                elif sink_spec.path and sink_spec.format in ("parquet", "json", "csv"):
-                    # EXACTLY-ONCE on micro-batch replay: each trigger writes
-                    # its own batch=<id> directory with overwrite — a replayed
-                    # batch id rewrites the same directory instead of
-                    # appending duplicates (foreachBatch may re-deliver the
-                    # last uncommitted batch after a crash; plain `append`
-                    # would double those rows — the reference's analogue is
-                    # the RangeCheckpoint commit-after-send replay path,
-                    # FlusherSLS.cpp:588-591)
-                    sink_spec = dataclasses.replace(
-                        sink_spec,
-                        path=os.path.join(sink_spec.path, f"batch={batch_id}"),
-                        mode="overwrite",
-                    )
-                if spec.route_mode == "fanout":
-                    # every route targeting this sink delivers (Router ORs
-                    # conditions per flusher — see route_ops._any_condition)
-                    cond_routes = [r for r in spec.routes if r.sink == sink_name]
-                    cond = route_ops._any_condition(cond_routes) if cond_routes else None
-                    sink_df = routed if cond is None else routed.filter(cond)
-                else:
-                    sink_df = routed.filter(F.col(route_ops.SINK_COLUMN) == sink_name)
-                write_sink(sink_df, sink_spec)
+            for name, frame in sink_frames(routed, spec).items():
+                write_sink(frame, _micro_batch_sink(sink_spec(spec, name, output_base), batch_id))
         finally:
             routed.unpersist()
 
@@ -181,8 +146,30 @@ def start_fanout_query(
     return {
         "query_id": str(query.id),
         "active": query.isActive,
-        "sinks": sink_names,
+        "sinks": sink_names(spec),
     }
+
+
+def _micro_batch_sink(sink: SinkSpec, batch_id: int) -> SinkSpec:
+    """A sink's spec for one micro-batch's delivery."""
+    if sink.format == "iceberg":
+        # per-micro-batch delivery must accumulate: force append (write_sink
+        # honors mode; createOrReplace would keep only the last batch).
+        # Replay-idempotence for iceberg comes from its own snapshot
+        # commits, not batch directories.
+        return dataclasses.replace(sink, mode="append")
+    if sink.path and sink.format in ("parquet", "json", "csv"):
+        # EXACTLY-ONCE on micro-batch replay: each trigger writes its own
+        # batch=<id> directory with overwrite — a replayed batch id rewrites
+        # the same directory instead of appending duplicates (foreachBatch
+        # may re-deliver the last uncommitted batch after a crash; plain
+        # `append` would double those rows — the reference's analogue is
+        # the RangeCheckpoint commit-after-send replay path,
+        # FlusherSLS.cpp:588-591)
+        return dataclasses.replace(
+            sink, path=os.path.join(sink.path, f"batch={batch_id}"), mode="overwrite"
+        )
+    return sink
 
 
 def run_streaming_pipeline(
@@ -216,60 +203,34 @@ def run_streaming_pipeline(
     )
 
 
-def _streaming_file_lines(
-    spark: SparkSession,
-    input_path: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Text file stream → one row per line with (PATH_TAG, __offset__,
-    content), the same shape batch read_log_files(line_offset=True) yields.
-
-    Reads each file as ONE row (``wholetext``) then posexplodes the lines,
-    so per-file line numbers are exact regardless of how the scan splits —
-    the reference's LogFileReader also walks a file sequentially. The final
-    trailing newline is discarded (LogFileReader contract, noted in
-    ProcessorSplitMultilineLogStringNative.cpp "Presumption" comment); a
-    whole log file per row bounds memory at max-file-size per task, fine
-    for rotated log files (the wholetext option exists for exactly this)."""
-    from loongcollector_spark.sources.files import PATH_TAG
-
-    reader = spark.readStream.format("text").option("wholetext", "true")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    whole = (
-        reader.load(input_path)
-        .select(
-            F.col("value"),
-            F.col("_metadata.file_path").alias(PATH_TAG),
-        )
-    )
-    lines = F.split(F.col("value"), "\n")
-    lines = F.when(
-        F.element_at(lines, -1) == "", F.slice(lines, 1, F.size(lines) - 1)
-    ).otherwise(lines)
-    return (
-        whole.withColumn("__lines__", lines)
-        .select(PATH_TAG, F.posexplode("__lines__").alias("__offset__", "content"))
-        .select(
-            F.col(PATH_TAG),
-            F.col("__offset__").cast("long").alias("__offset__"),
-            "content",
-        )
-    )
-
-
 def _native_line_stream(
     spark: SparkSession,
     input_path: str,
     tail: bool,
+    exact_offsets: bool,
     flush_timeout_ms: int,
     kwargs: dict,
 ) -> DataFrame:
-    """Build the per-line stream for run_native_streaming's line-level
-    branches, popping the reader kwargs they own (``input_format``,
-    ``max_files_per_trigger``) so they don't crash start_fanout_query.
-    ``tail=True`` → the log_tail byte-offset source; else the whole-file
-    text reader with exact per-file line offsets."""
+    """The line source of run_native_streaming: one row per line in
+    ``content`` plus PATH_TAG, the shape batch read_log_files yields. Pops
+    the reader kwargs it owns (``input_format``, ``max_files_per_trigger``)
+    so they don't crash start_fanout_query. One of three readers:
+
+    - ``tail=True``: the log_tail source; real byte offsets in
+      ``__offset__`` order lines exactly (it bounds work per trigger by
+      max_partition_bytes, so max_files_per_trigger does not apply).
+    - ``exact_offsets`` (a multiline merge follows): each file is read as
+      ONE row (``wholetext``) and posexploded into lines, so ``__offset__``
+      is the exact per-file line number however the scan splits — the
+      reference's LogFileReader also walks a file sequentially. The final
+      trailing newline is discarded (LogFileReader contract, noted in
+      ProcessorSplitMultilineLogStringNative.cpp "Presumption" comment); a
+      whole log file per row bounds memory at max-file-size per task, fine
+      for rotated log files.
+    - otherwise the plain line-splitting text stream, so a large file is
+      never one row."""
+    from loongcollector_spark.sources.files import PATH_TAG
+
     input_format = kwargs.pop("input_format", "text")
     if input_format != "text":
         raise ValueError(
@@ -280,11 +241,22 @@ def _native_line_stream(
     if tail:
         from loongcollector_spark.sources.tail import tail_log_files
 
-        # real byte offsets from the tail source order lines exactly;
-        # max_files_per_trigger is a whole-file reader knob (the tail
-        # source bounds work per trigger by max_partition_bytes instead)
         return tail_log_files(spark, input_path, flush_timeout_ms=flush_timeout_ms)
-    return _streaming_file_lines(spark, input_path, max_files_per_trigger=max_files)
+    reader = spark.readStream.format("text").option("wholetext", exact_offsets)
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    raw = reader.load(input_path).select(
+        F.col("value").alias("content"), F.col("_metadata.file_path").alias(PATH_TAG)
+    )
+    if not exact_offsets:
+        return raw
+    lines = F.split(F.col("content"), "\n")
+    lines = F.when(
+        F.element_at(lines, -1) == "", F.slice(lines, 1, F.size(lines) - 1)
+    ).otherwise(lines)
+    return raw.select(
+        PATH_TAG, F.posexplode(lines).alias("__offset__", "content")
+    ).select(PATH_TAG, F.col("__offset__").cast("long").alias("__offset__"), "content")
 
 
 def run_native_streaming(
@@ -300,7 +272,8 @@ def run_native_streaming(
 ) -> dict[str, Any]:
     """Run an UNMODIFIED reference pipeline YAML as a streaming query: the
     input_file source becomes a text file stream (each line one event in
-    ``content``, like the batch read_log_files), processors/flushers come
+    ``content`` with the file path tag, like the batch read_log_files; see
+    _native_line_stream for its three readers), processors/flushers come
     from config.spec_from_native, and delivery rides the foreachBatch
     fan-out above — the closest Spark shape to the reference's
     file-watcher → processor thread-group → flusher chain.
@@ -319,15 +292,13 @@ def run_native_streaming(
     ``input_path`` overrides the YAML's FilePaths (those point at the
     reference host's /home/test-log); pass the directory/glob to tail.
 
-    ``tail=True`` swaps the whole-file text stream (atomic-rename contract:
-    a file is immutable once read) for the log_tail data source
+    ``tail=True`` swaps the text streams (atomic-rename contract: a file
+    is immutable once read) for the log_tail data source
     (sources/tail.py): per-file BYTE-offset checkpoints, rotation tracked
     by dev:inode, appended lines re-collected from the recorded offset,
     and ``flush_timeout_ms`` doubling as the reference's read-timeout
     flush of a never-terminated final line — full LogFileReader semantics
     over a live, growing log directory."""
-    import dataclasses
-
     from loongcollector_spark.config import load_native_config
     from loongcollector_spark.pipeline import PROCESSORS
     from loongcollector_spark.streaming.multiline import (
@@ -371,9 +342,10 @@ def run_native_streaming(
                 "one streaming query; use the batch runner "
                 "(read_log_files(line_offset=True) + run_pipeline)"
             )
-        stream = _native_line_stream(
-            spark, input_path, tail, flush_timeout_ms, kwargs
-        )
+    stream = _native_line_stream(
+        spark, input_path, tail, ml_idx is not None, flush_timeout_ms, kwargs
+    )
+    if ml_idx is not None:
         for pname, pparams in spec.processors[:ml_idx]:
             stream = PROCESSORS[pname](stream, **pparams)
         # the stream emits the batch's (file, offset, line, *rest) shape and
@@ -385,41 +357,4 @@ def run_native_streaming(
         )
         # drain-end flush: give the merge's read-timeout room to fire
         kwargs.setdefault("settle_sec", flush_timeout_ms / 1000.0 + 1.0)
-        return start_fanout_query(
-            stream, spec, output_base, checkpoint_dir, **kwargs
-        )
-
-    if tail:
-        # the tail source already yields `content` + path tag + byte offset
-        stream = _native_line_stream(
-            spark, input_path, tail, flush_timeout_ms, kwargs
-        )
-        return start_fanout_query(
-            stream, spec, output_base, checkpoint_dir, **kwargs
-        )
-
-    # the text stream delivers lines as `value`; the reference's processors
-    # address the raw line as `content` — prepend the rename. This branch
-    # hard-codes the text reader, so own the kwarg here too (a caller-passed
-    # input_format would otherwise collide with the explicit one below)
-    input_format = kwargs.pop("input_format", "text")
-    if input_format != "text":
-        raise ValueError(
-            "native streaming reads raw text lines; "
-            f"input_format={input_format!r} is not applicable"
-        )
-    spec = dataclasses.replace(
-        spec,
-        processors=[("rename", {"mapping": {"value": "content"}})]
-        + list(spec.processors),
-    )
-    return run_streaming_pipeline(
-        spark,
-        input_path,
-        "value string",
-        spec,
-        output_base,
-        checkpoint_dir,
-        input_format="text",
-        **kwargs,
-    )
+    return start_fanout_query(stream, spec, output_base, checkpoint_dir, **kwargs)

@@ -714,18 +714,44 @@ def test_native_aggregators_section(spark, tmp_path):
     assert {d.get("level") for d in defaults} == {"INFO", None}
 
     # DropDisMatch drops non-matching rows instead
+    router = {
+        "aggregators": [
+            {"Type": "aggregator_logstore_router", "SourceKey": "level",
+             "RouterRegex": ["ERR.*"], "RouterLogstore": ["store_a"],
+             "DropDisMatch": True},
+        ],
+        "flushers": [{"Type": "flusher_stdout"}],
+    }
     spec2, _ = spec_from_native(
-        {
-            "aggregators": [
-                {"Type": "aggregator_logstore_router", "SourceKey": "level",
-                 "RouterRegex": ["ERR.*"], "RouterLogstore": ["store_a"],
-                 "DropDisMatch": True},
-            ],
-            "flushers": [{"Type": "flusher_stdout"}],
-        },
-        sink_overrides={"store_a": {"format": "memory"}},
+        router,
+        sink_overrides={"store_a": {"format": "memory"}, "stdout": {"format": "memory"}},
     )
     assert spec2.drop_dismatch is True
+    # the flusher is still the default sink, but nothing reaches it: the
+    # no-match and missing-key rows are dropped in batch ...
+    assert spec2.default_sink == "stdout"
+    levels = spark.createDataFrame([("ERROR",), ("INFO",), (None,)], "level string")
+    res2 = run_pipeline(levels, spec2)
+    assert [r.level for r in res2["store_a"]["rows"]] == ["ERROR"]
+    assert "stdout" not in res2
+
+    # ... and in the stream
+    from loongcollector_spark.streaming import run_streaming_pipeline
+
+    levels_in = str(tmp_path / "levels_in")
+    levels.write.parquet(levels_in)
+    spec2s, _ = spec_from_native(router, sink_overrides={
+        s: {"format": "parquet", "path": str(tmp_path / f"s_{s}")}
+        for s in ("store_a", "stdout")
+    })
+    res2s = run_streaming_pipeline(
+        spark, levels_in, "level string", spec2s, str(tmp_path / "s_fan"),
+        str(tmp_path / "s_ckpt"),
+    )
+    assert res2s["sinks"] == ["store_a"]
+    streamed = spark.read.parquet(str(tmp_path / "s_store_a")).collect()
+    assert [r.level for r in streamed] == ["ERROR"]
+    assert not (tmp_path / "s_stdout").exists()
 
     # content_value_group -> partition columns on file sinks
     spec3, _ = spec_from_native(

@@ -371,3 +371,40 @@ def test_multiline_patterns_matched_once_in_jvm(spark, tmp_path):
 
     flags = spark.createDataFrame([("f", 0, "a", True)], schema)
     assert _plan(merge_by_flag(flags, "line", "file", "offset", "part")).count("Exchange") == 1
+
+
+@pytest.mark.parametrize("mode", ["first_match", "fanout"])
+def test_sink_frames_scan_the_persisted_routed_frame(spark, mode):
+    """Every sink slice of a persisted routed frame reads the cache, in both
+    route modes: the runner persists once and no slice recomputes the
+    processor chain."""
+    from loongcollector_spark.operators.route import Condition, Route
+    from loongcollector_spark.pipeline import (
+        PipelineSpec,
+        compile_pipeline,
+        sink_frames,
+        sink_names,
+    )
+
+    df = spark.createDataFrame(
+        [(0, "LOG", "prod"), (1, "METRIC", "dev")], "id int, event_type string, env string"
+    )
+    spec = PipelineSpec(
+        name="plan",
+        routes=[
+            Route("prod", Condition(tag_key="env", tag_value="prod", discard_tag=True)),
+            Route("prod", Condition(event_type="METRIC")),
+            Route("all", None),
+        ],
+        route_mode=mode,
+        shard_keys=(),
+        metrics_tokens_col=None,
+    )
+    routed = compile_pipeline(df, spec).persist()
+    try:
+        frames = sink_frames(routed, spec)
+        assert list(frames) == sink_names(spec)
+        for name, frame in frames.items():
+            assert "InMemoryTableScan" in _plan(frame), name
+    finally:
+        routed.unpersist()

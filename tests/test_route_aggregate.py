@@ -30,7 +30,7 @@ def test_route_fanout_duplication(events):
         route.Route("sink_b", route.Condition(event_type="METRIC")),
         route.Route("sink_all", None),
     ]
-    out = route.route_fanout(events, routes, cache=False)
+    out = route.route_fanout(events, routes)
     assert sorted(r.id for r in out["sink_a"].collect()) == [0, 2, 3]
     assert "env" not in out["sink_a"].columns  # DiscardingTag (Condition.h:28-73)
     assert [r.id for r in out["sink_b"].collect()] == [2]
@@ -46,7 +46,7 @@ def test_route_fanout_mixed_discard_keeps_tag_per_row(events):
         route.Route("mix", route.Condition(tag_key="env", tag_value="prod", discard_tag=True)),
         route.Route("mix", route.Condition(event_type="METRIC")),
     ]
-    out = route.route_fanout(events, routes, cache=False)["mix"]
+    out = route.route_fanout(events, routes)["mix"]
     assert "env" in out.columns
     vals = {r.id: r.env for r in out.collect()}
     # id=2 is METRIC (keeping route) -> tag kept even though it is also prod;
@@ -76,6 +76,40 @@ def test_route_drop_dismatch(events):
     routes = [route.Route("x", route.Condition(tag_key="env", tag_value="prod"))]
     out = route.route_first_match(events, routes, default_sink=None, drop_dismatch=True)
     assert sorted(r.id for r in out.collect()) == [0, 2, 3]
+
+
+@pytest.mark.parametrize("mode,raises", [
+    ("fanout", False), ("first_match", False), ("first_match", True),
+])
+def test_run_pipeline_releases_routed_cache(spark, events, mode, raises):
+    """run_pipeline persists the routed frame and releases it on every exit,
+    in both route modes and when a sink raises."""
+    from loongcollector_spark.pipeline import PipelineSpec, run_pipeline
+    from loongcollector_spark.sinks import SinkSpec
+
+    sinks = {s: SinkSpec(name=s, format="noop") for s in ("metric", "prod", "default")}
+    if raises:
+        # no spark-sql-kafka connector on the test classpath: write_sink raises
+        sinks["prod"] = SinkSpec(name="prod", format="kafka", options={"topic": "t"})
+    spec = PipelineSpec(
+        name="cache",
+        routes=[
+            route.Route("metric", route.Condition(event_type="METRIC")),
+            route.Route("prod", route.Condition(tag_key="env", tag_value="prod")),
+        ],
+        route_mode=mode,
+        shard_keys=(),
+        metrics_tokens_col=None,
+        sinks=sinks,
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    if raises:
+        with pytest.raises(RuntimeError, match="kafka"):
+            run_pipeline(events, spec)
+    else:
+        run_pipeline(events, spec)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_dynamic_topic(events):

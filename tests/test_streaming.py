@@ -1070,3 +1070,103 @@ def test_multiline_rejects_bad_unmatched(spark, tmp_path):
     stream = spark.readStream.schema(MERGE_SCHEMA).parquet(str(tmp_path))
     with pytest.raises(ValueError, match="unmatched"):
         streaming_merge_rules(stream, "line", "file", "offset", "^S", unmatched="Discard")
+
+
+# --- one Router: the stream delivers what run_pipeline delivers -------------
+
+ROUTER_SCHEMA = "id int, event_type string, env string, level string"
+ROUTER_ROWS = [
+    (0, "LOG", "prod", "ERROR"),
+    (1, "LOG", "dev", "INFO"),
+    (2, "METRIC", "prod", "INFO"),
+    (3, "METRIC", "dev", None),
+    (4, "LOG", None, "ERROR"),
+]
+
+
+@pytest.fixture(scope="module")
+def router_input(spark, tmp_path_factory):
+    """ROUTER_ROWS as one parquet file: one availableNow micro-batch."""
+    base = str(tmp_path_factory.mktemp("router_in"))
+    spark.createDataFrame(ROUTER_ROWS, ROUTER_SCHEMA).coalesce(1).write.mode("overwrite").parquet(base)
+    return base
+
+
+def _stream_sink_rows(spark, base, sink):
+    """(columns, rows) a streamed sink wrote, without the batch=<id> column."""
+    df = spark.read.parquet(f"{base}/{sink}").drop("batch")
+    return set(df.columns), sorted((r.asDict() for r in df.collect()), key=repr)
+
+
+def test_streaming_fanout_discards_tag(spark, router_input, tmp_path):
+    """DiscardingTag (Condition.h:28-73) in the stream: a sink reached only
+    by a discarding route gets no tag column; a sink reached by a discarding
+    and a keeping route keeps the tag only on rows the keeping route
+    matched."""
+    spec = PipelineSpec(
+        name="discard",
+        routes=[
+            Route("prod", Condition(tag_key="env", tag_value="prod", discard_tag=True)),
+            Route("mix", Condition(tag_key="env", tag_value="prod", discard_tag=True)),
+            Route("mix", Condition(event_type="METRIC")),
+        ],
+        route_mode="fanout",
+        shard_keys=(),
+        metrics_tokens_col=None,
+    )
+    out = str(tmp_path / "out")
+    res = run_streaming_pipeline(
+        spark, router_input, ROUTER_SCHEMA, spec, out, str(tmp_path / "ckpt")
+    )
+    assert res["sinks"] == ["prod", "mix"]
+    cols, rows = _stream_sink_rows(spark, out, "prod")
+    assert "env" not in cols
+    assert sorted(r["id"] for r in rows) == [0, 2]
+    _, rows = _stream_sink_rows(spark, out, "mix")
+    assert {r["id"]: r["env"] for r in rows} == {0: None, 2: "prod", 3: "dev"}
+
+
+ERRORS = Condition(content_key="level", content_regex="ERROR")
+PROD_DISCARD = Condition(tag_key="env", tag_value="prod", discard_tag=True)
+ROUTER_CASES = {
+    "first_match_default": dict(
+        routes=[Route("errors", ERRORS), Route("prod", Condition(tag_key="env", tag_value="prod"))],
+        default_sink="rest",
+    ),
+    "first_match_drop_dismatch": dict(
+        routes=[Route("errors", ERRORS)], default_sink="rest", drop_dismatch=True
+    ),
+    "first_match_no_default": dict(routes=[Route("errors", ERRORS)], default_sink=None),
+    "fanout_mixed_discard": dict(
+        routes=[Route("mix", PROD_DISCARD), Route("mix", Condition(event_type="METRIC")),
+                Route("errors", ERRORS)],
+        route_mode="fanout",
+    ),
+    "fanout_unconditional": dict(
+        routes=[Route("all", None), Route("prod", PROD_DISCARD)], route_mode="fanout"
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(ROUTER_CASES))
+def test_streaming_router_matches_batch(spark, router_input, tmp_path, case):
+    """run_pipeline and the foreachBatch runner deliver the same rows and
+    columns to the same sinks: they share one Router."""
+    import os
+
+    from loongcollector_spark.pipeline import run_pipeline
+
+    spec = PipelineSpec(name=case, shard_keys=(), metrics_tokens_col=None,
+                        **ROUTER_CASES[case])
+    batch_out, stream_out = str(tmp_path / "batch"), str(tmp_path / "stream")
+    res = run_pipeline(spark.read.parquet(router_input), spec, output_base=batch_out)
+    sres = run_streaming_pipeline(
+        spark, router_input, ROUTER_SCHEMA, spec, stream_out, str(tmp_path / "ckpt")
+    )
+    sinks = sres["sinks"]
+    assert sorted(sinks) == sorted(os.listdir(batch_out)) == sorted(os.listdir(stream_out))
+    assert set(sinks) <= set(res)
+    for sink in sinks:
+        df = spark.read.parquet(f"{batch_out}/{sink}")
+        want = set(df.columns), sorted((r.asDict() for r in df.collect()), key=repr)
+        assert _stream_sink_rows(spark, stream_out, sink) == want, sink
