@@ -11,9 +11,9 @@ core/plugin/processor/ProcessorParseRegexNative.cpp:95-98):
 Spark-first mapping: each pipeline stage registers a ``pyspark.sql.Observation``
 (zero extra passes — metrics ride the same job), and the registry exports the
 same labeled-record shape as the reference's metric_export
-(pluginmanager/metric_export.go:40-62). Time-based counters are measured at
-the job level (wall clock), not per-operator — per-operator CPU time is not
-observable from the declarative plan, and that is the honest Spark answer.
+(pluginmanager/metric_export.go:40-62). Time-based counters here are wall
+clock per job; per-layer time is measured by perfbench's traced run
+(``--trace 1``), which ablates the pipeline prefix by prefix.
 """
 
 from __future__ import annotations
@@ -60,13 +60,12 @@ class MetricsRegistry:
 
     def export(self) -> list[dict[str, Any]]:
         """Labeled records like the reference's metric_export shape:
-        [{"label.plugin": stage, "value.<counter>": n, ...}]."""
+        [{"label.plugin": stage, "value.<counter>": n, ...}]. Call it after
+        the action that ran the observed plan: an observation's ``get``
+        waits for that job, and its failure reaches the caller."""
         records: list[dict[str, Any]] = []
         for stage, obs in self.observations.items():
-            try:
-                vals = dict(obs.get)
-            except Exception:
-                vals = {}
+            vals = dict(obs.get)
             records.append({"label.plugin": stage, **{f"value.{k}": v for k, v in vals.items()}})
         for stage, vals in self.static.items():
             records.append({"label.plugin": stage, **{f"value.{k}": v for k, v in vals.items()}})

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from loongcollector_spark.operators.parse_json import json_object_map
+
 # --- constants / renames -----------------------------------------------------
 
 def add_fields(
@@ -1123,14 +1125,15 @@ def anchor(
 ) -> DataFrame:
     """processor_anchor (plugins/processor/anchor/anchor.go:43-66): extract
     the substring between the ``start`` and ``stop`` anchor strings into
-    ``dest_key``; optionally expand the extracted span as JSON members."""
-    import re as _re
-
-    pat = f"{_re.escape(start)}(.*?){_re.escape(stop)}"
+    ``dest_key``; optionally expand the extracted span as JSON members, each
+    read from one parse of the span (``parse_json.json_object_map``)."""
+    pat = f"{re.escape(start)}(.*?){re.escape(stop)}"
     out = df.withColumn(dest_key, F.regexp_extract(F.col(source_key), pat, 1))
-    if expand_json:
-        for k in json_keys or ():
-            out = out.withColumn(k, F.get_json_object(F.col(dest_key), f"$.{k}"))
+    if expand_json and json_keys:
+        tmp = "__anchor_json__"
+        out = out.withColumn(tmp, json_object_map(F.col(dest_key)))
+        members = {k: F.try_element_at(F.col(tmp), F.lit(k)) for k in json_keys}
+        out = out.withColumns(members).drop(tmp)
     return out
 
 

@@ -22,8 +22,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.parse_common import ParserOptions, apply_parser_options
+from loongcollector_spark.operators.parse_regex import group, match_parts, matched
 
-APSARA_TIME_RE = r"^\[(\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}(?:\.\d+)?)\]"
+# one match reads the bracketed time, the first known [LEVEL] after it
+# (an empty group when there is none) and the tail after the time
+APSARA_RE = (
+    r"^\[(\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}(?:\.\d+)?)\]"
+    r"(?=(?:(?s:.*?)\[(INFO|WARNING|WARN|ERROR|DEBUG|FATAL)\])?)((?s:.*))"
+)
+_PARTS = "__apsara_parts__"
 
 
 def parse_apsara(
@@ -41,30 +48,26 @@ def parse_apsara(
     the log's wall-clock time is interpreted in that zone and normalized,
     the columnar analogue of the offset subtraction."""
     options = options or ParserOptions()
-    src = F.col(source_key)
-    success = src.rlike(APSARA_TIME_RE)
-    time_str = F.regexp_extract(src, APSARA_TIME_RE, 1)
-    # bracketed level: first [XXX] after the time block that is a known level
-    level = F.regexp_extract(src, r"\[(INFO|WARNING|WARN|ERROR|DEBUG|FATAL)\]", 1)
-    # trailing key:value fields (tab-separated, each containing ':')
-    tail = F.regexp_replace(src, APSARA_TIME_RE, "")
-    pairs = F.filter(F.split(tail, r"\t"), lambda p: p.rlike(r"^[^\[:]+:"))
-    entries = F.transform(
-        pairs,
-        lambda p: F.struct(
-            F.regexp_extract(p, r"^([^:]+):", 1).alias("key"),
-            F.regexp_replace(p, r"^[^:]+:", "").alias("value"),
-        ),
+    parts = F.col(_PARTS)
+    time_str = group(parts, 1)
+    # trailing key:value fields: tab-separated, split at the first ':', kept
+    # when the key is non-empty and holds no '['
+    pairs = F.filter(
+        F.transform(F.split(group(parts, 3), "\t"), lambda p: F.split(p, ":", 2)),
+        lambda kv: (F.size(kv) == 2) & (F.get(kv, 0) != "") & ~F.get(kv, 0).contains("["),
     )
-    kv = F.map_from_entries(entries)
+    entries = F.transform(
+        pairs, lambda kv: F.struct(F.get(kv, 0).alias("key"), F.get(kv, 1).alias("value"))
+    )
     extracted = {
         time_column: (
             F.to_utc_timestamp(F.to_timestamp(time_str), timezone)
             if timezone else F.to_timestamp(time_str)
         ),
-        level_column: level,
-        map_column: kv,
+        level_column: group(parts, 2),
+        map_column: F.map_from_entries(entries),
     }
     if ordered_pairs_column:
         extracted[ordered_pairs_column] = entries
-    return apply_parser_options(df, source_key, success, extracted, options)
+    out = df.withColumn(_PARTS, match_parts(F.col(source_key), APSARA_RE, 3, full_match=False))
+    return apply_parser_options(out, source_key, matched(parts, 3), extracted, options).drop(_PARTS)

@@ -33,7 +33,10 @@ MAP_SCHEMA = "map<string,string>"
 _OBJECT_START = r"^[ \t\n\r]*\{"
 
 
-def _from_json_object(src):
+def json_object_map(src):
+    """``map<string,string>`` of a JSON object's top-level members (values
+    restringified), NULL for anything else: the one parse every JSON read
+    goes through."""
     return F.when(src.rlike(_OBJECT_START), F.from_json(src, MAP_SCHEMA))
 
 
@@ -49,7 +52,7 @@ def parse_json(
     stand-in for the reference's schema-less content list)."""
     options = options or ParserOptions()
     tmp = "__json_map__"
-    out = df.withColumn(tmp, _from_json_object(F.col(source_key)))
+    out = df.withColumn(tmp, json_object_map(F.col(source_key)))
     success = F.col(tmp).isNotNull()
 
     extracted = {}
@@ -76,7 +79,7 @@ def expand_json(
     are connector-joined paths (processor_json.go:38-52). Depth unrolled at
     plan time; each level re-parses only values that look like objects."""
     options = options or ParserOptions()
-    out = df.withColumn(map_column, _from_json_object(F.col(source_key)))
+    out = df.withColumn(map_column, json_object_map(F.col(source_key)))
     success = F.col(map_column).isNotNull()
 
     for _ in range(max(0, expand_depth - 1)):

@@ -40,45 +40,42 @@ def parse_key_value(
             src, F.lit(re.escape(pair_delimiter)), F.lit(re.escape(kv_separator))
         )
     else:
-        pairs = F.split(src, re.escape(pair_delimiter))
-        sep = re.escape(kv_separator)
+        # each pair split once at its first separator; a pair without one
+        # is [pair] and becomes the value of a prefixed positional key
+        kvs = F.transform(
+            F.split(src, re.escape(pair_delimiter)),
+            lambda p: F.split(p, re.escape(kv_separator), 2),
+        )
 
-        def to_entry(i: Column, p: Column) -> Column:
-            has_sep = p.rlike(sep)
-            key = F.when(has_sep, F.regexp_extract(p, f"^(.*?){sep}", 1)).otherwise(
+        def to_entry(kv: Column, i: Column) -> Column:
+            key = F.when(F.size(kv) == 2, F.get(kv, 0)).otherwise(
                 F.concat(F.lit(no_separator_key_prefix), (i + 1).cast("string"))
             )
-            val = F.when(has_sep, F.regexp_replace(p, f"^(.*?){sep}", "")).otherwise(p)
-            return F.struct(key.alias("key"), val.alias("value"))
+            return F.struct(key.alias("key"), F.element_at(kv, -1).alias("value"))
 
-        entries = F.zip_with(
-            F.sequence(F.lit(0), F.size(pairs) - 1), pairs, to_entry
-        )
-        m = F.map_from_entries(entries)
+        m = F.map_from_entries(F.transform(kvs, to_entry))
 
     out = df.withColumn(map_column, m)
     project = list(keys or [])
     if expand_keys and not project:
-        project = discover_keys(out, map_column, sample_rows)
+        project = discover_keys(out, F.map_keys(F.col(map_column)), sample_rows)
     for k in project:
         out = out.withColumn(k, F.try_element_at(F.col(map_column), F.lit(k)))
     return out
 
 
 def discover_keys(
-    df: DataFrame, map_column: str = "kv", sample_rows: int | None = None
+    df: DataFrame, keys: Column, sample_rows: int | None = None
 ) -> list[str]:
-    """Plan-time distinct-scan of the map keys (sorted). Exposed so callers
-    that compile repeatedly over the same spec — the streaming foreachBatch
-    runner — can discover ONCE and freeze the projected column set instead
-    of re-discovering per micro-batch (which would give each batch=<id>
-    output directory its own schema)."""
-    src_keys = df.select(map_column)
-    if sample_rows:
-        src_keys = src_keys.limit(sample_rows)
+    """Plan-time distinct-scan of an ``array<string>`` keys column (sorted):
+    ``map_keys`` of a parsed map, or ``json_object_keys`` of a JSON column.
+    Every stage with a dynamic key set calls it: ``parse_key_value``, SPL's
+    parse-json and parse-kv, and the streaming foreachBatch runner, which
+    discovers ONCE and freezes the projected column set instead of
+    re-discovering per micro-batch (which would give each batch=<id>
+    output directory its own schema). ``sample_rows`` scans only the first
+    N rows."""
+    src = df.limit(sample_rows) if sample_rows else df
     return sorted(
-        r.k
-        for r in src_keys.select(
-            F.explode(F.map_keys(F.col(map_column))).alias("k")
-        ).distinct().collect()
+        r.k for r in src.select(F.explode(keys).alias("k")).distinct().collect()
     )

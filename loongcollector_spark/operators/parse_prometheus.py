@@ -12,6 +12,9 @@ column expressions.
 Line grammar handled: ``name{l1="v1",...} value [timestamp_ms]`` with
 optional label set and timestamp, ``# HELP``/``# TYPE``/blank lines skipped,
 label-value escapes (\\\\, \\", \\n), and the special values +Inf/-Inf/NaN.
+One match of the line pattern per row gives the name, the label body, the
+value and the timestamp (``parse_regex.match_parts``); the label pairs are
+then read with ``regexp_extract_all``.
 
 Output shape matches the repo's metric convention (log_to_metric /
 otel_metric_shape): ``__name__``, ``__labels__`` (sorted 'k#$#v' entries
@@ -29,11 +32,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.enrich import METRIC_LABEL_SEP
+from loongcollector_spark.operators.parse_regex import group, match_parts, matched
 
 _LINE_RE = (
     r"^\s*([a-zA-Z_:][a-zA-Z0-9_:]*)\s*(?:\{(.*)\})?\s*(\S+)(?:\s+(-?\d+))?\s*$"
 )
 _LABEL_RE = r'([a-zA-Z_][a-zA-Z0-9_]*)\s*=\s*"((?:\\.|[^"\\])*)"'
+_PARTS = "__prom_parts__"
 
 
 def _unescape(v: Column) -> Column:
@@ -51,7 +56,7 @@ def _prom_value(raw: Column) -> Column:
         .when(raw == "-Inf", F.lit(float("-inf")))
         .when(raw == "Inf", F.lit(float("inf")))
         .when(raw == "NaN", F.lit(float("nan")))
-        .otherwise(raw.cast("double"))
+        .otherwise(raw.try_cast("double"))
     )
 
 
@@ -65,36 +70,28 @@ def parse_prometheus(
     unparseable lines are dropped (TextParser.ParseLine returning false).
     ``default_ts_ms`` is the scrape-timestamp fallback for lines without an
     explicit timestamp (PROMETHEUS_SCRAPE_TIMESTAMP metadata)."""
-    src = F.col(source_key)
-    name = F.regexp_extract(src, _LINE_RE, 1)
-    label_body = F.regexp_extract(src, _LINE_RE, 2)
-    raw_value = F.regexp_extract(src, _LINE_RE, 3)
-    raw_ts = F.regexp_extract(src, _LINE_RE, 4)
-
+    parts = F.col(_PARTS)
+    name, label_body, raw_value, raw_ts = (group(parts, i) for i in range(1, 5))
     keys = F.regexp_extract_all(label_body, F.lit(_LABEL_RE), 1)
     vals = F.transform(
         F.regexp_extract_all(label_body, F.lit(_LABEL_RE), 2), _unescape
     )
-    labels_map = F.map_from_arrays(keys, vals)
     value = _prom_value(raw_value)
-    ok = (
-        src.isNotNull()
-        & ~F.trim(src).startswith("#")
-        & (F.trim(src) != "")
-        & (name != "")
-        & value.isNotNull()
-    )
+    ok = matched(parts, 4) & value.isNotNull()
     ts_nano = F.when(raw_ts != "", raw_ts.cast("long") * 1_000_000).otherwise(
         F.lit(default_ts_ms * 1_000_000 if default_ts_ms is not None else None).cast("long")
     )
     out = (
-        df.filter(ok)
+        df.withColumn(_PARTS, match_parts(F.col(source_key), _LINE_RE, 4, full_match=False))
+        # keeps the matched lines with a readable value; a Filter would be
+        # pushed below the match and run the pattern a second time
+        .withColumn(_PARTS, F.explode(F.when(ok, F.array(parts))))
         .withColumn("__name__", name)
-        .withColumn("labels_map", labels_map)
-        .withColumn("__labels__", render_labels(labels_map))
+        .withColumn("labels_map", F.map_from_arrays(keys, vals))
+        .withColumn("__labels__", render_labels(F.col("labels_map")))
         .withColumn("__value__", value)
         .withColumn("__time_nano__", ts_nano)
-        .drop(source_key)
+        .drop(source_key, _PARTS)
     )
     if not keep_labels_map:
         out = out.drop("labels_map")

@@ -24,7 +24,7 @@ from __future__ import annotations
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.parse_common import ParserOptions, apply_parser_options
@@ -108,6 +108,49 @@ def matched(parts: Column, n_groups: int) -> Column:
 def group(parts: Column, i: int) -> Column:
     """Capture group ``i`` (1-based) of a matched ``match_parts`` column."""
     return F.get(parts, F.lit(i))
+
+
+def java_groups(spark: SparkSession, pattern: str) -> tuple[int, dict[str, int]]:
+    """The number of capture groups of ``pattern`` as the JVM's
+    ``java.util.regex.Pattern`` compiles it, and the number of each named
+    group ``(?<name>...)``, so the pattern checked is the pattern that runs.
+    Raises ValueError for a pattern the JVM rejects, or one whose groups
+    this reader numbers differently from the JVM."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import IllegalArgumentException
+
+    try:
+        compiled = spark.sparkContext._jvm.java.util.regex.Pattern.compile(pattern)
+    except (IllegalArgumentException, Py4JJavaError) as e:
+        raise ValueError(str(e)) from None
+    n_groups = compiled.matcher("").groupCount()
+    names: dict[str, int] = {}
+    seen = 0
+    i, in_class = 0, 0  # in_class: nesting depth of character classes
+    while i < len(pattern):
+        if pattern.startswith("\\Q", i):
+            end = pattern.find("\\E", i + 2)
+            i = len(pattern) if end < 0 else end + 2
+            continue
+        c = pattern[i]
+        if c == "\\":
+            i += 1
+        elif c == "[":
+            in_class += 1
+            if pattern.startswith("]", i + 1) or pattern.startswith("^]", i + 1):
+                i = pattern.index("]", i)  # a leading ']' is a member
+        elif c == "]" and in_class:
+            in_class -= 1
+        elif c == "(" and not in_class:
+            if not pattern.startswith("?", i + 1):
+                seen += 1
+            elif pattern.startswith("?<", i + 1) and pattern[i + 3: i + 4].isalpha():
+                seen += 1
+                names[pattern[i + 3: pattern.index(">", i)]] = seen
+        i += 1
+    if seen != n_groups:
+        raise ValueError(f"cannot number the groups of {pattern!r}")
+    return n_groups, names
 
 
 # escapes that stand for one character (\t) or match a class or a position

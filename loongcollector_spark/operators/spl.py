@@ -10,8 +10,8 @@ Catalyst expression:
     * | where <sql-expr>
       | extend k=<expr>[, k2=<expr>]          (Presto-flavored fns translated)
       | project c1, c2 / project-away c / project-rename new=old
-      | parse-json <col> [as k1, k2]          (dynamic keys -> columns)
-      | parse-regexp <col>, '<pat>' as a, b
+      | parse-json [-prefix=p] [-path='$.a'] <col> [as k1, k2]
+      | parse-regexp <col>, '<pat>' [as a, b]   (or (?<name>) groups)
       | parse-csv <col> as a, b, c
       | parse-kv -regexp <col>, '<pat>' / parse-kv -delims='<chars>' <col>
         (either form accepts a trailing ``as k1, k2`` key list)
@@ -34,6 +34,11 @@ Three resolution modes, cheapest first:
        explicit keys are the scale path).
 
 Rows lacking a key get null, matching the reference's per-row contents.
+Every key of one stage reads one parse of the row: parse-json reads its
+members from one ``from_json`` map (``parse_json.json_object_map``), and
+parse-regexp reads its groups from one match (``parse_regex.match_parts``),
+the pattern compiled by the JVM when the stage compiles. Discovery is the
+shared ``parse_kv.discover_keys``.
 
 Multi-statement scripts (the ProcessorSPL contract, exercised by
 SplUnittest.cpp TestMultiParse) compile via :func:`compile_spl_multi`:
@@ -827,20 +832,6 @@ def _unquote_str(s: str) -> str:
     return s
 
 
-def _discover_json_keys(
-    df: DataFrame, col: str, sample_rows: int | None = None
-) -> list[str]:
-    src = df.select(col)
-    if sample_rows:
-        src = src.limit(sample_rows)
-    rows = (
-        src.select(F.explode(F.json_object_keys(F.col(col))).alias("k"))
-        .distinct()
-        .collect()
-    )
-    return sorted(r.k for r in rows)
-
-
 def _keys_or_rest(rest: str) -> tuple[str, list[str] | None]:
     """Split a trailing explicit ``as k1, k2`` key list off a stage tail."""
     m = _rsplit_as(rest)
@@ -887,52 +878,62 @@ def _decode_esc(s: str) -> str:
 def _stage_parse_json(
     df: DataFrame, rest: str, sample_rows: int | None = None
 ) -> DataFrame:
+    from loongcollector_spark.operators.parse_json import json_object_map
+    from loongcollector_spark.operators.parse_kv import discover_keys
+
     rest, keys = _keys_or_rest(rest)
     flags, rest = _parse_flags(rest)
     prefix = str(flags.get("prefix", ""))
-    col = _unquote_ident(rest)
-    tmp = None
+    tmp = "__spl_json__"
+    df = df.withColumn(tmp, F.col(_unquote_ident(rest)))
     if "path" in flags:
-        # ``-path='$.body'``: expand the object AT that JSON path
-        tmp = "__spl_json_path__"
-        df = df.withColumn(tmp, F.get_json_object(F.col(col), str(flags["path"])))
-        col = tmp
+        # ``-path='$.body'``: expand the object AT that member path, each
+        # step read from the parsed map of the one before
+        steps = str(flags["path"]).split(".")
+        if steps[0] != "$" or not all(steps[1:]) or any("[" in p for p in steps):
+            raise SplError(f"parse-json -path takes a '$.a.b' member path: {flags['path']!r}")
+        for step in steps[1:]:
+            df = df.withColumn(tmp, F.try_element_at(json_object_map(F.col(tmp)), F.lit(step)))
     if keys is None:
-        keys = _discover_json_keys(df, col, sample_rows)
-    for k in keys:
-        df = df.withColumn(prefix + k, F.get_json_object(F.col(col), f"$.{k}"))
-    return df.drop(tmp) if tmp else df
+        keys = discover_keys(df, F.json_object_keys(F.col(tmp)), sample_rows)
+    df = df.withColumn(tmp, json_object_map(F.col(tmp)))
+    members = {prefix + k: F.try_element_at(F.col(tmp), F.lit(k)) for k in keys}
+    return df.withColumns(members).drop(tmp)
 
 
 def _stage_parse_regexp(df: DataFrame, rest: str) -> DataFrame:
+    """``parse-regexp col, '<pat>' as a, b`` reads group i into the i-th
+    key; without ``as``, the named groups ``(?<name>...)`` (or Python's
+    ``(?P<name>...)`` spelling, spl.txt line 4) carry the keys. The JVM
+    compiles the pattern here, so a bad one fails the compile; every key
+    reads one match per row, '' when the pattern does not match."""
+    from loongcollector_spark.operators.parse_regex import group, java_groups, match_parts, matched
+
     m = _rsplit_as(rest)
-    if not m:
-        # ``parse-regexp col, '(?P<ip>\S+)...'`` — named groups carry the
-        # output keys (spl.txt line 4); translate Python's (?P<) spelling to
-        # the JVM's (?<) and extract by group index
-        args = _split_top(rest, ",")
-        if len(args) != 2:
-            raise SplError(f"parse-regexp needs 'as a, b' or (?P<name>) groups: {rest!r}")
-        col = _unquote_ident(args[0])
-        pat = _unquote_str(args[1])
-        # normalize named-group spelling without touching lookbehinds:
-        # only ``(?<`` / ``(?P<`` followed by an identifier char is a named
-        # group — ``(?<=`` and ``(?<!`` must pass through untouched
-        py_pat = re.sub(r"\(\?P?<(?=[A-Za-z_])", "(?P<", pat)
-        groups = re.compile(py_pat).groupindex
-        if not groups:
-            raise SplError(f"parse-regexp needs 'as a, b' or (?P<name>) groups: {rest!r}")
-        jvm_pat = re.sub(r"\(\?P<(?=[A-Za-z_])", "(?<", pat)
-        for name, idx in groups.items():
-            df = df.withColumn(name, F.regexp_extract(F.col(col), jvm_pat, idx))
-        return df
-    left, names = m
-    args = _split_top(left, ",")
-    col = _unquote_ident(args[0])
-    pat = _unquote_str(args[1])
-    for i, name in enumerate(n.strip() for n in _split_top(names, ",")):
-        df = df.withColumn(_unquote_ident(name), F.regexp_extract(F.col(col), pat, i + 1))
-    return df
+    args = _split_top(m[0] if m else rest, ",")
+    if len(args) != 2:
+        raise SplError(f"parse-regexp needs a column and a pattern: {rest!r}")
+    src = F.col(_unquote_ident(args[0]))
+    pat = _unquote_str(args[1]).replace("(?P<", "(?<")
+    try:
+        n_groups, named = java_groups(df.sparkSession, pat)
+    except ValueError as e:
+        raise SplError(f"parse-regexp: bad pattern {pat!r}: {e}") from None
+    if m:
+        keys = {_unquote_ident(k): i for i, k in enumerate(_split_top(m[1], ","), start=1)}
+    else:
+        keys = named
+    if not keys:
+        raise SplError(f"parse-regexp needs 'as a, b' or (?<name>) groups: {rest!r}")
+    n = max(keys.values())
+    if n > n_groups:
+        raise SplError(f"parse-regexp: {len(keys)} keys but {n_groups} groups in {pat!r}")
+    tmp = "__spl_regexp_parts__"
+    parts = F.col(tmp)
+    hit, miss = matched(parts, n), F.when(src.isNotNull(), F.lit(""))
+    values = {k: F.when(hit, group(parts, i)).otherwise(miss) for k, i in keys.items()}
+    out = df.withColumn(tmp, match_parts(src, pat, n, full_match=False))
+    return out.withColumns(values).drop(tmp)
 
 
 def _stage_parse_csv(df: DataFrame, rest: str) -> DataFrame:
@@ -970,6 +971,8 @@ def _stage_parse_csv(df: DataFrame, rest: str) -> DataFrame:
 def _stage_parse_kv(
     df: DataFrame, rest: str, sample_rows: int | None = None
 ) -> DataFrame:
+    from loongcollector_spark.operators.parse_kv import discover_keys
+
     rest, keys = _keys_or_rest(rest)
     flags, rest = _parse_flags(rest)
     prefix = str(flags.get("prefix", ""))
@@ -992,15 +995,7 @@ def _stage_parse_kv(
     tmp = "__spl_kv__"
     df = df.withColumn(tmp, kv)
     if keys is None:
-        src = df.select(tmp)
-        if sample_rows:
-            src = src.limit(sample_rows)
-        keys = sorted(
-            r.k
-            for r in src.select(
-                F.explode(F.map_keys(F.col(tmp))).alias("k")
-            ).distinct().collect()
-        )
+        keys = discover_keys(df, F.map_keys(F.col(tmp)), sample_rows)
     for k in keys:
         out_name = prefix + k
         new = F.col(tmp).getItem(k)

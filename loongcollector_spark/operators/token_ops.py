@@ -68,50 +68,10 @@ def token_subseq_find(
     dest: str = "match_pos",
 ) -> DataFrame:
     """First occurrence (0-based) of a token-id subsequence per row, -1 if
-    absent — the grok-style 'match' primitive over token arrays. Vectorized:
-    one boolean rolling-window compare per Arrow batch, no per-row Python."""
-    pat = np.asarray(list(pattern), dtype=np.int64)
-    m = len(pat)
-    if m == 0:
-        raise ValueError("empty pattern")
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def find(tok: pd.Series) -> pd.Series:
-        lengths = tok.map(lambda v: 0 if v is None else len(v)).to_numpy(dtype=np.int64)
-        n_rows = len(tok)
-        out = np.full(n_rows, -1, dtype=np.int32)
-        if lengths.sum() == 0:
-            return pd.Series(out)
-        flat = np.concatenate(
-            [np.asarray(v, dtype=np.int64) for v in tok if v is not None and len(v)]
-        )
-        # hit[i] = (flat[i:i+m] == pat), one vector compare per pattern token
-        valid = len(flat) - m + 1
-        if valid <= 0:
-            return pd.Series(out)
-        hit = np.ones(valid, dtype=bool)
-        for j in range(m):
-            hit &= flat[j : j + valid] == pat[j]
-        ends = np.cumsum(lengths)
-        starts = ends - lengths  # row i's tokens = flat[starts[i]:ends[i]]
-        # whole-batch hit→row attribution (no per-row loop): a window at
-        # global start p belongs to the row whose [start, end) contains p,
-        # and is real only if it doesn't cross into the next row (p+m<=end)
-        p = np.flatnonzero(hit)
-        if len(p):
-            row_of = np.searchsorted(ends, p, side="right")
-            in_row = p + m <= ends[row_of]
-            p, row_of = p[in_row], row_of[in_row]
-            if len(p):
-                # p ascending & row_of non-decreasing → unique() keeps the
-                # FIRST window of each row
-                rows_u, first_i = np.unique(row_of, return_index=True)
-                out[rows_u] = (p[first_i] - starts[rows_u]).astype(np.int32)
-        return pd.Series(out)
-
-    return df.withColumn(dest, find(F.col(tokens_col)))
+    absent — the grok-style 'match' primitive over token arrays: the
+    one-pattern case of :func:`token_subseq_find_multi`."""
+    out = token_subseq_find_multi(df, tokens_col, [pattern], dest)
+    return out.withColumn(dest, F.get(F.col(dest), 0))
 
 
 def token_rollup(

@@ -180,7 +180,7 @@ def compile_pipeline(
                 out, **{**kwargs, "expand_keys": False}
             )
             frozen = discover_keys(
-                probe, kwargs.get("map_column", "kv"), kwargs.get("sample_rows")
+                probe, F.map_keys(F.col(kwargs.get("map_column", "kv"))), kwargs.get("sample_rows")
             )
             if frozen:
                 # only freeze a decision backed by data: an empty probe
@@ -279,12 +279,16 @@ def run_pipeline(
                 )
             return write_sink(sink_df, sink)
 
+        # Materialize the cache once, and with it the observed counters, in
+        # one full scan: concurrent sinks would each build it, and a sink's
+        # filtered scan may report no observed counters (a checkpointed
+        # resume that scans only its pending buckets reports none).
+        routed.count()
         # checkpointed writes toggle session-level conf (partitionOverwriteMode)
         # inside a context manager — not safe across concurrent driver threads
         if checkpoint or len(per_sink) < 2:
             results = {name: deliver(name, sdf) for name, sdf in per_sink.items()}
         else:
-            routed.count()  # materialize the cache once before concurrent scans
             # The reference flushes every sink from its own runner thread
             # (FlusherRunner); Spark's scheduler likewise accepts concurrent
             # jobs from driver threads — each sink scans the cached routed

@@ -11,7 +11,8 @@ reference's inputs emit:
 - ``parse_syslog_rfc3164`` — the decode the syslog input applies per
   datagram (plugins/input/syslog/parser.go:28-118): PRI header split into
   priority / facility (pri>>3) / severity (pri&7), timestamp, hostname,
-  program tag, content. Unparseable lines keep the raw payload in
+  program tag, content, all read from one match of the pattern per row
+  (``parse_regex.match_parts``). Unparseable lines keep the raw payload in
   ``content`` with -1 numeric fields (newDefaultParser behavior).
 
 Everything is pure column expressions — the decode composes with any
@@ -23,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from loongcollector_spark.operators.parse_regex import group, match_parts, matched
+
 # <PRI>MMM dd HH:MM:SS hostname [program[pid]: ] message — the tag part is
 # OPTIONAL: the reference's rfc3164 parser ends the tag at ':' or ' ' and
 # still extracts pri/timestamp/hostname for tag-less lines
@@ -33,6 +36,7 @@ _RFC3164 = (
     r"(?:([^:\[\s]+)(?:\[(\d+)\])?: )?"
     r"(.*)$"
 )
+_PARTS = "__syslog_parts__"
 
 
 def read_socket_lines(
@@ -57,31 +61,18 @@ def parse_syslog_rfc3164(
     program/pid/content; unmatched lines keep the raw line as content with
     -1 priority/facility/severity (parser.go:44-50 defaults)."""
     src = F.col(source_key)
-    ok = src.rlike(_RFC3164)
-    pri = F.regexp_extract(src, _RFC3164, 1).try_cast("int")
-    out = (
-        df.withColumn("priority", F.when(ok, pri).otherwise(F.lit(-1)))
-        .withColumn(
-            "facility",
-            F.when(ok, F.shiftright(pri, 3)).otherwise(F.lit(-1)),
-        )
-        .withColumn(
-            "severity",
-            F.when(ok, pri.bitwiseAND(F.lit(7))).otherwise(F.lit(-1)),
-        )
-        .withColumn(
-            "syslog_timestamp",
-            F.when(ok, F.regexp_extract(src, _RFC3164, 2)),
-        )
-        .withColumn("hostname", F.when(ok, F.regexp_extract(src, _RFC3164, 3)))
-        .withColumn("program", F.when(ok, F.regexp_extract(src, _RFC3164, 4)))
-        .withColumn(
-            "pid",
-            F.when(ok, F.nullif(F.regexp_extract(src, _RFC3164, 5), F.lit(""))),
-        )
-        .withColumn(
-            source_key,
-            F.when(ok, F.regexp_extract(src, _RFC3164, 6)).otherwise(src),
-        )
-    )
-    return out
+    parts = F.col(_PARTS)
+    ok = matched(parts, 6)
+    pri = group(parts, 1).try_cast("int")
+    fields = {
+        "priority": F.when(ok, pri).otherwise(F.lit(-1)),
+        "facility": F.when(ok, F.shiftright(pri, 3)).otherwise(F.lit(-1)),
+        "severity": F.when(ok, pri.bitwiseAND(F.lit(7))).otherwise(F.lit(-1)),
+        "syslog_timestamp": F.when(ok, group(parts, 2)),
+        "hostname": F.when(ok, group(parts, 3)),
+        "program": F.when(ok, group(parts, 4)),
+        "pid": F.when(ok, F.nullif(group(parts, 5), F.lit(""))),
+        source_key: F.when(ok, group(parts, 6)).otherwise(src),
+    }
+    out = df.withColumn(_PARTS, match_parts(src, _RFC3164, 6, full_match=False))
+    return out.withColumns(fields).drop(_PARTS)

@@ -158,14 +158,15 @@ def _micro_batch_sink(sink: SinkSpec, batch_id: int) -> SinkSpec:
         # Replay-idempotence for iceberg comes from its own snapshot
         # commits, not batch directories.
         return dataclasses.replace(sink, mode="append")
-    if sink.path and sink.format in ("parquet", "json", "csv"):
-        # EXACTLY-ONCE on micro-batch replay: each trigger writes its own
-        # batch=<id> directory with overwrite — a replayed batch id rewrites
-        # the same directory instead of appending duplicates (foreachBatch
-        # may re-deliver the last uncommitted batch after a crash; plain
-        # `append` would double those rows — the reference's analogue is
-        # the RangeCheckpoint commit-after-send replay path,
-        # FlusherSLS.cpp:588-591)
+    if sink.path and sink.format not in ("kafka", "noop", "console", "memory"):
+        # every format write_sink saves at a path, a flusher_file sink's
+        # encoded text too. EXACTLY-ONCE on micro-batch replay: each trigger
+        # writes its own batch=<id> directory with overwrite — a replayed
+        # batch id rewrites the same directory instead of appending
+        # duplicates (foreachBatch may re-deliver the last uncommitted batch
+        # after a crash; plain `append` would double those rows — the
+        # reference's analogue is the RangeCheckpoint commit-after-send
+        # replay path, FlusherSLS.cpp:588-591)
         return dataclasses.replace(
             sink, path=os.path.join(sink.path, f"batch={batch_id}"), mode="overwrite"
         )

@@ -537,3 +537,18 @@ def test_string_unquote_go_error_paths(spark):
         "plain",
         None,
     ]
+
+
+def test_anchor_expand_json_reads_one_parse(spark):
+    """anchor's JSON expansion reads each key from one from_json map of the
+    span: a duplicate key gives its first value, and a key holding '.' is
+    that literal key (get_json_object read "b.c" as the path b -> c)."""
+    df = spark.createDataFrame(
+        [(0, 'pre {"a":1,"a":2,"b.c":3,"b":{"c":4}} post'), (1, "none"), (2, None)],
+        "id int, s string",
+    )
+    out = enrich.anchor(df, "s", "pre ", " post", "span", expand_json=True,
+                        json_keys=["a", "b.c", "zz"])
+    rows = out.orderBy("id").collect()
+    assert [(r["a"], r["b.c"], r["zz"]) for r in rows] == [("1", "3", None)] + [(None,) * 3] * 2
+    assert out.columns == ["id", "s", "span", "a", "b.c", "zz"]

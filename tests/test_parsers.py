@@ -194,6 +194,10 @@ def test_key_value_no_separator_prefix(spark):
                          no_separator_key_prefix="no_separator_key_")
     m = df.first().kv
     assert m["a"] == "1" and m["no_separator_key_2"] == "orphan"
+    # a pair splits at its first separator, whatever comes before it
+    df = parse_key_value(lines_df(spark, "k\n1:v:w\t:x"), "content", "\t", ":",
+                         no_separator_key_prefix="p_")
+    assert df.first().kv == {"k\n1": "v:w", "": "x"}
 
 
 # --- timestamp ---------------------------------------------------------------
@@ -313,7 +317,8 @@ def test_parse_delimiter_quoted_empty_fields(spark):
 
 def test_parse_prometheus_lines(spark):
     # TextParser surface: labels + escapes, +Inf/NaN, explicit timestamp,
-    # comments/blank/garbage dropped, scrape-default timestamp fallback
+    # comments/blank/garbage and unreadable values dropped, scrape-default
+    # timestamp fallback
     from loongcollector_spark.operators.parse_prometheus import parse_prometheus
 
     lines = [
@@ -324,6 +329,7 @@ def test_parse_prometheus_lines(spark):
         '# HELP http_requests_total The total number of HTTP requests.',
         '',
         'not a metric line !!',
+        'no_value notanumber',
     ]
     df = spark.createDataFrame([(l,) for l in lines], "content string")
     out = parse_prometheus(df, "content", default_ts_ms=1700000000000)

@@ -140,6 +140,9 @@ def test_resume_skips_committed(spark, pipeline_result):
     for sink in ("errors", "web", "app", "default"):
         assert res2[sink]["written_buckets"] == 0
         assert res2[sink]["skipped_buckets"] == first[sink]["written_buckets"]
+    # the stage counters are observed even though no bucket was rewritten
+    counters = {c["label.plugin"]: c for c in res2["stage_counters"]}
+    assert counters["flagship.in"]["value.in_events_total"] == 3000
     # data unchanged after no-op resume
     total = sum(
         spark.read.parquet(os.path.join(base, s, "data")).count()

@@ -299,6 +299,27 @@ def test_grok_one_regex_pass_per_pattern(spark):
     assert plan.count("regexp_replace(") == 2
 
 
+def test_capture_patterns_matched_once(spark):
+    """Syslog, Prometheus, Apsara and both SPL parse-regexp forms read every
+    capture group of their pattern from one match: one regexp_replace in
+    the plan and no regexp_extract."""
+    from loongcollector_spark.operators.parse_apsara import parse_apsara
+    from loongcollector_spark.operators.parse_prometheus import parse_prometheus
+    from loongcollector_spark.operators.spl import compile_spl
+    from loongcollector_spark.sources.network import parse_syslog_rfc3164
+
+    df = spark.createDataFrame([("x",)], "content string")
+    for out in (
+        parse_syslog_rfc3164(df),
+        parse_prometheus(df, "content"),
+        parse_apsara(df, "content"),
+        compile_spl(df, r"* | parse-regexp content, '(\w+) (\w+)' as a, b"),
+        compile_spl(df, r"* | parse-regexp content, '(?<a>\w+)\h(?<b>\w+)'"),
+    ):
+        plan = _plan(out)
+        assert plan.count("regexp_replace(") == 1 and "regexp_extract(" not in plan, plan
+
+
 def _hashing_nodes(plan: str) -> set[str]:
     """Distinct plan nodes that evaluate xxhash64. A cached subtree is
     printed once per scan of it, with identical text, so the set counts

@@ -14,7 +14,9 @@ from pyspark.sql import functions as F
 
 from loongcollector_spark.functions import text as tx
 from loongcollector_spark.operators import aggregate as agg_ops
+from loongcollector_spark.operators import parse_apsara, parse_prometheus
 from loongcollector_spark.operators.parse_kv import parse_key_value
+from loongcollector_spark.sources import network
 
 SETTINGS = dict(
     max_examples=10,
@@ -480,15 +482,23 @@ def test_required_literal_known_values():
 
 
 # (pattern, number of groups): an empty last group, a group that does not
-# take part in a match, a dot that stops at "\n", an anchor inside the pattern
+# take part in a match, a dot that stops at "\n", an anchor inside the pattern,
+# and the package's own multi-group patterns (syslog, Prometheus, Apsara)
 _EXTRACT_PATTERNS = [
     (r"(a*)=(\d*)", 2),
     (r"(a+)(?:=(\d+)|-(x))", 3),
     (r"(.+)=(.*)", 2),
     (r"^(a*)1", 1),
+    (network._RFC3164, 6),
+    (parse_prometheus._LINE_RE, 4),
+    (parse_apsara.APSARA_RE, 3),
 ]
 _EXTRACT_FIXED = ["a=1\n", "a=\x00", "\x00a=1", "a=1\nb", "aa=", "a-x", "=", "", None, "\n", "a1\n",
-                  "a\x00\x00=1\x00", "\x01a=\x00\x01", "a=\x00\x00\x01\x00", "\x00\x01\x00"]
+                  "a\x00\x00=1\x00", "\x01a=\x00\x01", "a=\x00\x00\x01\x00", "\x00\x01\x00",
+                  "<34>Oct 11 22:14:15 host su[12]: 'su root' failed", "<13>Feb  5 17:32:18 host msg\n",
+                  "<9>Feb  5 17:32:18 host prog: a\x00b", 'up{job="a",le="+Inf"} 1 1700000000000',
+                  "node_load1 0.5", 'm{a="x\\"y"}  NaN ', "[2024-01-01 12:00:00.123456]\t[INFO]\tk:v",
+                  "[2024-01-01 12:00:00]\tno level\na:b", "[2024-01-01 12:00:00][WARN]\x00[ERROR]"]
 
 
 @settings(**SETTINGS)

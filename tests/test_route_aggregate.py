@@ -219,6 +219,21 @@ def test_observed_counters(spark):
     assert got["in_events_total"] == 100 and got["in_size_bytes"] == 100
 
 
+def test_metrics_export_raises_observation_failure():
+    """export() lets an observation's failure reach the caller instead of
+    reporting the stage with no counters. A stub stands in for the
+    Observation: the real one's ``get`` blocks until its job has run."""
+
+    class FailingObservation:
+        @property
+        def get(self):
+            raise RuntimeError("observed job failed")
+
+    reg = MetricsRegistry(observations={"stage1": FailingObservation()})
+    with pytest.raises(RuntimeError, match="observed job failed"):
+        reg.export()
+
+
 # --- lineage / checkpoint resume ----------------------------------------------
 
 def test_checkpointed_write_resume(spark, tmp_path):

@@ -154,12 +154,12 @@ def test_spl_parse_json_explicit_keys_no_discovery(spark, monkeypatch):
     """'parse-json col as k1, k2' must build the plan with ZERO discovery
     jobs — the 100 TB path (keys are part of the plan, like the reference's
     per-config field lists)."""
-    from loongcollector_spark.operators import spl as spl_mod
+    from loongcollector_spark.operators import parse_kv
 
     def boom(*a, **k):  # pragma: no cover - should never run
         raise AssertionError("discovery job ran despite explicit keys")
 
-    monkeypatch.setattr(spl_mod, "_discover_json_keys", boom)
+    monkeypatch.setattr(parse_kv, "discover_keys", boom)
     df = lines(spark, '{"a1":"x","c":"d"}', '{"a1":"y"}')
     out = compile_spl(df, "* | parse-json content as a1, missing")
     rows = out.orderBy("id").collect()
@@ -332,6 +332,40 @@ def test_spl_parse_regexp_named_groups(spark):
     # a pattern with no named groups and no `as` is a config error
     with pytest.raises(SplError):
         compile_spl(df, r"* | parse-regexp content, '(\S+)'")
+    # the JVM reads the pattern, so Java-only syntax (\h) works; every key
+    # is '' when the pattern does not match and NULL for a NULL input
+    df = lines(spark, "abc 12", "zz", None)
+    out = compile_spl(df, r"* | parse-regexp content, '(?<w>\w+)\h(?<n>\d+)'")
+    assert [(r.w, r.n) for r in out.orderBy("id").collect()] == [
+        ("abc", "12"), ("", ""), (None, None)]
+    # an invalid pattern, or more keys than groups, fails the compile
+    with pytest.raises(SplError):
+        compile_spl(df, r"* | parse-regexp content, '(?<w>\w+'")
+    with pytest.raises(SplError):
+        compile_spl(df, r"* | parse-regexp content, '(\w+)' as a, b")
+
+
+def test_spl_parse_json_reads_one_map(spark):
+    """parse-json reads every key from one from_json map, as the parse_json
+    processor does: a duplicate key gives its first value (get_json_object
+    gives the same), and a key holding '.' is read as that literal key, not
+    as a JSON path. ``-path`` walks members only."""
+    from pyspark.sql import functions as F
+
+    from loongcollector_spark.operators.parse_json import parse_json
+
+    df = lines(spark, '{"a":1,"a":2}', '{"d.e":5,"d":{"e":6}}')
+    assert df.select(F.get_json_object("content", "$.a")).first()[0] == "1"
+    for out in (compile_spl(df, "* | parse-json content"),
+                compile_spl(df, '* | parse-json content as a, "d.e"'),
+                parse_json(df, "content", keys=["a", "d.e"])):
+        rows = out.orderBy("id").collect()
+        assert [r["a"] for r in rows] == ["1", None]
+        assert [r["d.e"] for r in rows] == [None, "5"]
+    out = compile_spl(df, "* | parse-json -path='$.d' content as e")
+    assert [r.e for r in out.orderBy("id").collect()] == [None, "6"]
+    with pytest.raises(SplError):
+        compile_spl(df, "* | parse-json -path='$.d[0]' content")
 
 
 def test_spl_parse_json_prefix_and_path(spark):

@@ -672,6 +672,42 @@ def test_streaming_unterminated_final_line_flushes(spark, tmp_path):
     assert got == ["done-line", "pending-line-no-newline"]
 
 
+def test_streaming_flusher_file_keeps_every_micro_batch(spark, tmp_path):
+    """A native flusher_file sink (jsonline text) writes each micro-batch to
+    its own batch=<id> directory, like the parquet/json/csv sinks: with one
+    file per trigger, both batches' lines survive."""
+    import glob
+    import json
+    import os
+
+    import yaml
+
+    from loongcollector_spark.streaming.pipeline import run_native_streaming
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    (logs / "a.log").write_text("a1\na2")
+    (logs / "b.log").write_text("b1")
+    os.utime(logs / "b.log", (os.path.getmtime(logs / "a.log") + 5,) * 2)
+    out = str(tmp_path / "out")
+    cfg = tmp_path / "file.yaml"
+    cfg.write_text(yaml.safe_dump({
+        "inputs": [{"Type": "input_file", "FilePaths": [str(logs / "*.log")]}],
+        "flushers": [{"Type": "flusher_file", "FileName": out}],
+    }))
+    run_native_streaming(
+        spark, str(cfg), str(logs), str(tmp_path / "fanout"),
+        str(tmp_path / "ckpt"), max_files_per_trigger=1, timeout_sec=120.0,
+    )
+    lines = [
+        json.loads(line)["content"]
+        for f in glob.glob(os.path.join(out, "**", "part-*"), recursive=True)
+        for line in open(f).read().splitlines()
+    ]
+    assert sorted(lines) == ["a1", "a2", "b1"]
+    assert len(glob.glob(os.path.join(out, "batch=*"))) == 2
+
+
 def test_streaming_container_stdio_flag_merge_across_runs(spark, tmp_path):
     """Mirrors test/e2e/test_cases/input_container_stdio_multiline on the
     tail source: an unmodified input_container_stdio YAML runs as a
