@@ -9,11 +9,17 @@ Scale design:
   add a document-frequency cut (drop shingles appearing in >df_max docs) —
   exposed as ``max_shingle_df``.
 - MinHash+LSH: k permutations via (a*x+b) mod p over the gram hashes —
-  pure column expressions; bands are arrays sliced from the signature; the
-  candidate join is an equi-join on (band_idx, band_hash) — exactly the
-  banding scheme from the MMDS literature.
+  pure column expressions; band b's key is the multi-column xxhash64 over
+  the signature's longs b*r .. b*r+r-1 — the banding scheme from the MMDS
+  literature, keyed on one long per band.
 - SimHash: 64-bit signature from the same gram hashes; near-dup = small
-  Hamming distance within LSH buckets on signature prefixes.
+  Hamming distance within LSH buckets on signature blocks.
+
+One bucket join: every LSH finder (MinHash self-join and cross-corpus,
+SimHash, and ``similarity.embedding_near_dups``) emits (id, rot, bucket)
+rows with a long or int bucket and finds its candidates with
+``_bucket_join``; each keeps its own score and filter (est_jaccard,
+hamming, cos_sim).
 
 One gram hash: MinHash and SimHash both hash grams with
 ``hashed_shingles`` (Spark's xxhash64 per word, then xxhash64 over the n
@@ -24,8 +30,6 @@ every caller runs is the path the oracles verify.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -47,12 +51,16 @@ def _track_persist(df: DataFrame) -> DataFrame:
 
 def release_persisted() -> None:
     """Unpersist every intermediate cached by dedup plan builders. Call after
-    the returned DataFrame has been materialized (collect/write)."""
+    the returned DataFrame has been materialized (collect/write). Every
+    tracked frame is unpersisted; the first failure is then raised."""
+    first: Exception | None = None
     while _PERSISTED:
         try:
             _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
+        except Exception as e:
+            first = first or e
+    if first is not None:
+        raise first
 
 
 def shingles(col: Column, n: int = 3) -> Column:
@@ -255,32 +263,59 @@ def minhash_signatures(
     )
 
 
-def _banded_keys(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """(id, band, bh) band-bucket keys from an (id, sig) signature relation —
-    bh is xxhash64 of the band's slice rendered as a string, so two docs land
-    in the same bucket iff the slice values are equal."""
-    return sig.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.array_join(
-                            F.transform(
-                                F.slice(
-                                    F.col("sig"), b * rows_per_band + 1, rows_per_band
-                                ),
-                                lambda v: v.cast("string"),
-                            ),
-                            ",",
-                        )
-                    ).alias("bh"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
+def _band_keys(sig: DataFrame, bands: int, rpb: int) -> DataFrame:
+    """(id, rot, bucket) band keys from an (id, sig) signature relation:
+    ``bucket`` is the multi-column xxhash64 over band ``rot``'s ``rpb``
+    longs, so two docs share a key iff their band slices are equal (a 64-bit
+    hash collision aside). One primitive long per band, no string built."""
+    keys = [F.xxhash64(*[F.col("sig")[b * rpb + i] for i in range(rpb)]) for b in range(bands)]
+    return sig.select("id", F.posexplode(F.array(*keys)).alias("rot", "bucket"))
+
+
+def _bucket_join(a: DataFrame, b: DataFrame | None = None) -> DataFrame:
+    """The candidate join of every LSH finder: rows of the (id, rot, bucket,
+    ...) relations ``a`` and ``b`` that share a (rot, bucket) key, the sides
+    aliased ``a`` and ``b``. Without ``b`` it is a self-join of ``a`` that
+    keeps ``a.id < b.id``; a given ``b`` is the small side and broadcasts.
+    Each finder scores and filters the rows itself."""
+    if b is None:
+        return a.alias("a").join(a.alias("b"), ["rot", "bucket"]).filter("a.id < b.id")
+    return a.alias("a").join(F.broadcast(b.alias("b")), ["rot", "bucket"])
+
+
+def _minhash_pairs(
+    grams_a: DataFrame, grams_b: DataFrame | None, num_hashes: int, bands: int, seed: int
+) -> DataFrame:
+    """(id_a, id_b, est_jaccard) for every pair of docs sharing a band:
+    within ``grams_a``, or between ``grams_a`` and the small ``grams_b``.
+
+    The signatures are persisted: the band keys and the join-back both read
+    them. The bucket join moves only (id, rot, bucket) rows; the k-long
+    signatures are joined back onto the deduped pair set afterwards, so at
+    b bands the join payload is 2 signatures per doc, not b."""
+    if num_hashes % bands:
+        raise ValueError("num_hashes must be divisible by bands")
+    rpb = num_hashes // bands
+    sig_a = _track_persist(minhash_signatures(grams_a, num_hashes, seed))
+    if grams_b is None:
+        sig_b, keys_b = sig_a, None
+    else:
+        sig_b = _track_persist(minhash_signatures(grams_b, num_hashes, seed))
+        keys_b = _band_keys(sig_b, bands, rpb)
+    pairs = (
+        _bucket_join(_band_keys(sig_a, bands, rpb), keys_b)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    side_b = sig_b.select(F.col("id").alias("id_b"), F.col("sig").alias("sb"))
+    est = F.size(
+        F.filter(F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y), lambda eq: eq)
+    ) / F.lit(float(num_hashes))
+    return (
+        pairs.join(sig_a.select(F.col("id").alias("id_a"), F.col("sig").alias("sa")), "id_a")
+        .join(side_b if grams_b is None else F.broadcast(side_b), "id_b")
+        .select("id_a", "id_b", est.cast("double").alias("est_jaccard"))
+    )
 
 
 def minhash_lsh_from_gram_hashes(
@@ -288,41 +323,7 @@ def minhash_lsh_from_gram_hashes(
 ) -> DataFrame:
     """Banding over a precomputed (id, gh:array<long>) gram-hash relation —
     the shared core of the text and token-native MinHash paths."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    rows_per_band = num_hashes // bands
-    # The banded self-join references this relation on BOTH sides; without a
-    # persist the whole shingle chain executes twice. The signature table
-    # is tiny (id + k longs per doc) — at cluster scale this is the relation
-    # you'd checkpoint to a table before the candidate join anyway.
-    # (explode already drops docs with zero grams, matching the old
-    # sig-is-null filter.)
-    sig = _track_persist(minhash_signatures(grams, num_hashes, seed))
-
-    # The band self-join moves only (id, band, bh) triples — the 32-long
-    # signature arrays stay OUT of the bands×docs shuffle and are joined
-    # back onto the (small) deduped pair set afterwards. At b bands this
-    # cuts the join shuffle payload from b × |sig| to 2 × |sig| per doc.
-    banded = _banded_keys(sig, bands, rows_per_band)
-
-    pairs = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bh"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    ) / F.lit(float(num_hashes))
-    return (
-        pairs.join(sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sa")), "id_a")
-        .join(sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sb")), "id_b")
-        .select("id_a", "id_b", est.cast("double").alias("est_jaccard"))
-    )
+    return _minhash_pairs(grams, None, num_hashes, bands, seed)
 
 
 def minhash_cross_candidates(
@@ -342,99 +343,25 @@ def minhash_cross_candidates(
     need (id_col, text_col); returns (corpus_id, bench_id, est_jaccard)
     for every pair sharing at least one signature band.
 
-    Scale shape: the benchmark side is small by definition (test sets are
-    thousands of rows against a 10^12-row corpus), so its banded keys and
-    signatures BROADCAST — the band probe and the bench-signature lookup
-    are broadcast hash joins. The corpus side pays two (id × k longs)
-    exchanges — the signature groupBy's map-side-combined shuffle and the
-    candidate join-back onto the signature relation (AQE turns the latter
-    into a broadcast when the candidate set is small, the common case) —
-    and the text never shuffles. Same signature/banding kernels as the
-    self-join dedup path (minhash_signatures/_banded_keys), so the
+    The benchmark side is small by definition (thousands of rows against a
+    10^12-row corpus), so its band keys and signatures broadcast. The
+    signatures, band keys and estimate are the self-join path's, so the
     estimate is bit-identical to what dedup would report for the pair."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    rpb = num_hashes // bands
-    sig_c = _track_persist(minhash_signatures(
-        _gram_hashes(corpus, text_col, id_col, n), num_hashes, seed
-    ))
-    sig_b = _track_persist(minhash_signatures(
-        _gram_hashes(bench, text_col, id_col, n), num_hashes, seed
-    ))
-    banded_c = _banded_keys(sig_c, bands, rpb)
-    banded_b = _banded_keys(sig_b, bands, rpb)
-    pairs = (
-        banded_c.alias("a")
-        .join(F.broadcast(banded_b.alias("b")), ["band", "bh"])
-        .select(
-            F.col("a.id").alias("corpus_id"), F.col("b.id").alias("bench_id")
-        )
-        .dropDuplicates(["corpus_id", "bench_id"])
+    return _minhash_pairs(
+        _gram_hashes(corpus, text_col, id_col, n),
+        _gram_hashes(bench, text_col, id_col, n),
+        num_hashes, bands, seed,
+    ).select(
+        F.col("id_a").alias("corpus_id"), F.col("id_b").alias("bench_id"), "est_jaccard"
     )
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    ) / F.lit(float(num_hashes))
-    return (
-        pairs.join(
-            sig_c.select(F.col("id").alias("corpus_id"), F.col("sig").alias("sa")),
-            "corpus_id",
-        )
-        .join(
-            F.broadcast(
-                sig_b.select(F.col("id").alias("bench_id"), F.col("sig").alias("sb"))
-            ),
-            "bench_id",
-        )
-        .select("corpus_id", "bench_id", est.cast("double").alias("est_jaccard"))
-    )
-
-
-def simhash_from_hashes(hashes_col: str = "gram_hashes"):
-    """Vectorized SimHash fold: numpy over Arrow batches. Input column is the
-    array<long> of per-gram xxhash64 values (computed JVM-side); output is
-    the 64-bit signature. The bit-unpack + sign-accumulate is pure numpy —
-    no per-row Python."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def fold(hs: pd.Series) -> pd.Series:
-        # Whole-batch formulation (flatten + reduceat, like the JVM-side
-        # minhash_signatures but for the 64-bit simhash bit matrix):
-        # flatten every row's gram hashes, unpack to an (N, 64) bit matrix,
-        # np.add.reduceat per row segment, then sign-compare + pack. One
-        # numpy pipeline per Arrow batch — no per-row Python loop.
-        lengths = hs.map(lambda v: 0 if v is None else len(v)).to_numpy(dtype=np.int64)
-        out = np.zeros(len(hs), dtype=np.int64)
-        if lengths.sum() == 0:
-            return pd.Series(out)
-        flat = np.concatenate(
-            [np.asarray(v, dtype=np.int64) for v in hs if v is not None and len(v)]
-        ).view(np.uint64)
-        shifts = np.arange(64, dtype=np.uint64)
-        # uint8 keeps the (N, 64) matrix at 64 B/gram; reduceat accumulates
-        # into int64 so segments longer than 255 grams don't wrap
-        bits = ((flat[:, None] >> shifts) & np.uint64(1)).astype(np.uint8)
-        starts = np.concatenate([[0], np.cumsum(lengths)[:-1]])[lengths > 0]
-        sums = np.add.reduceat(bits, starts.astype(np.int64), axis=0, dtype=np.int64)
-        nz = lengths[lengths > 0]
-        sig = (sums * 2 > nz[:, None]).astype(np.uint64)
-        packed = (sig << shifts).sum(axis=1).astype(np.uint64).view(np.int64)
-        out[lengths > 0] = packed
-        return pd.Series(out)
-
-    return fold(hashes_col)
 
 
 def simhash_signatures(grams: DataFrame, hashes_col: str = "gram_hashes") -> DataFrame:
     """(id, sig:long) SimHash signatures, computed entirely JVM-side: explode
     the gram hashes and take a per-bit majority vote as 64 sum-aggregates
     (map-side combine; no Python workers). Bit k of the signature is 1 iff
-    strictly more than half the grams have bit k set — identical to the
-    numpy fold in ``simhash_from_hashes``, including sig=0 for docs with no
-    grams (restored by the left join on bare ids)."""
+    strictly more than half the grams have bit k set; docs with no grams
+    get sig=0 (restored by the left join on bare ids)."""
     exploded = grams.select("id", _explode_hashes(hashes_col).alias("h"))
     bits = [
         F.sum(F.shiftrightunsigned("h", k).bitwiseAND(F.lit(1))).alias(f"_b{k}")
@@ -489,9 +416,7 @@ def simhash_near_dups(
     )
     bucketed = sig.select("id", "sig", F.posexplode(blocks).alias("rot", "bucket"))
     pairs = (
-        bucketed.alias("a")
-        .join(bucketed.alias("b"), ["rot", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
+        _bucket_join(bucketed)
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -519,10 +444,11 @@ def connected_components(
 
     Algorithm: min-label propagation. Labels start as the id; each round
     every node takes the min of its own and its neighbors' labels; stop when
-    a round changes nothing. Each round is one shuffle (edge-label join +
-    groupBy min); rounds needed = component diameter, which for near-dup
-    graphs is tiny (dup sets are near-cliques — 2-3 rounds in practice, the
-    reason plain propagation beats the alternating-star constructions here).
+    no label moves: each round's labels carry ``moved`` (neighbors' min below
+    the label), counted on the checkpointed labels — labels only decrease,
+    so no round joins new labels against old. Each round is one shuffle
+    (edge-label join + groupBy min); rounds needed = component diameter,
+    tiny for near-dup graphs (near-cliques: 2-3 rounds in practice).
     The edge list is persisted across rounds; each round's labels are
     localCheckpoint'ed — iterative joins otherwise nest the previous round's
     plan twice per round and the logical tree grows 2^rounds (a driver OOM
@@ -546,24 +472,17 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
+        moved = F.coalesce(F.col("nbr_label") < F.col("label"), F.lit(False))
+        labels = (
             labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
             .select(
                 "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
+                F.when(moved, F.col("nbr_label")).otherwise(F.col("label")).alias("label"),
+                moved.alias("moved"),
             )
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if labels.filter("moved").count() == 0:
             break
     else:
         raise RuntimeError(

@@ -132,15 +132,16 @@ def embedding_near_dups(
     member over vectors. Random-hyperplane LSH assigns each vector one
     bucket PER ROTATION (rotation r draws its planes from ``seed + r``;
     plane constants are plan-time → pure column expressions); candidate
-    pairs come from a (rotation, bucket) equi-self-join (never all-pairs),
-    then the exact cosine filter keeps pairs >= threshold. Per-rotation
+    pairs come from ``dedup._bucket_join``'s (rot, bucket) equi-self-join
+    (never all-pairs), then the exact cosine filter keeps pairs >=
+    threshold. Per-rotation
     collision probability for angle theta is ``(1 - theta/pi)**n_planes``,
     so recall is ``1 - (1 - p)**n_rotations`` — more rotations buy recall
     linearly in cost, more planes buy speed at recall's expense. Surviving
     pairs are deduped on (id_a, id_b) after the threshold filter. The
     bucketed relation is persisted (both join sides) — call
     dedup.release_persisted() after materializing."""
-    from loongcollector_spark.functions.dedup import _track_persist
+    from loongcollector_spark.functions.dedup import _bucket_join, _track_persist
 
     if n_rotations < 1:
         raise ValueError("n_rotations must be >= 1")
@@ -159,9 +160,7 @@ def embedding_near_dups(
         )
     )
     pairs = (
-        b.alias("a")
-        .join(b.alias("b"), ["rot", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
+        _bucket_join(b)
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),

@@ -547,33 +547,19 @@ def dsir_importance(
     a = float(smoothing)
     ab = a * n_buckets
     # per-bucket per-occurrence term: log p_tgt(b) - log p_raw(b), smoothed,
-    # then densified to a B-slot array indexed by bucket — Spark MapData
-    # lookups are LINEAR scans, so per-gram element_at on a map would cost
-    # O(B) each; the one-row map→array conversion pays that once and the
-    # scoring fold below indexes in O(1). Buckets unseen in any doc (and
-    # therefore never looked up) densify to 0.0 via the coalesce.
-    term_map = (
-        hist.crossJoin(F.broadcast(tot))
-        .select(
+    # then densified to a B-slot array indexed by bucket so the scoring fold
+    # below indexes in O(1). Buckets unseen in any doc (and therefore never
+    # looked up) densify to 0.0.
+    term_map = _densify_counts(
+        hist.crossJoin(F.broadcast(tot)).select(
             "__b__",
             (
                 F.log((F.col("__tgt_c__") + a) / (F.col("__tt__") + ab))
                 - F.log((F.col("__raw__") + a) / (F.col("__rt__") + ab))
-            ).alias("__t__"),
-        )
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("__b__", "__t__"))
-            ).alias("__m__")
-        )
-        .select(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_buckets - 1)),
-                lambda i: F.coalesce(
-                    F.element_at(F.col("__m__"), i.cast("long")), F.lit(0.0)
-                ),
-            ).alias("__terms__")
-        )
+            ).alias("__c__"),
+        ),
+        n_buckets,
+        "__terms__",
     )
     return feat.crossJoin(F.broadcast(term_map)).select(
         F.col(id_col),
@@ -588,7 +574,7 @@ def dsir_importance(
 
 
 def _densify_counts(hist: DataFrame, n_slots: int, out: str) -> DataFrame:
-    """(bucket `__b__`, count `__c__`) histogram → ONE row holding an
+    """(bucket `__b__`, double value `__c__`) histogram → ONE row holding an
     n_slots-long array<double> indexed by bucket (0.0 for unseen buckets).
     Spark MapData lookups are linear scans, so folding per-gram element_at
     over a map would cost O(B) each; this one-row map→array conversion pays
@@ -1009,28 +995,16 @@ def quality_classifier_logodds(
     )
     a = float(smoothing)
     ab = a * n_buckets
-    weights = (
-        hist.crossJoin(F.broadcast(tot))
-        .select(
+    weights = _densify_counts(
+        hist.crossJoin(F.broadcast(tot)).select(
             "__b__",
             (
                 F.log((F.col("__pc__") + a) / (F.col("__pt__") + ab))
                 - F.log((F.col("__nc__") + a) / (F.col("__nt__") + ab))
-            ).alias("__w__"),
-        )
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("__b__", "__w__"))
-            ).alias("__m__")
-        )
-        .select(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_buckets - 1)),
-                lambda i: F.coalesce(
-                    F.element_at(F.col("__m__"), i.cast("long")), F.lit(0.0)
-                ),
-            ).alias("__ws__")
-        )
+            ).alias("__c__"),
+        ),
+        n_buckets,
+        "__ws__",
     )
     # score in its own projection so the fold runs ONCE — Spark does not
     # common-subexpression-eliminate higher-order functions (word_ngrams

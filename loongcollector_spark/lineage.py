@@ -29,38 +29,11 @@ BUCKET = "__bucket__"
 MANIFEST_DIR = "_lineage"
 
 
-def _manifest_path(base: str, bucket: int) -> str:
-    return os.path.join(base, MANIFEST_DIR, f"bucket-{bucket:05d}.json")
-
-
-class _LocalManifestIO:
-    """Manifest I/O on the driver's local filesystem (schemeless paths)."""
-
-    def __init__(self, base: str):
-        self.mdir = os.path.join(base, MANIFEST_DIR)
-
-    def list_names(self) -> list[str]:
-        if not os.path.isdir(self.mdir):
-            return []
-        return sorted(os.listdir(self.mdir))
-
-    def read(self, name: str) -> dict:
-        with open(os.path.join(self.mdir, name)) as fh:
-            return json.load(fh)
-
-    def write_atomic(self, name: str, payload: dict) -> None:
-        os.makedirs(self.mdir, exist_ok=True)
-        final = os.path.join(self.mdir, name)
-        tmp = final + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, final)  # atomic commit marker
-
-
-class _HadoopManifestIO:
-    """Manifest I/O through the Hadoop FileSystem API — the sink's
-    filesystem (HDFS / S3A / file:), NOT the driver's local disk. On a real
-    cluster the driver's local FS is not where the data lands; local-path
+class _ManifestIO:
+    """Manifest I/O through the Hadoop FileSystem API, for every path: the
+    manifests land on the filesystem Spark writes the data to (HDFS / S3A /
+    file:), and a schemeless path resolves against ``fs.defaultFS`` for both.
+    On a real cluster that is not the driver's local disk; local-disk
     manifests would make checkpoint-resume silently rewrite everything.
     Commit = write tmp + rename (atomic on HDFS; on S3A rename is
     copy+delete — still safe here because a half-renamed manifest is simply
@@ -103,16 +76,8 @@ class _HadoopManifestIO:
         self.fs.rename(tmp, final)
 
 
-def _manifest_io(base: str, spark: SparkSession | None):
-    if "://" in base or base.startswith("file:/"):
-        if spark is None:
-            raise ValueError(f"a SparkSession is required for URI path {base!r}")
-        return _HadoopManifestIO(spark, base)
-    return _LocalManifestIO(base)
-
-
-def committed_buckets(base: str, spark: SparkSession | None = None) -> set[int]:
-    io = _manifest_io(base, spark)
+def committed_buckets(base: str, spark: SparkSession) -> set[int]:
+    io = _ManifestIO(spark, base)
     out = set()
     for f in io.list_names():
         if f.startswith("bucket-") and f.endswith(".json"):
@@ -163,7 +128,7 @@ def checkpointed_write(
             .save(os.path.join(base, "data"))
         )
 
-    io = _manifest_io(base, spark)
+    io = _ManifestIO(spark, base)
     rows = 0
     for b, stats in sorted(pending.items()):
         stats = {k: (int(v) if v is not None else None) for k, v in stats.items()}
@@ -227,6 +192,6 @@ def verify_sink(
     }
 
 
-def read_manifests(base: str, spark: SparkSession | None = None) -> list[dict[str, Any]]:
-    io = _manifest_io(base, spark)
+def read_manifests(base: str, spark: SparkSession) -> list[dict[str, Any]]:
+    io = _ManifestIO(spark, base)
     return [io.read(f) for f in io.list_names() if f.endswith(".json")]

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.enrich import METRIC_LABEL_SEP
-from loongcollector_spark.operators.parse_regex import group, match_parts, matched
+from loongcollector_spark.operators.parse_regex import group, keep_where, match_parts, matched
 
 _LINE_RE = (
     r"^\s*([a-zA-Z_:][a-zA-Z0-9_:]*)\s*(?:\{(.*)\})?\s*(\S+)(?:\s+(-?\d+))?\s*$"
@@ -81,11 +81,9 @@ def parse_prometheus(
     ts_nano = F.when(raw_ts != "", raw_ts.cast("long") * 1_000_000).otherwise(
         F.lit(default_ts_ms * 1_000_000 if default_ts_ms is not None else None).cast("long")
     )
+    staged = df.withColumn(_PARTS, match_parts(F.col(source_key), _LINE_RE, 4, full_match=False))
     out = (
-        df.withColumn(_PARTS, match_parts(F.col(source_key), _LINE_RE, 4, full_match=False))
-        # keeps the matched lines with a readable value; a Filter would be
-        # pushed below the match and run the pattern a second time
-        .withColumn(_PARTS, F.explode(F.when(ok, F.array(parts))))
+        keep_where(staged, _PARTS, ok)  # the matched lines with a readable value
         .withColumn("__name__", name)
         .withColumn("labels_map", F.map_from_arrays(keys, vals))
         .withColumn("__labels__", render_labels(F.col("labels_map")))

@@ -419,8 +419,7 @@ def token_minhash_lsh(
     windows (token_gram_hashes), signatures and banding reuse the text
     engine's machinery (dedup.minhash_lsh_from_gram_hashes). Returns
     (id_a, id_b, est_jaccard). Compared to detok-then-shingle, this skips
-    string materialization entirely — the only non-JVM step is the one
-    numpy signature UDF over Arrow batches."""
+    string materialization entirely, and every step runs in the JVM."""
     from loongcollector_spark.functions.dedup import minhash_lsh_from_gram_hashes
 
     df = df.repartition(

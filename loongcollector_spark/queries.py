@@ -1793,8 +1793,10 @@ def _minhash_sig_sql(gh: str, num_hashes: int, seed: int) -> str:
 
 
 def _minhash_band_cte(sig_cte: str, rpb: int, bands: int) -> str:
-    """Band-key CTE body over a (doc_id, sig) CTE — slice rendered as a
-    string, matching Spark's xxhash64-of-joined-slice equivalence classes."""
+    """Band-key CTE body over a (doc_id, sig) CTE: ``bh`` is band
+    ``band``'s slice as text, so equal keys mean equal slices. Spark keys
+    the band on the multi-column xxhash64 over the slice's longs, a proxy
+    for the same slice equality."""
     return (
         f"SELECT doc_id, sig, band,\n"
         f"             array_to_string(sig[band*{rpb}+1 : band*{rpb}+{rpb}], ',') AS bh\n"
@@ -1806,9 +1808,9 @@ def _minhash_oracle_sql(n: int = 3, num_hashes: int = 32, bands: int = 8, seed: 
     """Full DuckDB replay of minhash_lsh_candidates: the hashed_shingles
     gram hashes (XXH64 in SQL), the (a*x+b) mod 2^31-1 permutations as
     plain integer arithmetic (the exact coefficients come from
-    dedup.minhash_coeffs), bands as list slices, and the band bucket key as
-    the slice rendered as a string (Spark joins on xxhash64 of that string
-    — same equivalence classes)."""
+    dedup.minhash_coeffs), bands as list slices, and band membership as
+    slice equality (Spark joins on the multi-column xxhash64 over the
+    slice's longs, which stands in for slice equality)."""
     rpb = num_hashes // bands
     return f"""
     WITH {_hashed_shingle_ctes(n)},

@@ -320,6 +320,27 @@ def test_capture_patterns_matched_once(spark):
         assert plan.count("regexp_replace(") == 1 and "regexp_extract(" not in plan, plan
 
 
+def test_discarding_options_match_once(spark):
+    """With options that erase failed rows, parse_regex and parse_apsara
+    still run their pattern once per row: the rows are dropped above the
+    projection that matches, not by a Filter pushed below it."""
+    from loongcollector_spark.operators.parse_apsara import parse_apsara
+    from loongcollector_spark.operators.parse_common import ParserOptions
+    from loongcollector_spark.operators.parse_regex import parse_regex
+
+    df = spark.createDataFrame(
+        [("a b",), ("[2024-01-01 00:00:00]\t[INFO]\tk:v",), ("-",)], "content string"
+    )
+    opts = ParserOptions(keep_source_on_fail=False)
+    assert opts.should_erase_on_fail()
+    regex = parse_regex(df, "content", r"(\w) (\w)", ["x", "y"], opts)
+    apsara = parse_apsara(df, "content", options=opts)
+    for out in (regex, apsara):
+        assert _plan(out).count("regexp_replace(") == 1, _plan(out)
+    assert [(r.x, r.y) for r in regex.collect()] == [("a", "b")]
+    assert [r.fields for r in apsara.collect()] == [{"k": "v"}]
+
+
 def _hashing_nodes(plan: str) -> set[str]:
     """Distinct plan nodes that evaluate xxhash64. A cached subtree is
     printed once per scan of it, with identical text, so the set counts

@@ -7,6 +7,8 @@ shrinks over the batch contents, not the job count."""
 
 from __future__ import annotations
 
+import itertools
+
 import hypothesis.strategies as st
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -605,3 +607,29 @@ def test_streaming_multiline_equals_batch(spark, tmp_path, files):
     stream = run_merge_streams(spark, tmp_path, batches, merges)
     for key, want in batch.items():
         assert stream[key] == sorted(want, key=lambda r: (r[0], r[1])), key
+
+
+@settings(**SETTINGS)
+@given(st.data())
+def test_minhash_band_key_iff_equal_slices(spark, data):
+    """Two signatures share a MinHash (rot, bucket) band key iff their band
+    slices are equal. Values come from a small range (slices also collide
+    by chance) or the whole long range, and equal slices are planted by
+    copying bands from earlier signatures."""
+    from loongcollector_spark.functions.dedup import _band_keys
+
+    bands, rpb = data.draw(st.integers(1, 4)), data.draw(st.integers(1, 4))
+    value = st.one_of(st.integers(0, 2), st.integers(-(1 << 63), (1 << 63) - 1))
+    k = bands * rpb
+    sigs = data.draw(st.lists(st.lists(value, min_size=k, max_size=k), min_size=2, max_size=8))
+    for i in range(1, len(sigs)):
+        for b in data.draw(st.lists(st.integers(0, bands - 1), max_size=bands)):
+            j = data.draw(st.integers(0, i - 1))
+            sigs[i][b * rpb:(b + 1) * rpb] = sigs[j][b * rpb:(b + 1) * rpb]
+    df = spark.createDataFrame(list(enumerate(sigs)), "id long, sig array<long>")
+    key = {(r.id, r.rot): r.bucket for r in _band_keys(df, bands, rpb).collect()}
+    assert len(key) == len(sigs) * bands
+    for i, j in itertools.combinations(range(len(sigs)), 2):
+        for b in range(bands):
+            same = sigs[i][b * rpb:(b + 1) * rpb] == sigs[j][b * rpb:(b + 1) * rpb]
+            assert (key[i, b] == key[j, b]) == same, (b, sigs[i], sigs[j])

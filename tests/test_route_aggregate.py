@@ -260,7 +260,7 @@ def test_checkpointed_write_resume(spark, tmp_path):
     back = spark.read.parquet(os.path.join(base, "data"))
     assert back.count() == 200  # no dups, no missing
     assert back.select("doc_id").distinct().count() == 200
-    manifests = lineage.read_manifests(base)
+    manifests = lineage.read_manifests(base, spark)
     assert len(manifests) == 4 and sum(m["rows"] for m in manifests) == 200
     runs = {m["run_id"] for m in manifests}
     assert runs == {"r1", "r2"}

@@ -355,7 +355,9 @@ def test_simhash_multirot_pigeonhole_recall(spark):
     """n_rotations=4 x prefix_bits=16 covers all 64 signature bits, so by
     pigeonhole every pair within max_hamming=3 collides in >=1 block:
     the multi-rotation result must EQUAL the exact hamming<=3 pair set
-    (recall 1.0), while a single rotation may miss pairs."""
+    (recall 1.0), while a single rotation may miss pairs. The exact set is
+    computed from simhash_signatures, which the dedup_simhash oracles
+    verify."""
     from loongcollector_spark.sources.tables import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -363,7 +365,7 @@ def test_simhash_multirot_pigeonhole_recall(spark):
         F.col("doc_id").alias("id"),
         dedup.hashed_shingles(F.col("text"), 2).alias("gh"),
     )
-    sigs = grams.select("id", dedup.simhash_from_hashes("gh").alias("sig")).collect()
+    sigs = dedup.simhash_signatures(grams, "gh").collect()
     sig = {r.id: r.sig & 0xFFFFFFFFFFFFFFFF for r in sigs}
     ids = sorted(sig)
     exact = {
@@ -486,6 +488,28 @@ def test_connected_components_and_keepers(spark):
     assert got[4] == (4, True)  # singleton keeps itself
     assert got[9] == (7, False) and got[7] == (7, True)
     assert sum(1 for c, k in got.values() if k) == 5  # 3 clusters + 2 singletons
+
+
+def test_release_persisted_unpersists_all_then_raises():
+    """A failing unpersist does not stop the others, and its error reaches
+    the caller once every tracked frame is released."""
+    released = []
+
+    class Frame:
+        def __init__(self, fails):
+            self.fails = fails
+
+        def unpersist(self):
+            released.append(self)
+            if self.fails:
+                raise RuntimeError("unpersist failed")
+
+    frames = [Frame(False), Frame(True), Frame(False)]
+    dedup._PERSISTED.extend(frames)
+    with pytest.raises(RuntimeError, match="unpersist failed"):
+        dedup.release_persisted()
+    assert dedup._PERSISTED == []
+    assert sorted(map(id, released)) == sorted(map(id, frames))
 
 
 def test_connected_components_long_chain_converges(spark):
