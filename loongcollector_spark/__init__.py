@@ -19,9 +19,11 @@ Package layout (SURVEY.md §7):
   functions/   scalar + training-data functions (dedup, similarity, text)
   sources/     scan helpers + deterministic synthetic generators
   sinks/       per-sink writers (parquet/json/noop) with batching knobs
-  plans/       explain/inspection helpers
   streaming/   structured-streaming variants of the stateful operators
-  pipeline.py  config -> composed DataFrame graph ("CollectionPipeline::Init")
+  config.py    YAML/JSON pipeline configs -> PipelineSpec
+  pipeline.py  PipelineSpec -> composed DataFrame graph ("CollectionPipeline::Init")
+  queries.py   query registry: every operator paired with its DuckDB SQL oracle
+  session.py   SparkSession factory with the engine's defaults
   metrics.py   self-monitoring counters (MetricConstants.h names)
   lineage.py   per-partition lineage manifests + checkpoint-resume writer
 """

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from loongcollector_spark.functions.text import ngram_window, word_ngrams, words
+
 # Mersenne prime 2^61-1 for the universal-hash permutations
 _MERSENNE = (1 << 61) - 1
 
@@ -64,18 +66,9 @@ def release_persisted() -> None:
 
 
 def shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles (distinct) as an array<string>.
-
-    Same arrays_zip-of-shifted-slices shape as hashed_shingles below (and
-    for the same reason): slicing ``ws`` inside a transform lambda would
-    recompute the whole split per gram — O(words²) per doc."""
-    ws = F.filter(F.split(F.lower(col), r"\s+"), lambda w: w != "")
-    sz = F.size(ws)
-    zipped = F.arrays_zip(*[F.slice(ws, 1 + k, sz - (n - 1)) for k in range(n)])
-    grams = F.transform(
-        zipped, lambda s: F.concat_ws(" ", *[s[str(k)] for k in range(n)])
-    )
-    return F.array_distinct(F.when(sz >= n, grams).otherwise(F.array()))
+    """Word n-gram shingles (distinct) of the lowercased text as an
+    array<string>."""
+    return F.array_distinct(word_ngrams(F.lower(col), n))
 
 
 def hashed_shingles(col: Column, n: int = 3) -> Column:
@@ -88,25 +81,11 @@ def hashed_shingles(col: Column, n: int = 3) -> Column:
     runs over primitive longs. It is the one gram hash of MinHash and
     SimHash, and the one their DuckDB oracles replay.
 
-    Shape matters: the n-gram window is built by arrays_zip of n SHIFTED
-    SLICES of the word-hash array, so ``wh`` appears a constant 2n+1 times
-    per ROW (n slices, their n lengths, the size test). Spark evaluates
-    every copy (no subexpression elimination over lambdas), so the words
-    are hashed 2n+1 times; a word-hash column staged in its own projection
-    ran 3.3x faster (100k docs, 4 vCPUs). The tempting per-position form
-    (transform over an index sequence with F.get(wh, i+k)) embeds ``wh`` in
-    the lambda body, and Spark does not common-subexpression-eliminate
-    inside higher-order functions — the word-hash array is recomputed per
-    element access, O(words²) per doc (measured 44s vs 2.5s on 200k
-    docs)."""
-    ws = F.filter(F.split(F.lower(col), r"\s+"), lambda w: w != "")
-    wh = F.transform(ws, lambda w: F.xxhash64(w))
-    sz = F.size(wh)
-    zipped = F.arrays_zip(*[F.slice(wh, 1 + k, sz - (n - 1)) for k in range(n)])
-    grams = F.transform(
-        zipped, lambda s: F.xxhash64(*[s[str(k)] for k in range(n)])
-    )
-    return F.array_distinct(F.when(sz >= n, grams).otherwise(F.array()))
+    The window over the word-hash array is ``text.ngram_window``, which
+    evaluates that array 2n times per row; a word-hash column staged in its
+    own projection ran 3.3x faster (100k docs, 4 vCPUs)."""
+    wh = F.transform(words(F.lower(col)), lambda w: F.xxhash64(w))
+    return F.array_distinct(ngram_window(n, lambda g: F.xxhash64(*g), wh))
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -224,10 +203,12 @@ def _explode_hashes(col: str) -> Column:
     """explode of a gram-hash array column, hashing each gram once.
     Exploding a bare column makes Spark infer a ``size(col) > 0`` filter
     and push it below the projection that computes the array, where it
-    re-evaluates the whole hashing expression. ``coalesce(col, [])`` is not
-    a bare column, so no filter is inferred; explode drops empty and NULL
-    arrays either way."""
-    return F.explode(F.coalesce(F.col(col), F.array().cast("array<long>")))
+    re-evaluates the whole hashing expression. ``concat(col)`` is the same
+    array but not a bare column, so no filter is inferred; explode drops
+    empty and NULL arrays either way. (``coalesce(col, [])`` is not enough:
+    the optimizer reduces it to the bare column when ``col`` cannot be
+    NULL, as the ``text.ngram_window`` arrays cannot.)"""
+    return F.explode(F.concat(F.col(col)))
 
 
 def minhash_signatures(

@@ -1,14 +1,20 @@
-"""Text analysis for training-data pipelines: language-ID, quality scoring,
-token counting, document fingerprinting.
+"""Text functions for training-data pipelines.
 
-All pure JVM expressions (split/filter/aggregate on arrays) — they fuse into
-the scan stage, so at 100TB these cost one pass over the text column with
-full predicate pushdown upstream.
+Per-document columns: whitespace ``words`` and the one n-gram window over
+them (``ngram_window``), language-ID, quality and Gopher repetition scores,
+fingerprints, URL canonicalization, PII counts and redaction. These are
+JVM array expressions that fuse into the scan stage: no UDF, no shuffle.
+
+Corpus-level curation passes built on them: the domain blocklist, the
+hashed-bucket models (DSIR importance, the quality classifier and the
+LM-perplexity split share one bucket histogram and its densified lookup
+table), C4 span dedup, RefinedWeb line correction and corpus top n-grams.
+Each one's docstring states which exchanges it runs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -32,18 +38,41 @@ def words(col: Column) -> Column:
     return F.filter(F.split(col, r"\s+"), lambda w: w != "")
 
 
+def ngram_window(
+    n: int, gram: Callable[[list[Column]], Column] | None, arr: Column
+) -> Column:
+    """The n-gram window: ``gram`` maps the n consecutive elements of each
+    window (a list of n Columns) to one Column, and the result is the array
+    of those, in window order. It is ``[]`` when ``arr`` is NULL or shorter
+    than n. ``gram=None`` keeps each window as the struct of its n elements
+    (fields "0" .. "n-1"), which spares a transform over every window.
+
+    Shape matters. The window is arrays_zip of n SHIFTED SLICES of ``arr``,
+    so ``arr`` appears a constant 2n times per ROW (n slices and their n
+    lengths; once when n == 1) and never inside a lambda body. The
+    per-index form (transform over an index sequence with slice(arr, i+1,
+    n) or get(arr, i+k) in the lambda) embeds ``arr`` in the lambda body,
+    and Spark does not common-subexpression-eliminate inside higher-order
+    functions: the whole array expression (say, a split of the text) is
+    recomputed per gram, O(len²) per row (44 s against 2.5 s on 200k docs).
+    Outside lambdas Spark still evaluates every copy, so an expensive
+    ``arr`` is computed 2n times per row."""
+    width = F.greatest(F.size(arr) - (n - 1), F.lit(0))
+    parts = [arr if n == 1 else F.slice(arr, 1 + k, width) for k in range(n)]
+    windows = F.arrays_zip(*[p.alias(str(k)) for k, p in enumerate(parts)])
+    if gram is not None:
+        windows = F.transform(windows, lambda s: gram([s[str(k)] for k in range(n)]))
+    return F.coalesce(windows, F.array())
+
+
+def _joined(g: list[Column]) -> Column:
+    """A word window's words joined by single spaces; a unigram is its one
+    word (``concat_ws`` would copy it)."""
+    return g[0] if len(g) == 1 else F.concat_ws(" ", *g)
+
+
 def token_count(col: Column) -> Column:
     return F.size(words(col))
-
-
-def bpe_ish_token_count(col: Column) -> Column:
-    """BPE-ish proxy: count word pieces + punctuation via regex splits —
-    a deterministic stand-in for a real tokenizer's token count."""
-    pieces = F.filter(
-        F.split(col, r"(?=[\s\p{Punct}])|(?<=[\s\p{Punct}])"),
-        lambda w: F.trim(w) != "",
-    )
-    return F.size(pieces)
 
 
 def stopword_ratio(col: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
@@ -100,11 +129,6 @@ def fingerprint(col: Column) -> Column:
     # would otherwise normalize differently from its space-edged twin
     normalized = F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
     return F.md5(normalized)
-
-
-def content_hash(col: Column) -> Column:
-    """64-bit content hash for digests and shard keys."""
-    return F.xxhash64(col)
 
 
 def html_strip(col: Column) -> Column:
@@ -299,22 +323,8 @@ def dup_line_char_frac(col: Column) -> Column:
 
 def word_ngrams(col: Column, n: int = 2) -> Column:
     """Space-joined word n-grams of the whitespace tokenization (array of
-    strings; empty when the doc has < n words).
-
-    Shape matters (same lesson as dedup.hashed_shingles): the n-gram window
-    is arrays_zip of n SHIFTED SLICES of the word array, so ``ws`` appears
-    exactly n+1 times per ROW. The per-index form (transform over a
-    sequence with slice(ws, i+1, n) in the lambda) embeds ``ws`` in the
-    lambda body, and Spark does not common-subexpression-eliminate inside
-    higher-order functions — the whole split is recomputed per gram,
-    O(words²) per doc."""
-    ws = words(col)
-    sz = F.size(ws)
-    zipped = F.arrays_zip(*[F.slice(ws, 1 + k, sz - (n - 1)) for k in range(n)])
-    grams = F.transform(
-        zipped, lambda s: F.concat_ws(" ", *[s[str(k)] for k in range(n)])
-    )
-    return F.when(sz >= n, grams).otherwise(F.array().cast("array<string>"))
+    strings; empty when the doc has < n words)."""
+    return ngram_window(n, _joined, words(col))
 
 
 def top_ngram_mass(col: Column, n: int = 2) -> Column:
@@ -335,27 +345,15 @@ def top_ngram_mass(col: Column, n: int = 2) -> Column:
     Counts — and therefore the max(count*len) result — are identical to
     grouping by the gram string barring a same-doc 64-bit collision
     (p ~ G²/2⁶⁵ per doc)."""
-    ws = words(col)
-    wh = F.transform(ws, lambda w: F.xxhash64(w))
-    lw = F.transform(ws, lambda w: F.length(w))
-    sz = F.size(ws)
-    width = sz - (n - 1)
-    # arrays_zip of n shifted slices: ws/wh/lw referenced n times per ROW —
-    # never inside a lambda body, where Spark recomputes them per element
-    # (see dedup.hashed_shingles)
-    zipped = F.arrays_zip(
-        *[F.slice(wh, 1 + k, width) for k in range(n)],
-        *[F.slice(lw, 1 + k, width) for k in range(n)],
-    )
-    gram_structs = F.transform(
-        zipped,
-        lambda s: F.struct(
-            F.xxhash64(*[s[str(k)] for k in range(n)]).alias("h"),
-            (sum(s[str(n + k)] for k in range(n)) + F.lit(n - 1)).alias("len"),
+    # each window hashes and measures its own words: one array (the split)
+    # in the window instead of a word-hash and a word-length array
+    gram_structs = ngram_window(
+        n,
+        lambda g: F.struct(
+            F.xxhash64(*[F.xxhash64(w) for w in g]).alias("h"),
+            (sum(F.length(w) for w in g) + F.lit(n - 1)).alias("len"),
         ),
-    )
-    gram_structs = F.when(sz >= n, gram_structs).otherwise(
-        F.array().cast("array<struct<h:bigint,len:int>>")
+        words(col),
     )
     # equal hashes sort adjacent; the fold carries (prev hash, current run
     # mass, best run mass) — first element and run breaks hit the otherwise
@@ -466,27 +464,10 @@ def hashed_ngram_buckets(
     the hashed feature space of DSIR (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling")."""
     ws = words(col)
-    sz = F.size(ws)
-
-    def _b(g: Column) -> Column:
-        return _hash_bucket(g, n_buckets)
-
-    # ws appears a CONSTANT number of times per row (transform arg + shifted
-    # slices) — never inside a lambda body, where Spark would recompute the
-    # whole split per gram (O(words²)/doc; see word_ngrams docstring)
-    def _ngram_part(n: int) -> Column:
-        # NB: a one-arg lambda only — pyspark materializes every lambda
-        # parameter (including defaults) as a higher-order-function variable
-        zipped = F.arrays_zip(
-            *[F.slice(ws, 1 + k, sz - (n - 1)) for k in range(n)]
-        )
-        grams = F.transform(
-            zipped,
-            lambda s: _b(F.concat_ws(" ", *[s[str(k)] for k in range(n)])),
-        )
-        return F.when(sz >= n, grams).otherwise(F.array().cast("array<long>"))
-
-    parts = [F.transform(ws, _b) if n == 1 else _ngram_part(n) for n in ns]
+    parts = [
+        ngram_window(n, lambda g: _hash_bucket(_joined(g), n_buckets), ws)
+        for n in ns
+    ]
     return F.concat(*parts) if len(parts) > 1 else parts[0]
 
 
@@ -507,69 +488,93 @@ def dsir_importance(
     on both distributions. Returns (id_col, n_grams, dsir_weight); docs
     with zero grams drop out (no features, no weight).
 
-    Scale shape: the ONLY shuffle is the B-row bucket histogram (explode →
-    groupBy(bucket) — hash-agg on ≤B keys per task, so the map-side combine
-    reduces the exchange to B×tasks rows regardless of corpus size). The
-    per-bucket log-ratio table folds into a single map<bucket,term> row
-    (map_from_entries over collect_list — B entries; keep B in the DSIR
-    paper's 10⁴-10⁵ range, it rides the broadcast) that crossJoins back
-    onto the persisted (doc, grams) relation, and each doc's weight is an
-    F.aggregate fold over its own gram array — fully map-side, no
-    (doc,bucket) exchange at all. No driver collect — totals ride a
-    crossJoin of the 1-row aggregate."""
+    Scale shape: the only shuffle is the B-row bucket histogram, and the
+    weight is a per-doc fold against a broadcast B-slot table
+    (`_bucket_logratio_sums`, shared with `quality_classifier_logodds`)."""
+    scored = _bucket_logratio_sums(
+        df, text_col, id_col, target, n_buckets, ns, smoothing,
+        lambda n, f: n,
+    )
+    return scored.select(id_col, "n_grams", F.col("__sum__").alias("dsir_weight"))
+
+
+def _bucket_hist(feat: DataFrame, buckets: str, flag: str) -> DataFrame:
+    """The bucket histogram of the hashed-bucket models: one row per bucket
+    (``__b__``) with its occurrence count ``__n__`` and the count on rows
+    whose boolean ``flag`` is true (``__f__``; NULL counts as false).
+    explode → groupBy(bucket) is hash-aggregated map-side onto at most B
+    keys per task, so B×tasks rows cross the shuffle whatever the corpus
+    size."""
+    return (
+        feat.select(flag, F.explode(buckets).alias("__b__"))
+        .groupBy("__b__")
+        .agg(
+            F.count(F.lit(1)).alias("__n__"),
+            F.sum(F.when(F.col(flag), F.lit(1)).otherwise(F.lit(0))).alias("__f__"),
+        )
+    )
+
+
+def _bucket_logratio_sums(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    flag: Column,
+    n_buckets: int,
+    ns: tuple[int, ...],
+    smoothing: float,
+    reference: Callable[[Column, Column], Column],
+) -> DataFrame:
+    """The hashed-bucket model of `dsir_importance` and
+    `quality_classifier_logodds`: (id_col, n_grams, ``__sum__``) per doc
+    with at least one gram, where ``__sum__`` adds the log ratio
+    ``ln((c_flag(b)+a)/(N_flag+aB)) - ln((c_ref(b)+a)/(N_ref+aB))`` over
+    the doc's gram buckets b (``hashed_ngram_buckets``). ``reference`` maps
+    (all count, flagged count) to the reference distribution's count; it
+    is applied per bucket and to the totals.
+
+    One hash pass over the text is persisted and read by the histogram and
+    the scoring scans. The empty-doc filter reads the cache: placed before
+    the persist, Spark pushes it below the projection and hashes every gram
+    a second time. The only shuffle is `_bucket_hist`; the per-bucket terms
+    densify to one broadcast B-slot array (`_densify_counts`; keep B in
+    DSIR's 10⁴-10⁵ range), and each doc's sum is an F.aggregate fold over
+    its own buckets with O(1) indexing: no (doc, bucket) exchange and no
+    driver collect."""
     from loongcollector_spark.functions.dedup import _track_persist
 
-    # one hash pass over the text, reused by the histogram and scoring scans;
-    # the empty-doc filter reads the cache: placed before the persist, Spark
-    # pushes it below the projection and hashes every gram a second time
     feat = _track_persist(
         df.select(
             F.col(id_col),
-            target.alias("__tgt__"),
-            hashed_ngram_buckets(F.col(text_col), n_buckets, ns).alias(
-                "__bs__"
-            ),
+            flag.alias("__flag__"),
+            hashed_ngram_buckets(F.col(text_col), n_buckets, ns).alias("__bs__"),
         )
     ).filter(F.size("__bs__") > 0)
-    hist = (
-        feat.select("__tgt__", F.explode("__bs__").alias("__b__"))
-        .groupBy("__b__")
-        .agg(
-            F.count(F.lit(1)).alias("__raw__"),
-            F.sum(
-                F.when(F.col("__tgt__"), F.lit(1)).otherwise(F.lit(0))
-            ).alias("__tgt_c__"),
-        )
-    )
-    tot = hist.agg(
-        F.sum("__raw__").alias("__rt__"), F.sum("__tgt_c__").alias("__tt__")
-    )
+    hist = _bucket_hist(feat, "__bs__", "__flag__")
+    tot = hist.agg(F.sum("__n__").alias("__nt__"), F.sum("__f__").alias("__ft__"))
     a = float(smoothing)
     ab = a * n_buckets
-    # per-bucket per-occurrence term: log p_tgt(b) - log p_raw(b), smoothed,
-    # then densified to a B-slot array indexed by bucket so the scoring fold
-    # below indexes in O(1). Buckets unseen in any doc (and therefore never
-    # looked up) densify to 0.0.
-    term_map = _densify_counts(
+
+    def log_p(count: Column, total: Column) -> Column:
+        return F.log((count + a) / (total + ab))
+
+    n, f, nt, ft = (F.col(c) for c in ("__n__", "__f__", "__nt__", "__ft__"))
+    terms = _densify_counts(
         hist.crossJoin(F.broadcast(tot)).select(
             "__b__",
-            (
-                F.log((F.col("__tgt_c__") + a) / (F.col("__tt__") + ab))
-                - F.log((F.col("__raw__") + a) / (F.col("__rt__") + ab))
-            ).alias("__c__"),
+            (log_p(f, ft) - log_p(reference(n, f), reference(nt, ft))).alias("__c__"),
         ),
         n_buckets,
         "__terms__",
     )
-    return feat.crossJoin(F.broadcast(term_map)).select(
+    return feat.crossJoin(F.broadcast(terms)).select(
         F.col(id_col),
         F.size("__bs__").cast("long").alias("n_grams"),
         F.aggregate(
             "__bs__",
             F.lit(0.0),
-            lambda acc, b: acc
-            + F.element_at(F.col("__terms__"), (b + 1).cast("int")),
-        ).alias("dsir_weight"),
+            lambda acc, b: acc + F.element_at(F.col("__terms__"), (b + 1).cast("int")),
+        ).alias("__sum__"),
     )
 
 
@@ -634,35 +639,21 @@ def lm_perplexity_buckets(
     """
     from loongcollector_spark.functions.dedup import _track_persist
 
-    ws = words(F.col(text_col))
-    sz = F.size(ws)
-    # one hash pass per word position, reused by training and scoring scans;
-    # ws appears a constant number of times per row (never inside a lambda
-    # body, where Spark would recompute the split per gram — see
-    # hashed_ngram_buckets)
-    first = F.slice(ws, 1, sz - 1)
-    second = F.slice(ws, 2, sz - 1)
-    zipped = F.arrays_zip(first, second)
+    text = F.col(text_col)
+    # one hash pass per word position, reused by training and scoring scans
     feat = _track_persist(
         df.select(
             F.col(id_col),
             train.alias("__tr__"),
-            F.transform(ws, lambda w: _hash_bucket(w, b_uni)).alias("__u__"),
-            F.transform(
-                zipped,
-                lambda s: _hash_bucket(
-                    F.concat_ws(" ", s["0"], s["1"]), b_big
-                ),
-            ).alias("__g__"),
-        ).filter(sz >= 2)
+            hashed_ngram_buckets(text, b_uni, (1,)).alias("__u__"),
+            hashed_ngram_buckets(text, b_big, (2,)).alias("__g__"),
+        ).filter(F.size(words(text)) >= 2)
     )
+    training = feat.filter(F.col("__tr__"))
 
-    def _hist(arr_col: str) -> DataFrame:
-        return (
-            feat.filter(F.col("__tr__"))
-            .select(F.explode(arr_col).alias("__b__"))
-            .groupBy("__b__")
-            .agg(F.count(F.lit(1)).cast("double").alias("__c__"))
+    def _hist(buckets: str) -> DataFrame:
+        return _bucket_hist(training, buckets, "__tr__").select(
+            "__b__", F.col("__n__").cast("double").alias("__c__")
         )
 
     model = _densify_counts(_hist("__u__"), b_uni, "__uc__").crossJoin(
@@ -950,14 +941,12 @@ def quality_classifier_logodds(
     that is the semantic difference between the two: DSIR reweights a
     sampler, this one makes a binary keep decision).
 
-    Scale shape (same as `dsir_importance`): the only exchange is the
-    B-row bucket histogram (map-side-combined explode→groupBy onto a
-    bounded key space); the log-odds table densifies to ONE broadcast
-    B-slot array, and scoring is a per-row F.aggregate fold with O(1)
-    indexing — no (doc,bucket) shuffle, no per-row Python, no driver
-    collect. Deterministic and externally replayable: xxhash64 buckets, and
-    the arithmetic is ln/div/mean only (DuckDB recomputes the identical score
-    to the ulp in practice; the keep threshold compares the raw double).
+    Scale shape: the bucket model of `dsir_importance`
+    (`_bucket_logratio_sums`) with the negatives as the reference
+    distribution. Deterministic and externally replayable: xxhash64
+    buckets, and the arithmetic is ln/div/mean only (DuckDB recomputes the
+    identical score to the ulp in practice; the keep threshold compares the
+    raw double).
 
     Returns (id_col, n_grams:long, quality_logodds:double, keep:boolean).
 
@@ -966,61 +955,14 @@ def quality_classifier_logodds(
     per-event keep/drop twins; this is the corpus-scale learned version of
     the same gate position in the pipeline (filter stage, pre-router).
     """
-    from loongcollector_spark.functions.dedup import _track_persist
-
-    # empty-doc filter after the persist, as in dsir_importance
-    feat = _track_persist(
-        df.select(
-            F.col(id_col),
-            positive.alias("__pos__"),
-            hashed_ngram_buckets(F.col(text_col), n_buckets, ns).alias(
-                "__bs__"
-            ),
-        )
-    ).filter(F.size("__bs__") > 0)
-    hist = (
-        feat.select("__pos__", F.explode("__bs__").alias("__b__"))
-        .groupBy("__b__")
-        .agg(
-            F.sum(
-                F.when(F.col("__pos__"), F.lit(1)).otherwise(F.lit(0))
-            ).alias("__pc__"),
-            F.sum(
-                F.when(F.col("__pos__"), F.lit(0)).otherwise(F.lit(1))
-            ).alias("__nc__"),
-        )
-    )
-    tot = hist.agg(
-        F.sum("__pc__").alias("__pt__"), F.sum("__nc__").alias("__nt__")
-    )
-    a = float(smoothing)
-    ab = a * n_buckets
-    weights = _densify_counts(
-        hist.crossJoin(F.broadcast(tot)).select(
-            "__b__",
-            (
-                F.log((F.col("__pc__") + a) / (F.col("__pt__") + ab))
-                - F.log((F.col("__nc__") + a) / (F.col("__nt__") + ab))
-            ).alias("__c__"),
-        ),
-        n_buckets,
-        "__ws__",
-    )
-    # score in its own projection so the fold runs ONCE — Spark does not
-    # common-subexpression-eliminate higher-order functions (word_ngrams
-    # docstring), so deriving `keep` from the same select would re-fold
-    scored = feat.crossJoin(F.broadcast(weights)).select(
-        F.col(id_col),
-        F.size("__bs__").cast("long").alias("n_grams"),
-        (
-            F.aggregate(
-                "__bs__",
-                F.lit(0.0),
-                lambda acc, b: acc
-                + F.element_at(F.col("__ws__"), (b + 1).cast("int")),
-            )
-            / F.size("__bs__")
-        ).alias("quality_logodds"),
+    # score in its own projection so the fold runs ONCE: Spark does not
+    # common-subexpression-eliminate higher-order functions, and
+    # CollapseProject keeps the multi-referenced score below `keep`
+    scored = _bucket_logratio_sums(
+        df, text_col, id_col, positive, n_buckets, ns, smoothing,
+        lambda n, f: n - f,
+    ).select(
+        id_col, "n_grams", (F.col("__sum__") / F.col("n_grams")).alias("quality_logodds")
     )
     return scored.withColumn(
         "keep", F.col("quality_logodds") > F.lit(float(threshold))

@@ -21,11 +21,14 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator, Mapping, Sequence
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from loongcollector_spark.functions.text import ngram_window
 
 
 @dataclass(frozen=True)
@@ -116,23 +119,19 @@ def token_gram_hashes(
     round-trip: window i packs its n token ids positionally in base
     2^vocab_bits (exact and collision-free while every id < 2^vocab_bits and
     n*vocab_bits <= 62; ANSI-overflow-safe by construction). Pure JVM
-    (slice + aggregate), fuses into whole-stage codegen. The token analogue
-    of dedup.shingles() for pre-tokenized corpora."""
+    (``text.ngram_window`` + a fold over each window), fuses into
+    whole-stage codegen. The token analogue of dedup.shingles() for
+    pre-tokenized corpora."""
     if n * vocab_bits > 62:
         raise ValueError("n * vocab_bits must be <= 62 to stay in a long")
     base = 1 << vocab_bits
-    idx = F.sequence(F.lit(0), F.greatest(F.size(tokens) - n, F.lit(0)))
-    grams = F.transform(
-        idx,
-        lambda i: F.aggregate(
-            F.slice(tokens, i + 1, n),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc * base + x.cast("long"),
-        ),
-    )
     return F.array_distinct(
-        F.when(F.size(tokens) >= n, grams).otherwise(
-            F.array().cast("array<long>")
+        ngram_window(
+            n,
+            lambda g: reduce(
+                lambda acc, x: acc * base + x.cast("long"), g, F.lit(0).cast("long")
+            ),
+            tokens,
         )
     )
 
@@ -145,23 +144,20 @@ def token_window_hashes(
     'Deduplicating Training Data Makes Language Models Better': repeated
     ≥w-token spans across docs are the unit of substring dedup).
 
-    Pure JVM (slice + aggregate fold, whole-stage codegen), no UDF. Exact
+    Pure JVM (``text.ngram_window`` + a fold over each window), no UDF. Exact
     arithmetic: acc < mod < 2^31 and base ~2^20, so acc*base + t < 2^52 —
     no overflow under ANSI. O(n·w) per row; at w=32+ a production variant
     would carry the O(n) rolling form (subtract-leading-term), but the
     windows stay per-row either way so the cost is scan-side and
     shuffle-free."""
-    idx = F.sequence(F.lit(0), F.greatest(F.size(tokens) - w, F.lit(0)))
-    hashes = F.transform(
-        idx,
-        lambda i: F.aggregate(
-            F.slice(tokens, i + 1, w),
-            F.lit(0).cast("long"),
+    return ngram_window(
+        w,
+        lambda g: reduce(
             lambda acc, x: F.pmod(acc * base + x.cast("long"), F.lit(mod)),
+            g,
+            F.lit(0).cast("long"),
         ),
-    )
-    return F.when(F.size(tokens) >= w, hashes).otherwise(
-        F.array().cast("array<long>")
+        tokens,
     )
 
 
@@ -513,26 +509,19 @@ def token_pair_counts(
     the result is the deterministic head ordered by
     (count DESC, a, b) — the candidate list a merge-selection loop consumes.
 
-    Scale shape: the pair relation is built with pure JVM expressions — two
-    shifted ``slice``s of the token array ``arrays_zip``ped and exploded —
-    so pair extraction fuses into the scan (no UDF, no string render). The
-    groupBy is map-side combined: at most |alphabet|^2 partial rows per
-    task cross the shuffle regardless of corpus size, and ``top_k`` lowers
+    Scale shape: the pair relation is the 2-token ``text.ngram_window``
+    exploded — pure JVM expressions, so pair extraction fuses into the
+    scan (no UDF, no string render). The groupBy is map-side combined: at
+    most |alphabet|^2 partial rows per task cross the shuffle regardless
+    of corpus size, and ``top_k`` lowers
     to TakeOrderedAndProject (per-partition heads, no global sort).
     Counting is a pure count — the reference analogue is the
     content-value-group aggregator (aggregator_content_value_group) with
     the group key being the token bigram."""
-    toks = F.col(tokens_col)
-    n = F.size(toks)
-    # ANSI guard: slice length must be >= 0, so gate the 2-token minimum
-    pairs = F.when(
-        n >= 2,
-        F.arrays_zip(
-            F.slice(toks, 1, n - 1).alias("a"),
-            F.slice(toks, 2, n - 1).alias("b"),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:int,b:int>>"))
-    exploded = df.select(F.explode(pairs).alias("p")).select("p.a", "p.b")
+    pairs = ngram_window(2, None, F.col(tokens_col))
+    exploded = df.select(F.explode(pairs).alias("p")).select(
+        F.col("p.0").alias("a"), F.col("p.1").alias("b")
+    )
     counts = exploded.groupBy("a", "b").agg(
         F.count("*").cast("long").alias("pair_count")
     )

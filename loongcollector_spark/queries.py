@@ -4394,7 +4394,7 @@ def _chunked_docs(docs: DataFrame, span_words: int) -> DataFrame:
     first, so the chunk lambda reads an attribute materialized once per row
     — embedding ``words(text)`` in the lambda body would re-run the full
     split per chunk, the O(words²/W) anti-pattern the repo bans elsewhere
-    (see word_ngrams); CollapseProject keeps multi-referenced non-cheap
+    (see text.ngram_window); CollapseProject keeps multi-referenced non-cheap
     expressions in their own projection, so the two-step select is safe."""
     ws_df = docs.select("doc_id", tx.words(F.col("text")).alias("__ws__"))
     ws = F.col("__ws__")

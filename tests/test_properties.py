@@ -194,6 +194,87 @@ def test_token_gram_hashes_match_python_reference(spark, rows):
             assert list(w) in [list(toks[j:j+3]) for j in range(len(toks)-2)]
 
 
+# --- the n-gram window (text.ngram_window) against pure-Python n-grams --------
+
+_WORD = st.sampled_from(["a", "A", "ab", "aB", "Ab", "c", "xyz"])
+_GAP = st.sampled_from([" ", "  ", "\t", " \n ", "\r\n"])
+_EDGE = st.sampled_from(["", " ", "\t\n"])
+
+
+def _ngrams(seq: list, n: int) -> list[tuple]:
+    return [tuple(seq[i:i + n]) for i in range(len(seq) - n + 1)]
+
+
+def _distinct(xs) -> list:
+    return list(dict.fromkeys(xs))
+
+
+def _horner(window: tuple, base: int, mod: int | None = None) -> int:
+    acc = 0
+    for x in window:
+        acc = acc * base + x
+        if mod is not None:
+            acc %= mod
+    return acc
+
+
+@settings(**SETTINGS)
+@given(st.integers(1, 4), st.data())
+def test_word_windows_match_python_ngrams(spark, n, data):
+    """word_ngrams, shingles and hashed_shingles equal pure-Python n-grams
+    of random word lists (0 to n+3 words, repeats, mixed case) joined by
+    random whitespace runs, with blank or whitespace edges."""
+    from loongcollector_spark.functions import dedup
+    from tests.xxh64_model import xxhash64, xxhash64_longs
+
+    docs = data.draw(st.lists(st.lists(_WORD, max_size=n + 3), min_size=1, max_size=10))
+    texts = []
+    for ws in docs:
+        gaps = data.draw(st.lists(_GAP, min_size=len(ws), max_size=len(ws)))
+        body = "".join(g + w for g, w in zip(gaps, ws)).lstrip()
+        texts.append(data.draw(_EDGE) + body + data.draw(_EDGE))
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    t = F.col("text")
+    for r in df.select(
+        "id",
+        tx.word_ngrams(t, n).alias("w"),
+        dedup.shingles(t, n).alias("s"),
+        dedup.hashed_shingles(t, n).alias("h"),
+    ).collect():
+        ws = docs[r.id]
+        low = _ngrams([w.lower() for w in ws], n)
+        assert r.w == [" ".join(g) for g in _ngrams(ws, n)], (texts[r.id], r.w)
+        assert r.s == _distinct(" ".join(g) for g in low), (texts[r.id], r.s)
+        assert r.h == _distinct(xxhash64_longs(*map(xxhash64, g)) for g in low)
+
+
+@settings(**SETTINGS)
+@given(
+    st.integers(1, 4),
+    st.lists(st.lists(st.integers(0, 15), max_size=7), min_size=1, max_size=10),
+)
+def test_token_windows_match_python_ngrams(spark, n, rows):
+    """token_gram_hashes, token_window_hashes and token_pair_counts equal
+    pure-Python n-grams of random int arrays (repeats, arrays shorter than
+    n)."""
+    from collections import Counter
+
+    from loongcollector_spark.operators import token_ops
+
+    df = spark.createDataFrame(list(enumerate(rows)), "id long, t array<int>")
+    t = F.col("t")
+    for r in df.select(
+        "id",
+        token_ops.token_gram_hashes(t, n, vocab_bits=4).alias("g"),
+        token_ops.token_window_hashes(t, n).alias("w"),
+    ).collect():
+        grams = _ngrams(rows[r.id], n)
+        assert r.g == _distinct(_horner(g, 16) for g in grams), (rows[r.id], r.g)
+        assert r.w == [_horner(g, 1_000_003, (1 << 31) - 1) for g in grams], (rows[r.id], r.w)
+    pairs = {(r.a, r.b): r.pair_count for r in token_ops.token_pair_counts(df, "t").collect()}
+    assert pairs == Counter(p for toks in rows for p in _ngrams(toks, 2))
+
+
 @given(st.lists(st.sampled_from(
     ["where id >= 0", "extend z = id + 1", "project-away z", "limit 5",
      "sort by id desc", "stats count() as n by content"]),

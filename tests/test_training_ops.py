@@ -567,6 +567,47 @@ def test_word_ngrams_edges(spark):
     assert got[3] == ["x y"]
 
 
+# (caller, smallest n of its windows): every n-gram window caller over text
+_TEXT_WINDOWS = {
+    "word_ngrams": (lambda c: tx.word_ngrams(c, 3), 3),
+    "shingles": (lambda c: dedup.shingles(c, 3), 3),
+    "hashed_shingles": (lambda c: dedup.hashed_shingles(c, 3), 3),
+    "hashed_ngram_buckets": (lambda c: tx.hashed_ngram_buckets(c, 64), 1),
+    "hashed_ngram_buckets_23": (lambda c: tx.hashed_ngram_buckets(c, 64, (2, 3)), 2),
+}
+
+
+@pytest.mark.parametrize("caller", sorted(_TEXT_WINDOWS))
+def test_gram_windows_empty_on_null_blank_and_short_text(spark, caller):
+    """Every window caller returns [] (never NULL) for NULL, empty,
+    whitespace-only and fewer-than-n-word text."""
+    fn, n = _TEXT_WINDOWS[caller]
+    texts = [None, "", " \t\n ", " ".join(["Tok"] * (n - 1))]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    got = {r.id: r.g for r in df.select("id", fn(F.col("text")).alias("g")).collect()}
+    assert got == {i: [] for i in range(len(texts))}, got
+
+
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_token_windows_empty_on_null_and_short_arrays(spark, n):
+    """The token-array window callers return [] for NULL, empty and
+    shorter-than-n arrays; at n == 2 the pair counter (a 2-token window)
+    finds no pair in them."""
+    from loongcollector_spark.operators import token_ops
+
+    arrays = [None, [], [7] * (n - 1)]
+    df = spark.createDataFrame(list(enumerate(arrays)), "id long, t array<int>")
+    t = F.col("t")
+    for r in df.select(
+        "id",
+        token_ops.token_gram_hashes(t, n).alias("g"),
+        token_ops.token_window_hashes(t, n).alias("w"),
+    ).collect():
+        assert r.g == [] and r.w == [], r
+    if n == 2:
+        assert token_ops.token_pair_counts(df, "t").count() == 0
+
+
 def test_top_ngram_char_frac(spark):
     df = spark.createDataFrame(
         [(1, "t t t t t t"), (2, "all words here differ fully"), (3, "w")],

@@ -9,6 +9,9 @@ Usage: python tools/check_oracles.py [sf_dir] [name ...]
 hash_match, spark_rows, oracle_rows, err}}) so a full-registry run can be
 committed each round — the driver's own gate records only the first 50
 registry entries, this file signs the rest.
+
+The session takes ``SPARK_GRAFT_CPUS`` cores, every core when it is unset
+(``SPARK_GRAFT_MASTER`` overrides the master; see ``session.get_spark``).
 """
 
 from __future__ import annotations
@@ -54,7 +57,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from loongcollector_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", extra_conf={"spark.sql.mapKeyDedupPolicy": "LAST_WIN"})
+    spark = get_spark(extra_conf={"spark.sql.mapKeyDedupPolicy": "LAST_WIN"})
     con = duckdb.connect()
     for t in ("region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"):
