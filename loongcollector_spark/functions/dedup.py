@@ -123,13 +123,12 @@ def ngram_jaccard_pairs(
     # shingling multiplies row volume ~(words)×: spread the input across the
     # cluster BEFORE the explosion, whatever the scan's file-split count was
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-    sh = df.select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("sh")
-    ).filter(F.size("sh") > 0)
+    sh = df.select(F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("sh"))
     # the inverted index feeds both sides of the pair join, the df-cut, AND
     # the per-doc sizes: persist it so shingling runs exactly once (deriving
-    # sizes from `sh` instead would re-shingle the corpus once per broadcast)
-    inv = _track_persist(sh.select("id", F.explode("sh").alias("g")))
+    # sizes from `sh` instead would re-shingle the corpus once per broadcast);
+    # the explode drops docs without shingles
+    inv = _track_persist(sh.select("id", _explode_hashes("sh").alias("g")))
     # shingles are distinct per doc, so n_sh == exploded row count
     sizes = inv.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     if max_shingle_df:
@@ -200,14 +199,14 @@ def _gram_hashes(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame
 
 
 def _explode_hashes(col: str) -> Column:
-    """explode of a gram-hash array column, hashing each gram once.
-    Exploding a bare column makes Spark infer a ``size(col) > 0`` filter
-    and push it below the projection that computes the array, where it
-    re-evaluates the whole hashing expression. ``concat(col)`` is the same
-    array but not a bare column, so no filter is inferred; explode drops
-    empty and NULL arrays either way. (``coalesce(col, [])`` is not enough:
-    the optimizer reduces it to the bare column when ``col`` cannot be
-    NULL, as the ``text.ngram_window`` arrays cannot.)"""
+    """explode of a computed array column (gram hashes, shingles), computing
+    the array once. Exploding a bare column makes Spark infer a
+    ``size(col) > 0`` filter and push it below the projection that computes
+    the array, where it re-evaluates the whole expression. ``concat(col)``
+    is the same array but not a bare column, so no filter is inferred;
+    explode drops empty and NULL arrays either way. (``coalesce(col, [])``
+    is not enough: the optimizer reduces it to the bare column when ``col``
+    cannot be NULL, as the ``text.ngram_window`` arrays cannot.)"""
     return F.explode(F.concat(F.col(col)))
 
 

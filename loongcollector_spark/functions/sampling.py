@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from loongcollector_spark.operators.parse_common import keep_where, scratch_column
+
 
 def _id_bucket(id_col: Column, buckets: int) -> Column:
     """md5(id) mod buckets — replayable in DuckDB as
@@ -143,23 +145,24 @@ def source_cap_keepers(
             F.lit(float(over * cap)) / F.col("_n_k").cast("double"),
         ).alias("_gate_rate"),
     )
-    prefix60 = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    gated = (
-        df.join(F.broadcast(rates), on=key_col, how="inner")
-        .filter(prefix60 < F.floor(F.col("_gate_rate") * F.lit(float(1 << 60))))
-        .drop("_gate_rate")
+    # md5 is staged once per row and both the gate and the rank read it; a
+    # Filter (or the join condition's inferred not-null test) would be pushed
+    # below the staging and hash every row again
+    md5 = scratch_column(df, "_md5")
+    prefix60 = F.conv(F.substring(F.col(md5), 1, 15), 16, 10).cast("long")
+    joined = df.withColumn(md5, F.md5(F.col(id_col).cast("string"))).join(
+        F.broadcast(rates), on=key_col, how="inner"
     )
+    gated = keep_where(
+        joined, prefix60 < F.floor(F.col("_gate_rate") * F.lit(float(1 << 60)))
+    ).drop("_gate_rate")
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(key_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
-    )
+    w = Window.partitionBy(key_col).orderBy(F.col(md5), F.col(id_col))
     return (
         gated.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= cap)
-        .drop("_rk")
+        .drop("_rk", md5)
     )
 
 

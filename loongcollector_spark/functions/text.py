@@ -640,15 +640,17 @@ def lm_perplexity_buckets(
     from loongcollector_spark.functions.dedup import _track_persist
 
     text = F.col(text_col)
-    # one hash pass per word position, reused by training and scoring scans
+    # one hash pass per word position, reused by training and scoring scans;
+    # docs without a bigram are dropped above the persist (as in
+    # `_bucket_logratio_sums`), not by re-splitting the text below it
     feat = _track_persist(
         df.select(
             F.col(id_col),
             train.alias("__tr__"),
             hashed_ngram_buckets(text, b_uni, (1,)).alias("__u__"),
             hashed_ngram_buckets(text, b_big, (2,)).alias("__g__"),
-        ).filter(F.size(words(text)) >= 2)
-    )
+        )
+    ).filter(F.size("__g__") >= 1)
     training = feat.filter(F.col("__tr__"))
 
     def _hist(buckets: str) -> DataFrame:

@@ -203,6 +203,14 @@ def geo_cidr_lookup(
     dumps are non-overlapping, so a row matches at most one network; pass
     ``longest_prefix=True`` for overlapping custom tables (adds one window
     over a synthetic row id to pick the most specific match)."""
+    return _cidr_join(df, ip_key, cidr_df, cidr_col, longest_prefix).drop("__geo_ip__")
+
+
+def _cidr_join(
+    df: DataFrame, ip_key: str, cidr_df: DataFrame, cidr_col: str, longest_prefix: bool
+) -> DataFrame:
+    """``geo_cidr_lookup``'s join, keeping the parsed address as
+    ``__geo_ip__`` (NULL for an unparseable one)."""
     k = F.split(F.col(cidr_col), "/")[1].cast("int")
     base = ip_to_long(F.split(F.col(cidr_col), "/")[0])
     mask = F.pow(F.lit(2.0), 32 - k).cast("long")
@@ -246,9 +254,7 @@ def geo_cidr_lookup(
         )
     else:
         joined = fact.join(broadcast(nets), cond, "left").drop(nets["__geo_bucket__"])
-    return joined.drop(
-        "__geo_ip__", "__geo_bucket__", "__geo_start__", "__geo_end__", "__geo_prefix__"
-    )
+    return joined.drop("__geo_bucket__", "__geo_start__", "__geo_end__", "__geo_prefix__")
 
 
 def geo_mmdb_lookup(
@@ -317,14 +323,15 @@ def geo_mmdb_lookup(
         )
     else:
         dotted = F.col(ip_key)
-    out = geo_cidr_lookup(df.withColumn(ip_col, dotted), ip_col, nets)
+    out = _cidr_join(df.withColumn(ip_col, dotted), ip_col, nets, "cidr", False)
     if not no_coordinate:
-        parseable = ip_to_long(F.col(ip_col)).isNotNull()
+        # the address the join parsed, not a second parse of it
+        parseable = F.col("__geo_ip__").isNotNull()
         for c in (f"{ip_key}_longitude_", f"{ip_key}_latitude_"):
             out = out.withColumn(
                 c, F.when(parseable, F.coalesce(F.col(c), F.lit("0.00000000")))
             )
-    out = out.drop(ip_col)
+    out = out.drop(ip_col, "__geo_ip__")
     return out.drop(ip_key) if not keep_source else out
 
 
@@ -1162,7 +1169,17 @@ def base64_encode(df: DataFrame, source_key: str, dest_key: str | None = None) -
 
 
 def base64_decode(df: DataFrame, source_key: str, dest_key: str | None = None) -> DataFrame:
-    return df.withColumn(dest_key or source_key, F.unbase64(F.col(source_key)).cast("string"))
+    """processor_base64_decoding: the decoded bytes as a string, NULL for a
+    value that is not base64 (a character outside the alphabet, a length
+    that is not whole, wrong padding) and for NULL. Line breaks are skipped,
+    as Go's ``base64.StdEncoding`` skips carriage returns and line feeds,
+    so a wrapped value decodes whole. One malformed value must not abort the job, as
+    ``unbase64`` does under ANSI for some (``"xxxxx"``) while it decodes
+    others to ``""`` (``"{"``); ``try_to_binary`` gives NULL for both. Bytes
+    that are not UTF-8 read as U+FFFD."""
+    unwrapped = F.translate(F.col(source_key), "\r\n", "")
+    decoded = F.try_to_binary(unwrapped, F.lit("base64"))
+    return df.withColumn(dest_key or source_key, decoded.cast("string"))
 
 
 def encrypt_fields(

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.grok_patterns import GROK_LIBRARY
+from loongcollector_spark.operators.parse_common import keep_where
 from loongcollector_spark.operators.parse_regex import group, match_parts, matched
 
 BUILTIN_PATTERNS: dict[str, str] = dict(GROK_LIBRARY)
@@ -215,7 +216,7 @@ def parse_grok(
         fields[alias] = expr
 
     if not ignore_parse_failure:
-        out = out.filter(any_match)
+        out = keep_where(out, any_match)
     if not keep_source:
         fields[source_key] = F.when(~any_match, src)
     return out.withColumns(fields).drop(*parts)

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.parse_common import ParserOptions, apply_parser_options
-from loongcollector_spark.operators.parse_regex import group, keep_where, match_parts, matched
+from loongcollector_spark.operators.parse_regex import group, match_parts, matched
 
 # one match reads the bracketed time, the first known [LEVEL] after it
 # (an empty group when there is none) and the tail after the time
@@ -70,7 +70,4 @@ def parse_apsara(
     if ordered_pairs_column:
         extracted[ordered_pairs_column] = entries
     out = df.withColumn(_PARTS, match_parts(F.col(source_key), APSARA_RE, 3, full_match=False))
-    ok = matched(parts, 3)
-    if options.should_erase_on_fail():
-        out = keep_where(out, _PARTS, ok)
-    return apply_parser_options(out, source_key, ok, extracted, options).drop(_PARTS)
+    return apply_parser_options(out, source_key, matched(parts, 3), extracted, options).drop(_PARTS)

@@ -5,13 +5,16 @@ The reference gives every parser the same failure matrix via
 
 - on parse FAILURE: keep the raw source value (``KeepingSourceWhenParseFail``),
   optionally copy the raw line to ``__raw_log__`` (``CopingRawLog``), or erase
-  the event entirely (``ShouldEraseEvent``) — every parser is a project+filter.
+  the event entirely (``ShouldEraseEvent``).
 - on parse SUCCESS: optionally keep the source field
   (``KeepingSourceWhenParseSucceed``), optionally renamed.
 
-Columnar mapping: "erase the event" = ``filter``; "remove the source key" on a
-per-row basis = null-out the source column on those rows (fixed schema); the
-``__raw_log__`` copy is a conditional column.
+Columnar mapping: every parser is a project, then a drop above it. The
+project stages the costly parse once (a regex match, a JSON map, a split);
+"erase the event" is ``keep_where`` over a verdict read from the staged
+column, which sits above that projection so the parse runs once per row.
+"Remove the source key" on a per-row basis = null-out the source column on
+those rows (fixed schema); the ``__raw_log__`` copy is a conditional column.
 """
 
 from __future__ import annotations
@@ -22,6 +25,29 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 RAW_LOG_KEY = "__raw_log__"
+
+
+def scratch_column(df: DataFrame, base: str) -> str:
+    """``base``, lengthened until no column of ``df`` has that name, so a
+    temporary column never replaces an input column."""
+    name = base
+    while name in df.columns:
+        name += "_"
+    return name
+
+
+def keep_where(df: DataFrame, ok: Column) -> DataFrame:
+    """``df`` without the rows where ``ok`` is not true (false or NULL).
+
+    ``ok`` is staged by a projection, and the rows are dropped by the explode
+    of a zero- or one-element array above it. A Filter would be pushed below
+    the projections that compute the columns ``ok`` reads, and evaluate the
+    parse behind them a second time; Catalyst does not move a Generate. The
+    exploded array is not a bare column, so no ``size > 0`` filter is
+    inferred below it either."""
+    tmp = scratch_column(df, "__keep__")
+    staged = df.withColumn(tmp, ok)
+    return staged.withColumn(tmp, F.explode(F.when(F.col(tmp), F.array(F.col(tmp))))).drop(tmp)
 
 
 @dataclass(frozen=True)
@@ -50,7 +76,10 @@ def apply_parser_options(
     expression (evaluated only meaningfully when success holds). Every
     column is added in ONE projection, and every expression reads the
     input's columns. A key equal to ``source_key`` takes its extracted value
-    on success, and the source rules below then apply to that value.
+    on success, and the source rules below then apply to that value. Failed
+    rows that the options erase are dropped by ``keep_where`` below that
+    projection, so a ``success`` that reads a staged parse column keeps the
+    parse to one evaluation per row.
     """
     cols: dict[str, Column] = {}
     for name, expr in extracted.items():
@@ -68,7 +97,7 @@ def apply_parser_options(
     out = df
     source = cols.get(source_key, F.col(source_key))
     if options.should_erase_on_fail():
-        out = out.filter(success)
+        out = keep_where(out, success)
     elif not options.keep_source_on_fail:
         # failure rows survive only through __raw_log__; drop raw from source
         source = F.when(success, source)

@@ -16,14 +16,17 @@ merge_by_flag stage. Failure semantics: invalid lines keep their original
 content untouched (``keep_source_on_fail``, the default, line 189) or are
 dropped; ``ignore_stdout``/``ignore_stderr`` drop the matching stream.
 
-Spark-first: both formats are pure column expressions (split / from_json) —
-the decode fuses into the scan under whole-stage codegen.
+Spark-first: both formats are pure column expressions (split / from_json),
+staged once per row; the decode fuses into the scan under whole-stage
+codegen, and dropped rows leave through ``keep_where`` above the staging.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from loongcollector_spark.operators.parse_common import keep_where, scratch_column
 
 TIME_KEY = "_time_"
 SOURCE_KEY = "_source_"
@@ -43,8 +46,12 @@ def parse_container_log(
     keep_source_on_fail: bool = True,
 ) -> DataFrame:
     src = F.col(source_key)
+    # the split / from_json is staged once in a scratch column that the
+    # verdict, the dropped streams and every output field read
+    tmp = scratch_column(df, "__container_parts__")
+    parts = F.col(tmp)
     if fmt == CONTAINERD_TEXT:
-        parts = F.split(src, " ", 3)
+        parsed = F.split(src, " ", 3)
         time_v = F.try_element_at(parts, F.lit(1))
         source_v = F.try_element_at(parts, F.lit(2))
         rest = F.try_element_at(parts, F.lit(3))
@@ -59,52 +66,37 @@ def parse_container_log(
         partial_v = F.coalesce(is_part, F.lit(False))
     elif fmt == DOCKER_JSON:
         parsed = F.from_json(src, "log string, stream string, time string")
-        time_v = parsed["time"]
-        source_v = parsed["stream"]
+        time_v = parts["time"]
+        source_v = parts["stream"]
         ok = (
             src.isNotNull()
-            & parsed.isNotNull()
+            & parts.isNotNull()
             & source_v.isin("stdout", "stderr")
         )
         # docker appends one newline per complete line — strip exactly one
         # (\z = absolute end: Java's $ also matches BEFORE a final newline,
         # which would strip two)
-        content_v = F.regexp_replace(parsed["log"], "\\n\\z", "")
+        content_v = F.regexp_replace(parts["log"], "\\n\\z", "")
         partial_v = F.lit(False)
     else:
         raise ValueError(f"unknown container log format {fmt!r}")
 
-    # materialize the parse verdict BEFORE the content column is replaced:
-    # `ok` references the source column by name, so evaluating it after the
-    # withColumn(CONTENT_KEY, ...) replacement would re-parse the PARSED
-    # value (always failing) and the Ignoring*/KeepingSource filters would
-    # never fire
-    # collision-safe scratch name: an input column literally named __ok__
-    # must survive untouched
-    ok_col = "__ok__"
-    while ok_col in df.columns:
-        ok_col += "_"
-    out = (
-        df.withColumn(ok_col, ok)
-        .withColumn(TIME_KEY, F.when(F.col(ok_col), time_v))
-        .withColumn(SOURCE_KEY, F.when(F.col(ok_col), source_v))
-        .withColumn(
-            PARTIAL_KEY,
-            F.when(F.col(ok_col), partial_v).otherwise(F.lit(False)),
-        )
-        .withColumn(
-            CONTENT_KEY,
-            F.when(F.col(ok_col), content_v).otherwise(
-                src if keep_source_on_fail else F.lit(None)
-            ),
-        )
-    )
+    out = df.withColumn(tmp, parsed)
+    if not keep_source_on_fail or ignore_stdout or ignore_stderr:
+        keep = F.lit(keep_source_on_fail) | ok
+        if ignore_stdout:
+            keep &= ~ok | (source_v != "stdout")
+        if ignore_stderr:
+            keep &= ~ok | (source_v != "stderr")
+        out = keep_where(out, keep)
+    # one projection: every field reads the source column before CONTENT_KEY
+    # replaces it
+    out = out.withColumns({
+        TIME_KEY: F.when(ok, time_v),
+        SOURCE_KEY: F.when(ok, source_v),
+        PARTIAL_KEY: F.when(ok, partial_v).otherwise(F.lit(False)),
+        CONTENT_KEY: F.when(ok, content_v).otherwise(src if keep_source_on_fail else F.lit(None)),
+    })
     if source_key != CONTENT_KEY:
         out = out.drop(source_key)
-    if not keep_source_on_fail:
-        out = out.filter(F.col(ok_col))
-    if ignore_stdout:
-        out = out.filter(~F.col(ok_col) | (F.col(SOURCE_KEY) != "stdout"))
-    if ignore_stderr:
-        out = out.filter(~F.col(ok_col) | (F.col(SOURCE_KEY) != "stderr"))
-    return out.drop(ok_col)
+    return out.drop(tmp)

@@ -32,7 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from loongcollector_spark.operators.enrich import METRIC_LABEL_SEP
-from loongcollector_spark.operators.parse_regex import group, keep_where, match_parts, matched
+from loongcollector_spark.operators.parse_common import keep_where
+from loongcollector_spark.operators.parse_regex import group, match_parts, matched
 
 _LINE_RE = (
     r"^\s*([a-zA-Z_:][a-zA-Z0-9_:]*)\s*(?:\{(.*)\})?\s*(\S+)(?:\s+(-?\d+))?\s*$"
@@ -83,7 +84,7 @@ def parse_prometheus(
     )
     staged = df.withColumn(_PARTS, match_parts(F.col(source_key), _LINE_RE, 4, full_match=False))
     out = (
-        keep_where(staged, _PARTS, ok)  # the matched lines with a readable value
+        keep_where(staged, ok)  # the matched lines with a readable value
         .withColumn("__name__", name)
         .withColumn("labels_map", F.map_from_arrays(keys, vals))
         .withColumn("__labels__", render_labels(F.col("labels_map")))

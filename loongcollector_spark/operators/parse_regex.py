@@ -59,11 +59,10 @@ def parse_regex(
 
     out = df.withColumn(_PARTS, match_parts(F.col(source_key), pattern, len(keys), full_match))
     parts = F.col(_PARTS)
-    ok = matched(parts, len(keys))
-    if options.should_erase_on_fail():
-        out = keep_where(out, _PARTS, ok)
     extracted = {k: group(parts, i + 1) for i, k in enumerate(keys)}
-    return apply_parser_options(out, source_key, ok, extracted, options).drop(_PARTS)
+    return apply_parser_options(
+        out, source_key, matched(parts, len(keys)), extracted, options
+    ).drop(_PARTS)
 
 
 def match_parts(src: Column, pattern: str, n_groups: int, full_match: bool) -> Column:
@@ -105,14 +104,6 @@ def matched(parts: Column, n_groups: int) -> Column:
     """Non-null success predicate of a ``match_parts`` column (``size`` of a
     NULL array is NULL under ANSI)."""
     return F.coalesce(F.size(parts) == n_groups + 1, F.lit(False))
-
-
-def keep_where(df: DataFrame, parts_col: str, ok: Column) -> DataFrame:
-    """``df`` without the rows where ``ok``, a predicate over the staged
-    ``match_parts`` column ``parts_col``, is false. A Filter would be pushed
-    below the projection that stages the column and run the pattern a second
-    time; the explode of a one-element or empty array sits above it."""
-    return df.withColumn(parts_col, F.explode(F.when(ok, F.array(F.col(parts_col)))))
 
 
 def group(parts: Column, i: int) -> Column:

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from loongcollector_spark.operators.parse_common import keep_where
+
 EVENT_TIME = "__event_time__"
 
 _STRPTIME_TO_SPARK = {
@@ -90,9 +92,7 @@ def parse_timestamp(
     if source_timezone:
         ts = F.to_utc_timestamp(ts, source_timezone)
     out = df.withColumn(dest, ts)
-    if not keep_on_fail:
-        out = out.filter(F.col(dest).isNotNull())
-    return out
+    return out if keep_on_fail else keep_where(out, F.col(dest).isNotNull())
 
 
 def reformat_time(

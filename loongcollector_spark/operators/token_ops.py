@@ -19,7 +19,7 @@ the engine is allowed to exploit the token representation.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator, Mapping, Sequence
+from collections.abc import Mapping, Sequence
 from dataclasses import dataclass
 from functools import reduce
 
@@ -75,16 +75,6 @@ def token_subseq_find(
     one-pattern case of :func:`token_subseq_find_multi`."""
     out = token_subseq_find_multi(df, tokens_col, [pattern], dest)
     return out.withColumn(dest, F.get(F.col(dest), 0))
-
-
-def token_rollup(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    n_tok_col: str = "n_tok",
-) -> Column:
-    """Order-insensitive token-payload digest used for token-array equality
-    at scale (SURVEY §7.3 hard part 5): xxhash64 per row, bit_xor folded."""
-    return F.bit_xor(F.xxhash64(F.col(tokens_col).cast("array<int>").cast("string")))
 
 
 def token_exact_dedup(
@@ -421,10 +411,11 @@ def token_minhash_lsh(
     df = df.repartition(
         df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
     )
+    # docs without a gram leave at the signature's explode
     grams = df.select(
         F.col(id_col).alias("id"),
         token_gram_hashes(F.col(tokens_col), n, vocab_bits).alias("gh"),
-    ).filter(F.size("gh") > 0)
+    )
     return minhash_lsh_from_gram_hashes(grams, num_hashes, bands, seed)
 
 

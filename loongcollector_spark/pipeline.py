@@ -8,12 +8,14 @@ spec into a chained DataFrame expression; Catalyst then owns fusion and
 physical planning (the reference fuses by construction; whole-stage codegen
 does it for us).
 
-One pipeline spec = ONE Spark job graph:
+One pipeline spec compiles to one DataFrame graph:
     read → parse stages → enrich/filter stages → route tag → shard-hash
-    repartition → per-sink writes + per-(source,sink) metrics rollup
-with per-stage self-monitoring counters riding the same action
-(metrics.MetricsRegistry) and checkpoint-resumable bucket writes
-(lineage.checkpointed_write).
+    repartition
+which ``run_pipeline`` persists and then runs as several Spark jobs: one
+``routed.count()`` that fills the cache and completes the per-stage
+self-monitoring counters (metrics.MetricsRegistry), then one job per sink
+over the cache (checkpoint-resumable bucket writes through
+lineage.checkpointed_write), then the per-(source, sink) metrics rollup.
 """
 
 from __future__ import annotations

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from loongcollector_spark.functions import bloom, dedup, sampling, similarity, text as tx
 from loongcollector_spark.operators import aggregate as agg_ops
 from loongcollector_spark.operators import enrich, filters
+from loongcollector_spark.operators.parse_common import keep_where
 from loongcollector_spark.operators.parse_kv import parse_key_value
 from loongcollector_spark.operators.route import Condition, Route, route_first_match
 from loongcollector_spark.sources.sql_oracle import hash_long_sql, xxhash64_sql
@@ -135,7 +136,7 @@ def parse_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def parse_json_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
-    return ev.select("event_id", k.alias("k_int")).filter(F.col("k_int") > 50)
+    return keep_where(ev.select("event_id", k.alias("k_int")), F.col("k_int") > 50)
 
 
 @register(

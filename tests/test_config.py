@@ -143,6 +143,12 @@ def test_native_enrich_processor_translations(spark):
 
     out = run("processor_base64_decoding", {"SourceKey": "b64", "NewKey": "dec"})
     assert out.first().dec == '{"k":"v"}'
+    edge = spark.createDataFrame(
+        [(0, "aGVsbG8="), (1, "xxxxx"), (2, "{"), (3, None), (4, "aGVs\r\nbG8=\n")],
+        "id int, b64 string",
+    )
+    out = run("processor_base64_decoding", {"SourceKey": "b64", "NewKey": "dec"}, edge)
+    assert [r.dec for r in out.orderBy("id").collect()] == ["hello", None, None, None, "hello"]
 
     out = run("processor_base64_encoding", {"SourceKey": "content", "NewKey": "enc"})
     assert out.first().enc

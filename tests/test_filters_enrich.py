@@ -187,6 +187,18 @@ def test_md5_base64_roundtrip(spark):
     assert dec.first().plain == "hello"
 
 
+def test_base64_decode_malformed_is_null(spark):
+    """A value that is not base64 decodes to NULL instead of failing the job
+    ("xxxxx" raised under ANSI) or decoding to "" ("{"); line breaks inside a
+    value are skipped."""
+    df = spark.createDataFrame(
+        [(0, "aGVsbG8="), (1, "xxxxx"), (2, "{"), (3, None), (4, "aGVs\r\nbG8=\n")],
+        "id int, b64 string",
+    )
+    out = enrich.base64_decode(df, "b64", "plain").orderBy("id")
+    assert [r.plain for r in out.collect()] == ["hello", None, None, None, "hello"]
+
+
 def test_pack_json(spark):
     df = spark.createDataFrame([(1, "a", "b")], "id int, x string, y string")
     out = enrich.pack_json(df, ["x", "y"], "packed", drop_packed=True)

@@ -10,6 +10,8 @@ surfacing as a 100× slowdown on real data.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -321,31 +323,191 @@ def test_capture_patterns_matched_once(spark):
 
 
 def test_discarding_options_match_once(spark):
-    """With options that erase failed rows, parse_regex and parse_apsara
-    still run their pattern once per row: the rows are dropped above the
-    projection that matches, not by a Filter pushed below it."""
+    """With options that erase failed rows, every parser still evaluates its
+    costly call once, in one plan node: the rows are dropped above the
+    projection that parses, not by a Filter pushed below it. The kept rows
+    are the rows that the same parser, keeping its failures, reports as
+    parsed."""
+    from loongcollector_spark.operators.grok import parse_grok
     from loongcollector_spark.operators.parse_apsara import parse_apsara
     from loongcollector_spark.operators.parse_common import ParserOptions
+    from loongcollector_spark.operators.parse_container import parse_container_log
+    from loongcollector_spark.operators.parse_delimiter import parse_delimiter
+    from loongcollector_spark.operators.parse_json import expand_json, parse_json
     from loongcollector_spark.operators.parse_regex import parse_regex
+    from loongcollector_spark.operators.parse_time import parse_timestamp
 
-    df = spark.createDataFrame(
-        [("a b",), ("[2024-01-01 00:00:00]\t[INFO]\tk:v",), ("-",)], "content string"
-    )
-    opts = ParserOptions(keep_source_on_fail=False)
-    assert opts.should_erase_on_fail()
-    regex = parse_regex(df, "content", r"(\w) (\w)", ["x", "y"], opts)
-    apsara = parse_apsara(df, "content", options=opts)
-    for out in (regex, apsara):
-        assert _plan(out).count("regexp_replace(") == 1, _plan(out)
+    lines = [
+        "a b", "[2024-01-01 00:00:00]\t[INFO]\tk:v", "-", '{"a": "1", "b": {"c": "2"}}',
+        "[1]", "x,y", '"q,1",2', "2024-01-01 00:00:00", "t1 stdout F m", "t2 stderr m", None,
+    ]
+    df = spark.createDataFrame([(s,) for s in lines], "content string")
+
+    def opts(erase):
+        return ParserOptions(keep_source_on_fail=not erase)
+
+    def container(erase):
+        return parse_container_log(df, keep_source_on_fail=not erase, ignore_stderr=erase)
+
+    # (calls evaluated in one node, parser erasing or keeping failures,
+    #  whether a row of the keeping parser was parsed)
+    cases = [
+        (["regexp_replace("], lambda e: parse_regex(df, "content", r"(\w) (\w)", ["x", "y"], opts(e)),
+         lambda r: r.x is not None),
+        (["regexp_replace("], lambda e: parse_apsara(df, "content", options=opts(e)),
+         lambda r: r.fields is not None),
+        (["from_json(", "RLIKE("], lambda e: parse_json(df, "content", ["a"], opts(e), "m"),
+         lambda r: r.m is not None),
+        (["from_json(", "RLIKE("], lambda e: expand_json(df, "content", options=opts(e)),
+         lambda r: r.expanded is not None),
+        (["split("], lambda e: parse_delimiter(df, "content", ",", ["c1", "c2"], options=opts(e)),
+         lambda r: r.c1 is not None),
+        (["split(", "from_csv("],
+         lambda e: parse_delimiter(df, "content", ",", ["c1", "c2"], quote='"', options=opts(e)),
+         lambda r: r.c1 is not None),
+        (["regexp_replace("],
+         lambda e: parse_grok(df, "content", ["%{WORD:w} %{WORD:v}"], ignore_parse_failure=not e),
+         lambda r: r.w is not None),
+        (["gettimestamp("],
+         lambda e: parse_timestamp(df, "content", "%Y-%m-%d %H:%M:%S", keep_on_fail=not e),
+         lambda r: r["__event_time__"] is not None),
+        (["split("], container, lambda r: r._source_ == "stdout"),
+    ]
+    for calls, parser, parsed in cases:
+        erased, kept = parser(True), parser(False)
+        plan = _plan(erased)
+        for call in calls:
+            nodes = _nodes_with(plan, call)
+            assert len(nodes) == 1 and sum(n.count(call) for n in nodes) == 1, (call, plan)
+        want = [r for r in kept.collect() if parsed(r)]
+        assert want and sorted(erased.collect(), key=repr) == sorted(want, key=repr), plan
+    regex = parse_regex(df, "content", r"(\w) (\w)", ["x", "y"], opts(True))
+    apsara = parse_apsara(df, "content", options=opts(True))
     assert [(r.x, r.y) for r in regex.collect()] == [("a", "b")]
     assert [r.fields for r in apsara.collect()] == [{"k": "v"}]
 
 
-def _hashing_nodes(plan: str) -> set[str]:
-    """Distinct plan nodes that evaluate xxhash64. A cached subtree is
-    printed once per scan of it, with identical text, so the set counts
-    each node once."""
-    return {ln.split("+- ", 1)[-1] for ln in plan.split("\n") if "xxhash64(" in ln}
+_PLAN_NODE = re.compile(r"^[ :]*[+:]- ")
+_SCAN_NODE = re.compile(r"^(?:\*\(\d+\) )?(?:FileScan|Scan |InMemoryTableScan|LocalTableScan)")
+
+
+def _plan_nodes(plan: str) -> list[str]:
+    """The nodes of a printed plan, each without its tree drawing. A node
+    whose expressions hold a line break spans several lines."""
+    nodes: list[str] = []
+    for ln in plan.split("\n"):
+        m = _PLAN_NODE.match(ln)
+        if m or not nodes:
+            nodes.append(ln[m.end():] if m else ln)
+        else:
+            nodes[-1] += "\n" + ln
+    return nodes
+
+
+def _nodes_with(plan: str, call: str) -> set[str]:
+    """Distinct plan nodes, scans aside, that evaluate ``call``. A cached
+    subtree is printed once per scan of it, with identical text, so the set
+    counts each node once."""
+    return {n for n in _plan_nodes(plan) if call in n and not _SCAN_NODE.match(n)}
+
+
+_COSTLY_CALL = re.compile(
+    r"\b(?:split|regexp_\w+|from_json|from_csv|get_json_object|xxhash64|md5|RLIKE)\("
+)
+
+# query -> (text that every call it may evaluate in two nodes contains, why)
+_REPEATS_ALLOWED = {
+    "spl_multi_route": (
+        "get_json_object(",
+        "an SPL `where` stays a Filter, so that its conjuncts reach the parquet "
+        "scan; over a column that an earlier `extend` computed, Spark pushes it "
+        "below that projection, which reads the JSON member again on the rows "
+        "that pass",
+    ),
+    "geoip_cidr_join": (
+        "(cidr#",
+        "the join's inferred not-null test on the network bounds is pushed "
+        "below the projection that parses each CIDR: a second parse on the "
+        "small broadcast side, one row per network",
+    ),
+    "geoip_mmdb_enrich": (
+        "(cidr#",
+        "the CIDR parse of geoip_cidr_join's broadcast side, over the "
+        "networks read from the database",
+    ),
+}
+
+
+def _call_text(node: str, start: int) -> str:
+    """The call that starts at ``start`` in ``node``, through its closing
+    parenthesis (an escaped parenthesis in a pattern does not count)."""
+    depth = 0
+    i = start
+    while i < len(node):
+        c = node[i]
+        if c == "\\":
+            i += 2
+            continue
+        if c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+            if depth == 0:
+                return node[start:i + 1]
+        i += 1
+    return node[start:]
+
+
+_FENCE_SPLIT = re.compile(r"split\((.+), \x00, -1\)", re.S)
+
+
+def _guarded_fence(call: str, plan: str) -> bool:
+    """Whether ``call`` is ``match_parts``' split of a value at U+0000, which
+    every node holding it evaluates only on values that hold U+0000: it
+    builds the fence that such a value's groups are split at, and a cascade
+    of patterns over one value (grok) repeats it on those rows alone."""
+    m = _FENCE_SPLIT.fullmatch(call)
+    guard = m and f"CASE WHEN Contains({m.group(1)}, \x00) THEN"
+    return bool(m) and all(guard in n for n in _nodes_with(plan, call))
+
+
+def _repeated_calls(plan: str) -> set[str]:
+    """The costly calls of ``plan`` whose identical text, attribute ids
+    included, two distinct plan nodes evaluate."""
+    calls = {
+        _call_text(node, m.start())
+        for node in _plan_nodes(plan) if not _SCAN_NODE.match(node)
+        for m in _COSTLY_CALL.finditer(node)
+    }
+    return {
+        c for c in calls if len(_nodes_with(plan, c)) > 1 and not _guarded_fence(c, plan)
+    }
+
+
+def test_registry_evaluates_each_costly_call_once(spark):
+    """No registered query evaluates the same split, regexp, JSON or CSV
+    parse, or hash of the same input in two plan nodes: a drop on a computed
+    verdict goes through ``keep_where``, above the projection that computes
+    it, never a Filter that Catalyst pushes below it. The split that builds
+    ``match_parts``' fence runs only on values holding U+0000 and is not
+    counted. Each allowed repeat states why, and must still occur."""
+    from loongcollector_spark.functions import dedup
+    from loongcollector_spark.queries import QUERIES
+
+    flagged, allowed_seen = {}, set()
+    for name, query in QUERIES.items():
+        executed = query.spark(spark, SF)._jdf.queryExecution().executedPlan()
+        plan = executed.treeString(True, False, 2**31 - 1, False, False)
+        dedup.release_persisted()
+        allowed = _REPEATS_ALLOWED.get(name, (None, ""))[0]
+        repeated = _repeated_calls(plan)
+        if allowed and any(allowed in c for c in repeated):
+            allowed_seen.add(name)
+        repeated = {c for c in repeated if not (allowed and allowed in c)}
+        if repeated:
+            flagged[name] = sorted(c[:200] for c in repeated)
+    assert not flagged, flagged
+    assert allowed_seen == set(_REPEATS_ALLOWED)
 
 
 @pytest.mark.parametrize("n_rotations", [1, 4])
@@ -366,7 +528,7 @@ def test_simhash_gram_hashes_once_below_persisted_signature(spark, n_rotations):
     lines = plan.split("\n")
     cached = min(i for i, ln in enumerate(lines) if "InMemoryRelation" in ln)
     assert all(i > cached for i, ln in enumerate(lines) if "xxhash64(" in ln)
-    nodes = _hashing_nodes(plan)
+    nodes = _nodes_with(plan, "xxhash64(")
     assert len(nodes) == 1 and next(iter(nodes)).startswith("Project "), nodes
 
 
@@ -384,7 +546,7 @@ def test_bucket_features_hash_each_gram_once(spark, builder):
     out = getattr(tx, builder)(docs, "text", "doc_id", F.col("lang") == "en")
     plan = _plan(out)
     dedup.release_persisted()
-    nodes = _hashing_nodes(plan)
+    nodes = _nodes_with(plan, "xxhash64(")
     assert len(nodes) == 1 and next(iter(nodes)).startswith("Project "), nodes
 
 
