@@ -1075,35 +1075,60 @@ def _stage_sort(df: DataFrame, rest: str) -> DataFrame:
     return df.orderBy(*cols)
 
 
-def _stage_project_rename(df: DataFrame, rest: str) -> DataFrame:
-    for part in _split_top(rest, ","):
-        new, _, old = part.partition("=")
-        df = df.withColumnRenamed(_unquote_ident(old), _unquote_ident(new))
-    return df
+def _renames(rest: str) -> list[tuple[str, str]]:
+    """The (new, old) name pairs of ``project-rename new=old[, ...]``."""
+    return [
+        (_unquote_ident(new), _unquote_ident(old))
+        for new, _, old in (part.partition("=") for part in _split_top(rest, ","))
+    ]
+
+
+# a string literal, a quoted identifier, or a bare name that is not a field
+_NAME = re.compile(r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|`(?:[^`]|``)*`|(?<![\w.])[A-Za-z_]\w*")
+
+
+def _names_read(expr: str) -> set[str]:
+    """The lowercased names an SPL expression reads (function names and
+    keywords among them, string literals not)."""
+    return {
+        _unquote_ident(m.strip("`")).lower() for m in _NAME.findall(expr) if m[0] != "'"
+    }
 
 
 def _apply_stages(
-    out: DataFrame, stages: list[str], sample_rows: int | None
-) -> DataFrame:
+    out: DataFrame, stages: list[str], sample_rows: int | None, extended: frozenset[str]
+) -> tuple[DataFrame, frozenset[str]]:
+    """``out`` through ``stages``, and the lowercased names of the columns
+    an ``extend`` computed (``extended`` on entry). A ``where`` that reads
+    one drops its rows with ``keep_where``: a Filter would be pushed below
+    the extend's projection and evaluate its expression again on the rows
+    that pass. Every other ``where`` is a Filter, so its conjuncts reach
+    the scan."""
+    from loongcollector_spark.operators.parse_common import keep_where
+
     for stage in stages:
         if not stage:
             continue
         verb, _, rest = stage.partition(" ")
         rest = rest.strip()
         if verb == "where":
-            out = out.filter(F.expr(_translate_expr(rest)))
+            ok = F.expr(_translate_expr(rest))
+            out = keep_where(out, ok) if _names_read(rest) & extended else out.filter(ok)
         elif verb == "extend":
             for part in _split_top(rest, ","):
                 name, _, expr = part.partition("=")
-                out = out.withColumn(
-                    _unquote_ident(name), F.expr(_translate_expr(expr.strip()))
-                )
+                name = _unquote_ident(name)
+                out = out.withColumn(name, F.expr(_translate_expr(expr.strip())))
+                extended |= {name.lower()}
         elif verb == "project":
             out = out.select(*[_unquote_ident(c) for c in _split_top(rest, ",")])
         elif verb == "project-away":
             out = out.drop(*[_unquote_ident(c) for c in _split_top(rest, ",")])
         elif verb == "project-rename":
-            out = _stage_project_rename(out, rest)
+            for new, old in _renames(rest):
+                out = out.withColumnRenamed(old, new)
+                if old.lower() in extended:
+                    extended |= {new.lower()}
         elif verb == "parse-json":
             out = _stage_parse_json(out, rest, sample_rows)
         elif verb == "parse-regexp":
@@ -1120,31 +1145,32 @@ def _apply_stages(
             out = out.limit(int(rest))
         else:
             raise SplError(f"unsupported SPL stage {verb!r}")
-    return out
+    return out, extended
 
 
 def _compile_pipeline(
     df: DataFrame,
     text: str,
-    bindings: dict[str, DataFrame],
+    bindings: dict[str, tuple[DataFrame, frozenset[str]]],
     sample_rows: int | None,
-) -> tuple[DataFrame, str | None]:
+) -> tuple[DataFrame, frozenset[str], str | None]:
     """Compile one ``head | stage | ...`` pipeline. The head names the
     source: ``*`` (or empty) = the processor input, ``$name`` = a prior
-    ``.let`` binding. Returns (result, referenced-binding-name-or-None)."""
+    ``.let`` binding, with the columns its extends computed. Returns
+    (result, its extended columns, referenced-binding-name-or-None)."""
     stages = [s.strip() for s in _split_top(text.strip(), "|")]
     ref = None
     if stages and stages[0].startswith("$"):
         ref = stages[0][1:].strip()
         if ref not in bindings:
             raise SplError(f"undefined SPL dataset ${ref}")
-        base = bindings[ref]
+        base, extended = bindings[ref]
         stages = stages[1:]
     else:
         if stages and stages[0] in ("*", ""):
             stages = stages[1:]
-        base = df
-    return _apply_stages(base, stages, sample_rows), ref
+        base, extended = df, frozenset()
+    return (*_apply_stages(base, stages, sample_rows, extended), ref)
 
 
 def compile_spl(
@@ -1165,7 +1191,7 @@ def compile_spl(
             ".let bindings and $name result branches"
         )
     script = statements[0].strip() if statements else ""
-    out, _ = _compile_pipeline(df, script, {}, sample_rows)
+    out, _, _ = _compile_pipeline(df, script, {}, sample_rows)
     return out
 
 
@@ -1189,17 +1215,17 @@ def compile_spl_multi(
         raise SplError(
             f"spl query too large ({len(script.encode())} > {SPL_QUERY_MAX_SIZE} bytes)"
         )
-    bindings: dict[str, DataFrame] = {}
+    bindings: dict[str, tuple[DataFrame, frozenset[str]]] = {}
     results: list[tuple[str, DataFrame]] = []
     for stmt in (s.strip() for s in _split_top(script.strip(), ";")):
         if not stmt:
             continue
         m = re.match(r"^\.let\s+([A-Za-z_]\w*)\s*=\s*(.*)$", stmt, re.DOTALL)
         if m:
-            bound, _ = _compile_pipeline(df, m.group(2), bindings, sample_rows)
-            bindings[m.group(1)] = bound
+            bound, extended, _ = _compile_pipeline(df, m.group(2), bindings, sample_rows)
+            bindings[m.group(1)] = bound, extended
             continue
-        out, ref = _compile_pipeline(df, stmt, bindings, sample_rows)
+        out, _, ref = _compile_pipeline(df, stmt, bindings, sample_rows)
         name = ref or f"result{len(results)}"
         if any(n == name for n, _ in results):
             name = f"{name}_{len(results)}"

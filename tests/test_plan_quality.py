@@ -417,13 +417,6 @@ _COSTLY_CALL = re.compile(
 
 # query -> (text that every call it may evaluate in two nodes contains, why)
 _REPEATS_ALLOWED = {
-    "spl_multi_route": (
-        "get_json_object(",
-        "an SPL `where` stays a Filter, so that its conjuncts reach the parquet "
-        "scan; over a column that an earlier `extend` computed, Spark pushes it "
-        "below that projection, which reads the JSON member again on the rows "
-        "that pass",
-    ),
     "geoip_cidr_join": (
         "(cidr#",
         "the join's inferred not-null test on the network bounds is pushed "
@@ -508,6 +501,57 @@ def test_registry_evaluates_each_costly_call_once(spark):
             flagged[name] = sorted(c[:200] for c in repeated)
     assert not flagged, flagged
     assert allowed_seen == set(_REPEATS_ALLOWED)
+
+
+def test_spl_where_over_extend_reads_json_once(spark):
+    """spl_multi_route's branches each read the JSON member in one plan
+    node: the `where` over the extended column drops its rows above the
+    extend's projection, and the `where` over a scanned column stays a
+    Filter that reaches the parquet scan. The rows are those of a plain
+    Filter over the extended column."""
+    from pyspark.sql import functions as F
+
+    from loongcollector_spark.operators.spl import compile_spl_multi
+    from loongcollector_spark.sources.tables import load_table
+
+    ev = load_table(spark, SF, "events")
+    branches = dict(compile_spl_multi(
+        ev,
+        """.let src = * | extend kval = cast(json_extract(props, '$.k') as INTEGER);
+           .let hot = $src | where event_type = 'click' and kval >= 50;
+           $hot;
+           .let errors = $src | where event_type = 'error';
+           $errors;""",
+    ))
+    for df in branches.values():
+        plan = _plan(df)
+        assert len(_nodes_with(plan, "get_json_object(")) == 1, plan
+    assert "EqualTo(event_type,error)" in _plan(branches["errors"])
+    kval = F.get_json_object("props", "$.k").cast("int")
+    want = ev.withColumn("kval", kval).filter((F.col("event_type") == "click") & (kval >= 50))
+    got = branches["hot"].collect()
+    assert got and sorted(got) == sorted(want.collect())
+
+
+def test_window_binds_a_computed_input_once(spark):
+    """The n-gram window binds a computed input array once: at n = 3 the
+    executed plans of hashed_shingles and word_ngrams split the text once,
+    where reading it in each of the 2n slices and sizes split it six
+    times. A bare token column is read directly, with no outer
+    transform(array(...))."""
+    from pyspark.sql import functions as F
+
+    from loongcollector_spark.functions import dedup, text as tx
+    from loongcollector_spark.operators.token_ops import token_gram_hashes
+    from loongcollector_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF, "documents")
+    for fn in (dedup.hashed_shingles, tx.word_ngrams):
+        plan = _plan(docs.select(fn(F.col("text"), 3).alias("g")))
+        assert plan.count("split(") == 1, plan
+    toks = docs.select(F.transform(tx.words("text"), lambda w: F.length(w)).alias("tokens"))
+    plan = _plan(toks.select(token_gram_hashes(F.col("tokens"), 3).alias("g")))
+    assert "slice(" in plan and "transform(array(" not in plan, plan
 
 
 @pytest.mark.parametrize("n_rotations", [1, 4])

@@ -275,6 +275,53 @@ def test_token_windows_match_python_ngrams(spark, n, rows):
     assert pairs == Counter(p for toks in rows for p in _ngrams(toks, 2))
 
 
+# --- connected components against a pure-Python union-find ------------------
+
+
+def _union_find(pairs: list[tuple[int, int]]) -> dict[int, int]:
+    """Every node of ``pairs`` -> the least id of its component."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # a root is its set's least id
+    return {x: find(x) for x in parent}
+
+
+@settings(**SETTINGS)
+@given(
+    st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)), max_size=25),
+    st.lists(st.integers(100, 120), max_size=9, unique=True),
+    st.lists(st.integers(2, 5), max_size=3),
+    st.data(),
+)
+def test_connected_components_match_union_find(spark, loose, chain, cliques, data):
+    """connected_components labels every node of a pair set with the least
+    id of its component, as a union-find does, over random pairs (repeats,
+    both orders, self-pairs), a chain whose ids are in random order (one
+    round per hop) and disjoint cliques; an empty pair set has no nodes."""
+    from loongcollector_spark.functions import dedup
+
+    pairs = list(loose) + [(b, a) for a, b in loose[:3]] + list(zip(chain, chain[1:]))
+    base = 200
+    for size in cliques:
+        ids = range(base, base + size)
+        pairs += [(a, b) for a in ids for b in ids if a < b]
+        base += size
+    pairs = data.draw(st.permutations(pairs))
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = dedup.connected_components(df).collect()
+    dedup.release_persisted()
+    assert len(got) == len({r.id for r in got})
+    assert {r.id: r.cluster_id for r in got} == _union_find(pairs), pairs
+
+
 @given(st.lists(st.sampled_from(
     ["where id >= 0", "extend z = id + 1", "project-away z", "limit 5",
      "sort by id desc", "stats count() as n by content"]),

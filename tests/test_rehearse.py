@@ -14,7 +14,7 @@ import rehearse  # noqa: E402
 from loongcollector_spark.queries import QUERIES  # noqa: E402
 
 ENTRY_FIELDS = {"rows_in", "master", "wall_s", "runs_s", "warmup_s", "load_1m", "shuffle_read_mb",
-                "shuffle_write_mb", "tasks_per_stage", "rows_out"}
+                "shuffle_write_mb", "task_run_s", "task_cpu_s", "task_gc_s", "tasks_per_stage", "rows_out"}
 
 
 def test_every_entry_resolves():
@@ -48,6 +48,10 @@ def test_loop_record_schema(spark, tmp_path, family, entry, points):
         assert run["rows_in"] == rows
         assert set(run["wall_s"]) == {"median", "min", "max"}
         assert len(run["runs_s"]) == len(run["load_1m"]) == rehearse.RUNS
+        # every timed run ran tasks on the CPU; GC may take no time
+        for key in ("task_run_s", "task_cpu_s", "task_gc_s"):
+            assert len(run[key]) == rehearse.RUNS and all(t >= 0 for t in run[key]), key
+        assert all(t > 0 for t in run["task_run_s"] + run["task_cpu_s"]), run
         assert run["tasks_per_stage"] and all(t > 0 for t in run["tasks_per_stage"])
         assert run["shuffle_read_mb"] >= 0 and run["shuffle_write_mb"] >= 0
     ratio = rec["ratios"][entry]

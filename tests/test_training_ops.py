@@ -490,6 +490,15 @@ def test_connected_components_and_keepers(spark):
     assert sum(1 for c, k in got.values() if k) == 5  # 3 clusters + 2 singletons
 
 
+def test_keepers_over_no_pairs_keep_every_doc(spark):
+    """With no near-dup pairs every doc is its own cluster and keeper."""
+    docs = spark.createDataFrame([(3,), (1,), (2,)], "doc_id long")
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    got = dedup.dedup_keepers(docs, pairs, "doc_id").collect()
+    dedup.release_persisted()
+    assert sorted(tuple(r) for r in got) == [(1, 1, True), (2, 2, True), (3, 3, True)]
+
+
 def test_release_persisted_unpersists_all_then_raises():
     """A failing unpersist does not stop the others, and its error reaches
     the caller once every tracked frame is released."""

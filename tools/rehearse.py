@@ -11,7 +11,10 @@ two points 4x apart, the first being the base of every ratio:
 
 Sessions are sized from the host by ``perfbench/worker.start_session``.
 Every entry gets one warm-up run and RUNS timed runs; shuffle bytes and
-tasks per stage come from Spark's status store (``perfbench/sparkstats``).
+tasks per stage come from Spark's status store (``perfbench/sparkstats``),
+and so do each run's summed task run, task CPU and JVM GC times (the stage
+data's ``executorRunTime``, ``executorCpuTime`` and ``jvmGcTime``): run
+time that is neither CPU nor GC is time the tasks waited.
 Inputs are generated once per size under ``.bench_state/inputs/``. The
 record, with the facts of the host it was measured on, is merged family by
 family into ``.bench_state/rehearsal.json``; a record from another host is
@@ -36,6 +39,7 @@ sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 import host  # noqa: E402
 import sparkstats  # noqa: E402
 import worker  # noqa: E402
+from py4j.protocol import Py4JJavaError  # noqa: E402
 from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -74,6 +78,23 @@ def _act(out: object) -> int | None:
     return out
 
 
+def _task_times(sc, stages: list[int]) -> dict:
+    """Task run, CPU and GC seconds summed over ``stages`` (their last
+    attempts), from the status store's stage data. A stage evicted past
+    spark.ui.retainedStages is left out, as in ``tasks_per_stage``."""
+    store = sc._jsc.sc().statusStore()
+    run = cpu = gc = 0.0
+    for sid in stages:
+        try:
+            st = store.lastStageAttempt(sid)
+        except Py4JJavaError:
+            continue
+        run += st.executorRunTime() / 1e3
+        cpu += st.executorCpuTime() / 1e9
+        gc += st.jvmGcTime() / 1e3
+    return {"task_run_s": run, "task_cpu_s": cpu, "task_gc_s": gc}
+
+
 def _spark_figures(stats: sparkstats.SparkStats, before: dict) -> dict:
     after = stats.executor_totals()
     stages = sorted({s for e in stats.executions_since_last(with_metrics=False) for s in e["stages"]})
@@ -89,6 +110,7 @@ def _spark_figures(stats: sparkstats.SparkStats, before: dict) -> dict:
         "shuffle_read_mb": (after["shuffle_read_b"] - before["shuffle_read_b"]) / 2**20,
         "shuffle_write_mb": (after["shuffle_write_b"] - before["shuffle_write_b"]) / 2**20,
         "tasks_per_stage": tasks,
+        **_task_times(stats.sc, stages),
     }
 
 
@@ -96,8 +118,9 @@ def measure(spark, job: Callable[[], object]) -> dict:
     """One warm-up run of ``job``, then RUNS timed runs, each followed by
     ``dedup.release_persisted()``. ``job()`` returns a DataFrame (written to
     the noop sink inside the timed window), an output row count, or None.
-    Shuffle figures are the median over the timed runs; tasks per stage and
-    the output rows are the last run's."""
+    Shuffle figures are the median over the timed runs; task run, CPU and
+    GC times are listed per timed run; tasks per stage and the output rows
+    are the last run's."""
     stats = sparkstats.SparkStats(spark)
     t0 = time.perf_counter()
     _act(job())
@@ -121,6 +144,7 @@ def measure(spark, job: Callable[[], object]) -> dict:
         "load_1m": [r["load_1m"] for r in runs],
         "shuffle_read_mb": statistics.median(r["shuffle_read_mb"] for r in runs),
         "shuffle_write_mb": statistics.median(r["shuffle_write_mb"] for r in runs),
+        **{k: [r[k] for r in runs] for k in ("task_run_s", "task_cpu_s", "task_gc_s")},
         "tasks_per_stage": runs[-1]["tasks_per_stage"],
         "rows_out": runs[-1]["rows_out"],
     }
