@@ -437,7 +437,11 @@ def connected_components(
     plan starts at the previous round's labels instead of nesting every
     earlier round (on a multi-node cluster use a reliable checkpoint dir
     instead of localCheckpoint for executor-loss tolerance). Driver work is
-    O(iterations) observations, never row data."""
+    O(iterations) observations, never row data. ``max_iterations`` counts
+    round one, and must be at least 2: a later round is what confirms that
+    round one's labels no longer move."""
+    if max_iterations < 2:
+        raise ValueError(f"connected_components needs max_iterations >= 2, got {max_iterations}")
     a, b = F.col(id_a), F.col(id_b)
     arcs = [(a, b), (b, a), (a, a), (b, b)]
     edges = _track_persist(

@@ -48,32 +48,23 @@ def ngram_window(
     (fields "0" .. "n-1"), which spares a transform over every window.
 
     Shape matters. The window is arrays_zip of n SHIFTED SLICES of ``arr``,
-    so the window reads ``arr`` 2n times (n slices and their n lengths; once
-    when n == 1) and never inside a per-gram lambda. The per-index form
-    (transform over an index sequence with slice(arr, i+1, n) or get(arr,
-    i+k) in the lambda) embeds ``arr`` in the lambda body, and Spark does
-    not common-subexpression-eliminate inside higher-order functions: the
-    whole array expression (say, a split of the text) is recomputed per
-    gram, O(len²) per row (44 s against 2.5 s on 200k docs). Outside
-    lambdas Spark still evaluates every copy, so a computed ``arr`` is
-    bound once, as ``transform(array(arr), a -> window(a))[0]``, and the 2n
-    reads are of the lambda variable: on 20k docs of 100-200 words
-    (local[4], 4 vCPUs) ``hashed_shingles`` at n=3 took 0.9-1.0 s bound
-    against 2.4 s with six evaluations of its word-hash array, and
-    ``word_ngrams`` 1.2-1.4 s against 2.2-2.3 s. A bare column is read
-    directly: reading it is already cheap, and the binding only adds work
-    there."""
-    if n == 1 or _is_column_ref(arr):
+    which reads ``arr`` 2n times (n slices and their n lengths) and never
+    inside a per-gram lambda. The per-index form (transform over an index
+    sequence with slice(arr, i+1, n) or get(arr, i+k) in the lambda) embeds
+    ``arr`` in the lambda body, and Spark does not
+    common-subexpression-eliminate inside higher-order functions: the whole
+    array expression (say, a split of the text) is recomputed per gram,
+    O(len²) per row (44 s against 2.5 s on 200k docs). Outside lambdas
+    Spark still evaluates every copy, so for n > 1 ``arr`` is bound once,
+    as ``transform(array(arr), a -> window(a))[0]``, and the 2n reads are
+    of the lambda variable: on 20k docs of 100-200 words (local[4], 4
+    vCPUs) ``hashed_shingles`` at n=3 took 0.9-1.0 s bound against 2.4 s
+    with six evaluations of its word-hash array, and ``word_ngrams``
+    1.2-1.4 s against 2.2-2.3 s. At n == 1 the window reads ``arr`` once
+    and is not bound."""
+    if n == 1:
         return _window(n, gram, arr)
     return F.transform(F.array(arr), lambda a: _window(n, gram, a))[0]
-
-
-def _is_column_ref(col: Column) -> bool:
-    """Whether ``col`` is a bare column reference, as ``F.col`` builds it
-    (read from the classic Column's JVM node; any other column counts as
-    computed)."""
-    jc = getattr(col, "_jc", None)
-    return jc is not None and jc.node().getClass().getSimpleName() == "UnresolvedAttribute"
 
 
 def _window(n: int, gram: Callable[[list[Column]], Column] | None, arr: Column) -> Column:

@@ -136,7 +136,7 @@ from __future__ import annotations
 import re
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -1095,15 +1095,48 @@ def _names_read(expr: str) -> set[str]:
     }
 
 
+# a string literal, a quoted identifier, a word, or any other character
+_TOKEN = re.compile(r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|`(?:[^`]|``)*`|\w+|\S")
+
+
+def _conjuncts(expr: str) -> list[str]:
+    """The operands of an SPL predicate's top-level ``and``: outside
+    parentheses and CASE ... END, and not the ``and`` of a BETWEEN. A
+    predicate with a top-level ``or`` (which binds looser) is one operand."""
+    bounds, depth, between = [0], 0, 0
+    for m in _TOKEN.finditer(expr):
+        word = m.group().lower()
+        if word in ("(", "case"):
+            depth += 1
+        elif word in (")", "end"):
+            depth -= 1
+        elif depth:
+            continue
+        elif word == "or":
+            return [expr]
+        elif word == "between":
+            between += 1
+        elif word == "and" and between:
+            between -= 1
+        elif word == "and":
+            bounds += m.span()
+    bounds.append(len(expr))
+    return [expr[i:j] for i, j in zip(bounds[::2], bounds[1::2])]
+
+
+def _predicate(conjuncts: list[str]) -> Column:
+    return F.expr(_translate_expr(" and ".join(f"({c})" for c in conjuncts)))
+
+
 def _apply_stages(
     out: DataFrame, stages: list[str], sample_rows: int | None, extended: frozenset[str]
 ) -> tuple[DataFrame, frozenset[str]]:
     """``out`` through ``stages``, and the lowercased names of the columns
-    an ``extend`` computed (``extended`` on entry). A ``where`` that reads
-    one drops its rows with ``keep_where``: a Filter would be pushed below
-    the extend's projection and evaluate its expression again on the rows
-    that pass. Every other ``where`` is a Filter, so its conjuncts reach
-    the scan."""
+    an ``extend`` computed (``extended`` on entry). A ``where``'s top-level
+    conjuncts that read none of them are one Filter, which reaches the
+    scan. The rest drop their rows with ``keep_where``, above the extend's
+    projection: a Filter would be pushed below it and evaluate the
+    extend's expression again on the rows that pass."""
     from loongcollector_spark.operators.parse_common import keep_where
 
     for stage in stages:
@@ -1112,8 +1145,13 @@ def _apply_stages(
         verb, _, rest = stage.partition(" ")
         rest = rest.strip()
         if verb == "where":
-            ok = F.expr(_translate_expr(rest))
-            out = keep_where(out, ok) if _names_read(rest) & extended else out.filter(ok)
+            early, late = [], []
+            for c in _conjuncts(rest):
+                (late if _names_read(c) & extended else early).append(c)
+            if early:
+                out = out.filter(_predicate(early))
+            if late:
+                out = keep_where(out, _predicate(late))
         elif verb == "extend":
             for part in _split_top(rest, ","):
                 name, _, expr = part.partition("=")

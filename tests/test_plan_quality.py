@@ -526,7 +526,8 @@ def test_spl_where_over_extend_reads_json_once(spark):
     for df in branches.values():
         plan = _plan(df)
         assert len(_nodes_with(plan, "get_json_object(")) == 1, plan
-    assert "EqualTo(event_type,error)" in _plan(branches["errors"])
+    for name, kind in (("hot", "click"), ("errors", "error")):
+        assert f"EqualTo(event_type,{kind})" in _plan(branches[name]), name
     kval = F.get_json_object("props", "$.k").cast("int")
     want = ev.withColumn("kval", kval).filter((F.col("event_type") == "click") & (kval >= 50))
     got = branches["hot"].collect()
@@ -534,24 +535,18 @@ def test_spl_where_over_extend_reads_json_once(spark):
 
 
 def test_window_binds_a_computed_input_once(spark):
-    """The n-gram window binds a computed input array once: at n = 3 the
-    executed plans of hashed_shingles and word_ngrams split the text once,
-    where reading it in each of the 2n slices and sizes split it six
-    times. A bare token column is read directly, with no outer
-    transform(array(...))."""
+    """The n-gram window binds its input array once: at n = 3 the executed
+    plans of hashed_shingles and word_ngrams split the text once, where
+    reading it in each of the 2n slices and sizes split it six times."""
     from pyspark.sql import functions as F
 
     from loongcollector_spark.functions import dedup, text as tx
-    from loongcollector_spark.operators.token_ops import token_gram_hashes
     from loongcollector_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
     for fn in (dedup.hashed_shingles, tx.word_ngrams):
         plan = _plan(docs.select(fn(F.col("text"), 3).alias("g")))
         assert plan.count("split(") == 1, plan
-    toks = docs.select(F.transform(tx.words("text"), lambda w: F.length(w)).alias("tokens"))
-    plan = _plan(toks.select(token_gram_hashes(F.col("tokens"), 3).alias("g")))
-    assert "slice(" in plan and "transform(array(" not in plan, plan
 
 
 @pytest.mark.parametrize("n_rotations", [1, 4])

@@ -56,6 +56,31 @@ def test_spl_where(spark):
     assert out.count() == 2
 
 
+@pytest.mark.parametrize(
+    "pred",
+    [
+        "k >= 2 and id between 1 and 4",
+        "id between 1 and 4 and k >= 2",
+        "k = 1 or id = 4 and k is null",
+        "case when k > 1 and id > 0 then true else false end and content <> 'a and b'",
+        "(k = 2 or id = 0) AND not id = 5",
+    ],
+)
+def test_spl_where_over_extend_splits_conjuncts(spark, pred):
+    """A where over an extended column keeps the rows of one Filter over
+    the whole predicate, however its top-level `and` is split between the
+    Filter and keep_where (BETWEEN, CASE, `or` and literals holding `and`)."""
+    from pyspark.sql import functions as F
+
+    df = lines(spark, '{"k": 1}', '{"k": 2}', '{"k": 3}', "{}", '{"k": 2}', '{"k": 5}')
+    k = F.expr("cast(get_json_object(content, '$.k') as int)")
+    want = df.withColumn("k", k).filter(F.expr(pred)).collect()
+    got = compile_spl(
+        df, f"* | extend k = cast(json_extract(content, '$.k') as INTEGER) | where {pred}"
+    ).collect()
+    assert sorted(got) == sorted(want)
+
+
 def test_spl_extend_json_extract(spark):
     # TestExtend: json_extract over nested body -> "1"/"2" as JSON text
     df = lines(spark, '{"body": {"a": 1, "b": 2}}')

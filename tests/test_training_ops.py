@@ -533,6 +533,24 @@ def test_connected_components_long_chain_converges(spark):
     assert len(comp) == n + 1
 
 
+def test_connected_components_round_budget(spark):
+    """max_iterations counts round one: the path 1-2-3-4 settles in round
+    three and round four confirms it, so a budget of 3 rounds fails and one
+    of 4 does. An empty pair set needs the minimum budget of 2."""
+    path = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "id_a long, id_b long")
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    try:
+        with pytest.raises(ValueError, match="max_iterations >= 2"):
+            dedup.connected_components(empty, max_iterations=1)
+        assert dedup.connected_components(empty, max_iterations=2).collect() == []
+        with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+            dedup.connected_components(path, max_iterations=3)
+        got = dedup.connected_components(path, max_iterations=4).collect()
+        assert sorted(tuple(r) for r in got) == [(1, 1), (2, 1), (3, 1), (4, 1)]
+    finally:
+        dedup.release_persisted()
+
+
 # ---------------------------------------------------------------------------
 # Gopher repetition filters + stratified sampling (round 4)
 # ---------------------------------------------------------------------------
