@@ -16,7 +16,7 @@ from loongcollector_spark.queries import QUERIES
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the full collector pipeline
-    shape (parse -> enrich -> route -> salted rollup) over `documents`."""
+    shape (parse -> enrich -> route -> rollup) over `documents`."""
     return QUERIES["flagship_pipeline_rollup"].spark(spark, "/root/testdata/sf0.001")
 
 

@@ -7,7 +7,7 @@ Prints ONE JSON line:
 Headline: the flagship collector pipeline over a synthetic F1 table sized to
 the sf: detok render (Catalyst expressions) -> nginx regex, JSON and
 delimiter parse -> dict_map enrich -> first-match route -> shard hash -> noop
-sinks plus the salted per-(source, sink) rollup. Sinks are noop, as in the
+sinks plus the per-(source, sink) rollup (one groupBy). Sinks are noop, as in the
 reference's file-to-blackhole benchmark
 (test/benchmark/.../performance_file_to_blackhole_loongcollector).
 

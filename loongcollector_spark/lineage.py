@@ -120,13 +120,16 @@ def checkpointed_write(
     if not pending:
         return {"written_buckets": 0, "skipped_buckets": len(done), "rows": 0}
 
-    with _dynamic_overwrite(spark):
-        (
-            pending_df.write.mode("overwrite")
-            .partitionBy(BUCKET)
-            .format(format)
-            .save(os.path.join(base, "data"))
-        )
+    # dynamic overwrite replaces only the bucket partitions written here,
+    # never committed ones; the write option outranks the session conf, so
+    # no other driver thread's job sees a changed setting
+    (
+        pending_df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(BUCKET)
+        .format(format)
+        .save(os.path.join(base, "data"))
+    )
 
     io = _ManifestIO(spark, base)
     rows = 0
@@ -140,21 +143,6 @@ def checkpointed_write(
         "skipped_buckets": len(done),
         "rows": rows,
     }
-
-
-class _dynamic_overwrite:
-    """Temporarily set dynamic partition-overwrite (only replace the bucket
-    partitions we are writing, never committed ones)."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self) -> None:
-        self.prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def __exit__(self, *exc: object) -> None:
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
 
 
 def verify_sink(

@@ -11,13 +11,10 @@ Scale notes:
 - shard_hash uses ``xxhash64`` (same family as the reference's xxhash,
   aggregator_shardhash.go:157-161) → ``pmod`` bucket column + repartition on
   it: one shuffle, perfectly balanced by construction.
-- salted_agg implements the two-phase (partial→final) aggregation the north
-  rule demands for Zipf-skewed ``source``: phase 1 groups on
-  (key, salt) — map-side combine keeps the skewed key spread over
-  ``salt_buckets`` reducers — phase 2 merges the tiny partials. For algebraic
-  aggregates Spark's own partial aggregation already does this; salted_agg
-  exists for the explicit-skew-control contract and for aggregates whose
-  partials are expensive (collect-like).
+- Every numeric rollup is one ``groupBy().agg()`` of algebraic aggregates.
+  Spark's partial ``HashAggregate`` runs below the single exchange, so a hot
+  key of the Zipf-skewed ``source`` collapses map-side to one row per task
+  and never reaches one reducer as raw rows.
 """
 
 from __future__ import annotations
@@ -195,75 +192,20 @@ def context_group(
     )
 
 
-# --- salted two-phase aggregation (skew control) -----------------------------
-
-_ALGEBRAIC = {"count", "sum", "min", "max"}
-
-
-def salted_agg(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    aggs: Mapping[str, tuple[str, Column]],
-    salt_expr: Column,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation with explicit salting for skewed group keys.
-
-    ``aggs`` maps output name -> (kind, input Column) with kind in
-    count|sum|min|max|avg. Phase 1: groupBy(group_cols + salt) computes
-    partials; phase 2: groupBy(group_cols) merges. ``salt_expr`` must be a
-    deterministic high-cardinality expression (e.g. xxhash64(doc_id)) so
-    retries reproduce identical results.
-    """
-    salt = F.pmod(salt_expr, F.lit(salt_buckets)).alias("__salt__")
-
-    partials: list[Column] = []
-    finals: list[Column] = []
-    for name, (kind, col) in aggs.items():
-        if kind == "count":
-            partials.append(F.count(col).alias(f"__p_{name}"))
-            finals.append(F.sum(f"__p_{name}").alias(name))
-        elif kind == "sum":
-            partials.append(F.sum(col).alias(f"__p_{name}"))
-            finals.append(F.sum(f"__p_{name}").alias(name))
-        elif kind == "min":
-            partials.append(F.min(col).alias(f"__p_{name}"))
-            finals.append(F.min(f"__p_{name}").alias(name))
-        elif kind == "max":
-            partials.append(F.max(col).alias(f"__p_{name}"))
-            finals.append(F.max(f"__p_{name}").alias(name))
-        elif kind == "avg":
-            partials.append(F.sum(col).alias(f"__ps_{name}"))
-            partials.append(F.count(col).alias(f"__pc_{name}"))
-            finals.append((F.sum(f"__ps_{name}") / F.sum(f"__pc_{name}")).alias(name))
-        else:
-            raise ValueError(f"unsupported agg kind {kind}")
-
-    phase1 = df.groupBy(*[F.col(c) for c in group_cols], salt).agg(*partials)
-    return phase1.groupBy(*group_cols).agg(*finals)
-
-
 def sink_metrics(
     df: DataFrame,
     source_col: str = "source",
     sink_col: str = "__sink__",
     tokens_col: str = "n_tok",
     bytes_expr: Column | None = None,
-    salt_col: str = "doc_id",
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """The graft's headline rollup: per (source, sink) rows/bytes/tokens —
     the reference's per-pipeline self-monitoring counters re-expressed as a
-    first-class output table, salted because ``source`` is Zipfian."""
+    first-class output table. One groupBy: the partial aggregate below its
+    exchange collapses each hot source map-side."""
     bytes_expr = bytes_expr if bytes_expr is not None else F.col(tokens_col).cast("long") * 4
-    return salted_agg(
-        df,
-        [source_col, sink_col],
-        {
-            "rows": ("count", F.lit(1)),
-            "bytes": ("sum", bytes_expr),
-            "tokens": ("sum", F.col(tokens_col).cast("long")),
-        },
-        salt_expr=F.xxhash64(F.col(salt_col)),
-        salt_buckets=salt_buckets,
+    return df.groupBy(source_col, sink_col).agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(bytes_expr).alias("bytes"),
+        F.sum(F.col(tokens_col).cast("long")).alias("tokens"),
     )

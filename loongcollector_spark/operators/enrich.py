@@ -52,6 +52,10 @@ def rename_fields(
 
 # --- dict_map: the broadcast lookup join ------------------------------------
 
+# a dictionary of at most this many entries compiles to a literal map
+MAX_EXPR_SIZE = 64
+
+
 def dict_map(
     df: DataFrame,
     source_key: str,
@@ -59,7 +63,6 @@ def dict_map(
     dest_key: str,
     missing: str | None = None,
     keep_missing: bool = True,
-    max_expr_size: int = 64,
     mode: str = "overwrite",
 ) -> DataFrame:
     """processor_dict_map (processor_dict_map.go:33-148): map SourceKey value
@@ -75,7 +78,7 @@ def dict_map(
     keeps it.
 
     Physical strategy by dictionary size:
-    - tiny (≤max_expr_size entries): a literal ``map[...]`` expression —
+    - tiny (≤``MAX_EXPR_SIZE`` entries): a literal ``map[...]`` expression —
       no join at all, folds into codegen (beats any join);
     - otherwise: explicit ``broadcast()`` hash join — no shuffle of the fact
       side, the Spark twin of the reference's in-memory dict.
@@ -85,7 +88,7 @@ def dict_map(
             'invalid mode %r, you can only use "fill" or "overwrite" as Mode '
             "(processor_dict_map.go:66)" % mode
         )
-    if isinstance(mapping, Mapping) and len(mapping) <= max_expr_size:
+    if isinstance(mapping, Mapping) and len(mapping) <= MAX_EXPR_SIZE:
         kv: list[Column] = []
         for k, v in mapping.items():
             kv += [F.lit(k), F.lit(v)]

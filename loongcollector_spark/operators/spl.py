@@ -877,7 +877,7 @@ def _decode_esc(s: str) -> str:
 
 def _stage_parse_json(
     df: DataFrame, rest: str, sample_rows: int | None = None
-) -> DataFrame:
+) -> tuple[DataFrame, list[str]]:
     from loongcollector_spark.operators.parse_json import json_object_map
     from loongcollector_spark.operators.parse_kv import discover_keys
 
@@ -898,10 +898,10 @@ def _stage_parse_json(
         keys = discover_keys(df, F.json_object_keys(F.col(tmp)), sample_rows)
     df = df.withColumn(tmp, json_object_map(F.col(tmp)))
     members = {prefix + k: F.try_element_at(F.col(tmp), F.lit(k)) for k in keys}
-    return df.withColumns(members).drop(tmp)
+    return df.withColumns(members).drop(tmp), list(members)
 
 
-def _stage_parse_regexp(df: DataFrame, rest: str) -> DataFrame:
+def _stage_parse_regexp(df: DataFrame, rest: str) -> tuple[DataFrame, list[str]]:
     """``parse-regexp col, '<pat>' as a, b`` reads group i into the i-th
     key; without ``as``, the named groups ``(?<name>...)`` (or Python's
     ``(?P<name>...)`` spelling, spl.txt line 4) carry the keys. The JVM
@@ -933,10 +933,10 @@ def _stage_parse_regexp(df: DataFrame, rest: str) -> DataFrame:
     hit, miss = matched(parts, n), F.when(src.isNotNull(), F.lit(""))
     values = {k: F.when(hit, group(parts, i)).otherwise(miss) for k, i in keys.items()}
     out = df.withColumn(tmp, match_parts(src, pat, n, full_match=False))
-    return out.withColumns(values).drop(tmp)
+    return out.withColumns(values).drop(tmp), list(values)
 
 
-def _stage_parse_csv(df: DataFrame, rest: str) -> DataFrame:
+def _stage_parse_csv(df: DataFrame, rest: str) -> tuple[DataFrame, list[str]]:
     from loongcollector_spark.operators.parse_delimiter import parse_csv
 
     m = _rsplit_as(rest)
@@ -946,7 +946,7 @@ def _stage_parse_csv(df: DataFrame, rest: str) -> DataFrame:
     col = _unquote_ident(left.rstrip(", \t"))
     keys = [_unquote_ident(n) for n in _split_top(m[1], ",")]
     if not flags:
-        return parse_csv(df, col, keys, keep_source=True)
+        return parse_csv(df, col, keys, keep_source=True), keys
     # flag variants (spl.txt): -delim custom separator (escape decoded),
     # -quote custom quote char, -strict = the split arity must equal the key
     # count or every output stays null (public SLS SPL parse-csv contract)
@@ -965,12 +965,12 @@ def _stage_parse_csv(df: DataFrame, rest: str) -> DataFrame:
     for k in keys:
         val = parsed.getField(k)
         df = df.withColumn(k, F.when(ok, val) if ok is not None else val)
-    return df
+    return df, keys
 
 
 def _stage_parse_kv(
     df: DataFrame, rest: str, sample_rows: int | None = None
-) -> DataFrame:
+) -> tuple[DataFrame, list[str]]:
     from loongcollector_spark.operators.parse_kv import discover_keys
 
     rest, keys = _keys_or_rest(rest)
@@ -1008,7 +1008,7 @@ def _stage_parse_kv(
                 else F.coalesce(new, F.col(out_name))
             )
         df = df.withColumn(out_name, new)
-    return df.drop(tmp)
+    return df.drop(tmp), [prefix + k for k in keys]
 
 
 def _rsplit_keyword(s: str, word: str) -> tuple[str, str] | None:
@@ -1129,14 +1129,15 @@ def _predicate(conjuncts: list[str]) -> Column:
 
 
 def _apply_stages(
-    out: DataFrame, stages: list[str], sample_rows: int | None, extended: frozenset[str]
+    out: DataFrame, stages: list[str], sample_rows: int | None, computed: frozenset[str]
 ) -> tuple[DataFrame, frozenset[str]]:
     """``out`` through ``stages``, and the lowercased names of the columns
-    an ``extend`` computed (``extended`` on entry). A ``where``'s top-level
-    conjuncts that read none of them are one Filter, which reaches the
-    scan. The rest drop their rows with ``keep_where``, above the extend's
-    projection: a Filter would be pushed below it and evaluate the
-    extend's expression again on the rows that pass."""
+    an ``extend`` or a parse stage computed (``computed`` on entry). A
+    ``where``'s top-level conjuncts that read none of them are one Filter,
+    which reaches the scan. The rest drop their rows with ``keep_where``,
+    above the computing projection: a Filter would be pushed below it and
+    evaluate the extend's expression or the parse again on the rows that
+    pass."""
     from loongcollector_spark.operators.parse_common import keep_where
 
     for stage in stages:
@@ -1144,10 +1145,11 @@ def _apply_stages(
             continue
         verb, _, rest = stage.partition(" ")
         rest = rest.strip()
+        written: list[str] = []
         if verb == "where":
             early, late = [], []
             for c in _conjuncts(rest):
-                (late if _names_read(c) & extended else early).append(c)
+                (late if _names_read(c) & computed else early).append(c)
             if early:
                 out = out.filter(_predicate(early))
             if late:
@@ -1157,7 +1159,7 @@ def _apply_stages(
                 name, _, expr = part.partition("=")
                 name = _unquote_ident(name)
                 out = out.withColumn(name, F.expr(_translate_expr(expr.strip())))
-                extended |= {name.lower()}
+                written.append(name)
         elif verb == "project":
             out = out.select(*[_unquote_ident(c) for c in _split_top(rest, ",")])
         elif verb == "project-away":
@@ -1165,16 +1167,16 @@ def _apply_stages(
         elif verb == "project-rename":
             for new, old in _renames(rest):
                 out = out.withColumnRenamed(old, new)
-                if old.lower() in extended:
-                    extended |= {new.lower()}
+                if old.lower() in computed:
+                    computed |= {new.lower()}
         elif verb == "parse-json":
-            out = _stage_parse_json(out, rest, sample_rows)
+            out, written = _stage_parse_json(out, rest, sample_rows)
         elif verb == "parse-regexp":
-            out = _stage_parse_regexp(out, rest)
+            out, written = _stage_parse_regexp(out, rest)
         elif verb == "parse-csv":
-            out = _stage_parse_csv(out, rest)
+            out, written = _stage_parse_csv(out, rest)
         elif verb == "parse-kv":
-            out = _stage_parse_kv(out, rest, sample_rows)
+            out, written = _stage_parse_kv(out, rest, sample_rows)
         elif verb == "stats":
             out = _stage_stats(out, rest)
         elif verb == "sort":
@@ -1183,7 +1185,8 @@ def _apply_stages(
             out = out.limit(int(rest))
         else:
             raise SplError(f"unsupported SPL stage {verb!r}")
-    return out, extended
+        computed |= {k.lower() for k in written}
+    return out, computed
 
 
 def _compile_pipeline(
@@ -1194,21 +1197,21 @@ def _compile_pipeline(
 ) -> tuple[DataFrame, frozenset[str], str | None]:
     """Compile one ``head | stage | ...`` pipeline. The head names the
     source: ``*`` (or empty) = the processor input, ``$name`` = a prior
-    ``.let`` binding, with the columns its extends computed. Returns
-    (result, its extended columns, referenced-binding-name-or-None)."""
+    ``.let`` binding, with the columns its stages computed. Returns
+    (result, its computed columns, referenced-binding-name-or-None)."""
     stages = [s.strip() for s in _split_top(text.strip(), "|")]
     ref = None
     if stages and stages[0].startswith("$"):
         ref = stages[0][1:].strip()
         if ref not in bindings:
             raise SplError(f"undefined SPL dataset ${ref}")
-        base, extended = bindings[ref]
+        base, computed = bindings[ref]
         stages = stages[1:]
     else:
         if stages and stages[0] in ("*", ""):
             stages = stages[1:]
-        base, extended = df, frozenset()
-    return (*_apply_stages(base, stages, sample_rows, extended), ref)
+        base, computed = df, frozenset()
+    return (*_apply_stages(base, stages, sample_rows, computed), ref)
 
 
 def compile_spl(
@@ -1260,8 +1263,8 @@ def compile_spl_multi(
             continue
         m = re.match(r"^\.let\s+([A-Za-z_]\w*)\s*=\s*(.*)$", stmt, re.DOTALL)
         if m:
-            bound, extended, _ = _compile_pipeline(df, m.group(2), bindings, sample_rows)
-            bindings[m.group(1)] = bound, extended
+            bound, computed, _ = _compile_pipeline(df, m.group(2), bindings, sample_rows)
+            bindings[m.group(1)] = bound, computed
             continue
         out, _, ref = _compile_pipeline(df, stmt, bindings, sample_rows)
         name = ref or f"result{len(results)}"

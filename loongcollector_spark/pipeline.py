@@ -12,10 +12,12 @@ One pipeline spec compiles to one DataFrame graph:
     read → parse stages → enrich/filter stages → route tag → shard-hash
     repartition
 which ``run_pipeline`` persists and then runs as several Spark jobs: one
-``routed.count()`` that fills the cache and completes the per-stage
-self-monitoring counters (metrics.MetricsRegistry), then one job per sink
-over the cache (checkpoint-resumable bucket writes through
-lineage.checkpointed_write), then the per-(source, sink) metrics rollup.
+``routed.count()`` that fills the cache, completes the observed input
+counter and is itself recorded as the routed counter
+(metrics.MetricsRegistry), then one job per sink over the cache, each from
+its own driver thread (checkpoint-resumable bucket writes through
+lineage.checkpointed_write), then the per-(source, sink) metrics rollup,
+one groupBy over the cache.
 """
 
 from __future__ import annotations
@@ -217,7 +219,6 @@ def compile_pipeline(
             out, spec.shard_keys, spec.shard_count,
             connector=spec.shard_connector, repartition=False
         )
-    out = metrics.observe_counts(out, f"{spec.name}.routed")
     return out
 
 
@@ -281,32 +282,28 @@ def run_pipeline(
                 )
             return write_sink(sink_df, sink)
 
-        # Materialize the cache once, and with it the observed counters, in
-        # one full scan: concurrent sinks would each build it, and a sink's
-        # filtered scan may report no observed counters (a checkpointed
-        # resume that scans only its pending buckets reports none).
-        routed.count()
-        # checkpointed writes toggle session-level conf (partitionOverwriteMode)
-        # inside a context manager — not safe across concurrent driver threads
-        if checkpoint or len(per_sink) < 2:
-            results = {name: deliver(name, sdf) for name, sdf in per_sink.items()}
-        else:
-            # The reference flushes every sink from its own runner thread
-            # (FlusherRunner); Spark's scheduler likewise accepts concurrent
-            # jobs from driver threads — each sink scans the cached routed
-            # parent, so the per-sink jobs overlap instead of running
-            # back-to-back.
-            from concurrent.futures import ThreadPoolExecutor
+        # Materialize the cache once, and with it the observed input
+        # counter, in one full scan: concurrent sinks would each build it,
+        # and a sink's filtered scan may report no observed counters (a
+        # checkpointed resume that scans only its pending buckets reports
+        # none). The count it returns is the routed counter.
+        metrics.record(f"{spec.name}.routed", in_events_total=routed.count())
+        # The reference flushes every sink from its own runner thread
+        # (FlusherRunner); Spark's scheduler likewise accepts concurrent
+        # jobs from driver threads — each sink scans the cached routed
+        # parent, so the per-sink jobs overlap instead of running
+        # back-to-back.
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=min(len(per_sink), 8)) as pool:
-                futures = {
-                    name: pool.submit(deliver, name, sdf) for name, sdf in per_sink.items()
-                }
-                results = {name: fut.result() for name, fut in futures.items()}
+        with ThreadPoolExecutor(max_workers=max(1, min(len(per_sink), 8))) as pool:
+            futures = {
+                name: pool.submit(deliver, name, sdf) for name, sdf in per_sink.items()
+            }
+            results = {name: fut.result() for name, fut in futures.items()}
 
-        # headline rollup: per (source, sink) rows/bytes/tokens, salted —
-        # exported as data, like the reference's self-monitoring metric
-        # records (pluginmanager/metric_export.go:40-62)
+        # headline rollup: per (source, sink) rows/bytes/tokens, one groupBy
+        # over the cache — exported as data, like the reference's
+        # self-monitoring metric records (pluginmanager/metric_export.go:40-62)
         if spec.metrics_tokens_col and spec.route_mode == "first_match":
             rollup = agg_ops.sink_metrics(
                 routed,

@@ -75,7 +75,7 @@ LANG_FAMILY = {"en": "latin", "de": "latin", "es": "latin", "fr": "latin", "zh":
            CAST(SUM(n_tok) AS BIGINT) AS tokens
     FROM routed GROUP BY source, sink
     """,
-    doc="parse -> dict_map enrich -> first-match route -> salted rollup "
+    doc="parse -> dict_map enrich -> first-match route -> one-groupBy rollup "
         "(the CollectionPipeline shape, SURVEY.md §7.1)",
 )
 def flagship_pipeline_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,16 +90,10 @@ def flagship_pipeline_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         default_sink="bulk",
     ).withColumnRenamed("__sink__", "sink")
-    return agg_ops.salted_agg(
-        df,
-        ["source", "sink"],
-        {
-            "rows": ("count", F.lit(1)),
-            "chars": ("sum", F.col("n_chars").cast("long")),
-            "tokens": ("sum", F.col("n_tok").cast("long")),
-        },
-        salt_expr=F.xxhash64(F.col("doc_id").cast("string")),
-        salt_buckets=16,
+    return df.groupBy("source", "sink").agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("n_chars").cast("long")).alias("chars"),
+        F.sum(F.col("n_tok").cast("long")).alias("tokens"),
     )
 
 
@@ -1104,7 +1098,7 @@ def _tokenized_e2e_oracle() -> str:
     # per-row token-array equality check on the written sinks
     doc="the north-rule flagship: tokenized-sequence table -> detok render "
         "(JVM expressions over header tokens) -> 3-format parse -> dict_map -> "
-        "route -> salted per-(source,sink) rows/tokens rollup",
+        "route -> per-(source,sink) rows/tokens rollup (one groupBy)",
 )
 def tokenized_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from loongcollector_spark.operators.route import route_first_match
@@ -1125,15 +1119,9 @@ def tokenized_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             Route("web", Condition(content_key="source", content_regex="web-.*")),
         ],
     ).withColumnRenamed("__sink__", "sink")
-    return agg_ops.salted_agg(
-        routed,
-        ["source", "sink"],
-        {
-            "rows": ("count", F.lit(1)),
-            "tokens": ("sum", F.col("n_tok").cast("long")),
-        },
-        salt_expr=F.xxhash64(F.col("doc_id")),
-        salt_buckets=8,
+    return routed.groupBy("source", "sink").agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("n_tok").cast("long")).alias("tokens"),
     )
 
 
@@ -1150,7 +1138,7 @@ def _token_native_oracle() -> str:
     # is verified bit-exactly by the oracle itself (sources/sql_oracle.py)
     doc="north-rule fast path: field extraction DIRECTLY over token arrays "
         "(element_at/pmod JVM expressions, no string render, no regex) -> "
-        "route -> salted rollup",
+        "route -> per-(source,sink) rollup (one groupBy)",
 )
 def token_native_parse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from loongcollector_spark.operators.route import route_first_match
@@ -1175,15 +1163,9 @@ def token_native_parse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             Route("warns", Condition(content_key="level", content_regex="WARN|ERROR")),
         ],
     ).withColumnRenamed("__sink__", "sink")
-    return agg_ops.salted_agg(
-        routed,
-        ["source", "sink"],
-        {
-            "rows": ("count", F.lit(1)),
-            "tokens": ("sum", F.col("n_tok").cast("long")),
-        },
-        salt_expr=F.xxhash64(F.col("doc_id")),
-        salt_buckets=8,
+    return routed.groupBy("source", "sink").agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("n_tok").cast("long")).alias("tokens"),
     )
 
 
@@ -1636,22 +1618,16 @@ def shardhash_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(AVG(n_chars), 4) AS avg_chars
     FROM documents GROUP BY source
     """,
-    doc="two-phase salted aggregation over the skewed group key",
+    doc="one groupBy over the Zipf-skewed source: the partial aggregate "
+        "below the exchange collapses the hot key map-side",
 )
 def salted_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    out = agg_ops.salted_agg(
-        docs,
-        ["source"],
-        {
-            "rows": ("count", F.lit(1)),
-            "chars": ("sum", F.col("n_chars").cast("long")),
-            "avg_chars": ("avg", F.col("n_chars")),
-        },
-        salt_expr=F.xxhash64(F.col("doc_id").cast("string")),
-        salt_buckets=8,
+    return docs.groupBy("source").agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("n_chars").cast("long")).alias("chars"),
+        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
     )
-    return out.withColumn("avg_chars", F.round("avg_chars", 4))
 
 
 @register(

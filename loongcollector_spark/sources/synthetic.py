@@ -13,8 +13,8 @@ runs as ``mapInPandas`` over ``spark.range`` — numpy end to end, no per-row
 Python.
 
 Skew: ``source`` is Zipfian over 16 values with the head source holding ~40%
-of rows (FIXTURES.md F1), so the salted two-phase aggregation path is
-exercised by construction.
+of rows (FIXTURES.md F1), so every rollup's map-side partial aggregation
+meets a hot key by construction.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ SOURCES = (
     "app-01", "app-02", "app-03", "app-04",
     "sys-01", "sys-02", "sys-03", "sys-04",
 )
-# Zipfian-ish weights, head source ~40% of rows (exercises skew salting).
+# Zipfian-ish weights, head source ~40% of rows (exercises skew).
 SOURCE_WEIGHTS = np.array(
     [0.40, 0.12, 0.08, 0.06, 0.05, 0.04, 0.035, 0.03,
      0.028, 0.026, 0.024, 0.022, 0.02, 0.019, 0.018, 0.028]

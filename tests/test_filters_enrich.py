@@ -88,6 +88,12 @@ def test_rename(logs):
         enrich.rename_fields(logs, {"nope": "x"}, no_key_error=True)
 
 
+def _padded(mapping: dict) -> dict:
+    """``mapping`` plus unused keys, past dict_map's literal-map size."""
+    pad = {f"__pad{i}__": "x" for i in range(enrich.MAX_EXPR_SIZE + 1)}
+    return pad | mapping
+
+
 def test_dict_map_expr_and_broadcast(logs):
     mapping = {"prod": "dc-east", "staging": "dc-west"}
     # tiny dict → map-literal expression. Reference semantics
@@ -96,8 +102,9 @@ def test_dict_map_expr_and_broadcast(logs):
     out = enrich.dict_map(logs, "env", mapping, "dc", missing="unknown")
     vals = {r.id: r.dc for r in out.collect()}
     assert vals == {0: "dc-east", 1: "dc-east", 2: None, 3: None}
-    # force broadcast-join path
-    out2 = enrich.dict_map(logs, "env", mapping, "dc", missing="unknown", max_expr_size=0)
+    # a dictionary past MAX_EXPR_SIZE takes the broadcast-join path
+    out2 = enrich.dict_map(logs, "env", _padded(mapping), "dc", missing="unknown")
+    assert "BroadcastHashJoin" in out2._jdf.queryExecution().executedPlan().toString()
     assert {r.id: r.dc for r in out2.collect()} == vals
 
 
@@ -111,14 +118,12 @@ def test_dict_map_missing_fires_only_on_absent_key(spark):
         [("a", "old1"), (None, "old2"), (None, None), ("zz", "old3")],
         "k string, dest string",
     )
-    for cutoff in (64, 0):  # literal-map and broadcast-join paths
+    for mapping in ({"a": "A"}, _padded({"a": "A"})):  # literal map, broadcast join
         over = {r.dest for r in dict_map(
-            df, "k", {"a": "A"}, "dest", missing="MISS", mode="overwrite",
-            max_expr_size=cutoff).collect()}
+            df, "k", mapping, "dest", missing="MISS", mode="overwrite").collect()}
         assert over == {"A", "MISS", "old3"}  # null src → MISS (both rows)
         fill = [r.dest for r in dict_map(
-            df, "k", {"a": "A"}, "dest", missing="MISS", mode="fill",
-            max_expr_size=cutoff).collect()]
+            df, "k", mapping, "dest", missing="MISS", mode="fill").collect()]
         assert sorted(fill, key=str) == ["MISS", "old1", "old2", "old3"]
 
 

@@ -127,6 +127,30 @@ def test_repeated_substrings_shuffles_only_partials(spark):
     assert "partial_count" in plan or "partial" in plan.lower()
 
 
+def test_sink_metrics_shuffles_only_partials(spark):
+    """The per-(source, sink) rollup is one groupBy: one exchange on its
+    keys, with the partial count below it, so a hot source collapses
+    map-side."""
+    from loongcollector_spark.operators.aggregate import sink_metrics
+    from loongcollector_spark.operators.route import Condition, Route, route_first_match
+
+    df = spark.createDataFrame(
+        [("d1", "web-01", 5, "ERROR"), ("d2", "web-01", 3, "INFO"), ("d3", "app-01", 4, "INFO")],
+        "doc_id string, source string, n_tok int, level string",
+    )
+    routed = route_first_match(df, [Route("errors", Condition(content_key="level", content_regex="ERROR"))])
+    out = sink_metrics(routed)
+    plan = _plan(out)
+    assert plan.count("Exchange") == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(source#\d+, __sink__#", plan), plan
+    below = plan.split("Exchange hashpartitioning", 1)[1]
+    assert "partial_count" in below, plan
+    assert "xxhash64" not in plan, plan
+    got = {(r["source"], r["__sink__"]): (r["rows"], r["bytes"], r["tokens"]) for r in out.collect()}
+    assert got == {("web-01", "errors"): (1, 20, 5), ("web-01", "default"): (1, 12, 3),
+                   ("app-01", "default"): (1, 16, 4)}
+
+
 def test_pii_redact_stays_in_codegen(spark):
     """PII masking is pure regexp column work — no Python eval node."""
     from loongcollector_spark.functions import text as tx
@@ -261,6 +285,9 @@ def test_logpipe_front_half_runs_in_jvm(spark):
     plan = _plan(compile_pipeline(render_lines(seqs), spec))
     assert not [n for n in _PYTHON_NODES if n in plan]
     assert plan.count("regexp_replace(") == 1
+    # the input counter is the one observation; run_pipeline records the
+    # routed counter from the count it takes anyway
+    assert plan.count("CollectMetrics") == 1, plan
 
 
 def _max_method_bytes(df) -> int:
@@ -503,15 +530,25 @@ def test_registry_evaluates_each_costly_call_once(spark):
     assert allowed_seen == set(_REPEATS_ALLOWED)
 
 
+_SPL_PARSE_WHERE = [
+    ("parse-json props as k | where k = '87'", "from_json("),
+    ("""parse-regexp props, '"k": (\\d+)' as a | where a = '87'""", "regexp_replace("),
+    ("parse-csv -delim=':' props as x, y | where y = ' 87}'", "from_csv("),
+    ("""parse-kv -regexp props, '"(\\w)": (\\d+)' as k | where k = '87'""", "regexp_extract_all("),
+]
+
+
 def test_spl_where_over_extend_reads_json_once(spark):
     """spl_multi_route's branches each read the JSON member in one plan
     node: the `where` over the extended column drops its rows above the
     extend's projection, and the `where` over a scanned column stays a
     Filter that reaches the parquet scan. The rows are those of a plain
-    Filter over the extended column."""
+    Filter over the extended column. A `where` over a column that a parse
+    stage wrote likewise keeps the parse call in one plan node, with the
+    rows of a plain Filter over the parsed column."""
     from pyspark.sql import functions as F
 
-    from loongcollector_spark.operators.spl import compile_spl_multi
+    from loongcollector_spark.operators.spl import compile_spl, compile_spl_multi
     from loongcollector_spark.sources.tables import load_table
 
     ev = load_table(spark, SF, "events")
@@ -532,6 +569,16 @@ def test_spl_where_over_extend_reads_json_once(spark):
     want = ev.withColumn("kval", kval).filter((F.col("event_type") == "click") & (kval >= 50))
     got = branches["hot"].collect()
     assert got and sorted(got) == sorted(want.collect())
+
+    for script, call in _SPL_PARSE_WHERE:
+        out = compile_spl(ev, "* | " + script)
+        plan = _plan(out)
+        assert len(_nodes_with(plan, call)) == 1, (script, plan)
+        parse, _, cond = script.rpartition(" | where ")
+        name, _, value = cond.partition(" = ")
+        want = compile_spl(ev, "* | " + parse).filter(F.col(name) == value.strip("'"))
+        got = out.collect()
+        assert got and sorted(got) == sorted(want.collect()), script
 
 
 def test_window_binds_a_computed_input_once(spark):

@@ -15,7 +15,6 @@ from hypothesis import HealthCheck, given, settings
 from pyspark.sql import functions as F
 
 from loongcollector_spark.functions import text as tx
-from loongcollector_spark.operators import aggregate as agg_ops
 from loongcollector_spark.operators import parse_apsara, parse_prometheus
 from loongcollector_spark.operators.parse_kv import parse_key_value
 from loongcollector_spark.sources import network
@@ -43,41 +42,6 @@ def test_kv_roundtrip_recovers_all_pairs(spark, dicts):
         d = dicts[r["__row__"]]
         for k in all_keys:
             assert r[k] == d.get(k), (k, d, r.asDict())
-
-
-@settings(**SETTINGS)
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["a", "b", "c"]), st.integers(-1000, 1000)),
-        min_size=1,
-        max_size=40,
-    ),
-    st.integers(2, 8),
-)
-def test_salted_agg_equals_plain_groupby(spark, rows, buckets):
-    """Two-phase salted aggregation is value-identical to a plain groupBy for
-    count/sum/min/max/avg, for ANY data and salt bucket count."""
-    df = spark.createDataFrame([(k, v, i) for i, (k, v) in enumerate(rows)], "k string, v long, i long")
-    salted = agg_ops.salted_agg(
-        df,
-        ["k"],
-        {
-            "n": ("count", F.lit(1)),
-            "s": ("sum", F.col("v")),
-            "mn": ("min", F.col("v")),
-            "mx": ("max", F.col("v")),
-            "av": ("avg", F.col("v")),
-        },
-        salt_expr=F.xxhash64(F.col("i").cast("string")),
-        salt_buckets=buckets,
-    )
-    plain = df.groupBy("k").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"),
-        F.min("v").alias("mn"), F.max("v").alias("mx"), F.avg("v").alias("av"),
-    )
-    got = {r["k"]: (r["n"], r["s"], r["mn"], r["mx"], round(r["av"], 9)) for r in salted.collect()}
-    want = {r["k"]: (r["n"], r["s"], r["mn"], r["mx"], round(r["av"], 9)) for r in plain.collect()}
-    assert got == want
 
 
 @settings(**SETTINGS)

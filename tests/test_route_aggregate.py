@@ -136,25 +136,6 @@ def test_content_value_group(events):
     assert {r.env: r.rows for r in out.collect()} == {"prod": 3, "dev": 1}
 
 
-def test_salted_agg_matches_plain(spark):
-    df = spark.range(5000).select(
-        F.concat(F.lit("s"), (F.col("id") % 3).cast("string")).alias("source"),
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 7).alias("n"),
-    )
-    salted = agg.salted_agg(
-        df, ["source"],
-        {"rows": ("count", F.lit(1)), "tok": ("sum", F.col("n")),
-         "mx": ("max", F.col("n")), "avg_n": ("avg", F.col("n"))},
-        salt_expr=F.xxhash64("doc_id"), salt_buckets=8,
-    )
-    plain = df.groupBy("source").agg(
-        F.count(F.lit(1)).alias("rows"), F.sum("n").alias("tok"),
-        F.max("n").alias("mx"), F.avg("n").alias("avg_n"),
-    )
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
 def test_pack_id_stamping(spark):
     df = agg.with_pack_id(spark.range(100).repartition(4), group_size=10)
     rows = df.collect()
@@ -264,6 +245,29 @@ def test_checkpointed_write_resume(spark, tmp_path):
     assert len(manifests) == 4 and sum(m["rows"] for m in manifests) == 200
     runs = {m["run_id"] for m in manifests}
     assert runs == {"r1", "r2"}
+
+
+def test_checkpointed_write_leaves_session_conf(spark, tmp_path, monkeypatch):
+    """checkpointed_write asks for dynamic partition overwrite on its own
+    write and never sets the session conf, which every job that another
+    driver thread runs meanwhile would see."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    keys: list[str] = []
+    original = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys.append(key)
+        return original(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    df = spark.range(20).select(
+        F.concat(F.lit("d"), F.col("id").cast("string")).alias("doc_id"),
+        F.pmod(F.col("id"), F.lit(2)).cast("int").alias("__bucket__"),
+    )
+    out = lineage.checkpointed_write(df, str(tmp_path / "out"), tokens_col=None)
+    assert out["rows"] == 20
+    assert keys == []
 
 
 def test_metadata_group_split_sequences(spark):

@@ -63,6 +63,8 @@ def main() -> int:
               "lineitem", "events", "documents", "embeddings"):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
+    from loongcollector_spark.functions import dedup
+
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
@@ -72,9 +74,6 @@ def main() -> int:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
-            from loongcollector_spark.functions import dedup as _dedup
-
-            _dedup.release_persisted()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             report[name] = {"rows_match": False, "schema_match": False,
@@ -82,6 +81,10 @@ def main() -> int:
                             "oracle_rows": None, "err": f"spark: {e}"[:300]}
             failures += 1
             continue
+        finally:
+            # a query that raised must not leave its persisted frames
+            # cached for every later query
+            dedup.release_persisted()
         if name not in oracles:
             print(f"rows  {name}: {len(srows)} rows (no oracle)")
             report[name] = {"rows_match": None, "schema_match": None,
